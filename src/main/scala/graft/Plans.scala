@@ -435,7 +435,7 @@ object Plans {
         "additional I/O or shuffle, only per-row predicate work."),
     "q137_bm25_leveled" ->
       ("q126's exact serving plan over a LEVELED store (compactLevel " +
-        "folded the smallest batches mid-ingest behind the _vlog flip): " +
+        "folded the smallest batches mid-ingest behind the version commit): " +
         "the read shape is IDENTICAL — committed-batch set + tbucket " +
         "literals in PartitionFilters, pushed In(tok) — which is the " +
         "plan's whole claim: leveling changes batch COUNT (the " +

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import graft.delivery.{Backoff, HttpPoster, JdkHttpPoster}
 import graft.queue.EventLog.QueueRow
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Async delivery worker — completes the drain loop the reference left as a
@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *   3. state transitions PENDING→DELIVERED / PENDING(rescheduled) / FAILED
   *      with attempt history arrays appended (`cdc_webhook--1.0.sql:36-43`);
   *   4. append terminal rows to their status partitions, then commit the new
-  *      PENDING snapshot with ONE atomic manifest-file rename
-  *      ([[PendingStore.commit]] — the scaled-down lakehouse commit; a
-  *      Delta/Iceberg MERGE is the production form).
+  *      PENDING snapshot with ONE exclusive manifest-entry link
+  *      ([[PendingStore.commit]] through [[VersionedDir]] — the scaled-down
+  *      lakehouse commit; a Delta/Iceberg MERGE is the production form).
   *
   * Scale model: a cycle's I/O is O(PENDING), never O(history). The PENDING
   * set lives in its own store (`.pending/`), physically disjoint from the
@@ -92,18 +92,22 @@ object Dispatcher {
     })
 
     // 1) Durable attempt log: ONE action materializes every post exactly
-    //    once per cycle. Counting or re-writing from the live dataset would
-    //    risk recomputation (Spark invalidates caches over queueDir on the
+    //    once per cycle, and the cycle's stats are observed on that same
+    //    action. Counting or re-writing from the live dataset would risk
+    //    recomputation (Spark invalidates caches over queueDir on the
     //    appends below) and with it duplicate HTTP side effects.
     val attemptsDir = queueDir.stripSuffix("/") + ".attempts"
-    posted.toDF().write.mode("overwrite").parquet(attemptsDir)
+    val cycle = Observation()
+    posted.toDF().observe(cycle, count(lit(1)).as("due"),
+        count_if(col("status") === "DELIVERED").as("delivered"),
+        count_if(col("status") === "FAILED").as("failed"))
+      .write.mode("overwrite").parquet(attemptsDir)
+    val observed = cycle.get
+    def stat(name: String): Long = observed(name).asInstanceOf[Long]
+    val (due, delivered, failed) = (stat("due"), stat("delivered"), stat("failed"))
     val attempted = spark.read
       .schema(org.apache.spark.sql.Encoders.product[QueueRow].schema)
       .parquet(attemptsDir).as[QueueRow]
-
-    val delivered = attempted.filter(col("status") === "DELIVERED").count()
-    val failed = attempted.filter(col("status") === "FAILED").count()
-    val due = attempted.count()
     if (due == 0) { // idle cycle: no state changed, rewrite nothing
       deleteRec(Paths.get(attemptsDir))
       // still alive: renew so an idle holder is never mistaken for crashed

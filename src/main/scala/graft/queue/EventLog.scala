@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Layout for scale: terminal (DELIVERED/FAILED) history is hive-partitioned
   * by `status` — immutable, append-only. The live PENDING set is a
   * [[PendingStore]]: versioned snapshots + an enqueue inbox behind a
-  * single-file manifest, so the dispatcher's due scan reads O(PENDING) only
+  * [[VersionedDir]] manifest, so the dispatcher's due scan reads O(PENDING) only
   * — the Spark analog of the reference's btree indexes on
   * (status, next_attempt) (`cdc_webhook--1.0.sql:50-52`) — and concurrent
   * readers resolve one atomic manifest instead of racing directory renames.
@@ -97,11 +97,7 @@ object EventLog {
     if (!hasStatusDirs)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      // history written before `updated_at` existed reads it as null under
-      // the explicit schema; the shared upgrade surfaces the insert stamp
-      PendingStore.upgradeLegacyColumns(
-        spark.read.schema(schema).parquet(queueDir))
+    else spark.read.schema(schema).parquet(queueDir)
   }
 
   /** Consumer view of the terminal (DELIVERED/FAILED) history. A dispatcher

@@ -5,109 +5,35 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import graft.queue.EventLog.QueueRow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Versioned, manifest-committed store for the queue's PENDING set.
+/** The queue's PENDING set: a [[VersionedDir]] of snapshots plus an enqueue
+  * inbox, under `queueDir/.pending/` (dot-prefixed, so the hive reader of
+  * the terminal `status=*` partitions never lists it):
   *
-  * The reference gets queue atomicity from Postgres MVCC — enqueue commits
-  * with the user's transaction and the worker's scan sees a consistent
-  * snapshot (`cdc_webhook--1.0.sql:296-324`). Plain hive-partitioned parquet
-  * cannot give concurrent readers that: the previous layout snapshot-swapped
-  * `status=PENDING` with a pair of directory renames, and a reader poll
-  * racing the swap could list files the swap had just invalidated (it had to
-  * retry). This store closes that window the way lakehouse table formats do,
-  * scaled down to one moving part: every reader-visible state transition is
-  * the exclusive creation of ONE small numbered manifest entry — readers
-  * resolve the highest number, writers compare-and-swap the next one.
-  *
-  * Layout, all under `queueDir/.pending/` (dot-prefixed, so the hive reader
-  * of the terminal `status=*` partitions never lists it):
-  *
-  *   inbox/<uuid>/   enqueue spools — written to a dot-prefixed temp dir and
-  *                   atomically renamed in, so they are complete-on-arrival;
-  *                   immutable once visible
+  *   inbox/<uuid>/   enqueue spools, written to a `.spool-<uuid>.tmp` temp
+  *                   and renamed in whole; immutable once visible
   *   v<N>-<hex>/     snapshot N of the pending rows (not-yet-due ∪
-  *                   rescheduled), written once by the cycle that created it;
-  *                   the hex suffix is writer-unique per commit, so racing
-  *                   writers at the same version never share a data path
-  *   _log/<N>        manifest entry N: one line with the live snapshot dir
-  *                   name, then one line per inbox dir that snapshot has
-  *                   already absorbed ("consumed"). Entries are immutable,
-  *                   published whole by one exclusive hard-link each — the
-  *                   store's commit points. The live manifest is the
-  *                   highest-numbered entry
-  *   _current        the pre-log single-file manifest — read as the seed
-  *                   when `_log` is empty (an on-disk store from before the
-  *                   CAS log), dropped once the log carries the state
+  *                   rescheduled), committed through [[VersionedDir]]; its
+  *                   manifest payload lists the inbox dirs it absorbed
+  *   _owner          the single-writer [[Lease]]
   *
-  * Readers resolve the manifest once, then read snapshot ∪ (inbox ∖ consumed)
-  * — two immutable file sets. The manifest-then-inbox order means a flip
-  * racing a reader yields a CONSISTENT older state, never a doubled row
-  * (the reverse order could see an inbox spool and the snapshot that
-  * absorbed it). No reader retry loop exists or is needed.
+  * Readers resolve the manifest once, then read snapshot ∪ (inbox ∖
+  * consumed). Manifest before inbox means a commit racing a reader yields a
+  * consistent older state, never a doubled row. Enqueue never coordinates
+  * with the dispatcher: a spool landing mid-cycle is not in the cycle's
+  * [[Capture]], so it is next cycle's work.
   *
-  * Enqueue never coordinates with the dispatcher at all: a spool landing
-  * mid-cycle is not in the cycle's captured dir list, so it simply becomes
-  * next cycle's work — the rename-swap layout could lose an enqueue that
-  * raced the swap's rewrite.
+  * Inbox GC runs after the commit and only for dirs the previous snapshot
+  * already absorbed, so only a reader two or more commits stale could still
+  * reference them; each is tombstone-renamed first, so a lister sees the
+  * whole spool or none of it. Readers that stale read with
+  * `ignoreMissingFiles` and may see an older but consistent state.
   *
-  * Crash heal is "ignore unreferenced dirs + GC": snapshots are
-  * complete-on-arrival (the parquet job writes a dot-prefixed `.snap-*`
-  * temp, one rename publishes it), so a commit that dies mid-write leaves
-  * only a temp the stale sweep reclaims, one that dies before its flip
-  * leaves a complete orphan `v<N>-<hex>` the next commit sweeps
-  * immediately (visible ⇒ no job is still writing it), and a racing
-  * writer always loses at the flip's CAS — never by having files deleted
-  * under its running job; one that dies after the flip leaves
-  * stale dirs the next commit's GC sweeps; an enqueue that dies mid-write
-  * leaves a dot-prefixed `.spool-*` temp that the stale sweep removes once
-  * it is demonstrably dead (no mtime progress past the grace). There is no
-  * state a restart must repair before reading — the manifest is always
-  * either the old or the new one.
-  *
-  * Retention grace: a commit keeps its predecessor snapshot, and inbox GC
-  * runs only AFTER the manifest flip — so the dirs being deleted were
-  * absorbed by the PREVIOUS snapshot and only a reader two or more flips
-  * stale could still reference them. Deletion is tombstone-renamed first
-  * (one atomic rename removes the dir from every listing) so even such a
-  * reader sees the whole spool or none of it, never a partial file set.
-  * Readers more than one flip stale read with `ignoreMissingFiles` and may
-  * observe an older-but-consistent state — they are polls by construction.
-  *
-  * Single dispatcher writer per queue — ENFORCED twice over. A writer holds
-  * a ttl-renewed [[Lease]] (`_owner` file, atomic CREATE_NEW acquisition)
-  * that [[commit]] verifies at entry and again immediately before the flip —
-  * the cooperative layer that fails a second dispatcher fast, before it pays
-  * for a snapshot write. The flip itself is then a true compare-and-swap:
-  * publishing manifest entry N+1 is one EXCLUSIVE hard-link into `_log/`,
-  * which the filesystem grants to exactly one writer per version — the same
-  * "exclusive put of the next numbered commit file" rule lakehouse table
-  * formats build optimistic concurrency on, scaled down to this store's one
-  * moving part. Every lost race, lease-level or log-level, surfaces as a
-  * clean [[ConcurrentWriterException]] with no partial effects; a silently
-  * discarded cycle (the pre-CAS rename flip was last-writer-wins) can no
-  * longer happen even across arbitrary pauses.
-  *
-  * Durability model: a manifest entry's content is fsynced before its link
-  * and the `_log` directory is fsynced after it, so the flip itself survives
-  * power loss, not just process kills. The parquet data files beneath it are
-  * as durable as Spark's committer + the filesystem make them — on a
-  * power-fail-strict deployment the store belongs on a filesystem ordering
-  * data writes before the link (ext4 default), same as every lakehouse
-  * manifest design.
+  * One dispatcher writes per queue. The lease is the cooperative layer: it
+  * fails a second dispatcher fast, with an error naming the owner. The
+  * [[VersionedDir]] commit is the fence: of two writers that pass the lease
+  * check, one commits and the other gets [[ConcurrentWriterException]].
   */
 object PendingStore {
-
-  /** `version` = live snapshot number (0 = none yet); `consumed` = inbox
-    * dirs whose rows snapshot `version` already absorbed; `dir` = the
-    * snapshot's directory name. Snapshot dirs are writer-unique
-    * (`v<N>-<8 hex>`): two writers racing the same version number can never
-    * write the same path, so a refused (stale) writer's parquet write can
-    * never clobber the winner's just-written snapshot in the window between
-    * the winner's data write and its manifest flip — the one data-path race
-    * the pre-flip lease check alone does not cover. `dir` empty = legacy
-    * manifest (pre-suffix layout), resolved as `v<version>`. */
-  final case class Manifest(version: Long, consumed: Seq[String], dir: String = "") {
-    def dirName: String = if (dir.nonEmpty) dir else s"v$version"
-  }
 
   /** A writer lease on one queue's PENDING store. Holding it is the ONLY
     * sanctioned way to [[commit]]: the store is single-writer by design
@@ -120,57 +46,15 @@ object PendingStore {
     * takeover (every commit and idle cycle renews). */
   final case class Lease(owner: String, token: String, ttlMs: Long)
 
-  /** Thrown when a second writer tries to own a queue: lease acquisition
-    * against a live foreign lease, or a commit without the live lease. */
-  final class ConcurrentWriterException(msg: String) extends IllegalStateException(msg)
-
-  /** A point-in-time view: the manifest plus the non-consumed inbox dirs
-    * captured by name. One capture feeds a whole dispatcher cycle — scan,
-    * rewrite, and commit all agree on exactly which files are "the batch". */
-  final case class Capture(manifest: Manifest, inbox: Seq[String])
+  /** A point-in-time view: the live snapshot (its payload is the inbox dirs
+    * it consumed) plus the non-consumed inbox dirs captured by name. One
+    * capture feeds a whole dispatcher cycle — scan, rewrite, and commit all
+    * agree on exactly which files are "the batch". */
+  final case class Capture(manifest: VersionedDir.Snapshot, inbox: Seq[String])
 
   private def root(queueDir: String): Path = Paths.get(queueDir, ".pending")
   private def inboxRoot(queueDir: String): Path = root(queueDir).resolve("inbox")
-  private def manifestPath(queueDir: String): Path = root(queueDir).resolve("_current")
   private def ownerPath(queueDir: String): Path = root(queueDir).resolve("_owner")
-  private def logRoot(queueDir: String): Path = root(queueDir).resolve("_log")
-
-  /** How many manifest log entries retention keeps. Any capture older than
-    * the tip is refused by [[casCommitManifest]]'s tip check, so entries
-    * below the tip only serve forensic inspection; keeping several makes the
-    * "a GC'd slot could be re-created by an ancient writer" hazard require a
-    * writer `logKeep` commits stale — which the tip check refuses anyway. */
-  private val logKeep = 8
-
-  private def listLogVersions(queueDir: String): Seq[Long] = {
-    val d = logRoot(queueDir)
-    if (!Files.exists(d)) Nil
-    else {
-      val s = Files.list(d)
-      try {
-        val it = s.iterator(); val b = Seq.newBuilder[Long]
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.nonEmpty && n.forall(_.isDigit)) b += n.toLong
-        }
-        b.result()
-      } finally s.close()
-    }
-  }
-
-  private def parseManifestLines(lines: java.util.List[String],
-                                 versionFromName: Long = -1L): Manifest = {
-    val head = lines.get(0).trim
-    val consumed =
-      (1 until lines.size()).map(lines.get(_).trim).filter(_.nonEmpty).toSeq
-    // head is the snapshot dir name ("v<N>-<hex>"); a bare number is a
-    // legacy manifest whose snapshot lives at the unsuffixed "v<N>"
-    if (head.startsWith("v")) {
-      val v = if (versionFromName >= 0L) versionFromName
-              else head.drop(1).takeWhile(_.isDigit).toLong
-      Manifest(v, consumed, head)
-    } else Manifest(head.toLong, consumed)
-  }
 
   /** (token, expiryMillis) of the current lease file, if any. */
   private def readLeaseFile(queueDir: String): Option[(String, Long)] = {
@@ -368,11 +252,10 @@ object PendingStore {
     * second-dispatcher cases early, with errors that name the other owner.
     * It is deliberately not the correctness fence — check→flip is not
     * atomic, and a takeover can land inside that window. What makes the
-    * window harmless is the flip itself: [[casCommitManifest]] publishes
+    * window harmless is the flip itself: [[VersionedDir.commit]] publishes
     * the next manifest version by exclusive hard-link, so of two writers
     * that both pass this check, exactly one commits and the other gets a
-    * [[ConcurrentWriterException]] with no partial effects (its snapshot
-    * dir is writer-unique and unreferenced, GC'd by the next commit). */
+    * [[ConcurrentWriterException]] with no partial effects. */
   private def verifyLease(queueDir: String, lease: Option[Lease]): Unit =
     (lease, readLeaseFile(queueDir)) match {
       case (Some(l), Some((tok, exp))) =>
@@ -396,50 +279,8 @@ object PendingStore {
       case _ => () // no lease anywhere: unmanaged single-writer mode
     }
 
-  /** The single-file pre-log manifest, `Manifest(0, Nil)` if absent. Still
-    * read as the log's seed: a store written before the CAS log carries its
-    * state here until the first CAS commit migrates it. */
-  private def legacyManifest(queueDir: String): Manifest = {
-    val p = manifestPath(queueDir)
-    if (!Files.exists(p)) Manifest(0L, Nil)
-    else parseManifestLines(Files.readAllLines(p))
-  }
-
-  /** The live manifest: the highest-numbered `_log` entry, else the legacy
-    * `_current` file, else an empty v0. The retry loop covers two benign
-    * races — the listed tip being GC'd under a many-commits-stale reader,
-    * and `_current` being dropped by a migration between our empty-log
-    * listing and the legacy read (`_current` is only ever deleted AFTER the
-    * log's first entry exists, so one re-list resolves it). */
-  def manifest(queueDir: String): Manifest = {
-    var i = 0
-    var sawLog = false
-    while (i < 3) {
-      i += 1
-      val vs = listLogVersions(queueDir)
-      if (vs.nonEmpty) {
-        sawLog = true
-        val v = vs.max
-        try return parseManifestLines(
-          Files.readAllLines(logRoot(queueDir).resolve(v.toString)), v)
-        catch { case _: java.io.IOException => () } // tip swept between list and read: re-list
-      } else {
-        val legacy = legacyManifest(queueDir)
-        if (legacy.version > 0L) return legacy
-        if (listLogVersions(queueDir).isEmpty) return legacy // genuinely fresh
-        sawLog = true
-      }
-    }
-    // A log we SAW but could never read is not an empty store: answering
-    // the v0 seed here would resurface every consumed inbox spool (and an
-    // unmanaged caller could re-deliver them before any commit check
-    // refuses it). Throw instead — readers are polls and simply retry.
-    if (sawLog)
-      throw new IllegalStateException(
-        s"queue '$queueDir' manifest log unreadable after 3 raced attempts; " +
-          "a reader this far behind retention should re-poll, not see v0")
-    legacyManifest(queueDir)
-  }
+  /** The live snapshot; its payload is the inbox dirs it consumed. */
+  def manifest(queueDir: String): VersionedDir.Snapshot = VersionedDir.resolve(root(queueDir))
 
   def listInbox(queueDir: String): Seq[String] = {
     val d = inboxRoot(queueDir)
@@ -459,16 +300,17 @@ object PendingStore {
 
   def capture(queueDir: String): Capture = {
     val m = manifest(queueDir)
-    Capture(m, listInbox(queueDir).filterNot(m.consumed.toSet))
+    Capture(m, listInbox(queueDir).filterNot(m.payload.toSet))
   }
 
   /** Atomic enqueue: write the rows to a hidden temp dir, then one rename
     * makes the complete spool visible. Concurrent spools use distinct
-    * uuids; nothing contends. */
+    * uuids; nothing contends. A crashed spool's temp is a dead `.tmp` that
+    * [[VersionedDir]]'s retention sweeps. */
   def spool(rows: DataFrame, queueDir: String): Unit = {
     Files.createDirectories(inboxRoot(queueDir))
     val name = java.util.UUID.randomUUID().toString
-    val tmp = root(queueDir).resolve(".spool-" + name)
+    val tmp = root(queueDir).resolve(s".spool-$name.tmp")
     rows.write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, inboxRoot(queueDir).resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
@@ -479,133 +321,49 @@ object PendingStore {
 
   /** The PENDING set a given capture saw: snapshot ∪ captured inbox, schema
     * supplied explicitly (no footer inference). `ignoreMissingFiles` covers
-    * readers more than one flip stale whose files GC already swept.
-    *
-    * Legacy-store migration: snapshots written before the `updated_at`
-    * column existed lack it in their parquet, and the explicit schema makes
-    * Spark fill null. Consumers treat `updated_at` as non-null (it is
-    * stamped on insert and every transition), so a null here would NPE far
-    * from its cause; reading it as `created_at` — the value the insert
-    * trigger would have stamped — upgrades old stores in place, and the
-    * next commit rewrites the snapshot with the column materialized. */
+    * readers more than one commit stale whose files GC already swept. */
   def readAt(spark: SparkSession, queueDir: String, snap: Capture): DataFrame = {
     val schema = org.apache.spark.sql.Encoders.product[QueueRow].schema
     val paths =
-      (if (snap.manifest.version > 0L)
-         Seq(root(queueDir).resolve(snap.manifest.dirName))
-       else Nil) ++ snap.inbox.map(inboxRoot(queueDir).resolve)
+      (if (snap.manifest.version > 0L) Seq(snap.manifest.path) else Nil) ++
+        snap.inbox.map(inboxRoot(queueDir).resolve)
     val existing = paths.filter(Files.exists(_)).map(_.toString)
     if (existing.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else
-      upgradeLegacyColumns(
-        spark.read.schema(schema).option("ignoreMissingFiles", "true")
-          .parquet(existing: _*))
-  }
-
-  /** The one shared legacy-store column upgrade, applied by every
-    * schema-supplied queue read ([[readAt]] here, the terminal history in
-    * EventLog): `updated_at` predates some stores, reads null under the
-    * explicit schema, and consumers treat it as non-null — surface
-    * `created_at` (the value the insert stamp would have carried) instead.
-    * One definition so the two read paths can never drift apart. */
-  private[queue] def upgradeLegacyColumns(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col}
-    df.withColumn("updated_at", coalesce(col("updated_at"), col("created_at")))
+      spark.read.schema(schema).option("ignoreMissingFiles", "true")
+        .parquet(existing: _*)
   }
 
   /** Commit `newPending` as the next snapshot and retire the capture's inbox
-    * dirs. The only reader-visible instant is step 2's single-file rename;
-    * every other step touches dirs no live manifest references.
+    * dirs. The [[VersionedDir.commit]] link is the only reader-visible
+    * instant. Its payload consumes this capture's inbox plus every
+    * previously consumed dir that still exists, since a failed GC keeps a
+    * name excluded until the dir is actually gone. After the commit, the
+    * previous snapshot's consumed dirs are GC'd.
     *
-    * `onStep` is a test seam: PendingStoreSpec kills the writer after each
-    * step and asserts readers never observe a missing or doubled row.
-    *
-    *   1. write snapshot `v<N+1>-<8 hex>` beside the live one — into a
-    *      dot-prefixed `.snap-*` temp first, published complete by one
-    *      rename. The name is writer-unique (fresh hex suffix per commit),
-    *      so a stale ex-holder racing a post-takeover owner at the same
-    *      version number writes a DIFFERENT directory and can never
-    *      overwrite the winner's data (complete orphans from
-    *      refused/crashed commits are swept by step 4; in-progress temps
-    *      by the stale sweep);
-    *   2. publish manifest entry `_log/<N+1>` — THE commit point, one
-    *      exclusive hard-link, i.e. a compare-and-swap on the manifest
-    *      version: of any number of racing writers the filesystem links
-    *      exactly one, and every loser gets [[ConcurrentWriterException]]
-    *      with zero partial effects. The new manifest consumes this
-    *      capture's inbox plus every previously consumed dir that still
-    *      exists (a failed GC keeps its name alive so it stays excluded
-    *      until it is actually gone);
-    *   3. GC the previous manifest's consumed inbox dirs — post-flip, they
-    *      are referenced only by manifests two or more flips stale, outside
-    *      the retention grace. Each dir is tombstone-renamed (atomic
-    *      disappearance from listings) before its contents are deleted, so
-    *      no lister can observe a partially-deleted spool;
-    *   4. GC snapshots, keeping the new one and its predecessor (the
-    *      one-flip reader grace) and manifest log entries (newest
-    *      [[logKeep]]; the superseded legacy `_current` is dropped once the
-    *      log carries the state), then sweep demonstrably-dead temps
-    *      (`.spool-*` / `.snap-*` / `._commit.*.tmp` with no mtime progress
-    *      past `staleGraceMs` — a live writer touches its files constantly).
-    *
-    * The lease is verified at entry (cheap fail-fast before the parquet
-    * write) and again immediately before the flip (clear errors for the
-    * common second-dispatcher case); the flip's exclusive link is the
-    * authoritative fence.
+    * The lease is verified at entry (fail fast before the parquet write)
+    * and again just before the commit (clear errors for the common
+    * second-dispatcher case); the commit's exclusive link is the fence.
+    * `onStep` is the crash-test seam, forwarded to [[VersionedDir.commit]]
+    * and also called after the snapshot write and the inbox GC.
     */
   def commit(newPending: DataFrame, queueDir: String, snap: Capture,
              onStep: String => Unit = _ => (),
-             staleGraceMs: Long = 15 * 60 * 1000L,
              lease: Option[Lease] = None): Unit = {
     val prev = snap.manifest
-    val vNew = prev.version + 1
-    verifyLease(queueDir, lease) // fail fast before paying for the write
-    val dirNew = s"v$vNew-" + java.util.UUID.randomUUID().toString.take(8)
-    // Snapshots are complete-on-arrival, same as enqueue spools: the
-    // parquet job writes into a dot-prefixed temp (protected by the
-    // stale-temp mtime grace while in progress) and one rename publishes
-    // the finished dir. A visible `v<N>-<hex>` is therefore NEVER a
-    // running job's output, so version GC can sweep unreferenced ones
-    // immediately — no grace heuristic, no risk of deleting files under a
-    // paused racer's still-running write, bounded steady state.
-    val tmpSnap = root(queueDir).resolve(".snap-" + dirNew)
-    newPending.write.mode("overwrite").parquet(tmpSnap.toString)
-    Files.move(tmpSnap, root(queueDir).resolve(dirNew), StandardCopyOption.ATOMIC_MOVE)
-    onStep("snapshot-written")
-    val carried = prev.consumed.filter(n => Files.exists(inboxRoot(queueDir).resolve(n)))
-    // Ownership gate immediately before the flip: a lost lease (takeover
-    // after expiry, or release) aborts here with a clear error instead of
-    // silently flipping the manifest over another writer's.
     verifyLease(queueDir, lease)
-    casCommitManifest(queueDir, Manifest(vNew, (snap.inbox ++ carried).distinct, dirNew))
+    val stage = VersionedDir.stage(prev)
+    newPending.write.mode("overwrite").parquet(stage.toString)
+    onStep("snapshot-written")
+    val carried = prev.payload.filter(n => Files.exists(inboxRoot(queueDir).resolve(n)))
+    verifyLease(queueDir, lease)
+    VersionedDir.commit(prev, stage, (snap.inbox ++ carried).distinct, onStep)
     lease.foreach(l => writeLeaseFile(queueDir, l.token, l.ttlMs)) // renew
-    onStep("manifest-flipped")
-    sweepTombstones(queueDir) // a crashed step-3 leaves '.<name>.gc' dirs; clear first
+    sweepTombstones(queueDir) // a crashed inbox GC leaves '.<name>.gc' dirs; clear first
     carried.foreach(gcInboxDir(queueDir, _))
     onStep("inbox-gc")
-    val keep = Set(dirNew, prev.dirName)
-    // Visible version dirs are complete by construction (published by the
-    // rename above), so an unreferenced one is a finished orphan from a
-    // refused/crashed commit — swept immediately, keeping the steady state
-    // at exactly the committed pair. A racer's IN-PROGRESS write lives in
-    // its `.snap-*` temp, protected by the mtime grace below; the racer
-    // itself loses at the flip's CAS with a clean refusal.
-    listVersionDirs(queueDir).filterNot(keep).foreach { n =>
-      try deleteRec(root(queueDir).resolve(n))
-      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    }
-    listLogVersions(queueDir).sorted.dropRight(logKeep).foreach { v =>
-      try Files.deleteIfExists(logRoot(queueDir).resolve(v.toString))
-      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    }
-    // the pre-log single-file manifest is superseded the moment the log has
-    // an entry; dropping it here (post-flip) keeps the migration one-way
-    try Files.deleteIfExists(manifestPath(queueDir))
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    onStep("versions-gc")
-    sweepStaleTemps(queueDir, staleGraceMs)
   }
 
   /** Tombstone-then-delete an inbox dir: the rename removes it from every
@@ -638,119 +396,6 @@ object PendingStore {
           if (n.startsWith(".") && n.endsWith(".gc"))
             try deleteRec(p) catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
         }
-      } finally s.close()
-    }
-  }
-
-  /** Sweep enqueue temps whose writer is demonstrably dead: a `.spool-*`
-    * dir (crash between parquet write and the visibility rename) or a
-    * `._commit.*.tmp` / legacy `._current.tmp` (crash between manifest
-    * entry write and its link) with no mtime progress anywhere in its tree
-    * for `graceMs`. A live spool writer
-    * touches its task files continuously, so mtime staleness — not mere
-    * existence — is the death signal; without this sweep a crashed enqueue
-    * leaks its temp dir forever. */
-  private def sweepStaleTemps(queueDir: String, graceMs: Long): Unit = {
-    val r = root(queueDir)
-    if (!Files.exists(r)) return
-    val cutoff = System.currentTimeMillis() - graceMs
-    val s = Files.list(r)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith(".spool-") || n.startsWith(".snap-") ||
-          n == "._current.tmp" ||
-          (n.startsWith("._commit.") && n.endsWith(".tmp")) ||
-          (n.startsWith("._owner.") && n.endsWith(".tmp"))) {
-          if (newestMtime(p) < cutoff)
-            try deleteRec(p) catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-        }
-      }
-    } finally s.close()
-  }
-
-  /** The commit point: publish manifest entry `_log/<m.version>` by
-    * exclusive hard-link — a true compare-and-swap on the manifest version.
-    *
-    * The pre-link tip check is not an optimization: retention keeps only the
-    * newest [[logKeep]] log entries, so a writer MORE than `logKeep`
-    * versions stale would find its target slot already swept and its link
-    * would "succeed" onto a version no reader resolves. Refusing every
-    * non-tip capture closes that; the window between the check and the link
-    * only admits racers targeting the SAME version (settled by the exclusive
-    * link — the filesystem grants it once), because reaching version N+2
-    * requires N+1 to exist first, which makes our link fail, and re-emptying
-    * the N+1 slot takes `logKeep` further commits, not a microsecond race.
-    *
-    * Durability: the entry's content is forced to disk before the link and
-    * the `_log` directory is forced after it, so the flip survives power
-    * loss, not just process kills. The directory force is best-effort (some
-    * filesystems refuse directory handles); on the tested platform it maps
-    * to fsync(2) of the dirent. */
-  private def casCommitManifest(queueDir: String, m: Manifest): Unit = {
-    import java.nio.file.StandardOpenOption._
-    val d = logRoot(queueDir)
-    Files.createDirectories(d)
-    val tip = listLogVersions(queueDir) match {
-      case Nil => legacyManifest(queueDir).version // pre-log store: seed from `_current`
-      case vs  => vs.max
-    }
-    if (tip != m.version - 1)
-      throw new ConcurrentWriterException(
-        s"queue '$queueDir' commit refused: our capture was at version " +
-          s"${m.version - 1} but the store is at $tip — another writer " +
-          "committed since; nothing was flipped (our snapshot dir is " +
-          "unreferenced and will be GC'd)")
-    val tmp = root(queueDir).resolve(
-      "._commit." + java.util.UUID.randomUUID().toString + ".tmp")
-    // line 1 = the snapshot dir name (carries both the version and the
-    // writer-unique suffix); consumed inbox dirs follow one per line
-    val bytes = (m.dirName +: m.consumed).mkString("\n").getBytes
-    val ch = java.nio.channels.FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
-    try { ch.write(java.nio.ByteBuffer.wrap(bytes)); ch.force(true) } finally ch.close()
-    try Files.createLink(d.resolve(m.version.toString), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new ConcurrentWriterException(
-          s"queue '$queueDir' lost the commit race for version ${m.version}: " +
-            "another writer published that log entry first; its commit " +
-            "stands whole, ours is refused whole (our snapshot dir is " +
-            "unreferenced and will be GC'd)")
-    }
-    try Files.delete(tmp)
-    catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    try {
-      val dch = java.nio.channels.FileChannel.open(d, READ)
-      try dch.force(true) finally dch.close()
-    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-  }
-
-  /** Newest mtime anywhere in `p`'s tree — the liveness signal for sweeps:
-    * a live writer touches its files constantly, so no progress past the
-    * grace means the writer is dead. `Long.MaxValue` (= never sweep) when
-    * the walk races a concurrent change. */
-  private def newestMtime(p: Path): Long =
-    try {
-      val w = Files.walk(p)
-      try w.mapToLong(f => Files.getLastModifiedTime(f).toMillis).max.orElse(0L)
-      finally w.close()
-    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Long.MaxValue }
-
-  private def listVersionDirs(queueDir: String): Seq[String] = {
-    val r = root(queueDir)
-    if (!Files.exists(r)) Nil
-    else {
-      val s = Files.list(r)
-      try {
-        val it = s.iterator(); val b = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.matches("v\\d+(-[0-9a-f]{8})?")) b += n
-        }
-        b.result()
       } finally s.close()
     }
   }

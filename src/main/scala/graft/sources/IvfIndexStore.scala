@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
+import graft.queue.VersionedDir
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +52,7 @@ object IvfIndexStore {
             codebook: Option[DataFrame] = None,
             idCol: String = "vec_id", vecCol: String = "embedding",
             pq: Option[graft.operators.ProductQuantizer.Codebooks] = None): Unit = {
-    require(currentVersion(emb.sparkSession, dir).isEmpty,
+    require(VersionedDir.resolve(java.nio.file.Paths.get(dir)).version == 0L,
       s"store at $dir is version-managed - build() would write a flat " +
         "layout readers ignore; use rebuild()")
     val cents = codebook.getOrElse(
@@ -117,120 +119,49 @@ object IvfIndexStore {
 
   private val PqDir = "/_pq_codebook"
 
-  /** Version-manifest layer — the blue/green REBUILD face ([[graft.queue
-    * .PendingStore]]'s numbered-manifest discipline, specialized to this
-    * store's read shape). [[build]] overwrites in place, so a reader
-    * mid-overwrite sees a torn store: fine for first builds and offline
-    * pipelines, fatal for a serving store that q120's drift report just
-    * told to re-center. [[rebuild]] instead builds the ENTIRE store into
-    * `<dir>/v<N+1>/` — invisible to readers, who resolve through the
-    * manifest — and flips with ONE exclusive file creation:
-    *
-    * {{{
-    *   <dir>/_vlog/<N>   manifest entry N (exclusive create = the commit
-    *                     point; a loser of a concurrent rebuild race
-    *                     fails loudly here, never half-flips)
-    *   <dir>/v<N>/       a complete store layout (lists + _codebook +
-    *                     _pq_codebook), immutable once superseded
-    * }}}
-    *
-    * Every read path resolves the manifest ONCE per serving call
-    * ([[resolveDir]]) and stays on that snapshot for the whole call, so a
-    * flip mid-query is invisible: whole-store-before or whole-store-after,
-    * never a mix. Retention keeps ONE superseded version for in-flight
-    * readers (GC'd at the next flip); a root with no `_vlog` is the
-    * legacy flat layout and resolves to itself, so existing stores read
-    * unchanged and adopt versioning at their first [[rebuild]]. Appends
-    * racing a rebuild land in the version current when they resolved —
-    * the standard rebuild contract: quiesce the sink across the flip, or
-    * re-ingest the window after (same contract as re-centering itself,
-    * which the rebuild's fresh assignment pass subsumes). */
-  private def vlogDir(dir: String) = dir + "/_vlog"
-
-  /** Current committed version at `dir`, or None for a legacy flat store
-    * (no `_vlog` entries). */
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(vlogDir(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).flatMap(st =>
-      scala.util.Try(st.getPath.getName.toLong).toOption) match {
-      case Array() => None
-      case ns => Some(ns.max)
-    }
-  }
-
-  /** The directory a reader serves from: `v<max manifest>` under a
-    * versioned root, the root itself for a legacy flat store. Idempotent
-    * (a `v<N>` snapshot has no `_vlog`), so helpers may re-resolve an
-    * already-resolved path safely; public paths resolve ONCE per call and
-    * thread the snapshot through, which is what makes a concurrent flip
-    * invisible inside a call. */
-  def resolveDir(spark: SparkSession, dir: String): String =
-    currentVersion(spark, dir) match {
-      case Some(n) => s"$dir/v$n"
-      case None => dir
-    }
-
   /** The list scan of a resolved snapshot, GLOB-SCOPED to the list
     * partitions: partition discovery must never walk sibling artifacts —
-    * in particular a `v<N>` snapshot materializing beside a legacy flat
-    * layout mid-[[rebuild]] (a bare read of the root would see two
-    * conflicting directory structures and fail the reader the rebuild is
-    * specifically designed not to disturb). */
+    * in particular a snapshot materializing beside a flat layout
+    * mid-[[rebuild]] (a bare read of the root would see two conflicting
+    * directory structures and fail the reader the rebuild is specifically
+    * designed not to disturb). */
   private def readLists(spark: SparkSession, root: String): DataFrame =
     spark.read.option("basePath", root).parquet(root + "/centroid_id=*")
 
-  /** Blue/green rebuild: a full [[build]] into the next version dir, an
-    * exclusive one-file manifest flip, then GC of everything older than
-    * the version just superseded. Readers are never torn (scaladoc
-    * above); a crash before the flip leaves an orphan `v<N+1>` that the
-    * next rebuild overwrites; a concurrent rebuild loses the exclusive
-    * create and fails loudly. Returns the committed version. */
+  /** Blue/green rebuild. [[build]] overwrites in place, so a reader
+    * mid-overwrite sees a torn store: fine for first builds and offline
+    * pipelines, fatal for a serving store that q120's drift report just
+    * told to re-center. `rebuild` instead builds the whole store (lists +
+    * `_codebook` + `_pq_codebook`) into a [[VersionedDir]] stage and
+    * commits it as the next snapshot; see [[VersionedDir]] for the commit,
+    * crash and retention rules. Every read path resolves ONCE per serving
+    * call ([[VersionedDir.resolveDir]]) and stays on that snapshot, so a
+    * flip mid-query is whole-store-before or whole-store-after. A crashed
+    * rebuild's snapshot is never served, and a concurrent rebuild loses
+    * with [[graft.queue.ConcurrentWriterException]]. From version 2 on,
+    * the flat layout is two generations stale and is dropped. Appends
+    * racing a rebuild land in the version current when they resolved —
+    * the standard rebuild contract: quiesce the sink across the flip, or
+    * re-ingest the window after (same contract as re-centering itself,
+    * which the rebuild's fresh assignment pass subsumes). Returns the
+    * committed version. */
   def rebuild(emb: DataFrame, dir: String, nlist: Int = 16,
               codebook: Option[DataFrame] = None,
               idCol: String = "vec_id", vecCol: String = "embedding",
               pq: Option[graft.operators.ProductQuantizer.Codebooks] = None): Long = {
-    val spark = emb.sparkSession
-    val cur = currentVersion(spark, dir)
-    val next = cur.getOrElse(0L) + 1L
-    // DOT-prefixed staging (the Maintenance '.compact' convention): Spark
-    // file listing skips it entirely, so a legacy-flat reader mid-build
-    // never sees a second directory structure materializing beside the
-    // live one; the finished snapshot renames into place in one move
-    build(emb, s"$dir/.v$next.build", nlist, codebook, idCol, vecCol, pq)
-    val lp = new org.apache.hadoop.fs.Path(vlogDir(dir) + "/" + next)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/.v$next.build"),
-        new org.apache.hadoop.fs.Path(s"$dir/v$next")),
-      s"ivf rebuild: staging rename failed for v$next")
-    fs.mkdirs(lp.getParent)
-    // the COMMIT POINT: exclusive create — two racing rebuilds cannot
-    // both win, and the loser's orphan snapshot is GC'd by the next flip
-    val out = fs.create(lp, false)
-    try out.write(s"v$next\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // retention: keep v<next> and ONE superseded version for in-flight
-    // readers; everything older goes, including the legacy flat leaves
-    // once they are two generations stale
-    val keep = Set(next, next - 1)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).foreach { st =>
-      val n = st.getPath.getName
-      val stale =
-        (n.startsWith("v") && scala.util.Try(n.drop(1).toLong).toOption
-          .exists(v => !keep.contains(v))) ||
-        // legacy flat artifacts: superseded by v1 at the first flip,
-        // GC'd once v2 exists (one-generation retention, same as v dirs)
-        (cur.isDefined && (n.startsWith("centroid_id=") ||
-          n == "_codebook" || n == "_pq_codebook"))
-      if (stale) fs.delete(st.getPath, true)
+    val base = VersionedDir.resolve(java.nio.file.Paths.get(dir))
+    val stage = VersionedDir.stage(base)
+    build(emb, stage.toString, nlist, codebook, idCol, vecCol, pq)
+    val live = VersionedDir.commit(base, stage)
+    if (live.version >= 2L) {
+      val s = java.nio.file.Files.list(base.root)
+      val flat = try s.iterator().asScala.filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith("centroid_id=") || n == "_codebook" || n == "_pq_codebook"
+        }.toList finally s.close()
+      flat.foreach(graft.queue.Maintenance.deleteRec)
     }
-    fs.listStatus(new org.apache.hadoop.fs.Path(vlogDir(dir))).foreach { st =>
-      scala.util.Try(st.getPath.getName.toLong).toOption
-        .filter(v => !keep.contains(v))
-        .foreach(_ => fs.delete(st.getPath, true))
-    }
-    next
+    live.version
   }
 
   /** True iff the store at `dir` was built with PQ codes ([[build]] with
@@ -240,7 +171,7 @@ object IvfIndexStore {
     * obscure empty-read failure). Hadoop-FS-general, like every other
     * store-layout check. */
   def hasPq(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(resolveDir(spark, dir) + PqDir)
+    val p = new org.apache.hadoop.fs.Path(VersionedDir.resolveDir(dir) + PqDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists { st =>
       val n = st.getPath.getName
@@ -258,7 +189,7 @@ object IvfIndexStore {
     * serve, and no in-place maintenance path mutates `_pq_codebook`. */
   def pqCodebook(spark: SparkSession, dir: String)
       : graft.operators.ProductQuantizer.Codebooks = {
-    val root = resolveDir(spark, dir)
+    val root = VersionedDir.resolveDir(dir)
     def read() = {
       require(hasPq(spark, root),
         s"ivf store at $dir has no _pq_codebook — built without PQ, or the " +
@@ -272,7 +203,7 @@ object IvfIndexStore {
 
   /** The persisted codebook: (centroid_id, cvec), nlist rows. */
   def codebook(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(resolveDir(spark, dir) + "/_codebook")
+    spark.read.parquet(VersionedDir.resolveDir(dir) + "/_codebook")
 
   /** Driver-resident copy of the KB-scale coarse codebook, memoized per
     * (session, RESOLVED root). Probe selection runs per serve; reading
@@ -319,7 +250,7 @@ object IvfIndexStore {
   def probeLists(spark: SparkSession, dir: String, queryVec: Seq[Float],
                  nprobe: Int): Seq[Long] = {
     val q = queryVec.toArray
-    probeOf(codebookRows(spark, resolveDir(spark, dir)), q, nprobe)
+    probeOf(codebookRows(spark, VersionedDir.resolveDir(dir)), q, nprobe)
   }
 
   /** (cdot desc, centroid_id asc) top-`nprobe` — negation-free ordering so
@@ -349,7 +280,7 @@ object IvfIndexStore {
            k: Int, nprobe: Int = 2, idCol: String = "vec_id",
            vecCol: String = "embedding",
            where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val root = resolveDir(spark, dir) // one snapshot for probe AND scan
+    val root = VersionedDir.resolveDir(dir) // one snapshot for probe AND scan
     val probes = probeLists(spark, root, queryVec, nprobe)
     val pruned = readLists(spark, root)
       .filter(col("centroid_id").isin(probes: _*))
@@ -380,7 +311,7 @@ object IvfIndexStore {
                    k: Int, where: org.apache.spark.sql.Column,
                    nprobe: Int = 2, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val root = resolveDir(spark, dir) // the whole widening loop serves one snapshot
+    val root = VersionedDir.resolveDir(dir) // the whole widening loop serves one snapshot
     // nlist from the memoized driver-resident codebook — no count job
     val nlist = codebookRows(spark, root).length
     var np = math.max(1, math.min(nprobe, nlist))
@@ -426,7 +357,7 @@ object IvfIndexStore {
                 vecCol: String = "embedding", queryIdCol: String = "query_id",
                 queryVecCol: String = "query_vec"): DataFrame = {
     import spark.implicits._
-    val root = resolveDir(spark, dir) // one snapshot for probes AND scan
+    val root = VersionedDir.resolveDir(dir) // one snapshot for probes AND scan
     // probe selection is DRIVER arithmetic over the memoized codebook
     // (the query batch is the service's bounded request payload, exactly
     // [[probeLists]]' contract ×|batch|): the pre-r21 shape ran a
@@ -488,7 +419,7 @@ object IvfIndexStore {
               k: Int, nprobe: Int = 2, refine: Int = 4,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import spark.implicits._
-    val root = resolveDir(spark, dir) // one snapshot: probe, ADC, rescore
+    val root = VersionedDir.resolveDir(dir) // one snapshot: probe, ADC, rescore
     val probes = probeLists(spark, root, queryVec, nprobe)
     val candIds = adcCandidates(spark, root, queryVec, probes, refine * k, idCol)
       .select(col("id")).as[Long].collect().toSeq.sorted
@@ -536,7 +467,7 @@ object IvfIndexStore {
                    queryIdCol: String = "query_id",
                    queryVecCol: String = "query_vec"): DataFrame = {
     import spark.implicits._
-    val root = resolveDir(spark, dir) // one snapshot: probes, codes, rescore
+    val root = VersionedDir.resolveDir(dir) // one snapshot: probes, codes, rescore
     val ctx = batchCtx(spark, root, queries, nprobe, queryIdCol, queryVecCol)
     val candPairs = adcBatchCandidateFrame(spark, root, ctx, refine * k, idCol)
       .as[(Long, Long)].collect().toSeq
@@ -629,7 +560,7 @@ object IvfIndexStore {
                                           idCol: String = "vec_id",
                                           queryIdCol: String = "query_id",
                                           queryVecCol: String = "query_vec"): DataFrame = {
-    val root = resolveDir(spark, dir)
+    val root = VersionedDir.resolveDir(dir)
     adcBatchCandidateFrame(spark, root,
       batchCtx(spark, root, queries, nprobe, queryIdCol, queryVecCol), limit, idCol)
   }
@@ -645,7 +576,7 @@ object IvfIndexStore {
     val cb = pqCodebook(spark, dir)
     val table = graft.operators.ProductQuantizer.adcTable(cb, queryVec.toArray)
     val approx = graft.operators.ProductQuantizer.adcApproxCol(cb, table)
-    readLists(spark, resolveDir(spark, dir))
+    readLists(spark, VersionedDir.resolveDir(dir))
       .filter(col("centroid_id").isin(probes: _*))
       .select(col(idCol).cast("long").as("id"), Similarity.quantize(approx).as("approx_q"))
       .orderBy(col("approx_q").desc, col("id"))
@@ -671,7 +602,7 @@ object IvfIndexStore {
   def qualityReport(spark: SparkSession, dir: String,
                     factor: Double = 2.0,
                     vecCol: String = "embedding"): DataFrame = {
-    val root = resolveDir(spark, dir) // one snapshot: codebook AND lists
+    val root = VersionedDir.resolveDir(dir) // one snapshot: codebook AND lists
     val cb = pqCodebook(spark, root)
     val err = graft.operators.ProductQuantizer
       .reconstructionErrCol(spark, cb, vecCol)
@@ -716,7 +647,7 @@ object IvfIndexStore {
   def delete(spark: SparkSession, dir: String, ids: Seq[Long],
              idCol: String = "vec_id"): Long = {
     require(ids.nonEmpty, "ivf delete: empty id list")
-    val root = resolveDir(spark, dir) // deletions land in the CURRENT version
+    val root = VersionedDir.resolveDir(dir) // deletions land in the CURRENT version
     val affected = readLists(spark, root)
       .filter(col(idCol).isin(ids: _*))
       .select(col("centroid_id").cast("long"), col(BatchCol).cast("long"))
@@ -788,7 +719,7 @@ object IvfIndexStore {
     val report = qualityReport(spark, dir, factor, vecCol)
     if (report.filter(col("drifted")).isEmpty) None
     else {
-      val root = resolveDir(spark, dir)
+      val root = VersionedDir.resolveDir(dir)
       val nlist = codebook(spark, root).count().toInt
       val pqOld = pqCodebook(spark, root)
       val corpus = readLists(spark, root)
@@ -876,7 +807,7 @@ object IvfIndexStore {
   def mergeLeaves(spark: SparkSession, dir: String,
                   maxBatches: Int = 8): Boolean = {
     require(maxBatches >= 2, "ivf mergeLeaves: maxBatches must be >= 2")
-    val root = resolveDir(spark, dir)
+    val root = VersionedDir.resolveDir(dir)
     val rp = java.nio.file.Paths.get(root)
     // heal any centroid-level aside a crashed merge left mid-swap
     if (java.nio.file.Files.exists(rp)) {
@@ -1005,8 +936,8 @@ object IvfIndexStore {
         s"— columns: ${batch.columns.mkString(", ")}")
     // ONE manifest resolution for the whole append: codebook, drift gate,
     // and the write all land in the same version snapshot (appends racing
-    // a rebuild follow the quiesce contract in the version-layer scaladoc)
-    val root = resolveDir(batch.sparkSession, dir)
+    // a rebuild follow the quiesce contract in [[rebuild]]'s scaladoc)
+    val root = VersionedDir.resolveDir(dir)
     require(!foldedBatches(root).contains(batchId),
       s"ivf store at $dir: batch $batchId was already folded by " +
         "mergeLeaves() - replaying it would file a second copy of its " +

@@ -1,10 +1,12 @@
 package graft.sources
 
 import graft.operators.{Retrieval, TextAnalysis}
+import graft.queue.VersionedDir
 import graft.streaming.{IncrementalContainment, RegistryIO}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Persisted inverted index (postings store) — the SPARSE serving twin of
   * [[IvfIndexStore]]: [[graft.operators.Retrieval.bm25TopK]] must
@@ -83,15 +85,13 @@ import org.apache.spark.sql.types.StructType
   *     its presence PROVES every batch carries positions + blockmeta
   *     ([[phraseTopK]]'s guard is one file-existence check, not a
   *     per-serve null scan).
-  *   - `_vlog/<N>` + `v<N>/` — the version-manifest layer [[compact]]
-  *     flips through (the [[IvfIndexStore.rebuild]] discipline): a fold
-  *     builds the ENTIRE next layout into `v<N+1>`, invisible to readers,
-  *     and commits with ONE exclusive file creation. Every public face
-  *     resolves the manifest ONCE per call and stays on that snapshot, so
-  *     a fold mid-query is whole-old or whole-new, never a mix; one
-  *     superseded version is retained for in-flight readers and GC'd at
-  *     the next flip. A root with no `_vlog` is the flat layout and
-  *     resolves to itself. Unlike the IVF store's rebuild snapshots,
+  *   - `_log/<N>` + `v<N>-<hex>/` — the [[graft.queue.VersionedDir]]
+  *     layer [[compact]] and [[compactLevel]] commit through: a fold
+  *     builds the ENTIRE next layout into a stage dir and commits it as
+  *     the next snapshot. Every public face resolves ONCE per call and
+  *     stays on that snapshot, so a fold mid-query is whole-old or
+  *     whole-new, never a mix. A root with no manifest is the flat layout
+  *     and resolves to itself. Unlike the IVF store's rebuild snapshots,
   *     a postings version is a LIVE tree — appends and erasures mutate
   *     the current version in place; the manifest isolates only the fold.
   *
@@ -149,8 +149,8 @@ import org.apache.spark.sql.types.StructType
   *   - the leaf swaps share `replaceDir`'s one non-atomic window; every
   *     public face heals the root aside on entry (`Maintenance
   *     .healAside`), and a crashed erase's leaf/stats asides heal in its
-  *     recovery pass; the whole-store fold has NO such window anymore —
-  *     the `_vlog` flip is one exclusive create;
+  *     recovery pass; the whole-store fold has NO such window — its
+  *     [[graft.queue.VersionedDir]] commit is one exclusive link;
   *   - [[deleteDocs]] stages the `_erase_inflight` intent marker (ids +
   *     touched leaves) BEFORE any mutation, then appends the `_erased/`
   *     tombstones, then rewrites; serving and compaction REFUSE while the
@@ -366,45 +366,13 @@ object PostingsStore {
       .split("\n").filter(_.nonEmpty).map(_.toLong).toSet
   }
 
-  // Version-manifest layer ----------------------------------------------------
-
-  /** Highest committed `_vlog` entry, or None for a flat (never-compacted)
-    * root. */
-  private def currentVersion(dir: String): Option[Long] = {
-    val p = java.nio.file.Paths.get(dir, "_vlog")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val s = java.nio.file.Files.list(p)
-      try {
-        var max = Option.empty[Long]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val n = scala.util.Try(it.next().getFileName.toString.toLong).toOption
-          if (n.exists(v => max.forall(v > _))) max = n
-        }
-        max
-      } finally s.close()
-    }
-  }
-
-  /** The tree a call serves from or mutates: `v<max manifest>` under a
-    * versioned root, the root itself for a flat store. Resolved ONCE per
-    * public call and threaded through, so a concurrent [[compact]] flip
-    * is invisible inside the call (whole-old or whole-new — the hammer
-    * spec pins it). Idempotent: a `v<N>` tree has no `_vlog`. */
-  private[graft] def resolveDir(dir: String): String =
-    currentVersion(dir.stripSuffix("/")) match {
-      case Some(n) => s"${dir.stripSuffix("/")}/v$n"
-      case None => dir.stripSuffix("/")
-    }
-
   /** Bulk build — batch -1 of the layout [[appendBatch]] appends into
     * (streaming batch ids start at 0, the [[IvfIndexStore.build]]
     * convention), so no append can collide with it. Fresh roots only. */
   def build(docs: DataFrame, dir: String,
             idCol: String = "doc_id", textCol: String = "text",
             headSize: Int = DefaultHeadSize): Unit = {
-    require(currentVersion(dir).isEmpty &&
+    require(VersionedDir.resolve(java.nio.file.Paths.get(dir)).version == 0L &&
       !RegistryIO.hasData(dir, Some("ingest_batch=")),
       s"postings store at $dir already has data - append or compact instead")
     writeBatch(docs, dir, -1L, idCol, textCol, headSize)
@@ -428,7 +396,7 @@ object PostingsStore {
                   headSize: Int = DefaultHeadSize,
                   checkDupIds: Boolean = true): Unit = {
     require(batchId >= 0, "appendBatch: batch ids are >= 0 (build uses -1)")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     graft.queue.Maintenance.healAside(java.nio.file.Paths.get(root))
     require(batchId > compactedThrough(root),
       s"postings store at $dir: batch $batchId was already folded by " +
@@ -643,7 +611,7 @@ object PostingsStore {
     require(terms.nonEmpty, "bm25 serve: empty query-term list")
     require(k >= 1, "bm25 serve: k must be positive")
     Retrieval.bm25Rank(
-      servingScored(spark, resolveDir(dir), terms, k1, b)
+      servingScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -667,7 +635,7 @@ object PostingsStore {
     require(terms.nonEmpty, "bm25 tiered serve: empty query-term list")
     require(k >= 1, "bm25 tiered serve: k must be positive")
     Retrieval.bm25Rank(
-      prunedScored(spark, resolveDir(dir), terms, k1, b)
+      prunedScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -693,7 +661,7 @@ object PostingsStore {
     require(terms.nonEmpty, "bm25 tiered batch serve: no query terms")
     val rankW = Window.partitionBy(col(queryIdCol))
       .orderBy(col("bm25_q").desc, col("doc_id"))
-    prunedScored(spark, resolveDir(dir), terms, k1, b)
+    prunedScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
       .join(broadcast(qt), Seq("tok"))
       .groupBy(col(queryIdCol), col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
@@ -794,7 +762,7 @@ object PostingsStore {
       : (DataFrame, WandDiag) = {
     require(terms.nonEmpty, "bm25 wand serve: empty query-term list")
     require(k >= 1, "bm25 wand serve: k must be positive")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     checkConsistent(root)
     val batches = committedBatches(root)
     val buckets = terms.map(bucketOf).distinct
@@ -1057,7 +1025,7 @@ object PostingsStore {
       .map { case (q, rows) => q -> rows.map(_.getString(1)).toSet }
     val terms = request.values.flatten.toSeq.distinct
     require(terms.nonEmpty, "bm25 wand batch serve: no query terms")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     checkConsistent(root)
     val batches = committedBatches(root)
     val buckets = terms.map(bucketOf).distinct
@@ -1344,7 +1312,7 @@ object PostingsStore {
     require(terms.nonEmpty, "bm25 batch serve: no query terms")
     val rankW = Window.partitionBy(col(queryIdCol))
       .orderBy(col("bm25_q").desc, col("doc_id"))
-    servingScored(spark, resolveDir(dir), terms, k1, b)
+    servingScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
       .join(broadcast(qt), Seq("tok"))
       .groupBy(col(queryIdCol), col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
@@ -1388,7 +1356,7 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase serve: need at least two tokens")
     require(k >= 1, "phrase serve: k must be positive")
     require(slop >= 0, "phrase serve: slop must be >= 0")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     checkConsistent(root)
     requirePositionalFormat(root, dir)
     val batches = committedBatches(root)
@@ -1517,7 +1485,7 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase-ranked serve: need at least two tokens")
     require(k >= 1, "phrase-ranked serve: k must be positive")
     require(slop >= 0, "phrase-ranked serve: slop must be >= 0")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     checkConsistent(root)
     requirePositionalFormat(root, dir)
     val batches = committedBatches(root)
@@ -1708,8 +1676,8 @@ object PostingsStore {
   }
 
   /** The flat-layout artifacts that constitute one store version — what
-    * a fold stages into the next `v<N>` and what GC removes from a root
-    * two generations stale. Never touches `_vlog`, `v<N>` trees, or
+    * a fold stages into the next version and what GC removes from a root
+    * two generations stale. Never touches the version layer or
     * caller-owned markers beside the store. */
   private val StoreArtifacts =
     Seq("_stats", "_termmeta", "_docidx", "_blockmeta", "_erased",
@@ -1719,39 +1687,25 @@ object PostingsStore {
     * key and RE-TIERED globally (the per-batch impact cuts collapse into
     * one corpus-wide cut, so a long-lived store's head tier is the
     * `headSize` best postings per term, not `headSize · batches`) — sum
-    * the stats rows, rebuild `_termmeta`/`_docidx`, and COMMIT through
-    * the `_vlog` manifest: the whole next layout stages invisibly under
-    * `.v<N+1>.build`, renames to `v<N+1>`, and one exclusive file
-    * creation flips readers to it (see the version layer in the object
-    * scaladoc — readers resolve once per call and see whole-old or
-    * whole-new; one superseded version is retained for in-flight reads
-    * and GC'd at the next flip). The watermark file rides the staged
+    * the stats rows, rebuild `_termmeta`/`_docidx`, and COMMIT the whole
+    * next layout as a [[graft.queue.VersionedDir]] snapshot (readers
+    * resolve once per call and see whole-old or whole-new). The
+    * watermark file rides the staged
     * root so a later replay of a folded batch is refused loudly by
     * [[appendBatch]] instead of double-counting. Cost: one store scan —
     * the offline maintenance pass that bounds serving's per-batch footer
     * tier. Single-maintainer like every mutating face; a concurrent
-    * compact loses the exclusive create and fails loudly. */
+    * compact loses with [[graft.queue.ConcurrentWriterException]]. */
   def compact(spark: SparkSession, dir: String,
               headSize: Int = DefaultHeadSize): Unit = {
     val base = dir.stripSuffix("/")
-    val root = resolveDir(base)
+    val prev = VersionedDir.resolve(java.nio.file.Paths.get(base))
+    val root = prev.path.toString
     checkComplete(root)
     val batches = batchIds(root)
     require(batches.nonEmpty, s"postings store at $dir: nothing to compact")
     val watermark = math.max(batches.max, compactedThrough(root))
-    val next = currentVersion(base).getOrElse(0L) + 1L
-    // heal the one formerly-unhealed crash window: a crash between the
-    // staged snapshot's ATOMIC_MOVE to v<next> and its _vlog entry leaves
-    // an orphan v<next> no reader ever resolved to (the manifest entry IS
-    // the commit). Without this, every later compact would stage and then
-    // die on the move — maintenance permanently blocked. The orphan never
-    // committed, so deleting it is safe; single-maintainer contract means
-    // no concurrent compact can be mid-flight here.
-    val orphan = java.nio.file.Paths.get(base, s"v$next")
-    if (java.nio.file.Files.exists(orphan))
-      graft.queue.Maintenance.deleteRec(orphan)
-    val tmp = java.nio.file.Paths.get(base, s".v$next.build")
-    graft.queue.Maintenance.deleteRec(tmp)
+    val tmp = VersionedDir.stage(prev)
     // the global re-tier changes the tail set, so `_termmeta`'s tail
     // certificates must recompute from the FOLDED postings (never a sum of
     // the per-batch sidecars); one materialization feeds both writes
@@ -1803,48 +1757,22 @@ object PostingsStore {
       java.nio.file.Files.copy(fm, tmp.resolve(FormatMarker))
     // a FULL fold subsumes the leveled-fold registry: every id at or
     // below the watermark is refused by it already
-    commitVersion(base, next, tmp)
+    commitVersion(prev, tmp)
   }
 
-  /** The one version-commit idiom [[compact]] and [[compactLevel]] share:
-    * stage rename + exclusive manifest create (the commit point — a
-    * racing fold fails loudly here, never half-flips), then retention:
-    * keep `v<next>` and ONE superseded version for in-flight readers;
-    * everything two generations stale goes, including the flat layout
-    * (version 0) once v2 commits. */
-  private def commitVersion(base: String, next: Long,
-                            tmp: java.nio.file.Path): Unit = {
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(base, s"v$next"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val vlog = java.nio.file.Paths.get(base, "_vlog")
-    java.nio.file.Files.createDirectories(vlog)
-    try java.nio.file.Files.createFile(vlog.resolve(next.toString))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"postings store at $base: concurrent fold committed v$next " +
-            "first - this fold loses (its staged snapshot was renamed; " +
-            "re-run against the winner)")
+  /** The commit [[compact]] and [[compactLevel]] share: publish the staged
+    * layout through [[VersionedDir.commit]], then drop the flat layout
+    * (version 0) once it is two generations stale. */
+  private def commitVersion(prev: VersionedDir.Snapshot,
+                            tmp: java.nio.file.Path): Unit =
+    if (VersionedDir.commit(prev, tmp).version >= 2L) {
+      StoreArtifacts.foreach(a => graft.queue.Maintenance.deleteRec(prev.root.resolve(a)))
+      val s = java.nio.file.Files.list(prev.root)
+      val batches = try s.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("ingest_batch=")).toList
+        finally s.close()
+      batches.foreach(graft.queue.Maintenance.deleteRec)
     }
-    val keepFlat = next - 1 <= 0
-    if (!keepFlat) StoreArtifacts.foreach(a =>
-      graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(base, a)))
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(base))
-    val stale = try {
-      val b = Seq.newBuilder[java.nio.file.Path]
-      val it = s.iterator()
-      while (it.hasNext) {
-        val c = it.next(); val name = c.getFileName.toString
-        val oldVersion = name.startsWith("v") &&
-          scala.util.Try(name.stripPrefix("v").toLong).toOption
-            .exists(_ < next - 1)
-        if (oldVersion || (!keepFlat && name.startsWith("ingest_batch=")))
-          b += c
-      }
-      b.result()
-    } finally s.close()
-    stale.foreach(graft.queue.Maintenance.deleteRec)
-  }
 
   /** LEVELED (incremental) compaction — the batch-count bound under
     * streaming ingest: every serving cost that is linear in committed
@@ -1865,7 +1793,7 @@ object PostingsStore {
     * an n-batch ingest is O(log n) rewrites per posting while the live
     * batch count stays ≤ maxBatches.
     *
-    * Commit is [[compact]]'s `_vlog` flip verbatim (whole-old or
+    * Commit is [[compact]]'s version commit verbatim (whole-old or
     * whole-new to every reader; links make it cheap). The folded batch
     * lands under a fresh NEGATIVE id (below build's -1 — stream ids are
     * ≥ 0, so no collision ever), and the folded ORIGINAL ids enter the
@@ -1882,7 +1810,8 @@ object PostingsStore {
                    headSize: Int = DefaultHeadSize): Boolean = {
     require(maxBatches >= 2, "compactLevel: maxBatches must be >= 2")
     val base = dir.stripSuffix("/")
-    val root = resolveDir(base)
+    val prev = VersionedDir.resolve(java.nio.file.Paths.get(base))
+    val root = prev.path.toString
     checkComplete(root)
     val committed = committedBatches(root)
     if (committed.size <= maxBatches) return false
@@ -1892,14 +1821,7 @@ object PostingsStore {
       .take(committed.size - maxBatches + 1)
     val keep = committed.filterNot(fold.contains)
     val foldId = (committed :+ -1L).min - 1L
-    val next = currentVersion(base).getOrElse(0L) + 1L
-    // heal a crash between a prior fold's stage-rename and its _vlog
-    // entry (compact's orphan rule: the manifest entry IS the commit)
-    val orphan = java.nio.file.Paths.get(base, s"v$next")
-    if (java.nio.file.Files.exists(orphan))
-      graft.queue.Maintenance.deleteRec(orphan)
-    val tmp = java.nio.file.Paths.get(base, s".v$next.build")
-    graft.queue.Maintenance.deleteRec(tmp)
+    val tmp = VersionedDir.stage(prev)
     java.nio.file.Files.createDirectories(tmp)
     // untouched batches: linked, never copied — the O(folded bytes) bound
     keep.foreach { b =>
@@ -1965,7 +1887,7 @@ object PostingsStore {
     val allFolded = (foldedBatches(root) ++ fold).toSeq.sorted
     java.nio.file.Files.write(tmp.resolve(FoldedMarker),
       allFolded.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    commitVersion(base, next, tmp)
+    commitVersion(prev, tmp)
     true
   }
 
@@ -2045,7 +1967,7 @@ object PostingsStore {
     * match no rows. Returns postings rows removed. */
   def deleteDocs(spark: SparkSession, dir: String, docIds: Seq[Long]): Long = {
     require(docIds.nonEmpty, "postings erase: empty id list")
-    val root = resolveDir(dir)
+    val root = VersionedDir.resolveDir(dir)
     graft.queue.Maintenance.healAside(java.nio.file.Paths.get(root))
     recoverCrashedErase(spark, root)
     checkConsistent(root)
@@ -2482,7 +2404,7 @@ object PostingsStore {
     * [[compactLevel]] LEVELING MID-INGEST (after batches 3 and 5, cap 3)
     * — so the hash gate covers the leveled fold's whole surface: the
     * linked carry of untouched batches, the folded batch's re-tier and
-    * recomputed sidecars, the `_vlog` flip, and appends RESOLVING INTO
+    * recomputed sidecars, the version commit, and appends RESOLVING INTO
     * the new version after each fold. Serving is the exact both-tier
     * read, so the oracle is q126's VERBATIM (exact BM25 is fold-
     * invariant by construction — that is the gate). Single-threaded

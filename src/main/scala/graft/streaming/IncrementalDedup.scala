@@ -167,8 +167,7 @@ object IncrementalDedup {
     * (data files at the directory root, unpartitioned) would read here with
     * `bucket = null` on every row, and the probe's partition-prune predicate
     * would then silently drop ALL legacy rows before the join — an existing
-    * corpus registry would stop flagging anything. Fail fast instead;
-    * [[migrateLegacyRegistry]] rewrites it into the partitioned layout. */
+    * corpus registry would stop flagging anything. Fail fast instead. */
   def readRegistry(spark: SparkSession, registryDir: String): DataFrame = {
     val p = java.nio.file.Paths.get(registryDir)
     val rootFiles: Seq[String] =
@@ -184,28 +183,12 @@ object IncrementalDedup {
     require(!rootFiles.exists(_.endsWith(".parquet")),
       s"legacy unpartitioned registry layout at $registryDir: data files sit " +
         "at the root instead of band=*/bucket=* partition directories, so the " +
-        "partition-pruned probe would silently skip every legacy row. Run " +
-        "IncrementalDedup.migrateLegacyRegistry(spark, dir) once to rewrite it.")
+        "partition-pruned probe would silently skip every legacy row. Rebuild " +
+        "the registry from its corpus into the partitioned layout.")
     if (!rootFiles.exists(_.startsWith("band=")))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], registrySchema)
     else spark.read.schema(registrySchema).parquet(registryDir)
-  }
-
-  /** One-time in-place migration of a legacy (unpartitioned, bucket-less)
-    * registry into the (band, bucket)-partitioned layout the pruned probe
-    * requires: bucket is recomputed from the minhash (it is a pure function
-    * of the join key), written to a sibling dir, then swapped in with the
-    * same rename-aside protocol as registry compaction. */
-  def migrateLegacyRegistry(spark: SparkSession, registryDir: String): Unit = {
-    val legacy = spark.read
-      .schema(StructType.fromDDL("band INT, minhash STRING, rep_doc_id BIGINT"))
-      .parquet(registryDir)
-      .select(col("band"), bucketOf(col("minhash")).as("bucket"),
-        col("minhash"), col("rep_doc_id"))
-    val tmp = registryDir.stripSuffix("/") + ".migrating"
-    legacy.write.mode(SaveMode.Overwrite).partitionBy("band", "bucket").parquet(tmp)
-    graft.queue.Maintenance.replaceDir(tmp, registryDir)
   }
 
   /** Streaming face: wire a document stream through [[processBatch]],

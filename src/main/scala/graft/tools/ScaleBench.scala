@@ -1077,7 +1077,7 @@ object ScaleBench {
       val dir = s"$root/postings-leveled"
       graft.queue.Maintenance.deleteRec(Paths.get(dir))
       def negBatchDirs: Map[Long, java.io.File] = {
-        val r = new java.io.File(graft.sources.PostingsStore.resolveDir(dir))
+        val r = new java.io.File(graft.queue.VersionedDir.resolveDir(dir))
         Option(r.listFiles).getOrElse(Array.empty).collect {
           case f if f.getName.startsWith("ingest_batch=-") &&
             f.getName.stripPrefix("ingest_batch=").toLong < -1L =>
@@ -1090,7 +1090,7 @@ object ScaleBench {
       var naiveFull = 0L
       var maxBatches = 0
       def storeBytes: Long =
-        dirBytes(new java.io.File(graft.sources.PostingsStore.resolveDir(dir)))
+        dirBytes(new java.io.File(graft.queue.VersionedDir.resolveDir(dir)))
       val t0 = System.nanoTime()
       (0 until 50).foreach { b =>
         graft.sources.PostingsStore.appendBatch(
@@ -1101,14 +1101,14 @@ object ScaleBench {
           naiveFull += storeBytes // a FULL compact rewrites ~the store
           val newId = (negBatchDirs.keySet -- knownNeg).min
           val w = dirBytes(new java.io.File(
-            graft.sources.PostingsStore.resolveDir(dir) +
+            graft.queue.VersionedDir.resolveDir(dir) +
               s"/ingest_batch=$newId"))
           foldWritten += w
           maxFold = math.max(maxFold, w)
         }
         val n = {
           val sd = new java.io.File(
-            graft.sources.PostingsStore.resolveDir(dir), "_stats")
+            graft.queue.VersionedDir.resolveDir(dir), "_stats")
           Option(sd.listFiles).getOrElse(Array.empty)
             .count(_.getName.startsWith("ingest_batch="))
         }
@@ -1255,7 +1255,7 @@ object ScaleBench {
       smallGroups.foreach { case (p, v) => hc.set(p, v) }
       try graft.sources.PostingsStore.compact(spark, dir)
       finally smallGroups.keys.foreach(hc.unset)
-      val resolved = graft.sources.PostingsStore.resolveDir(dir)
+      val resolved = graft.queue.VersionedDir.resolveDir(dir)
       val terms = Seq("dup", "vector", "merge")
       val probed = terms.map(graft.sources.PostingsStore.bucketOf).distinct
       val (files, groups) = probed.map(b =>
@@ -1848,7 +1848,7 @@ object ScaleBench {
     sb ++= "spec pins). Both bounds are the claim: small id sets on small\n"
     sb ++= "vocabularies pay leaf count, large ones converge to one batch\n"
     sb ++= "rewrite. compact folds the batch tier in one offline pass\n"
-    sb ++= "behind the _vlog version flip (readers whole-old or whole-new,\n"
+    sb ++= "behind the version commit (readers whole-old or whole-new,\n"
     sb ++= "hammer-spec pinned).\n"
     sb ++= "\n| tiered BM25 serve ('dup'+'the', k=10, unsuffixed copies) | df('the') | exact serve | tiered serve | WAND serve (exact) | tiered recall@10 | head bytes ('the' bucket) | tail bytes (tiered never reads) | WAND cand rows (block-max) | WAND cand rows (per-batch bound) |\n|---|---|---|---|---|---|---|---|---|---|\n"
     tieredRows.foreach { case (k, dfThe, es, ps, ws, rec, hb, tb, cb, cp) =>
@@ -1943,7 +1943,7 @@ object ScaleBench {
       sb ++= "the count is, and compactLevel holds it AT the cap across the\n"
       sb ++= "whole 50-batch ingest (max-seen column) by folding only the\n"
       sb ++= "SMALLEST batches into one — untouched batches enter the next\n"
-      sb ++= "_vlog version as hard links (zero data bytes; a distributed\n"
+      sb ++= "version as hard links (zero data bytes; a distributed\n"
       sb ++= "store writes a manifest of unchanged files instead, the LSM\n"
       sb ++= "discipline). The bytes columns carry the claim: total\n"
       sb ++= "fold-written vs what 'full compact at the same cadence' would\n"

@@ -96,11 +96,11 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestSession with BeforeAnd
 
     // ← the crash points: a snapshot written but never flipped to, and a
     //   spool that never completed its rename (both dot-/unreferenced)
-    val orphanSnap = java.nio.file.Paths.get(dir, ".pending", "v1")
+    val orphanSnap = java.nio.file.Paths.get(dir, ".pending", "v1-0badf00d")
     java.nio.file.Files.createDirectories(orphanSnap)
     java.nio.file.Files.write(orphanSnap.resolve("part-junk.parquet"),
       "not parquet".getBytes)
-    val halfSpool = java.nio.file.Paths.get(dir, ".pending", ".spool-crashed")
+    val halfSpool = java.nio.file.Paths.get(dir, ".pending", ".spool-crashed.tmp")
     java.nio.file.Files.createDirectories(halfSpool)
     java.nio.file.Files.write(halfSpool.resolve("part-0.parquet"),
       "not parquet".getBytes)
@@ -112,7 +112,8 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestSession with BeforeAnd
     val terminal = EventLog.read(spark, dir).as[EventLog.QueueRow].collect()
     assert(terminal.length == 2 && terminal.forall(_.status == "DELIVERED"))
     assert(server.bodies.length == 2)
-    // the real commit at v1 overwrote the orphan garbage
+    // the real commit at v1 has its own name; its retention swept the orphan
     assert(graft.queue.PendingStore.manifest(dir).version >= 1L)
+    assert(!java.nio.file.Files.exists(orphanSnap))
   }
 }

@@ -61,7 +61,8 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("writer killed between any two commit steps: readers see the old or new set, never partial") {
-    val steps = Seq("snapshot-written", "manifest-flipped", "inbox-gc", "versions-gc")
+    val steps = Seq("snapshot-written", "published", "entry-written", "linked",
+      "log-synced", "inbox-gc")
     for (killAt <- steps) {
       val dir = tmp()
       // state S1: snapshot v1 = {a1, a2, a3} + one fresh spool {b1, b2}
@@ -84,8 +85,8 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
       val seen = readIds(dir)
       assert(seen == before || seen == after,
         s"kill@$killAt: reader saw a partial state $seen")
-      // flip IS the commit point: killed before it → old state; after → new
-      val flipped = steps.indexOf(killAt) >= steps.indexOf("manifest-flipped")
+      // the link IS the commit point: killed before it → old state; after → new
+      val flipped = steps.indexOf(killAt) >= steps.indexOf("linked")
       assert(seen == (if (flipped) after else before), s"kill@$killAt")
 
       // a restarted writer converges with no repair step: re-run the cycle
@@ -145,7 +146,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     val threads = (1 to 2).map { i =>
       new Thread(() =>
         try results.add(Right(PendingStore.acquireLease(dir, s"d$i")))
-        catch { case e: PendingStore.ConcurrentWriterException => results.add(Left(e.getMessage)) })
+        catch { case e: ConcurrentWriterException => results.add(Left(e.getMessage)) })
     }
     threads.foreach(_.start()); threads.foreach(_.join(10000))
     val (refused, won) = results.toArray(Array.empty[Either[String, PendingStore.Lease]])
@@ -157,7 +158,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
 
     // an un-leased commit is refused while the lease is live
     val snap = PendingStore.capture(dir)
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.commit(PendingStore.readAt(spark, dir, snap), dir, snap)
     }
     assert(err.getMessage.contains("owned by"))
@@ -179,7 +180,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(PendingStore.leaseHolder(dir).contains("new"))
     // the stale holder wakes up mid-commit: the pre-flip check refuses it
     val snap = PendingStore.capture(dir)
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.commit(PendingStore.readAt(spark, dir, snap), dir, snap,
         lease = Some(stale))
     }
@@ -200,7 +201,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     val lease = PendingStore.acquireLease(dir, "pausy", ttlMs = 1L)
     Thread.sleep(10L) // the 'GC pause': ttl elapses, no renewal, no takeover
     val snap = PendingStore.capture(dir)
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.commit(PendingStore.readAt(spark, dir, snap), dir, snap,
         lease = Some(lease))
     }
@@ -221,7 +222,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     val stale = PendingStore.acquireLease(dir, "old", ttlMs = 1000L)
     val snap = PendingStore.capture(dir)
     val oldPending = PendingStore.readAt(spark, dir, snap) // {a1, a2}: the loser's state
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.commit(oldPending, dir, snap, lease = Some(stale),
         onStep = {
           case "snapshot-written" =>
@@ -239,7 +240,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(err.getMessage.contains("lease lost"), err.getMessage)
     // the winner's commit survives intact: its manifest, its data
     val m = PendingStore.manifest(dir)
-    assert(m.version == 1L && m.dirName.startsWith("v1-"), m.toString)
+    assert(m.version == 1L && m.name.startsWith("v1-"), m.toString)
     assert(readIds(dir) == Seq("a1"),
       "winner's snapshot was clobbered or its flip was overwritten")
     assert(PendingStore.leaseHolder(dir).contains("new"))
@@ -253,7 +254,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     PendingStore.commit(PendingStore.readAt(spark, dir, s0), dir, s0) // v1 commits
     // pre-CAS, this flip would have silently WON by rename order, discarding
     // v1's cycle; now the tip check refuses it whole
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.commit(
         PendingStore.readAt(spark, dir, sStale).filter($"id" === "a1"), dir, sStale)
     }
@@ -282,7 +283,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
         new Thread(() =>
           try { PendingStore.commit(np, dir, snap); outcomes.add(Right(())) }
           catch {
-            case e: PendingStore.ConcurrentWriterException =>
+            case e: ConcurrentWriterException =>
               outcomes.add(Left(e.getMessage))
             case e: Throwable => // anything else is a FAILED refusal, not a clean one
               outcomes.add(Left(s"UNEXPECTED ${e.getClass.getName}: ${e.getMessage}"))
@@ -324,9 +325,9 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(versionDirs().map(_.take(2)).sorted == Seq("v2", "v3"),
       s"steady state must keep exactly the committed pair; got ${versionDirs()}")
-    // a racer's IN-PROGRESS write lives in a dot-prefixed .snap-* temp:
+    // a racer's IN-PROGRESS write lives in a dot-prefixed stage temp:
     // fresh mtime = possibly-live writer, must survive any commit's sweep
-    val inProgress = Paths.get(dir, ".pending", ".snap-v4-deadbeef")
+    val inProgress = Paths.get(dir, ".pending", ".v4-deadbeef.tmp")
     Files.createDirectories(inProgress)
     Files.write(inProgress.resolve("part-0.parquet"), "in progress".getBytes)
     // a PUBLISHED orphan (complete by construction — publication is the
@@ -336,7 +337,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     Files.write(orphan.resolve("part-0.parquet"), "complete orphan".getBytes)
     val s4 = PendingStore.capture(dir)
     PendingStore.commit(PendingStore.readAt(spark, dir, s4), dir, s4) // real v4
-    assert(Files.exists(inProgress), "a fresh .snap-* temp must never be swept")
+    assert(Files.exists(inProgress), "a fresh stage temp must never be swept")
     assert(!Files.exists(orphan), "a published orphan sweeps immediately")
     // once the temp is demonstrably dead (no mtime progress past the
     // grace), the stale sweep reclaims it like any crashed writer's leavings
@@ -345,7 +346,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     Files.walk(inProgress).forEach(p => Files.setLastModifiedTime(p, old))
     val s5 = PendingStore.capture(dir)
     PendingStore.commit(PendingStore.readAt(spark, dir, s5), dir, s5)
-    assert(!Files.exists(inProgress), "a stale .snap-* temp must be swept")
+    assert(!Files.exists(inProgress), "a stale stage temp must be swept")
     assert(readIds(dir) == Seq("a1"))
   }
 
@@ -378,7 +379,7 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     val lost = PendingStore.acquireLease(dir, "loser", ttlMs = 1L)
     Thread.sleep(10L)
     val winner = PendingStore.acquireLease(dir, "winner")
-    val err = intercept[PendingStore.ConcurrentWriterException] {
+    val err = intercept[ConcurrentWriterException] {
       PendingStore.renewLease(dir, lost)
     }
     assert(err.getMessage.contains("lease lost"), err.getMessage)
@@ -386,34 +387,11 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     PendingStore.releaseLease(dir, winner)
   }
 
-  test("legacy single-file manifest seeds the CAS log and is dropped after migration") {
-    val dir = tmp()
-    PendingStore.spool(df("a1"), dir)
-    val s0 = PendingStore.capture(dir)
-    PendingStore.commit(PendingStore.readAt(spark, dir, s0), dir, s0) // _log/1
-    // rebuild the pre-log on-disk layout: state in `_current`, no `_log`
-    val pend = Paths.get(dir, ".pending")
-    val logDir = pend.resolve("_log")
-    Files.copy(logDir.resolve("1"), pend.resolve("_current"))
-    Files.list(logDir).forEach(Files.delete(_))
-    Files.delete(logDir)
-    // reads resolve the legacy manifest as the live state
-    assert(PendingStore.manifest(dir).version == 1L)
-    assert(readIds(dir) == Seq("a1"))
-    // the first CAS commit seeds the log at N+1 and retires `_current`
-    val s1 = PendingStore.capture(dir)
-    PendingStore.commit(PendingStore.readAt(spark, dir, s1), dir, s1)
-    assert(Files.exists(logDir.resolve("2")), "log must seed at legacy version + 1")
-    assert(!Files.exists(pend.resolve("_current")), "_current must be dropped")
-    assert(PendingStore.manifest(dir).version == 2L)
-    assert(readIds(dir) == Seq("a1"))
-  }
-
   test("crashed enqueue's .spool-* temp is swept once stale, never while fresh") {
     val dir = tmp()
     PendingStore.spool(df("a1"), dir)
     // simulate an enqueue that died between parquet write and rename
-    val dead = Paths.get(dir, ".pending", ".spool-deadbeef")
+    val dead = Paths.get(dir, ".pending", ".spool-deadbeef.tmp")
     Files.createDirectories(dead)
     Files.write(dead.resolve("part-0.parquet"), "bytes".getBytes)
     val s0 = PendingStore.capture(dir)
@@ -474,63 +452,22 @@ class PendingStoreSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("legacy store lacking updated_at reads it as created_at (in-place upgrade)") {
-    val dir = tmp()
-    PendingStore.spool(df("a1", "a2"), dir)
-    val s0 = PendingStore.capture(dir)
-    PendingStore.commit(PendingStore.readAt(spark, dir, s0), dir, s0)
-    // simulate a pre-upgrade snapshot: rewrite v1's parquet WITHOUT the column
-    val pendingRoot = Paths.get(dir, ".pending")
-    val vdir = {
-      val s = Files.list(pendingRoot)
-      try {
-        val it = s.iterator(); var found: java.nio.file.Path = null
-        while (found == null && it.hasNext) {
-          val p = it.next()
-          if (p.getFileName.toString.startsWith("v1-")) found = p
-        }
-        found
-      } finally s.close()
-    }
-    val legacy = spark.read.parquet(vdir.toString).drop("updated_at")
-    val rewrite = pendingRoot.resolve(".legacy-rewrite")
-    legacy.write.mode("overwrite").parquet(rewrite.toString)
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().forEachRemaining(rmTree(_)) finally s.close()
-      }
-      Files.deleteIfExists(p); ()
-    }
-    rmTree(vdir)
-    Files.move(rewrite, vdir)
-    val rows = PendingStore.read(spark, dir)
-      .select($"id", $"updated_at", $"created_at").collect()
-    assert(rows.length == 2)
-    rows.foreach { r =>
-      assert(r.getTimestamp(1) != null, s"updated_at null for ${r.getString(0)}")
-      assert(r.getTimestamp(1) == r.getTimestamp(2),
-        "legacy updated_at must surface as created_at")
-    }
-    // EventLog's combined view goes through the same upgrade
-    val combined = EventLog.read(spark, dir)
-    assert(combined.filter($"updated_at".isNull).count() == 0L)
-  }
-
   test("crashed commit's orphan snapshot is invisible and swept by the next commit") {
     val dir = tmp()
     PendingStore.spool(df("a1"), dir)
     val s0 = PendingStore.capture(dir)
     PendingStore.commit(PendingStore.readAt(spark, dir, s0), dir, s0) // v1 live
     // a commit that died before its flip: orphan v2 with garbage content
-    val orphan = Paths.get(dir, ".pending", "v2")
+    val orphan = Paths.get(dir, ".pending", "v2-0badf00d")
     Files.createDirectories(orphan)
     Files.write(orphan.resolve("part-junk.parquet"), "not parquet".getBytes)
     assert(readIds(dir) == Seq("a1"), "orphan must be invisible to readers")
-    // next cycle commits v2 for real: overwrite sweeps the orphan
+    // next cycle commits v2 for real under its own name; retention sweeps
+    // the orphan
     val snap = PendingStore.capture(dir)
     PendingStore.commit(PendingStore.readAt(spark, dir, snap), dir, snap)
     assert(PendingStore.manifest(dir).version == 2L)
+    assert(!Files.exists(orphan), "the orphan must be swept")
     assert(readIds(dir) == Seq("a1"))
   }
 }

@@ -1,13 +1,17 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkTestSession
+import graft.queue.{ConcurrentWriterException, VersionedDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Blue/green rebuild contract ([[IvfIndexStore.rebuild]]): a reader
   * hammering across a live rebuild sees whole-store-before or
-  * whole-store-after, never a torn mix; the flip is one exclusive
-  * manifest-entry creation; retention keeps exactly one superseded
-  * version; legacy flat stores adopt versioning transparently. */
+  * whole-store-after, never a torn mix; the flip is one
+  * [[graft.queue.VersionedDir]] commit; retention keeps exactly one
+  * superseded version; flat stores adopt versioning transparently; a
+  * crashed or racing rebuild is never served. */
 class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
@@ -19,6 +23,21 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft_ivf_rebuild").toString
 
+  private def version(d: String): Long = VersionedDir.resolve(Paths.get(d)).version
+
+  /** Versions of the snapshot dirs present under `d`, committed or not. */
+  private def snapshots(d: String): Set[Long] = {
+    val s = Files.list(Paths.get(d))
+    try {
+      val b = Set.newBuilder[Long]
+      s.forEach { p =>
+        val n = p.getFileName.toString
+        if (n.matches("v\\d+-[0-9a-f]{8}")) b += n.drop(1).takeWhile(_.isDigit).toLong
+      }
+      b.result()
+    } finally s.close()
+  }
+
   private def servedSet(store: String): Seq[(Long, Long)] =
     IvfIndexStore.topK(spark, store, qvec, k = 10, nprobe = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -26,11 +45,10 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
   test("legacy flat store adopts versioning at first rebuild; readers flip to the new corpus") {
     val d = tmp()
     IvfIndexStore.build(emb.filter($"vec_id" < 300), d, nlist = 16)
-    assert(IvfIndexStore.currentVersion(spark, d).isEmpty)
+    assert(version(d) == 0L && VersionedDir.resolveDir(d) == d)
     val old = servedSet(d)
     assert(IvfIndexStore.rebuild(emb, d, nlist = 16) == 1L)
-    assert(IvfIndexStore.currentVersion(spark, d).contains(1L))
-    assert(IvfIndexStore.resolveDir(spark, d) == s"$d/v1")
+    assert(version(d) == 1L)
     val fresh = servedSet(d)
     assert(fresh != old)
     // the superseded flat layout survives one generation for in-flight
@@ -48,19 +66,12 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
     IvfIndexStore.build(emb.filter($"vec_id" < 300), d, nlist = 16)
     IvfIndexStore.rebuild(emb.filter($"vec_id" < 400), d, nlist = 16)
     IvfIndexStore.rebuild(emb.filter($"vec_id" < 450), d, nlist = 16)
-    val names2 = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-      .map(_.getFileName.toString).iterator()
-      .asInstanceOf[java.util.Iterator[String]]
-    val set2 = { val b = Set.newBuilder[String]; names2.forEachRemaining(b += _); b.result() }
-    assert(!set2.exists(_.startsWith("centroid_id=")), set2)
-    assert(set2.contains("v1") && set2.contains("v2"))
+    assert(!Files.list(Paths.get(d))
+      .anyMatch(p => p.getFileName.toString.startsWith("centroid_id=")))
+    assert(snapshots(d) == Set(1L, 2L), snapshots(d))
     IvfIndexStore.rebuild(emb, d, nlist = 16)
-    val names3 = java.nio.file.Files.list(java.nio.file.Paths.get(d))
-      .map(_.getFileName.toString).iterator()
-      .asInstanceOf[java.util.Iterator[String]]
-    val set3 = { val b = Set.newBuilder[String]; names3.forEachRemaining(b += _); b.result() }
-    assert(!set3.contains("v1") && set3.contains("v2") && set3.contains("v3"), set3)
-    assert(IvfIndexStore.currentVersion(spark, d).contains(3L))
+    assert(snapshots(d) == Set(2L, 3L), snapshots(d))
+    assert(version(d) == 3L)
   }
 
   test("a reader hammering across a live rebuild sees only whole-old or whole-new") {
@@ -98,7 +109,8 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
     IvfIndexStore.appendBatch(
       emb.filter($"vec_id" < 20).select(($"vec_id" + 9000L).as("vec_id"),
         $"embedding", $"label"), d, batchId = 0)
-    assert(java.nio.file.Files.walk(java.nio.file.Paths.get(d, "v1"))
+    assert(version(d) == 1L)
+    assert(Files.walk(Paths.get(VersionedDir.resolveDir(d)))
       .anyMatch(p => p.toString.contains("ingest_batch=0")))
     val served = IvfIndexStore.topK(spark, d, qvec, k = 500, nprobe = 16)
       .select($"vec_id").as[Long].collect().toSet
@@ -129,7 +141,7 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
     assert(before(1L)._2 && !before(0L)._2, s"fixture: $before")
     // the signal drives the remedy
     val v = IvfIndexStore.rebuildIfDrifted(spark, d, trainIters = 2)
-    assert(v.contains(1L) && IvfIndexStore.currentVersion(spark, d).contains(1L))
+    assert(v.contains(1L) && version(d) == 1L)
     // the rebuilt store is ONE bulk batch, nothing flagged, and the
     // retrained codebooks beat the stale ones on the drifted region
     val after = IvfIndexStore.qualityReport(spark, d).collect()
@@ -138,12 +150,13 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
     assert(after.head.getLong(2) < before(1L)._1,
       s"retrain did not improve the drifted region: ${after.head.getLong(2)} vs ${before(1L)._1}")
     // the corpus survived the flip intact (incl. the drifted appends)
-    val n = spark.read.option("basePath", s"$d/v1")
-      .parquet(s"$d/v1/centroid_id=*").count()
+    val v1 = VersionedDir.resolveDir(d)
+    val n = spark.read.option("basePath", v1)
+      .parquet(s"$v1/centroid_id=*").count()
     assert(n == emb.count() + 100)
     // loop terminates: a clean store rebuilds nothing
     assert(IvfIndexStore.rebuildIfDrifted(spark, d, trainIters = 2).isEmpty)
-    assert(IvfIndexStore.currentVersion(spark, d).contains(1L))
+    assert(version(d) == 1L)
   }
 
   test("full lifecycle: build -> append -> delete -> drift -> rebuild serves exactly the surviving corpus") {
@@ -182,21 +195,57 @@ class IvfStoreRebuildSpec extends AnyFunSuite with SparkTestSession {
     assert(!served.exists(t => gone.contains(t._1)))
   }
 
+  test("a crashed rebuild's complete snapshot is never served; the next rebuild replaces it") {
+    val d = tmp()
+    IvfIndexStore.build(emb.filter($"vec_id" < 300), d, nlist = 16)
+    val flat = servedSet(d)
+    // the crash: a rebuild published its complete snapshot, then died
+    // before its manifest entry — un-commit a real rebuild to get exactly
+    // that state
+    IvfIndexStore.rebuild(emb.filter($"vec_id" < 400), d, nlist = 16)
+    val crashed = servedSet(d)
+    Files.delete(Paths.get(d, VersionedDir.LogDir, "1"))
+    assert(version(d) == 0L && servedSet(d) == flat)
+    assert(snapshots(d) == Set(1L), "the crashed snapshot is still on disk")
+    // the next rebuild targets the same version number: readers must serve
+    // ITS corpus, not the crashed one
+    assert(IvfIndexStore.rebuild(emb, d, nlist = 16) == 1L)
+    val fresh = servedSet(d)
+    val ref = tmp()
+    IvfIndexStore.build(emb, ref, nlist = 16)
+    assert(fresh == servedSet(ref) && fresh != crashed)
+    assert(snapshots(d) == Set(1L), "retention sweeps the crashed snapshot")
+  }
+
   test("concurrent rebuilds: exactly one wins the manifest flip") {
     val d = tmp()
     IvfIndexStore.build(emb.filter($"vec_id" < 300), d, nlist = 16)
-    // simulate the loser: the winner's manifest entry already exists
-    val vlog = java.nio.file.Paths.get(d, "_vlog")
-    java.nio.file.Files.createDirectories(vlog)
-    java.nio.file.Files.createFile(vlog.resolve("1"))
-    // currentVersion now says 1, so a rebuild targets v2 — but if two
-    // raced to the SAME next version, the second exclusive create throws
-    val e = intercept[Exception] {
-      val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$d/_vlog/1"), false)
-      out.close()
+    // the winner: a complete store staged beside the live one, committed
+    // from inside the loser's build job — after the loser resolved its
+    // base, before it commits
+    val base = VersionedDir.resolve(Paths.get(d))
+    val winnerStage = VersionedDir.stage(base)
+    IvfIndexStore.build(emb.filter($"vec_id" < 400), winnerStage.toString, nlist = 16)
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    IvfStoreRebuildSpec.onRow = () =>
+      if (fired.compareAndSet(false, true)) VersionedDir.commit(base, winnerStage)
+    val touch = org.apache.spark.sql.functions.udf { (v: Seq[Float]) =>
+      IvfStoreRebuildSpec.onRow(); v
     }
-    assert(e.getMessage != null)
+    val loser = emb.withColumn("embedding", touch($"embedding"))
+    try intercept[ConcurrentWriterException] {
+      IvfIndexStore.rebuild(loser, d, nlist = 16)
+    } finally IvfStoreRebuildSpec.onRow = () => ()
+    assert(fired.get, "the winner must have committed mid-rebuild")
+    // readers see the winner, whole
+    assert(version(d) == 1L)
+    val ref = tmp()
+    IvfIndexStore.build(emb.filter($"vec_id" < 400), ref, nlist = 16)
+    assert(servedSet(d) == servedSet(ref))
   }
+}
+
+object IvfStoreRebuildSpec {
+  /** Called per row inside a rebuild's build job (local mode: same JVM). */
+  @volatile var onRow: () => Unit = () => ()
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.operators.Retrieval
+import graft.queue.VersionedDir
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,9 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = graft.Tables.documents(spark, sfDir)
   private val terms = Seq("dup", "vector", "merge")
+
+  private def version(d: String): Long =
+    VersionedDir.resolve(java.nio.file.Paths.get(d)).version
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/store"
@@ -158,9 +162,9 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     // v1, which holds exactly one folded batch dir (plus the sidecars and
     // watermark); the flat pre-fold tree is retained one generation for
     // in-flight readers
-    val resolved = PostingsStore.resolveDir(d)
-    assert(resolved == d + "/v1", resolved)
-    val batchDirs = java.nio.file.Files.list(java.nio.file.Paths.get(resolved))
+    assert(version(d) == 1L)
+    val batchDirs = java.nio.file.Files.list(
+        java.nio.file.Paths.get(VersionedDir.resolveDir(d)))
       .filter(p => p.getFileName.toString.startsWith("ingest_batch="))
       .count()
     assert(batchDirs == 1L)
@@ -220,7 +224,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val d = tmp("graft_postings_sink_level")
     def committedCount: Int = {
-      val root = java.nio.file.Paths.get(PostingsStore.resolveDir(d))
+      val root = java.nio.file.Paths.get(VersionedDir.resolveDir(d))
       if (!java.nio.file.Files.exists(root)) 0
       else {
         val s = java.nio.file.Files.list(root)
@@ -256,7 +260,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     // fold's output); a stream replay can only redeliver ids >= 0
     import scala.jdk.CollectionConverters._
     val folded = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(PostingsStore.resolveDir(d), "_folded"))
+      java.nio.file.Paths.get(VersionedDir.resolveDir(d), "_folded"))
       .asScala.map(_.trim.toLong).filter(_ >= 0L)
     assert(folded.nonEmpty)
     val e = intercept[IllegalArgumentException](
@@ -330,7 +334,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.build(docs.limit(50), d)
     PostingsStore.compact(spark, d)
     val files = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(PostingsStore.resolveDir(d)))
+        java.nio.file.Paths.get(VersionedDir.resolveDir(d)))
       .filter(p => p.getFileName.toString.endsWith(".parquet") &&
         !p.toString.contains("_stats") && !p.toString.contains("_docidx") &&
         !p.toString.contains("_erased"))
@@ -512,7 +516,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     } finally { stop = true; reader.join(30000) }
     assert(failures.isEmpty, failures.toArray.mkString("\n"))
     assert(serveRows(d) == expected)
-    assert(PostingsStore.resolveDir(d) == d + "/v2")
+    assert(version(d) == 2L)
   }
 
   // ---- r19: snapshot pinning, orphan-version heal, torn-batch semantics ----
@@ -551,16 +555,17 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.build(docs.limit(60), d)
     PostingsStore.compact(spark, d) // -> v1
     val before = serveRows(d)
-    // simulate the crash window: v2 renamed into place, _vlog/2 never
-    // created — readers still resolve v1; pre-fix, the next compact staged
-    // and died on the ATOMIC_MOVE forever
-    val orphan = java.nio.file.Paths.get(d, "v2")
+    // simulate the crash window: v2 published, its manifest entry never
+    // linked — readers still resolve v1, and the next compact must neither
+    // trip over the orphan nor serve it
+    val orphan = java.nio.file.Paths.get(d, "v2-0badf00d")
     java.nio.file.Files.createDirectories(orphan.resolve("ingest_batch=-1"))
     java.nio.file.Files.write(orphan.resolve("junk"), Array[Byte](1, 2, 3))
-    assert(PostingsStore.resolveDir(d) == d + "/v1")
-    PostingsStore.compact(spark, d) // must heal the orphan and commit v2
-    assert(PostingsStore.resolveDir(d) == d + "/v2")
+    assert(version(d) == 1L)
+    PostingsStore.compact(spark, d) // commits v2 under its own name
+    assert(version(d) == 2L)
     assert(serveRows(d) == before)
+    assert(!java.nio.file.Files.exists(orphan), "retention sweeps the orphan")
   }
 
   test("a torn batch's _docidx rows cannot refuse a legitimate append " +
@@ -955,7 +960,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
   // ---- r20: leveled compaction, block-max WAND, dispatch, phrase+BM25 ----
 
   private def committedCount(d: String): Int = {
-    val root = java.nio.file.Paths.get(PostingsStore.resolveDir(d), "_stats")
+    val root = java.nio.file.Paths.get(VersionedDir.resolveDir(d), "_stats")
     if (!java.nio.file.Files.exists(root)) 0
     else {
       val s = java.nio.file.Files.list(root)
@@ -979,7 +984,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(!PostingsStore.compactLevel(spark, d, maxBatches = 8),
       "below the cap must be a no-op")
     assert(PostingsStore.compactLevel(spark, d, maxBatches = 3))
-    assert(PostingsStore.resolveDir(d) == d + "/v1")
+    assert(version(d) == 1L)
     assert(committedCount(d) == 3)
     assert(serveRows(d) == before && before == corpusRows(docs))
     // tiered + WAND + phrase all serve the leveled store
@@ -992,7 +997,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     // kept (largest) batches entered v1 as HARD LINKS — zero data bytes
     // moved for them; the fold's write cost is the folded bytes only
     val keptLeafFile = java.nio.file.Files
-      .walk(java.nio.file.Paths.get(PostingsStore.resolveDir(d)))
+      .walk(java.nio.file.Paths.get(VersionedDir.resolveDir(d)))
       .filter(p => p.getFileName.toString.endsWith(".parquet") &&
         !p.toString.contains("ingest_batch=-"))
       .findFirst().get()
@@ -1012,7 +1017,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.appendBatch(docs.limit(0), d, 100L)
     assert(committedCount(d) == 4)
     assert(PostingsStore.compactLevel(spark, d, maxBatches = 3))
-    assert(PostingsStore.resolveDir(d) == d + "/v2")
+    assert(version(d) == 2L)
     assert(serveRows(d) == before)
   }
 
@@ -1057,7 +1062,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     } finally { stop = true; reader.join(30000) }
     assert(failures.isEmpty, failures.toArray.mkString("\n"))
     assert(serveRows(d) == expected)
-    assert(PostingsStore.resolveDir(d) == d + "/v2")
+    assert(version(d) == 2L)
   }
 
   test("WAND dispatch: a query whose every term fits the head serves " +

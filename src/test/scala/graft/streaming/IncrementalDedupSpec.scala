@@ -158,13 +158,12 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     assert(res.passed, res.status.toString)
   }
 
-  test("legacy unpartitioned registry fails fast and migrates in place") {
+  test("legacy unpartitioned registry fails fast") {
     // A registry written by the pre-(band, bucket) format has data files at
     // the directory root. Read with the current explicit schema, every row
     // would get bucket = null and the (band, bucket) prune predicate would
     // silently drop ALL legacy rows — near-dups admitted with no error. The
-    // reader must refuse it, and the one-time migration must restore exact
-    // probe behavior.
+    // reader must refuse it.
     val reg = tmp("graft_dedup_legacy")
     graft.operators.Dedup
       .minhashSignatures(graft.operators.Dedup.shingles(
@@ -174,19 +173,12 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
     val e = intercept[IllegalArgumentException] {
       IncrementalDedup.readRegistry(spark, reg)
     }
-    assert(e.getMessage.contains("migrateLegacyRegistry"), e.getMessage)
+    assert(e.getMessage.contains("Rebuild the registry"), e.getMessage)
     // processBatch goes through readRegistry, so the gate refuses too rather
     // than silently admitting near-dups
     intercept[IllegalArgumentException] {
       IncrementalDedup.processBatch(Seq(Doc(10L, base + " iota")).toDF(), reg)
     }
-    IncrementalDedup.migrateLegacyRegistry(spark, reg)
-    // post-migration: partitioned layout, same rows, probe flags as before
-    assert(IncrementalDedup.readRegistry(spark, reg)
-      .filter($"bucket".isNull).count() == 0)
-    val v = run(Seq(Doc(10L, base + " iota"), Doc(11L, "fresh unrelated words entirely")).toDF(), reg)
-    assert(v(10L) == (true, Some(1L)), s"got $v")
-    assert(v(11L) == (false, None), s"got $v")
   }
 
   test("streaming gate writes verdicts through foreachBatch") {

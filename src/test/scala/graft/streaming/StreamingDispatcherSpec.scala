@@ -114,7 +114,7 @@ class StreamingDispatcherSpec extends AnyFunSuite with SparkTestSession with Bef
     val q1 = StreamingDispatcher.start(spark, dir, checkpointDir = root + "/ckpt1",
       intervalMs = 200L)
     try {
-      val err = intercept[graft.queue.PendingStore.ConcurrentWriterException] {
+      val err = intercept[graft.queue.ConcurrentWriterException] {
         StreamingDispatcher.start(spark, dir, checkpointDir = root + "/ckpt2",
           intervalMs = 200L)
       }
