@@ -1,5 +1,6 @@
 package graft
 
+import graft.cdc.ChangeCapture
 import graft.delivery.{HttpPoster, JdkHttpPoster}
 import graft.model.TriggerConfig
 import graft.queue.CredentialStore
@@ -46,7 +47,7 @@ final class TriggerRegistry(
       case _ => cfg
     }
     drop(cfg.name)
-    val envelopes = ChangeStream.capture(changeFeed, retained)
+    val envelopes = ChangeCapture.capture(changeFeed, retained)
     val writer = ChangeStream
       .deliveryWriter(envelopes, retained, queueDir, poster,
         credentialsDir = if (cfg.security == "PRIVATE") Some(credentialsDir) else None)

@@ -54,6 +54,13 @@ object ChangeCapture {
         when(col("op") === "DELETE", lit(null).cast("string"))
           .otherwise(to_json(col("new"))).as("new")).as("data")).as("event"))
 
+  /** The delivered body: the envelope row serialized as the reference's
+    * JSON payload (`cdc_webhook--1.0.sql:252-280`). The one definition the
+    * SYNC sink posts and the ASYNC queue stores. */
+  def payloadJson: Column =
+    to_json(struct(col("id"), col("created_at"), col("table"),
+      col("trigger"), col("event")))
+
   /** Full capture pipeline for one trigger over a change-row frame. */
   def capture(changes: DataFrame, cfg: TriggerConfig): DataFrame =
     changes

@@ -16,6 +16,13 @@ trait HttpPoster extends Serializable {
            timeoutMs: Long): (Int, String)
 }
 
+object HttpPoster {
+  /** The delivery contract's success test: any 2xx status (reference
+    * `src/cdc_webhook.c:137-139`). SYNC retries and the ASYNC dispatcher's
+    * status machine both decide by it. */
+  def delivered(status: Int): Boolean = status >= 200 && status < 300
+}
+
 /** java.net.http-based transport: fresh client per executor (lazy, not
   * serialized), Content-Type: application/json + custom headers
   * (reference `src/cdc_webhook.c:196-198`), per-request timeout

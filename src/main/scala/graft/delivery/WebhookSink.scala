@@ -42,7 +42,7 @@ object WebhookSink {
       val (status, resp) = poster.post(url, headers, json, cfg.timeout * 1000L)
       lastStatus = status
       responses += resp
-      if (status >= 200 && status < 300)
+      if (HttpPoster.delivered(status))
         return Outcome(eventId, success = true, attempt + 1, status, responses.toSeq)
       attempt += 1
     }
@@ -76,8 +76,7 @@ object WebhookSink {
           .withColumn("_headers", lit(HeadersCodec.toJson(cfg.headers)))
     }
     val ordered = addressed
-      .withColumn("payload_json", to_json(struct(
-        col("id"), col("created_at"), col("table"), col("trigger"), col("event"))))
+      .withColumn("payload_json", graft.cdc.ChangeCapture.payloadJson)
       .select(col("id"), col("table.name").as("tbl"),
         col("created_at"), col("payload_json"), col("_url"), col("_headers"))
       .repartition(col("tbl"))

@@ -193,11 +193,16 @@ object Dedup {
     * (idCol, set_size — the same aggregate as a persisted staging table,
     * e.g. SharedStages.shingleSetSizes) to skip recomputing the per-doc
     * set sizes, which this verify otherwise aggregates from the full
-    * shingle relation TWICE (once per pair side). */
+    * shingle relation TWICE (once per pair side); a `sizesDf` of any other
+    * shape is refused. */
   def jaccardVerify(pairs: DataFrame, shingleDf: DataFrame,
                     idCol: String = "doc_id",
                     preDistincted: Boolean = false,
                     sizesDf: Option[DataFrame] = None): DataFrame = {
+    sizesDf.foreach(s => require(
+      s.columns.sorted.sameElements(Seq(idCol, "set_size").sorted),
+      s"jaccardVerify: sizesDf must have exactly the columns ($idCol, set_size), " +
+        s"got (${s.columns.mkString(", ")})"))
     val base = shingleDf.select(col(idCol), col("shingle"))
     val distinctSh = if (preDistincted) base else base.distinct()
     val sizes = sizesDf.getOrElse(

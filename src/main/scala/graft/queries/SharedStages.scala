@@ -67,10 +67,9 @@ object SharedStages {
     * Every verify/decontamination consumer recomputed this as its own full
     * aggregate over the distinct-shingle cache (r21 plan audit: q113 ran it
     * TWICE — once per pair side — and q33/q87 once each; q59/q76/q78/q85
-    * ran the same aggregate restricted to eval docs as `tot`). Rows =
-    * documents, so the persisted stage joins back broadcast-sized at any
-    * corpus scale; on a cluster it is a one-column staging table beside the
-    * shingle set. */
+    * ran the same aggregate restricted to eval docs as `tot`). Narrow,
+    * one row per document; on a cluster it is a one-column staging table
+    * beside the shingle set. */
   def shingleSetSizes(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
     memo(sizesCache, s, dir)(
@@ -80,6 +79,9 @@ object SharedStages {
 
   private val rarePostingsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** Document-frequency cap of containment blocking's rare shingles. */
+  val ContainmentMaxDf = 8
 
   /** Containment blocking's rare-postings relation: (shingle, doc_id)
     * restricted to shingles with corpus df ≤ [[ContainmentMaxDf]]. The
@@ -91,7 +93,6 @@ object SharedStages {
     * (≤ maxDf · |rare shingles| rows); the cluster analog is the staging
     * table a containment-dedup pipeline materializes between its blocking
     * and verify passes. */
-  val ContainmentMaxDf = 8
   def rarePostings(s: SparkSession, dir: String): DataFrame =
     memo(rarePostingsCache, s, dir)(
       Dedup.rarePostings(distinctShingles(s, dir), maxDf = ContainmentMaxDf,

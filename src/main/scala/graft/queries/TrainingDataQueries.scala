@@ -230,19 +230,16 @@ object TrainingDataQueries extends graft.QueryModule {
   }
 
   /** Exact order statistics per group (percentile_disc-style p50/p90 — no
-    * interpolation, engine-portable), computed over the per-group VALUE
-    * HISTOGRAM instead of a row_number over every row: the rank-target
-    * value is the smallest value whose running count reaches the target,
-    * which is the same value the row at that rank carries (duplicates of
-    * a value are contiguous in rank order, so selecting by cumulative
-    * count ≥ target and selecting the rank-target row's value coincide —
-    * the old tie-break columns ordered rows WITHIN equal values and never
-    * changed the selected value). The histogram aggregation is map-side
-    * combined and fully parallel; only the distinct (flag, value) rows —
-    * not the corpus — enter the 3-group cumulative window, which at sf0.1
-    * cuts the single-task-per-flag sort from every lineitem row to the
-    * distinct prices (guide §2.3 aggregate-before-shuffle; the r20
-    * scaling block showed this query window-sort-bound). q62's sketch
+    * interpolation, engine-portable) by BUCKET-OFFSET selection instead of
+    * one row_number over each whole group: `pb = floor(price / 1000)` is a
+    * monotone prefix of the sort key (price, orderkey, linenumber), so
+    * rows are ranked within each (flag, bucket) — many small parallel
+    * window partitions instead of one task sorting a whole flag — and a
+    * row's global rank is its bucket's offset (the running sum of the
+    * preceding buckets' COUNTS, a window over buckets, not rows) plus its
+    * rank in the bucket. p50 and p90 are the rows at global ranks
+    * floor((n + 1) / 2) and ceil(0.9 n): the same total order and rank
+    * targets as the one-window form, so the same values. q62's sketch
     * remains the corpus-scale path; this stays its verification twin. */
   def percentiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   * way. Resolution at delivery time is a broadcast hash join: zero shuffle
   * on the event side at any scale.
   *
+  * Each upsert writes the whole merged store as the next [[VersionedDir]]
+  * snapshot, so a PRIVATE trigger resolving mid-upsert reads the old or
+  * the new store whole, a crash loses no committed credential, and of two
+  * racing upserts the loser throws [[ConcurrentWriterException]] instead
+  * of dropping the winner's row.
+  *
   * Security contract (§5 test_security_private): with PRIVATE, the webhook
   * url/headers live ONLY here — TriggerConfig carries placeholders, plans
   * and logs never embed the secret values.
@@ -30,18 +36,25 @@ object CredentialStore {
   private val key = Seq("trigger_schema", "trigger_table", "trigger_name")
 
   /** S5: upsert this trigger's url/headers under its 3-column key. */
-  def upsert(spark: SparkSession, storeDir: String, cfg: TriggerConfig): Unit = {
+  def upsert(spark: SparkSession, storeDir: String, cfg: TriggerConfig): Unit =
+    upsert(spark, storeDir, cfg, _ => ())
+
+  /** [[upsert]] with [[VersionedDir.commit]]'s step seam exposed. */
+  private[queue] def upsert(spark: SparkSession, storeDir: String,
+                            cfg: TriggerConfig, onStep: String => Unit): Unit = {
     import spark.implicits._
     val incoming = Seq(Credential(
       cfg.schemaName, cfg.tableName, cfg.name, cfg.webhookUrl,
       graft.delivery.HeadersCodec.toJson(cfg.headers),
       new java.sql.Timestamp(System.currentTimeMillis()))).toDF()
+    val base = VersionedDir.resolve(java.nio.file.Paths.get(storeDir))
     val merged =
-      if (!exists(spark, storeDir)) incoming
-      else read(spark, storeDir).join(incoming, key, "left_anti").unionByName(incoming)
-    val tmp = storeDir.stripSuffix("/") + ".next"
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap(tmp, storeDir)
+      if (base.version == 0L) incoming
+      else readAt(spark, base.path.toString)
+        .join(incoming, key, "left_anti").unionByName(incoming)
+    val stage = VersionedDir.stage(base)
+    merged.coalesce(1).write.parquet(stage.toString)
+    VersionedDir.commit(base, stage, onStep = onStep)
   }
 
   /** J1: resolve url/headers for envelope rows of one trigger — broadcast
@@ -58,22 +71,11 @@ object CredentialStore {
       .drop(key: _*)
   }
 
+  /** The live credential snapshot. */
   def read(spark: SparkSession, storeDir: String): DataFrame =
+    readAt(spark, VersionedDir.resolveDir(storeDir))
+
+  private def readAt(spark: SparkSession, snapshotDir: String): DataFrame =
     spark.read.schema(org.apache.spark.sql.Encoders.product[Credential].schema)
-      .parquet(storeDir)
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.exists(p) && java.nio.file.Files.list(p).findFirst().isPresent
-  }
-
-  private def swap(tmp: String, target: String): Unit = {
-    val t = java.nio.file.Paths.get(target)
-    if (java.nio.file.Files.exists(t)) {
-      java.nio.file.Files.walk(t).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), t,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+      .parquet(snapshotDir)
 }

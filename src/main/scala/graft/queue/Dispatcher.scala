@@ -68,10 +68,9 @@ object Dispatcher {
       // terminal states are persisted (single-writer dispatcher).
       val (status, resp) = poster.post(r.webhook_url,
         graft.delivery.HeadersCodec.parse(r.headers), r.payload, r.timeout * 1000L)
-      val ok = status >= 200 && status < 300
       val attempts = r.attempt_count + 1
       val newStatus =
-        if (ok) "DELIVERED"
+        if (graft.delivery.HttpPoster.delivered(status)) "DELIVERED"
         else if (attempts > r.retry_number) "FAILED"
         else "PENDING"
       val nextAt =

@@ -58,8 +58,7 @@ object EventLog {
         lit(cfg.name).as("trigger_name"),
         urlCol.as("webhook_url"),
         hdrCol.as("headers"),
-        to_json(struct(col("id"), col("created_at"), col("table"),
-          col("trigger"), col("event"))).as("payload"),
+        graft.cdc.ChangeCapture.payloadJson.as("payload"),
         lit(cfg.timeout).as("timeout"),
         lit("PENDING").as("status"),
         lit(0).as("attempt_count"),

@@ -600,6 +600,64 @@ object PostingsStore {
         col("ingest_batch"))
   }
 
+  /** A serve's pinned snapshot: the resolved root, through the
+    * consistency gate, and its committed-batch set. Every serving face
+    * pins ONCE per call and threads `batches` into every relation it
+    * touches — postings, `_termmeta`, `_blockmeta`, `_stats` — so a batch
+    * committing mid-serve is whole-visible or whole-invisible, never
+    * stats-only (N/avgdl/df inflated against postings the probe
+    * excluded). */
+  private def pin(dir: String): (String, Seq[Long]) = {
+    val root = VersionedDir.resolveDir(dir)
+    checkConsistent(root)
+    (root, committedBatches(root))
+  }
+
+  /** The pinned corpus stats `(n_docs, total_len)`: the KB-scale `_stats`
+    * sum over the serve's committed batches. */
+  private def pinnedStats(spark: SparkSession, root: String,
+                          batches: Seq[Long]): DataFrame =
+    readStats(spark, root)
+      .filter(col("ingest_batch").isInCollection(batches))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("total_len")).as("total_len"))
+
+  /** The pinned rows of a term-keyed sidecar (`read` = [[readTermMeta]]
+    * or [[readBlockMeta]]) for `terms`: committed batches and the terms'
+    * buckets as partition literals, the terms a pushed `In`. Handed to
+    * `use` inside the In-pushdown scope, so whatever `use` materializes
+    * prunes row groups by term. */
+  private def pinnedByTerm[T](read: (SparkSession, String) => DataFrame,
+                              spark: SparkSession, root: String,
+                              terms: Seq[String], batches: Seq[Long])
+                             (use: DataFrame => T): T =
+    IncrementalContainment.withInPushdown(spark, math.max(terms.size, 10)) {
+      use(read(spark, root)
+        .filter(col("ingest_batch").isInCollection(batches) &&
+          col("tbucket").isInCollection(terms.map(bucketOf).distinct) &&
+          col("tok").isInCollection(terms)))
+    }
+
+  /** Exact per-term df from pinned `_termmeta` rows — never from a
+    * truncated or candidate-restricted probe, which would inflate or
+    * undercount every idf. */
+  private def dfOf(meta: DataFrame): DataFrame =
+    meta.groupBy(col("tok")).agg(sum(col("df")).as("df"))
+
+  /** The one BM25 scoring join: rows carrying `(tok, tf, dl)` join the
+    * broadcast per-term `(tok, df)` and the broadcast corpus stats, and
+    * score through the shared quantized expression
+    * ([[Retrieval.bm25ContribQ]]) into `contrib_q`, keeping `keep`. The
+    * WAND certificates go through it too: the scorer is monotone (up in
+    * tf, down in dl), so scoring a max tf / min dl bounds every posting
+    * it covers, in the same quantized millionths. */
+  private final case class Scorer(dfs: DataFrame, stats: DataFrame,
+                                  k1: Double, b: Double) {
+    def apply(rows: DataFrame, keep: String*): DataFrame =
+      rows.join(broadcast(dfs), "tok").crossJoin(broadcast(stats))
+        .select(keep.map(col) :+ Retrieval.bm25ContribQ(k1, b).as("contrib_q"): _*)
+  }
+
   /** BM25 top-k served from the store: identical output to
     * [[graft.operators.Retrieval.bm25TopK]] over the same corpus — same
     * shared scorer expression ([[Retrieval.bm25ContribQ]]), df counted
@@ -610,8 +668,9 @@ object PostingsStore {
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 serve: empty query-term list")
     require(k >= 1, "bm25 serve: k must be positive")
+    val (root, batches) = pin(dir)
     Retrieval.bm25Rank(
-      servingScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
+      servingScored(spark, root, batches, terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -634,8 +693,9 @@ object PostingsStore {
                      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 tiered serve: empty query-term list")
     require(k >= 1, "bm25 tiered serve: k must be positive")
+    val (root, batches) = pin(dir)
     Retrieval.bm25Rank(
-      prunedScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
+      prunedScored(spark, root, batches, terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -649,20 +709,43 @@ object PostingsStore {
                           k: Int, k1: Double = 1.2, b: Double = 0.75,
                           queryIdCol: String = "query_id",
                           termCol: String = "term"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, "bm25 tiered batch serve: k must be positive")
+    val (qt, request) = requestOf(queries, queryIdCol, termCol)
+    require(request.nonEmpty, "bm25 tiered batch serve: no query terms")
+    val (root, batches) = pin(dir)
+    rankPerQuery(prunedScored(spark, root, batches, termsOf(request), k1, b),
+      qt, k, queryIdCol)
+  }
+
+  /** A batch request's `(query_id, tok)` relation, deduplicated and
+    * checkpointed (it feeds the request pull AND the per-query rank), and
+    * the same request on the driver as `query_id → terms` — driver-side
+    * payload by contract (the [[IvfIndexStore.topKBatch]] discipline). */
+  private def requestOf(queries: DataFrame, queryIdCol: String,
+                        termCol: String): (DataFrame, Map[Long, Set[String]]) = {
     val qt = queries
       .select(col(queryIdCol).cast("long").as(queryIdCol),
         col(termCol).cast("string").as("tok"))
       .dropDuplicates(queryIdCol, "tok")
       .localCheckpoint(true)
-    val terms = qt.select(col("tok")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "bm25 tiered batch serve: no query terms")
+    (qt, qt.collect().groupBy(_.getLong(0))
+      .map { case (q, rows) => q -> rows.map(_.getString(1)).toSet })
+  }
+
+  /** The union of a request's terms, in a fixed order. */
+  private def termsOf(request: Map[Long, Set[String]]): Seq[String] =
+    request.values.flatten.toSeq.distinct.sorted
+
+  /** Per-query top-k over scored `(tok, doc_id, contrib_q)` rows: a
+    * document scores for exactly the queries whose terms it matched (the
+    * broadcast request relation `qt`), ranked (bm25_q desc, doc_id).
+    * Output `(query_id, rnk, doc_id, n_terms_hit, bm25_q)`. */
+  private def rankPerQuery(scored: DataFrame, qt: DataFrame, k: Int,
+                           queryIdCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val rankW = Window.partitionBy(col(queryIdCol))
       .orderBy(col("bm25_q").desc, col("doc_id"))
-    prunedScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
-      .join(broadcast(qt), Seq("tok"))
+    scored.join(broadcast(qt), Seq("tok"))
       .groupBy(col(queryIdCol), col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
       .withColumn("rnk", row_number().over(rankW))
@@ -672,47 +755,11 @@ object PostingsStore {
   }
 
   /** EXACT BM25 top-k at (near-)tiered cost — WAND/max-score serving over
-    * the impact-tiered layout: serve the HEAD tier first, then open a
-    * term's tail ONLY for the documents whose max-score upper bound says
-    * the tail could still matter. Output is bit-identical to [[bm25TopK]]
-    * (q132 hash-gates it against the exact from-corpus oracle) — the
-    * exactness the impact tiers traded away, bought back with the
-    * `_termmeta` tail certificates instead of an O(df) stop-word read:
-    *
-    *   1. HEAD pass ([[probeHead]], tier=0 partition literal): per-doc
-    *      partial scores `s_head(d)` and each doc's head-matched term
-    *      set; df EXACT from `_termmeta`, stats from `_stats` — idf and
-    *      length normalization identical to the exact scorer's.
-    *   2. CERTIFICATES: per tail-bearing term,
-    *      `UB_t = max over batches of contrib(tail_max_tf, tail_min_dl)`
-    *      at the serve-time (df, N, avgdl) — an upper bound on every tail
-    *      contribution (the scorer is monotone up in tf, down in dl),
-    *      floored into the same quantized millionths BY the same shared
-    *      Spark expression, so the bound is exactly comparable to the
-    *      contributions it bounds.
-    *   3. THRESHOLD `θ` = the k-th largest `s_head` — a lower bound on
-    *      the k-th largest TRUE score. An unseen document's true score is
-    *      ≤ Σ_t UB_t; below θ, no unseen document can reach the top k. A
-    *      seen document's true score is ≤ `UB(d) = s_head(d) + Σ UB_t`
-    *      over the tail terms it did NOT match in head; `UB(d) < θ`
-    *      excludes it — and every true top-k document survives the cut
-    *      (true ≥ k-th-true ≥ θ, and UB ≥ true).
-    *   4. TAIL FETCH: for each tail term, the surviving candidates' rows
-    *      only — `tier=1` and the term's bucket as PARTITION literals,
-    *      the term a pushed eq leaf, `In(doc_id, candidates)` pruning row
-    *      groups inside the term's (tok, doc_id)-sorted run. A term with
-    *      NO surviving candidate is never listed, let alone read — the
-    *      certificate skip the poisoned-tail spec pins. Fetched
-    *      contributions complete the candidates' scores exactly; every
-    *      excluded document ranks strictly below θ and cannot enter or
-    *      perturb the top k, so the ranked output (scores, n_terms_hit,
-    *      ties) is the exact serve's bit for bit.
-    *
-    * Fallback: fewer than k head documents, or Σ UB_t ≥ θ (unseen
-    * documents not excludable) → the exact both-tier path — still exact,
-    * just no savings; deterministic either way. Driver-side state is
-    * bounded by the LAYOUT, never the corpus: the per-doc head summary is
-    * ≤ headSize · batches · |terms| rows, the certificates ≤ |terms|. */
+    * the impact-tiered layout ([[wandScored]]): serve the HEAD tier first,
+    * then open a term's tail ONLY for the documents whose max-score upper
+    * bound says the tail could still matter. Output is bit-identical to
+    * [[bm25TopK]] (q132 hash-gates it against the exact from-corpus
+    * oracle). */
   def bm25TopKWand(spark: SparkSession, dir: String, terms: Seq[String],
                    k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     bm25TopKWandDiag(spark, dir, terms, k, k1, b)._1
@@ -723,14 +770,16 @@ object PostingsStore {
     * request size the block-max refinement exists to shrink);
     * `dispatchedExact` marks the all-head dispatch (no term has a tail:
     * certificates are vacuous and the serve IS the exact head read);
-    * `exactFallback` marks the both-tier fallback (unseen documents not
-    * excludable, or the head summary exceeded [[WandMaxHeadRows]]). */
+    * `exactFallback` marks the both-tier fallback past the head-summary
+    * cap [[WandMaxHeadRows]]; `fullTailFallback` marks a query whose
+    * certificates could not exclude unseen documents, so its tail terms
+    * were fetched whole. */
   private[graft] final case class WandDiag(
       dispatchedExact: Boolean, exactFallback: Boolean, headRows: Long,
       tailTerms: Int, candidateRows: Long, blockRefined: Boolean,
       fullTailFallback: Boolean = false)
 
-  /** Ceiling on the head-probe rows the WAND faces will summarize on the
+  /** Ceiling on the head-probe rows the WAND serve will summarize on the
     * driver: the summary is layout-bounded (≤ headSize · batches ·
     * |terms| rows), but that bound grows LINEARLY in committed batch
     * count, so a long-running uncompacted stream of micro-batches could
@@ -762,188 +811,10 @@ object PostingsStore {
       : (DataFrame, WandDiag) = {
     require(terms.nonEmpty, "bm25 wand serve: empty query-term list")
     require(k >= 1, "bm25 wand serve: k must be positive")
-    val root = VersionedDir.resolveDir(dir)
-    checkConsistent(root)
-    val batches = committedBatches(root)
-    val buckets = terms.map(bucketOf).distinct
-    // metadata FIRST (KB-scale): the dispatch decision must not cost a
-    // head probe when the answer is "no certificates needed at all"
-    val meta = IncrementalContainment.withInPushdown(
-      spark, math.max(terms.size, 10)) {
-      readTermMeta(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(buckets) &&
-          col("tok").isInCollection(terms))
-        .localCheckpoint(true)
-    }
-    val dfs = meta.groupBy(col("tok")).agg(sum(col("df")).as("df"))
-    val stats = readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    // per-term tail upper bounds through the SHARED scorer expression
-    // (≤ |terms| rows — certificate-scale)
-    val tailUB: Map[String, Long] = meta
-      .filter(col("tail_max_tf").isNotNull)
-      .select(col("tok"), col("tail_max_tf").as("tf"),
-        col("tail_min_dl").as("dl"))
-      .join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), Retrieval.bm25ContribQ(k1, b).as("ub_q"))
-      .groupBy(col("tok")).agg(max(col("ub_q")).as("ub_q"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (tailUB.isEmpty)
-      // DISPATCH: no query term has a tail anywhere (every df ≤ headSize
-      // per batch — q130's exactness class), so the head IS the whole
-      // posting set and the exact serve reads exactly it. Skip the
-      // summary assembly entirely; the common rare-term query pays
-      // nothing for WAND being the entry point.
-      return (Retrieval.bm25Rank(
-        servingScored(spark, root, terms, k1, b)
-          .select(col("doc_id"), col("contrib_q")), k),
-        WandDiag(dispatchedExact = true, exactFallback = false,
-          headRows = 0L, tailTerms = 0, candidateRows = 0L,
-          blockRefined = false))
-    val matched = IncrementalContainment.withInPushdown(
-      spark, math.max(terms.size, 10)) {
-      probeHead(spark, root, terms, batches).localCheckpoint(true)
-    }
-    val headRows = matched.count()
-    def exactServe(diag: WandDiag): (DataFrame, WandDiag) =
-      (Retrieval.bm25Rank(
-        servingScored(spark, root, terms, k1, b)
-          .select(col("doc_id"), col("contrib_q")), k), diag)
-    if (headRows > maxHeadRows)
-      // the driver summary would exceed its budget (batch-count growth on
-      // an uncompacted store) — exact both-tier serve, no summary
-      return exactServe(WandDiag(dispatchedExact = false,
-        exactFallback = true, headRows = headRows,
-        tailTerms = tailUB.size, candidateRows = 0L, blockRefined = false))
-    val headScored = matched.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"), col("ingest_batch"),
-        Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
-      .localCheckpoint(true) // feeds the summary pull AND the final rank
-    // per-doc head summary (≤ headSize · batches · |terms| rows by
-    // layout, capped above); min(ingest_batch) IS the doc's batch — the
-    // cross-batch uniqueness contract pins each doc to exactly one
-    val headDocs = headScored.groupBy(col("doc_id"))
-      .agg(sum(col("contrib_q")).as("s_head"),
-        collect_set(col("tok")).as("hit"),
-        min(col("ingest_batch")).as("batch"))
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getSeq[String](2).toSet, r.getLong(3)))
-    val totalUB = tailUB.values.sum
-    val theta: Long =
-      if (headDocs.length < k) Long.MinValue
-      else headDocs.map(_._2).sorted(Ordering[Long].reverse).apply(k - 1)
-    if (headDocs.length < k || totalUB >= theta)
-      // certificates cannot exclude unseen documents — exact both-tier
-      // serve (same pinned-snapshot discipline inside servingScored)
-      return exactServe(WandDiag(dispatchedExact = false,
-        exactFallback = true, headRows = headRows,
-        tailTerms = tailUB.size, candidateRows = 0L, blockRefined = false))
-    // candidate cut, parameterized by the bound in force: Some(bound) =
-    // the doc COULD have a tail posting for t (fetch if the total still
-    // clears θ); None = provably cannot — never fetched. Driver-local
-    // over the already-collected head summary.
-    def candidatesWith(bound: (String, Long, Long) => Option[Long])
-        : Seq[(String, Seq[Long])] = {
-      def ubOf(id: Long, sHead: Long, hit: Set[String], batch: Long): Long =
-        sHead + tailUB.keysIterator.collect {
-          case t if !hit(t) => bound(t, id, batch).getOrElse(0L)
-        }.sum
-      tailUB.keys.toSeq.sorted.map {
-        t => t -> headDocs.collect {
-          case (id, s, hit, batch) if !hit(t) &&
-            bound(t, id, batch).isDefined &&
-            ubOf(id, s, hit, batch) >= theta => id
-        }.toSeq
-      }.filter(_._2.nonEmpty)
-    }
-    // FIRST the per-batch certificates alone — free, the head summary is
-    // already on the driver. `_blockmeta` is only worth reading when the
-    // set they leave behind is big enough that shrinking it pays for the
-    // refinement's own scan and collects (see [[WandBlockMaxMinCandidates]]).
-    val coarse = candidatesWith((t, _, _) => Some(tailUB(t)))
-    val coarseRows = coarse.map(_._2.size.toLong).sum
-    val refine = useBlockMax && coarseRows > 0 && coarseRows >= blockMaxMinRows
-    // BLOCK-MAX refinement: per (tail term, coarse-surviving doc), the
-    // bound of the ONE block whose id range covers the doc in the doc's
-    // batch — Some(bound) when covered, None = PROOF of no tail posting
-    // (blocks partition the tail completely). Computed as a range join of
-    // the pruned `_blockmeta` scan against the BROADCAST coarse-candidate
-    // ids (refined bounds only ever shrink, so the refined cut is a
-    // subset of the coarse one — docs outside it never need a bound), so
-    // the driver never holds more than |coarse docs| · |tailTerms|
-    // refined bounds; a batch with tails but no block rows (pre-gen-4)
-    // falls back to its per-batch certificate — conservative, never wrong.
-    val (blockUB, blocksPresent): (Map[(String, Long), Long], Set[(String, Long)]) =
-      if (!refine) (Map.empty, Set.empty)
-      else {
-        val tailToks = tailUB.keys.toSeq.sorted
-        val blocks = IncrementalContainment.withInPushdown(
-          spark, math.max(tailToks.size, 10)) {
-          readBlockMeta(spark, root)
-            .filter(col("ingest_batch").isInCollection(batches) &&
-              col("tbucket").isInCollection(tailToks.map(bucketOf).distinct) &&
-              col("tok").isInCollection(tailToks))
-            .localCheckpoint(true)
-        }
-        val present = blocks.select(col("tok"), col("ingest_batch"))
-          .distinct().collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSet
-        import spark.implicits._
-        val coarseIds = coarse.iterator.flatMap(_._2).toSet
-        val hd = broadcast(headDocs.collect {
-          case (id, _, _, batch) if coarseIds(id) => (id, batch)
-        }.toSeq.toDF("cand_id", "cand_batch"))
-        val ub = blocks
-          .join(hd, hd("cand_batch") === blocks("ingest_batch") &&
-            hd("cand_id").between(col("blk_lo"), col("blk_hi")))
-          .select(col("tok"), col("cand_id"),
-            col("blk_max_tf").as("tf"), col("blk_min_dl").as("dl"))
-          .join(broadcast(dfs), "tok")
-          .crossJoin(broadcast(stats))
-          .select(col("tok"), col("cand_id"),
-            Retrieval.bm25ContribQ(k1, b).as("ub_q"))
-          .groupBy(col("tok"), col("cand_id"))
-          .agg(max(col("ub_q")).as("ub_q"))
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-        (ub, present)
-      }
-    def boundOf(t: String, id: Long, batch: Long): Option[Long] =
-      if (refine && blocksPresent((t, batch))) blockUB.get((t, id))
-      else Some(tailUB(t))
-    val candByTerm: Seq[(String, Seq[Long])] =
-      if (refine) candidatesWith(boundOf) else coarse
-    val candidateRows = candByTerm.map(_._2.size.toLong).sum
-    val tailScored = candByTerm match {
-      case Nil => spark.emptyDataFrame
-        .select(lit(0L).as("doc_id"), lit(0L).as("contrib_q")).limit(0)
-      case cands =>
-        // ONE fetch job for every tail term (pre-r21: one checkpointed
-        // job per term, serialized — pure serve latency when a query
-        // carries several tails). The pushdown threshold is sized to the
-        // largest per-term id list; each scan's own In list is per-term,
-        // so a larger threshold only ever pushes more.
-        val fetched = IncrementalContainment.withInPushdown(
-          spark, idPushdown(cands.map(_._2.size).max)) {
-          cands.map { case (t, ids) => probeTail(spark, root, t, ids, batches) }
-            .reduce(_ unionByName _).localCheckpoint(true)
-        }
-        fetched
-          .join(broadcast(dfs), "tok")
-          .crossJoin(broadcast(stats))
-          .select(col("doc_id"), Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
-    }
-    (Retrieval.bm25Rank(
-      headScored.select(col("doc_id"), col("contrib_q"))
-        .unionByName(tailScored), k),
-      WandDiag(dispatchedExact = false, exactFallback = false,
-        headRows = headRows, tailTerms = tailUB.size,
-        candidateRows = candidateRows, blockRefined = blocksPresent.nonEmpty))
+    val (scored, diag) = wandScored(spark, dir, Map(0L -> terms.toSet), k,
+      k1, b, useBlockMax, maxHeadRows, blockMaxMinRows)
+    (Retrieval.bm25Rank(scored.select(col("doc_id"), col("contrib_q")), k),
+      diag)
   }
 
   /** The WAND candidate fetch: ONE term's tail rows for the named
@@ -955,17 +826,13 @@ object PostingsStore {
   private[sources] def probeTail(spark: SparkSession, root: String,
                                  term: String, docIds: Seq[Long],
                                  batches: Seq[Long]): DataFrame =
-    readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket") === bucketOf(term) && col("tier") === 1 &&
-        col("tok") === term && col("doc_id").isInCollection(docIds))
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+    probeTailAll(spark, root, term, batches)
+      .filter(col("doc_id").isInCollection(docIds))
 
-  /** One term's WHOLE tail — the batched WAND's per-term fallback when a
-    * query's certificates cannot exclude unseen documents for it (the
-    * single serve falls back to the exact both-tier path; the batch
-    * degrades only the term that needs it). Same partition bounds minus
-    * the id restriction. */
+  /** One term's WHOLE tail — the WAND fallback for the tail terms of a
+    * query whose certificates cannot exclude unseen documents (only that
+    * query's terms degrade, never the whole serve). Same partition bounds
+    * as [[probeTail]] minus the id restriction. */
   private def probeTailAll(spark: SparkSession, root: String, term: String,
                            batches: Seq[Long]): DataFrame =
     readPostings(spark, root)
@@ -976,27 +843,8 @@ object PostingsStore {
 
   /** BATCHED WAND serving — [[bm25TopKBatch]]'s exact output (q135
     * hash-gates it against q129's oracle VERBATIM) at certificate-bounded
-    * cost: ONE head probe over the union of the queries' terms, per-query
-    * thresholds `θ_q` from the per-(query, doc) head partials, the shared
-    * per-term tail bounds, and then a PER-TERM fetch decision:
-    *
-    *   - a term's tail is fetched for the UNION of its surviving
-    *     candidates across queries (`tier=1` + bucket partition literals,
-    *     pushed `In(doc_id)`), or
-    *   - fetched WHOLE only for terms of a query whose certificates
-    *     cannot exclude unseen documents (Σ tail UBs over the query's
-    *     terms ≥ θ_q, or fewer than k head docs) — the batch's fallback
-    *     degrades one term, never the whole serve, and
-    *   - never even LISTED when no query needs it (the certificate skip).
-    *
-    * Over-fetch is sound by monotonicity: an extra tail row only moves a
-    * document's displayed score TOWARD its true score, and every
-    * certificate-excluded document's true score sits strictly below its
-    * query's θ_q — so per-query attribution through the broadcast request
-    * relation stays exact for every query even when one query's fetch
-    * carries rows another query's certificate had excluded. Driver-side
-    * state is request-scaled: the per-(query, doc) head summary is
-    * ≤ |queries| · headSize · batches · |terms| rows by the layout. */
+    * cost: ONE [[wandScored]] serve over the whole request, ranked per
+    * query through the broadcast request relation. */
   def bm25TopKWandBatch(spark: SparkSession, dir: String, queries: DataFrame,
                         k: Int, k1: Double = 1.2, b: Double = 0.75,
                         queryIdCol: String = "query_id",
@@ -1008,281 +856,261 @@ object PostingsStore {
                                            queries: DataFrame, k: Int,
                                            k1: Double = 1.2, b: Double = 0.75,
                                            queryIdCol: String = "query_id",
-                                           termCol: String = "term",
-                                           useBlockMax: Boolean = true,
-                                           maxHeadRows: Long = WandMaxHeadRows,
-                                           blockMaxMinRows: Long = WandBlockMaxMinCandidates)
+                                           termCol: String = "term")
       : (DataFrame, WandDiag) = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, "bm25 wand batch serve: k must be positive")
-    val qt = queries
-      .select(col(queryIdCol).cast("long").as(queryIdCol),
-        col(termCol).cast("string").as("tok"))
-      .dropDuplicates(queryIdCol, "tok")
-      .localCheckpoint(true)
-    val request: Map[Long, Set[String]] = qt.collect()
-      .groupBy(_.getLong(0))
-      .map { case (q, rows) => q -> rows.map(_.getString(1)).toSet }
-    val terms = request.values.flatten.toSeq.distinct
-    require(terms.nonEmpty, "bm25 wand batch serve: no query terms")
-    val root = VersionedDir.resolveDir(dir)
-    checkConsistent(root)
-    val batches = committedBatches(root)
-    val buckets = terms.map(bucketOf).distinct
-    // metadata first — the dispatch rule of the single serve
-    val meta = IncrementalContainment.withInPushdown(
-      spark, math.max(terms.size, 10)) {
-      readTermMeta(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(buckets) &&
-          col("tok").isInCollection(terms))
-        .localCheckpoint(true)
-    }
-    val dfs = meta.groupBy(col("tok")).agg(sum(col("df")).as("df"))
-    val stats = readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    val tailUB: Map[String, Long] = meta
-      .filter(col("tail_max_tf").isNotNull)
-      .select(col("tok"), col("tail_max_tf").as("tf"),
-        col("tail_min_dl").as("dl"))
-      .join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), Retrieval.bm25ContribQ(k1, b).as("ub_q"))
-      .groupBy(col("tok")).agg(max(col("ub_q")).as("ub_q"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def rank(scored: DataFrame): DataFrame = {
-      val rankW = Window.partitionBy(col(queryIdCol))
-        .orderBy(col("bm25_q").desc, col("doc_id"))
-      scored.join(broadcast(qt), Seq("tok"))
-        .groupBy(col(queryIdCol), col("doc_id"))
-        .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
-        .withColumn("rnk", row_number().over(rankW))
-        .filter(col("rnk") <= k)
-        .select(col(queryIdCol), col("rnk"), col("doc_id"),
-          col("n_terms_hit"), col("bm25_q"))
-    }
+    val (qt, request) = requestOf(queries, queryIdCol, termCol)
+    require(request.nonEmpty, "bm25 wand batch serve: no query terms")
+    val (scored, diag) = wandScored(spark, dir, request, k, k1, b,
+      useBlockMax = true, WandMaxHeadRows, WandBlockMaxMinCandidates)
+    (rankPerQuery(scored, qt, k, queryIdCol), diag)
+  }
+
+  /** The one WAND serve behind [[bm25TopKWand]] and [[bm25TopKWandBatch]]:
+    * for a driver-side request `query_id → terms`, the `(tok, doc_id,
+    * contrib_q)` rows whose per-query rank is each query's exact BM25
+    * top-k — the exactness the impact tiers traded away, bought back with
+    * the `_termmeta` tail certificates instead of an O(df) stop-word read:
+    *
+    *   1. HEAD pass ([[probeHead]], tier=0 partition literal) over the
+    *      union of the request's terms: per-(query, doc) partial scores
+    *      `s_head(d)` and each doc's head-matched term set, attributed on
+    *      the driver from the collected head rows; df EXACT from
+    *      `_termmeta`, stats from `_stats` — idf and length normalization
+    *      identical to the exact scorer's.
+    *   2. CERTIFICATES: per tail-bearing term,
+    *      `UB_t = max over batches of contrib(tail_max_tf, tail_min_dl)`
+    *      at the serve-time (df, N, avgdl) — an upper bound on every tail
+    *      contribution (the scorer is monotone up in tf, down in dl),
+    *      floored into the same quantized millionths BY the same shared
+    *      Spark expression, so the bound is exactly comparable to the
+    *      contributions it bounds. Shared across queries.
+    *   3. THRESHOLD `θ_q` = query q's k-th largest `s_head` — a lower bound
+    *      on its k-th largest TRUE score. An unseen document's true score
+    *      is ≤ Σ UB_t over q's tail terms; below θ_q, no unseen document
+    *      can reach q's top k. A seen document's true score is
+    *      ≤ `UB(d) = s_head(d) + Σ UB_t` over q's tail terms it did NOT
+    *      match in head; `UB(d) < θ_q` excludes it — and every true top-k
+    *      document survives the cut (true ≥ k-th-true ≥ θ_q, and
+    *      UB ≥ true).
+    *   4. BLOCK-MAX refinement, when the cut leaves at least
+    *      `blockMaxMinRows` (term, doc) candidates: per (tail term,
+    *      surviving doc), the bound of the ONE `_blockmeta` block whose id
+    *      range covers the doc in the doc's batch replaces `UB_t`; no
+    *      covering block is a PROOF of no tail posting (blocks partition
+    *      the tail), and a batch with tails but no block rows keeps its
+    *      per-batch certificate. Refined bounds only shrink, so step 3's
+    *      argument holds unchanged and the refined cut is a subset of the
+    *      coarse one.
+    *   5. TAIL FETCH, per term: the UNION of its surviving candidates
+    *      across queries (`tier=1` and the term's bucket as PARTITION
+    *      literals, the term a pushed eq leaf, `In(doc_id, candidates)`
+    *      pruning row groups inside the term's (tok, doc_id)-sorted run),
+    *      all terms in ONE job; or the WHOLE tail for the tail terms of a
+    *      query whose certificates cannot exclude unseen documents (fewer
+    *      than k head docs, or Σ UB_t ≥ θ_q); or nothing — a term no query
+    *      needs is never listed, let alone read (the certificate skip the
+    *      poisoned-tail specs pin).
+    *
+    * Fetched contributions complete the candidates' scores exactly; every
+    * excluded document ranks strictly below its query's θ_q and cannot
+    * enter or perturb that top k, so each ranked output (scores,
+    * n_terms_hit, ties) is the exact serve's bit for bit. Over-fetch is
+    * sound by monotonicity: an extra tail row only moves a document's
+    * score TOWARD its true score, so per-query attribution stays exact
+    * even when one query's fetch carries rows another query's certificate
+    * had excluded.
+    *
+    * Dispatch: no request term has a tail anywhere (every df ≤ headSize
+    * per batch — q130's exactness class) → the head IS the whole posting
+    * set, served by [[servingScored]] with no summary at all; the common
+    * rare-term query pays nothing for WAND being the entry point. Past
+    * `maxHeadRows` head rows the serve also falls back to
+    * [[servingScored]] (bounded driver state). Driver-side state is
+    * bounded by the LAYOUT, never the corpus: the head rows are
+    * ≤ headSize · batches · |terms|, the certificates ≤ |terms|. */
+  private def wandScored(spark: SparkSession, dir: String,
+                         request: Map[Long, Set[String]], k: Int,
+                         k1: Double, b: Double, useBlockMax: Boolean,
+                         maxHeadRows: Long, blockMaxMinRows: Long)
+      : (DataFrame, WandDiag) = {
+    val terms = termsOf(request)
+    val (root, batches) = pin(dir)
+    // metadata FIRST (KB-scale): the dispatch decision must not cost a
+    // head probe when the answer is "no certificates needed at all"
+    val meta = pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+      _.localCheckpoint(true))
+    val score = Scorer(dfOf(meta), pinnedStats(spark, root, batches), k1, b)
+    val tailUB: Map[String, Long] =
+      score(meta.filter(col("tail_max_tf").isNotNull)
+        .select(col("tok"), col("tail_max_tf").as("tf"),
+          col("tail_min_dl").as("dl")), "tok")
+        .groupBy(col("tok")).agg(max(col("contrib_q")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def exactServe(diag: WandDiag): (DataFrame, WandDiag) =
-      (rank(servingScored(spark, root, terms, k1, b)), diag)
+      (servingScored(spark, root, batches, terms, k1, b), diag)
     if (tailUB.isEmpty)
-      // DISPATCH: every union term fits the head everywhere — the exact
-      // batched serve reads exactly the head's rows; no summary assembly
       return exactServe(WandDiag(dispatchedExact = true,
         exactFallback = false, headRows = 0L, tailTerms = 0,
         candidateRows = 0L, blockRefined = false))
-    val matched = IncrementalContainment.withInPushdown(
+    val headScored = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
-      probeHead(spark, root, terms, batches).localCheckpoint(true)
+      score(probeHead(spark, root, terms, batches),
+        "tok", "doc_id", "ingest_batch")
+        .localCheckpoint(true) // feeds the driver summary AND the rank
     }
-    val headRows = matched.count()
+    val headRows = headScored.count()
     if (headRows > maxHeadRows)
-      // driver-summary cap (the single serve's rule, times |queries|):
-      // fall back to the exact batched path; compactLevel is the remedy
       return exactServe(WandDiag(dispatchedExact = false,
         exactFallback = true, headRows = headRows,
         tailTerms = tailUB.size, candidateRows = 0L, blockRefined = false))
-    val headScored = matched.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"), col("ingest_batch"),
-        Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
-      .localCheckpoint(true)
-    val allScored = headScored.select(col("tok"), col("doc_id"), col("contrib_q"))
-    // per-(query, doc) head summary — request-scaled by the layout;
-    // min(ingest_batch) is the doc's one batch (uniqueness contract)
-    val perQueryDoc = headScored.join(broadcast(qt), Seq("tok"))
-      .groupBy(col(queryIdCol), col("doc_id"))
-      .agg(sum(col("contrib_q")).as("s_head"),
-        collect_set(col("tok")).as("hit"),
-        min(col("ingest_batch")).as("batch"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getSeq[String](3).toSet, r.getLong(4)))
-    val byQuery = perQueryDoc.groupBy(_._1)
-    // the per-term fetch decision, parameterized by the bound in force —
-    // per term: full tail if any query falls back on it, else the union
-    // of the queries' surviving candidates (possibly empty = skip). The
-    // fallback decision itself uses only per-batch bounds (qTotalUB), so
-    // `fullTails` is identical under coarse and refined bounds.
-    def decideWith(bound: (String, Long, Long) => Option[Long])
+    // per-(query, doc) head summary, attributed on the driver:
+    // (s_head, head-matched terms, batch) — min(ingest_batch) IS the
+    // doc's batch (the cross-batch uniqueness contract pins each doc to
+    // exactly one)
+    val headByTok = headScored.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .groupBy(_._1)
+    val summary: Map[Long, Seq[(Long, Long, Set[String], Long)]] =
+      request.map { case (q, qTerms) =>
+        q -> qTerms.toSeq.flatMap(t => headByTok.getOrElse(t, Array.empty))
+          .groupBy(_._2).toSeq.map { case (id, rs) =>
+            (id, rs.map(_._4).sum, rs.map(_._1).toSet, rs.map(_._3).min)
+          }
+      }
+    // the candidate cut, parameterized by the bound in force (Some(bound)
+    // = the doc COULD have a tail posting for t; None = provably cannot):
+    // per term, the whole tail if some query cannot exclude unseen
+    // documents, else the union of the queries' surviving candidates
+    // (possibly empty = skip). The whole-tail decision uses only the
+    // per-batch bounds, so it is the same under coarse and refined bounds.
+    def cut(bound: (String, Long, Long) => Option[Long])
         : (Set[String], Map[String, Set[Long]]) = {
       val fullTails = scala.collection.mutable.Set.empty[String]
       val candByTerm = scala.collection.mutable.Map.empty[String, Set[Long]]
-      request.toSeq.sortBy(_._1).foreach { case (q, qTerms) =>
+      request.foreach { case (q, qTerms) =>
         val qTail = qTerms.filter(tailUB.contains).toSeq.sorted
-        if (qTail.nonEmpty) {
-          val docs = byQuery.getOrElse(q, Array.empty)
-          val theta: Long =
-            if (docs.length < k) Long.MinValue
-            else docs.map(_._3).sorted(Ordering[Long].reverse).apply(k - 1)
-          val qTotalUB = qTail.map(tailUB).sum
-          if (docs.length < k || qTotalUB >= theta)
-            fullTails ++= qTail // unseen docs not excludable for this query
-          else qTail.foreach { t =>
-            val cands = docs.collect {
-              case (_, id, s, hit, batch) if !hit(t) &&
-                bound(t, id, batch).isDefined &&
-                s + qTail.collect { case t2 if !hit(t2) =>
-                  bound(t2, id, batch).getOrElse(0L) }.sum >= theta => id
+        val docs = summary(q)
+        // θ_q: the k-th largest head partial (None: fewer than k head docs)
+        docs.map(_._2).sorted(Ordering[Long].reverse).lift(k - 1) match {
+          case _ if qTail.isEmpty => ()
+          case Some(theta) if qTail.map(tailUB).sum < theta =>
+            qTail.foreach { t =>
+              val cands = docs.collect {
+                case (id, s, hit, batch) if !hit(t) &&
+                  bound(t, id, batch).isDefined &&
+                  s + qTail.collect { case t2 if !hit(t2) =>
+                    bound(t2, id, batch).getOrElse(0L) }.sum >= theta => id
+              }
+              if (cands.nonEmpty)
+                candByTerm(t) = candByTerm.getOrElse(t, Set.empty) ++ cands
             }
-            if (cands.nonEmpty)
-              candByTerm(t) = candByTerm.getOrElse(t, Set.empty) ++ cands
-          }
+          case _ => fullTails ++= qTail // unseen documents not excludable
         }
       }
-      (fullTails.toSet, candByTerm.toMap)
+      (fullTails.toSet, candByTerm.toMap -- fullTails)
     }
-    // per-batch certificates first (driver-local, free); `_blockmeta`
-    // only when the surviving candidate set is big enough to be worth
-    // shrinking (see [[WandBlockMaxMinCandidates]] on the single serve)
-    val (coarseFull, coarseCands) =
-      decideWith((t, _, _) => Some(tailUB(t)))
-    val coarseRows = (coarseCands.keySet -- coarseFull).toSeq
-      .map(t => coarseCands(t).size.toLong).sum
-    val refine = useBlockMax && coarseRows > 0 &&
-      coarseRows >= blockMaxMinRows
-    // block-max refinement over the DISTINCT coarse-surviving docs
-    // (shared across queries — the bound depends on (term, doc), not the
-    // query; the refined cut is a subset of the coarse one, so docs
-    // outside it never need a refined bound)
+    // FIRST the per-batch certificates alone — free, the head summary is
+    // already on the driver; `_blockmeta` only when the set they leave is
+    // big enough to pay for the refinement (see [[WandBlockMaxMinCandidates]])
+    val coarse = cut((t, _, _) => Some(tailUB(t)))
+    val coarseRows = coarse._2.values.map(_.size.toLong).sum
+    val refine = useBlockMax && coarseRows > 0 && coarseRows >= blockMaxMinRows
+    // block-max bounds for the DISTINCT coarse-surviving docs (the bound
+    // depends on (term, doc), not the query): a range join of the pruned
+    // `_blockmeta` scan against the broadcast candidates, so the driver
+    // holds at most |coarse docs| · |tail terms| refined bounds
     val (blockUB, blocksPresent): (Map[(String, Long), Long], Set[(String, Long)]) =
       if (!refine) (Map.empty, Set.empty)
       else {
-        val tailToks = tailUB.keys.toSeq.sorted
-        val blocks = IncrementalContainment.withInPushdown(
-          spark, math.max(tailToks.size, 10)) {
-          readBlockMeta(spark, root)
-            .filter(col("ingest_batch").isInCollection(batches) &&
-              col("tbucket").isInCollection(tailToks.map(bucketOf).distinct) &&
-              col("tok").isInCollection(tailToks))
-            .localCheckpoint(true)
-        }
+        import spark.implicits._
+        val blocks = pinnedByTerm(readBlockMeta, spark, root,
+          tailUB.keys.toSeq.sorted, batches)(_.localCheckpoint(true))
         val present = blocks.select(col("tok"), col("ingest_batch"))
           .distinct().collect()
           .map(r => (r.getString(0), r.getLong(1))).toSet
-        import spark.implicits._
-        val coarseIds = coarseCands.valuesIterator.flatten.toSet
-        val hd = broadcast(perQueryDoc.collect {
-          case (_, id, _, _, batch) if coarseIds(id) => (id, batch)
-        }.distinct.toSeq.toDF("cand_id", "cand_batch"))
-        val ub = blocks
-          .join(hd, hd("cand_batch") === blocks("ingest_batch") &&
-            hd("cand_id").between(col("blk_lo"), col("blk_hi")))
-          .select(col("tok"), col("cand_id"),
-            col("blk_max_tf").as("tf"), col("blk_min_dl").as("dl"))
-          .join(broadcast(dfs), "tok")
-          .crossJoin(broadcast(stats))
-          .select(col("tok"), col("cand_id"),
-            Retrieval.bm25ContribQ(k1, b).as("ub_q"))
+        val coarseIds = coarse._2.valuesIterator.flatten.toSet
+        val hd = broadcast(summary.values.flatten.collect {
+          case (id, _, _, batch) if coarseIds(id) => (id, batch)
+        }.toSeq.distinct.toDF("cand_id", "cand_batch"))
+        val ub = score(blocks
+            .join(hd, hd("cand_batch") === blocks("ingest_batch") &&
+              hd("cand_id").between(col("blk_lo"), col("blk_hi")))
+            .select(col("tok"), col("cand_id"),
+              col("blk_max_tf").as("tf"), col("blk_min_dl").as("dl")),
+            "tok", "cand_id")
           .groupBy(col("tok"), col("cand_id"))
-          .agg(max(col("ub_q")).as("ub_q"))
+          .agg(max(col("contrib_q")))
           .collect()
           .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
         (ub, present)
       }
-    def boundOf(t: String, id: Long, batch: Long): Option[Long] =
-      if (refine && blocksPresent((t, batch))) blockUB.get((t, id))
-      else Some(tailUB(t))
     val (fullTails, candByTerm) =
-      if (refine) decideWith(boundOf) else (coarseFull, coarseCands)
-    val candidateRows = (candByTerm.keySet -- fullTails).toSeq
-      .map(t => candByTerm(t).size.toLong).sum
-    // candidate fetches union into ONE checkpointed job (the single
-    // serve's r21 discipline) — threshold sized to the largest per-term
-    // id list; full-tail fetches carry no In list and ride the same union
-    val candTerms = (candByTerm.keySet -- fullTails).toSeq.sorted
+      if (!refine) coarse
+      else cut { (t, id, batch) =>
+        if (blocksPresent((t, batch))) blockUB.get((t, id)) else Some(tailUB(t))
+      }
+    // candidate fetches union into ONE checkpointed job, the pushdown
+    // threshold sized to the largest per-term id list (each scan's own In
+    // list is per-term, so a larger threshold only ever pushes more);
+    // whole-tail fetches carry no In list and ride the same union
+    val candTerms = candByTerm.keys.toSeq.sorted
     val fetches =
       fullTails.toSeq.sorted.map(t => probeTailAll(spark, root, t, batches)) ++
-        (candTerms match {
-          case Nil => Nil
-          case ts =>
-            Seq(IncrementalContainment.withInPushdown(
-              spark, idPushdown(ts.map(candByTerm(_).size).max)) {
-              ts.map { t =>
-                probeTail(spark, root, t, candByTerm(t).toSeq.sorted, batches)
-              }.reduce(_ unionByName _).localCheckpoint(true)
-            })
-        })
-    val diag = WandDiag(dispatchedExact = false,
-      exactFallback = false, headRows = headRows, tailTerms = tailUB.size,
-      candidateRows = candidateRows, blockRefined = blocksPresent.nonEmpty)
-    if (fetches.isEmpty) return (rank(allScored), diag)
-    val tailScored = fetches.reduce(_ unionByName _)
-      .join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"),
-        Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
-    (rank(allScored.unionByName(tailScored)),
-      diag.copy(fullTailFallback = fullTails.nonEmpty))
+        (if (candTerms.isEmpty) Nil
+        else Seq(IncrementalContainment.withInPushdown(
+          spark, idPushdown(candTerms.map(candByTerm(_).size).max)) {
+          candTerms.map { t =>
+            probeTail(spark, root, t, candByTerm(t).toSeq.sorted, batches)
+          }.reduce(_ unionByName _).localCheckpoint(true)
+        }))
+    val head = headScored.select(col("tok"), col("doc_id"), col("contrib_q"))
+    (if (fetches.isEmpty) head
+    else head.unionByName(
+      score(fetches.reduce(_ unionByName _), "tok", "doc_id")),
+      WandDiag(dispatchedExact = false, exactFallback = false,
+        headRows = headRows, tailTerms = tailUB.size,
+        candidateRows = candByTerm.values.map(_.size.toLong).sum,
+        blockRefined = blocksPresent.nonEmpty,
+        fullTailFallback = fullTails.nonEmpty))
   }
 
-  /** The ONE tiered-serving assembly the single and batched pruned
-    * serves share (mirroring [[servingScored]] for the exact pair):
-    * consistency gate, the HEAD-TIER probe, exact df from the
-    * `_termmeta` sidecar — NEVER from the truncated probe (a
-    * head-counted df would inflate idf exactly when pruning engages) —
-    * and the KB-scale stats sum. Returns `(tok, doc_id, contrib_q)`.
-    * `root` must be resolved. */
+  /** The tiered-serving assembly the single and batched pruned serves
+    * share (mirroring [[servingScored]] for the exact pair): the
+    * HEAD-TIER probe, exact df from the `_termmeta` sidecar — NEVER from
+    * the truncated probe (a head-counted df would inflate idf exactly
+    * when pruning engages) — and the pinned stats. Returns
+    * `(tok, doc_id, contrib_q)` over the [[pin]]ned snapshot. */
   private def prunedScored(spark: SparkSession, root: String,
-                           terms: Seq[String], k1: Double,
-                           b: Double): DataFrame = {
-    checkConsistent(root)
-    // ONE committed-batch snapshot per serving call, threaded into the
-    // probe, the _termmeta df filter, and the stats sum — a batch
-    // committing mid-serve must not inflate N/avgdl/df against postings
-    // the probe already excluded
-    val batches = committedBatches(root)
-    val buckets = terms.map(bucketOf).distinct
+                           batches: Seq[Long], terms: Seq[String],
+                           k1: Double, b: Double): DataFrame = {
     val matched = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
       probeHead(spark, root, terms, batches).localCheckpoint(true)
     }
-    val dfs = IncrementalContainment.withInPushdown(
-      spark, math.max(terms.size, 10)) {
-      readTermMeta(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(buckets) &&
-          col("tok").isInCollection(terms))
-        .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-        .localCheckpoint(true)
-    }
-    val stats = readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    matched.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"),
-        Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
+    val dfs = pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+      m => dfOf(m).localCheckpoint(true))
+    Scorer(dfs, pinnedStats(spark, root, batches), k1, b)(
+      matched, "tok", "doc_id")
   }
 
-  /** The ONE serving assembly the single and batched EXACT serves share
+  /** The serving assembly the single and batched EXACT serves share
     * (the `Retrieval.bm25ContribQ` rule one level up — the two read paths
-    * must not drift apart): consistency gate, the pruned probe over
-    * `terms` (one snapshot feeds the df count and the scorer; parquet's
-    * In pushdown must not rewrite the key set to a useless min/max range
-    * past the default threshold — the containment-probe rule), per-term
-    * df counted from the matched postings, the KB-scale stats sum.
-    * Returns `(tok, doc_id, contrib_q)`. `root` must be resolved. */
+    * must not drift apart): the pruned probe over `terms` (one snapshot
+    * feeds the df count and the scorer; parquet's In pushdown must not
+    * rewrite the key set to a useless min/max range past the default
+    * threshold — the containment-probe rule), per-term df counted from
+    * the matched postings, the pinned stats. Returns
+    * `(tok, doc_id, contrib_q)` over the [[pin]]ned snapshot. */
   private def servingScored(spark: SparkSession, root: String,
-                            terms: Seq[String], k1: Double,
-                            b: Double): DataFrame = {
-    checkConsistent(root)
-    // the pinned snapshot (prunedScored's rule): probe and stats see the
-    // SAME committed-batch set even if an append commits mid-serve
-    val batches = committedBatches(root)
+                            batches: Seq[Long], terms: Seq[String],
+                            k1: Double, b: Double): DataFrame = {
     val matched = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
       probe(spark, root, terms, batches).localCheckpoint(true)
     }
-    val dfs = matched.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val stats = readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    matched.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("tok"), col("doc_id"),
-        Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
+    Scorer(matched.groupBy(col("tok")).agg(count(lit(1)).as("df")),
+      pinnedStats(spark, root, batches), k1, b)(matched, "tok", "doc_id")
   }
 
   /** BATCHED BM25 serving — the [[IvfIndexStore.topKBatch]] shape for the
@@ -1298,28 +1126,12 @@ object PostingsStore {
                     k: Int, k1: Double = 1.2, b: Double = 0.75,
                     queryIdCol: String = "query_id",
                     termCol: String = "term"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1, "bm25 batch serve: k must be positive")
-    val qt = queries
-      .select(col(queryIdCol).cast("long").as(queryIdCol),
-        col(termCol).cast("string").as("tok"))
-      .dropDuplicates(queryIdCol, "tok")
-      .localCheckpoint(true)
-    // the request payload is driver-bounded by contract (the topKBatch
-    // discipline) — its term union drives the probe
-    val terms = qt.select(col("tok")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    require(terms.nonEmpty, "bm25 batch serve: no query terms")
-    val rankW = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("bm25_q").desc, col("doc_id"))
-    servingScored(spark, VersionedDir.resolveDir(dir), terms, k1, b)
-      .join(broadcast(qt), Seq("tok"))
-      .groupBy(col(queryIdCol), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
-      .withColumn("rnk", row_number().over(rankW))
-      .filter(col("rnk") <= k)
-      .select(col(queryIdCol), col("rnk"), col("doc_id"),
-        col("n_terms_hit"), col("bm25_q"))
+    val (qt, request) = requestOf(queries, queryIdCol, termCol)
+    require(request.nonEmpty, "bm25 batch serve: no query terms")
+    val (root, batches) = pin(dir)
+    rankPerQuery(servingScored(spark, root, batches, termsOf(request), k1, b),
+      qt, k, queryIdCol)
   }
 
   /** PHRASE top-k — the positional face of the store: documents
@@ -1356,10 +1168,8 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase serve: need at least two tokens")
     require(k >= 1, "phrase serve: k must be positive")
     require(slop >= 0, "phrase serve: slop must be >= 0")
-    val root = VersionedDir.resolveDir(dir)
-    checkConsistent(root)
+    val (root, batches) = pin(dir)
     requirePositionalFormat(root, dir)
-    val batches = committedBatches(root)
     phraseMatches(spark, root, phrase, slop, seedMaxDf, batches)
       .orderBy(col("phrase_tf").desc, col("doc_id"))
       .limit(k)
@@ -1393,7 +1203,6 @@ object PostingsStore {
                             phrase: Seq[String], slop: Int, seedMaxDf: Long,
                             batches: Seq[Long]): DataFrame = {
     val terms = phrase.distinct
-    val buckets = terms.map(bucketOf).distinct
     // SEED-TERM candidate pruning (the WAND candidate-fetch trick applied
     // to phrases): every slot must be present in a matching doc, so the
     // RAREST phrase term bounds the candidates. df comes from the exact
@@ -1405,15 +1214,9 @@ object PostingsStore {
     // Past the threshold the probe falls back to the full O(Σ df) read
     // (honest and stated; at that seed df the request is no longer
     // driver-bounded).
-    val metaDf: Map[String, Long] = IncrementalContainment.withInPushdown(
-      spark, math.max(terms.size, 10)) {
-      readTermMeta(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(buckets) &&
-          col("tok").isInCollection(terms))
-        .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    val metaDf: Map[String, Long] =
+      pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+        m => dfOf(m).collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     if (terms.exists(t => metaDf.getOrElse(t, 0L) == 0L))
       // a slot term absent from the corpus: no document can match
       return spark.emptyDataFrame.select(
@@ -1485,14 +1288,11 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase-ranked serve: need at least two tokens")
     require(k >= 1, "phrase-ranked serve: k must be positive")
     require(slop >= 0, "phrase-ranked serve: slop must be >= 0")
-    val root = VersionedDir.resolveDir(dir)
-    checkConsistent(root)
+    val (root, batches) = pin(dir)
     requirePositionalFormat(root, dir)
-    val batches = committedBatches(root)
     val matches = phraseMatches(spark, root, phrase, slop, seedMaxDf, batches)
       .localCheckpoint(true) // candidates feed the id pull AND the final join
     val scoring = (phrase ++ terms).distinct
-    val buckets = scoring.map(bucketOf).distinct
     val candIds = matches.select(col("doc_id")).collect()
       .map(_.getLong(0)).toSeq.sorted
     if (candIds.isEmpty)
@@ -1501,28 +1301,15 @@ object PostingsStore {
         lit(0L).as("n_terms_hit"), lit(0L).as("bm25_q")).limit(0)
     // df EXACT from the sidecar — the candidate-restricted probe below
     // must not be the df source (it would undercount every idf)
-    val dfs = IncrementalContainment.withInPushdown(
-      spark, math.max(scoring.size, 10)) {
-      readTermMeta(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(buckets) &&
-          col("tok").isInCollection(scoring))
-        .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-        .localCheckpoint(true)
-    }
-    val stats = readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    val scored =
+    val score = Scorer(
+      pinnedByTerm(readTermMeta, spark, root, scoring, batches)(
+        m => dfOf(m).localCheckpoint(true)),
+      pinnedStats(spark, root, batches), k1, b)
+    val probed =
       if (candIds.size <= seedMaxDf)
         IncrementalContainment.withInPushdown(spark, idPushdown(candIds.size)) {
-          readPostings(spark, root)
-            .filter(col("ingest_batch").isInCollection(batches) &&
-              col("tbucket").isInCollection(buckets) &&
-              col("tok").isInCollection(scoring) &&
-              col("doc_id").isInCollection(candIds))
-            .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+          probe(spark, root, scoring, batches)
+            .filter(col("doc_id").isInCollection(candIds))
             .localCheckpoint(true)
         }
       else // candidate list past the driver-payload bound: full probe +
@@ -1533,9 +1320,7 @@ object PostingsStore {
             .join(matches.select(col("doc_id")), Seq("doc_id"), "left_semi")
             .localCheckpoint(true)
         }
-    scored.join(broadcast(dfs), "tok")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), Retrieval.bm25ContribQ(k1, b).as("contrib_q"))
+    score(probed, "doc_id")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("contrib_q")).as("bm25_q"))
       .join(matches, "doc_id") // inner: scores exist for every candidate
@@ -1578,16 +1363,9 @@ object PostingsStore {
                                              root: String,
                                              terms: Seq[String],
                                              docIds: Seq[Long],
-                                             batches: Seq[Long]): DataFrame = {
-    val buckets = terms.map(bucketOf).distinct
-    readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket").isInCollection(buckets) &&
-        col("tok").isInCollection(terms) &&
-        col("doc_id").isInCollection(docIds))
-      .select(col("tok"), col("doc_id"),
-        decodePositions(col("positions")).as("abs_pos"))
-  }
+                                             batches: Seq[Long]): DataFrame =
+    probePositions(spark, root, terms, batches)
+      .filter(col("doc_id").isInCollection(docIds))
 
   /** The phrase probe: both tiers of the terms' buckets with positions
     * DECODED to absolute offsets — package-private so the spec can pin
@@ -1944,16 +1722,15 @@ object PostingsStore {
     * mutation, tombstones the ids in `_erased/` (future appends filter
     * them — see the object scaladoc), rewrites each touched leaf through
     * the rename-aside swap keeping the key sort (emptied leaves and
-    * batches removed outright). Tier refill: BOTH rewrite paths RE-TIER
-    * the survivors — each term's head refills to its original capacity
-    * (its pre-erase tier-0 count), which is EXACTLY the fresh-build cut
-    * over the survivors, so a head-hitting takedown cannot silently dent
+    * batches removed outright). Tier refill: the rewrite RE-TIERS the
+    * survivors — each term's head refills to its original capacity (its
+    * pre-erase tier-0 count), which is EXACTLY the fresh-build cut over
+    * the survivors, so a head-hitting takedown cannot silently dent
     * tiered recall (the spec pins the equivalence; q134 hash-gates tiered
-    * serving over an erased, uncompacted store). The refill is free where
-    * it runs: a term's per-batch postings all live in one tbucket, so the
-    * per-leaf cut is leaf-local, and the whole-batch path already holds
-    * the survivors in hand. It then RECOMPUTES each touched batch's
-    * `_termmeta` partitions
+    * serving over an erased, uncompacted store). The refill is free: a
+    * term's per-batch postings all live in one tbucket, so the cut is
+    * leaf-local over rows the rewrite reads anyway. It then RECOMPUTES
+    * each touched batch's `_termmeta`/`_blockmeta` partitions
     * and stats row from its surviving postings (exact by construction —
     * no delta bookkeeping to drift), scrubs the ids from `_docidx`, and
     * drops the marker last. A crash anywhere after the marker leaves it:
@@ -2026,42 +1803,39 @@ object PostingsStore {
       .parquet(root.stripSuffix("/") + ErasedDir)
   }
 
-  /** Per batch, the leaf count above which the erase rewrites the WHOLE
-    * batch subtree in a handful of jobs instead of per-leaf: a document
-    * with hundreds of distinct terms touches most of the 256 buckets, so
-    * the "touched leaves" of a typical takedown ARE the batch — and a
-    * per-leaf swap then pays hundreds of bounded Spark jobs (~0.2 s of
-    * scheduler cost apiece, measured 95 s for 6 ids) for the same bytes
-    * four whole-batch jobs move. Short documents (few buckets) keep the
-    * per-leaf path and its O(touched leaves) I/O bound. */
-  private val WholeBatchEraseLeaves = 32
-
   /** The erase's mutation step, replayable from the intent marker: per
-    * touched batch, either per-leaf rewrites (per tier — assignment is
-    * append-time static) or one whole-batch rewrite (threshold above),
-    * then that batch's `_termmeta`, `_docidx`, and stats recomputes.
-    * Every swap is a rename-aside the recovery pass heals. `root` must
-    * be resolved. */
+    * touched batch, ONE read of its touched leaves, one re-tier of the
+    * survivors (a term's every posting in a batch lives in ONE tbucket —
+    * the bucket is a function of the term — so the refill cut is
+    * leaf-local), and one partitioned write each for the postings,
+    * `_termmeta`, `_blockmeta` and `_docidx` leaves, each swapped in
+    * leaf by leaf; then that batch's stats recompute. O(touched leaves)
+    * I/O in a bounded number of Spark jobs per batch, however many leaves
+    * a takedown touches (a document with hundreds of distinct terms
+    * touches most of the 256 buckets, and each Spark job costs ~0.2 s of
+    * scheduling).
+    * Every swap is a rename-aside the recovery pass heals, and a replay
+    * over partly swapped leaves converges: an already-erased leaf
+    * re-tiers to itself. `root` must be resolved. */
   private def applyErase(spark: SparkSession, root: String, docIds: Seq[Long],
                          leaves: Seq[(Long, Int)]): Unit = {
     val base = root.stripSuffix("/")
-    val dbuckets = docIds.map(dbucketOf).distinct
+    val dbuckets = docIds.map(dbucketOf).distinct.sorted
     leaves.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (b, ls) =>
-      val batchDir = java.nio.file.Paths.get(s"$base/ingest_batch=$b")
-      if (ls.size >= WholeBatchEraseLeaves &&
-          java.nio.file.Files.exists(batchDir)) {
-        // whole-batch path: one read, one partitioned write, one swap —
-        // then ONE termmeta and ONE docidx rewrite for the batch. The
-        // survivors RE-TIER here (each term's head refills to its original
-        // capacity — pre-erase tier-0 count = min(df, headSize) — so the
-        // result is EXACTLY the fresh-build cut over the survivors, and a
-        // head-hitting takedown cannot silently under-fill tiered recall);
-        // the survivors are already in hand, so the recompute is one
-        // window over rows this path rewrites anyway.
-        val all = spark.read.parquet(batchDir.toString)
+      val batchDir = s"$base/ingest_batch=$b"
+      val tbuckets = ls.map(_._2).distinct.sorted
+      val live = tbuckets.filter(tb =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$batchDir/tbucket=$tb")))
+      if (live.nonEmpty) {
+        val all = spark.read.option("basePath", batchDir)
+          .parquet(live.map(tb => s"$batchDir/tbucket=$tb"): _*)
           .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
             col("positions"), col("tbucket").cast("int").as("tbucket"),
             col("tier").cast("int").as("tier"))
+        // each term's head refills to its original capacity (pre-erase
+        // tier-0 count = min(df, headSize)): EXACTLY the fresh-build cut
+        // over the survivors, so a head-hitting takedown cannot silently
+        // under-fill tiered recall
         val headCap = all.filter(col("tier") === 0)
           .groupBy(col("tok")).agg(count(lit(1)).as("head_cap"))
         val survivors = all
@@ -2070,112 +1844,71 @@ object PostingsStore {
           .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
             col("positions"), col("tbucket"),
             tierColCapped(coalesce(col("head_cap"), lit(0L))).as("tier"))
-          .localCheckpoint(true) // feeds the batch rewrite AND termmeta
-        if (survivors.isEmpty) graft.queue.Maintenance.deleteRec(batchDir)
-        else {
-          val tmp = batchDir.resolveSibling(
-            "." + batchDir.getFileName.toString + ".swap")
-          graft.queue.Maintenance.deleteRec(tmp)
+          .localCheckpoint(true) // feeds the postings AND both sidecars
+        swapLeaves(batchDir, "tbucket", live,
           survivors.repartition(col("tbucket"))
             .sortWithinPartitions(col("tbucket"), col("tier"), col("tok"),
-              col("doc_id"))
-            .write.partitionBy("tbucket", "tier").parquet(tmp.toString)
-          graft.queue.Maintenance.replaceDir(tmp.toString, batchDir.toString)
-          val metaTmp = s"$base/_termmeta/.ingest_batch=$b.swap"
-          graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(metaTmp))
+              col("doc_id")),
+          "tier")
+        // exact df + tail certificates, and the block certificates,
+        // recomputed from the re-tiered survivors (recompute, never delta)
+        swapLeaves(s"$base/_termmeta/ingest_batch=$b", "tbucket", tbuckets,
           termMetaFor(survivors)
             .select(col("tok"), col("df"), col("tail_max_tf"),
               col("tail_min_dl"), bucketCol(col("tok")).as("tbucket"))
             .repartition(col("tbucket"))
-            .sortWithinPartitions(col("tbucket"), col("tok"))
-            .write.partitionBy("tbucket").parquet(metaTmp)
-          graft.queue.Maintenance.replaceDir(metaTmp,
-            s"$base/_termmeta/ingest_batch=$b")
-          // block certificates recompute from the re-tiered survivors —
-          // same recompute-never-delta rule as the termmeta rewrite
-          val blkTmp = s"$base/_blockmeta/.ingest_batch=$b.swap"
-          graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(blkTmp))
+            .sortWithinPartitions(col("tbucket"), col("tok")))
+        swapLeaves(s"$base/_blockmeta/ingest_batch=$b", "tbucket", tbuckets,
           blockMetaFor(survivors)
             .select(col("tok"), col("blk_lo"), col("blk_hi"),
               col("blk_max_tf"), col("blk_min_dl"),
               bucketCol(col("tok")).as("tbucket"))
             .repartition(col("tbucket"))
-            .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo"))
-            .write.partitionBy("tbucket").parquet(blkTmp)
-          graft.queue.Maintenance.replaceDir(blkTmp,
-            s"$base/_blockmeta/ingest_batch=$b")
-        }
+            .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo")))
       } else {
-        // per-leaf path (few touched buckets): a term's every posting in
-        // a batch lives in ONE tbucket (the bucket is a function of the
-        // term), so the refill re-tier is LEAF-LOCAL — each touched
-        // tbucket rewrites both tier dirs in one swap with the same
-        // capped cut as the whole-batch path (identical semantics, O(
-        // touched leaves) I/O, and ONE job per leaf where the pre-r19
-        // per-tier rewrites paid two)
-        ls.foreach { case (_, tb) =>
-          val leaf = java.nio.file.Paths.get(s"$base/ingest_batch=$b/tbucket=$tb")
-          if (java.nio.file.Files.exists(leaf)) {
-            val all = spark.read.parquet(leaf.toString)
-              .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-                col("positions"), col("tier").cast("int").as("tier"))
-            val headCap = all.filter(col("tier") === 0)
-              .groupBy(col("tok")).agg(count(lit(1)).as("head_cap"))
-            val survivors = all.filter(!col("doc_id").isInCollection(docIds))
-              .join(headCap, Seq("tok"), "left")
-              .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-                col("positions"),
-                tierColCapped(coalesce(col("head_cap"), lit(0L))).as("tier"))
-            // a leaf whose every posting erased goes outright (partition
-            // discovery must not trip on a hollow tbucket dir)
-            if (survivors.isEmpty) graft.queue.Maintenance.deleteRec(leaf)
-            else {
-              val tmp = leaf.resolveSibling(
-                "." + leaf.getFileName.toString + ".swap")
-              graft.queue.Maintenance.deleteRec(tmp)
-              survivors.repartition(1)
-                .sortWithinPartitions(col("tier"), col("tok"), col("doc_id"))
-                .write.partitionBy("tier").parquet(tmp.toString)
-              graft.queue.Maintenance.replaceDir(tmp.toString, leaf.toString)
-            }
-          }
-          // exact df + tail-certificate recompute for the touched
-          // (batch, tbucket) partition
-          val metaLeaf = s"$base/_termmeta/ingest_batch=$b/tbucket=$tb"
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(metaLeaf))) {
-            if (!java.nio.file.Files.exists(leaf))
-              graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(metaLeaf))
-            else
-              graft.queue.Maintenance.rewriteLeaf(metaLeaf,
-                termMetaFor(spark.read.parquet(leaf.toString)),
-                Seq("tok"))
-          }
-          // block certificates are leaf-local like the termmeta (a term's
-          // batch postings live in one tbucket): recompute from the
-          // rewritten leaf's re-tiered survivors
-          val blkLeaf = s"$base/_blockmeta/ingest_batch=$b/tbucket=$tb"
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(blkLeaf))) {
-            if (!java.nio.file.Files.exists(leaf))
-              graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(blkLeaf))
-            else
-              graft.queue.Maintenance.rewriteLeaf(blkLeaf,
-                blockMetaFor(spark.read.parquet(leaf.toString)
-                  .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-                    col("tier").cast("int").as("tier"))),
-                Seq("tok", "blk_lo"))
-          }
-        }
+        // replay after every touched postings leaf went: drop their
+        // sidecar leaves too
+        for (s <- Seq("_termmeta", "_blockmeta"); tb <- tbuckets)
+          graft.queue.Maintenance.deleteRec(
+            java.nio.file.Paths.get(s"$base/$s/ingest_batch=$b/tbucket=$tb"))
       }
-      dbuckets.foreach { d =>
-        val dxLeaf = s"$base/_docidx/ingest_batch=$b/dbucket=$d"
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(dxLeaf)))
-          graft.queue.Maintenance.rewriteLeaf(dxLeaf,
-            spark.read.parquet(dxLeaf)
-              .filter(!col("doc_id").isInCollection(docIds)),
-            Seq("doc_id"))
-      }
+      val dxDir = s"$base/_docidx/ingest_batch=$b"
+      val dxLive = dbuckets.filter(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dxDir/dbucket=$d")))
+      if (dxLive.nonEmpty)
+        swapLeaves(dxDir, "dbucket", dxLive,
+          spark.read.option("basePath", dxDir)
+            .parquet(dxLive.map(d => s"$dxDir/dbucket=$d"): _*)
+            .withColumn("dbucket", col("dbucket").cast("int"))
+            .filter(!col("doc_id").isInCollection(docIds))
+            .repartition(col("dbucket"))
+            .sortWithinPartitions(col("dbucket"), col("doc_id")))
       recomputeBatchStats(spark, root, b)
     }
+  }
+
+  /** Replace the `key=<k>` leaves under `parent` named by `keys` with
+    * `rows` (partitioned by `key`, then `subKeys`; already clustered and
+    * sorted so each leaf lands as one file per sub-partition): one write
+    * to a hidden sibling, then one rename-aside swap per leaf that
+    * exists. A leaf `rows` leaves empty is removed outright, so partition
+    * discovery never trips on a hollow dir; a missing leaf stays missing. */
+  private def swapLeaves(parent: String, key: String, keys: Seq[Int],
+                         rows: DataFrame, subKeys: String*): Unit = {
+    val p = java.nio.file.Paths.get(parent)
+    val targets = keys.map(k => p.resolve(s"$key=$k"))
+      .filter(java.nio.file.Files.exists(_))
+    if (targets.isEmpty) return
+    val tmp = p.resolveSibling("." + p.getFileName.toString + ".swap")
+    graft.queue.Maintenance.deleteRec(tmp)
+    rows.write.partitionBy(key +: subKeys: _*).parquet(tmp.toString)
+    targets.foreach { t =>
+      val staged = tmp.resolve(t.getFileName)
+      if (java.nio.file.Files.exists(staged))
+        graft.queue.Maintenance.replaceDir(staged.toString, t.toString)
+      else graft.queue.Maintenance.deleteRec(t)
+    }
+    graft.queue.Maintenance.deleteRec(tmp)
   }
 
   private def hasChildWithPrefix(p: java.nio.file.Path, prefix: String): Boolean = {
@@ -2242,29 +1975,9 @@ object PostingsStore {
     }.toSeq
     val base = root.stripSuffix("/")
     leaves.map(_._1).distinct.foreach { b =>
-      val batchDir = java.nio.file.Paths.get(s"$base/ingest_batch=$b")
-      // whole-batch swap asides live one level UP (the batch dir itself
-      // and its termmeta/docidx batch dirs are the swap targets)
-      graft.queue.Maintenance.healAside(batchDir)
-      graft.queue.Maintenance.healAside(
-        java.nio.file.Paths.get(s"$base/_termmeta/ingest_batch=$b"))
-      graft.queue.Maintenance.healAside(
-        java.nio.file.Paths.get(s"$base/_docidx/ingest_batch=$b"))
-      graft.queue.Maintenance.healAside(
-        java.nio.file.Paths.get(s"$base/_blockmeta/ingest_batch=$b"))
-      healAsidesUnder(batchDir)
-      // tier-level asides live one level down
-      if (java.nio.file.Files.exists(batchDir)) {
-        val s = java.nio.file.Files.list(batchDir)
-        try {
-          val it = s.iterator()
-          while (it.hasNext) {
-            val c = it.next()
-            if (c.getFileName.toString.startsWith("tbucket="))
-              healAsidesUnder(c)
-          }
-        } finally s.close()
-      }
+      // the erase swaps leaves only: their asides sit directly under
+      // the batch dirs
+      healAsidesUnder(java.nio.file.Paths.get(s"$base/ingest_batch=$b"))
       healAsidesUnder(java.nio.file.Paths.get(s"$base/_termmeta/ingest_batch=$b"))
       healAsidesUnder(java.nio.file.Paths.get(s"$base/_docidx/ingest_batch=$b"))
       healAsidesUnder(java.nio.file.Paths.get(s"$base/_blockmeta/ingest_batch=$b"))

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.cdc.ChangeCapture
 import graft.delivery.{HttpPoster, JdkHttpPoster, WebhookSink}
 import graft.model.TriggerConfig
 import graft.queue.EventLog
@@ -12,9 +11,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *
   * A change feed is any streaming DataFrame of rows
   * `(op, old struct, new struct)` — file source over an append directory,
-  * Kafka, or MemoryStream in tests. The capture pipeline is the SAME
-  * declarative ChangeCapture used in batch (filters + projection compose
-  * identically on a streaming plan); delivery modes mirror the reference:
+  * Kafka, or MemoryStream in tests. Capture is the SAME declarative
+  * [[graft.cdc.ChangeCapture.capture]] used in batch (filters + projection
+  * compose identically on a streaming plan); delivery modes mirror the
+  * reference:
   *
   *  - SYNC  → `foreachBatch` → [[WebhookSink.deliverBatch]]: retry loop in
   *    the sink, batch failure = transaction-abort analog (T1/T3/T4);
@@ -22,10 +22,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    drained by [[graft.queue.Dispatcher]] on its own cadence (T5).
   */
 object ChangeStream {
-
-  /** Streaming capture: op filter → column gate → envelope. */
-  def capture(changes: DataFrame, cfg: TriggerConfig): DataFrame =
-    ChangeCapture.capture(changes, cfg)
 
   /** Route a captured stream per the trigger's mode. Caller starts it
     * (`.start()`), choosing checkpoint location and trigger cadence.

@@ -550,7 +550,8 @@ object ScaleBench {
       val sb0 = shuffleBytesDrained()
       val t0 = System.nanoTime()
       val cand = graft.operators.Dedup
-        .rareShingleCandidates(dsh, maxDf = 8, preDistincted = true)
+        .rareShingleCandidates(dsh,
+          maxDf = graft.queries.SharedStages.ContainmentMaxDf, preDistincted = true)
         .localCheckpoint(true)
       val nCand = cand.count()
       val nPairs06 = graft.operators.Dedup
@@ -804,8 +805,8 @@ object ScaleBench {
     // matched postings stay FIXED while the store grows 10x — the
     // registry-probe experiment (cont_probe's), with the layout bound
     // published beside the wall: the probe reads <= |term buckets| of
-    // 256 bucket dirs. Erasure (doc-keyed locate through _docidx;
-    // whole-batch rewrites past the touched-leaf threshold) and the
+    // 256 bucket dirs. Erasure (doc-keyed locate through _docidx; one
+    // batched rewrite of the touched leaves per batch) and the
     // compaction fold ride beside as the maintenance faces.
     val postingsRows = Seq(1, 10).map { k =>
       import spark.implicits._
@@ -847,7 +848,7 @@ object ScaleBench {
       // TAKEDOWN-BATCH throughput: a real GDPR batch is hundreds to
       // thousands of ids, not single digits — erase doc_id % 100 = 7
       // (50 ids at 1x, 500 at 10x) against the compacted store, so the
-      // ids->wall slope of the whole-batch rewrite is a measured row
+      // ids->wall slope of the leaf rewrite is a measured row
       // instead of an extrapolation from the 6-id case
       val bulkIds = docsDisk.filter(col("doc_id") % 100 === 7)
         .select(col("doc_id").cast("long")).as[Long].collect().toSeq
@@ -1128,11 +1129,13 @@ object ScaleBench {
       // and grows with BATCH COUNT; auto-leveling is the documented remedy
       // that keeps the bound flat. On the leveled store the serve must
       // run the certificate path (exactFallback=false: WandMaxHeadRows
-      // never fires) with headRows far under the cap; both numbers are
-      // published so the leash is a row, not prose.
+      // never fires; fullTailFallback=false: no tail is read whole) with
+      // headRows far under the cap; both numbers are published so the
+      // leash is a row, not prose.
       val (wandServed, wandDiag) = graft.sources.PostingsStore
         .bm25TopKWandDiag(spark, dir, Seq("dup", "the"), 10)
-      require(!wandDiag.exactFallback && !wandDiag.dispatchedExact,
+      require(!wandDiag.exactFallback && !wandDiag.fullTailFallback &&
+        !wandDiag.dispatchedExact,
         s"WAND on the leveled store left the certificate path: $wandDiag")
       require(wandServed.collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -1832,22 +1835,12 @@ object ScaleBench {
     sb ++= "re-tokenizes the corpus per query. Erasure's locate resolves\n"
     sb ++= "through the _docidx sidecar (dbucket partition filter + pushed\n"
     sb ++= "In(doc_id) over doc_id-sorted files — O(touched leaves), the\n"
-    sb ++= "poisoned-partition spec pins it). Read the erase columns by\n"
-    sb ++= "PATH: the 10x rows cross the whole-batch threshold (>= 32\n"
-    sb ++= "touched leaves — the suffixed vocabulary spreads the ids'\n"
-    sb ++= "terms over hundreds of buckets), so their wall is a handful of\n"
-    sb ++= "batch-sized jobs bounded by the STORE REWRITE, and ~10x the\n"
-    sb ++= "ids costs about the same wall (compare the 10x erase-sec\n"
-    sb ++= "against the 10x bulk-erase-sec) — the right bound for a GDPR\n"
-    sb ++= "batch of thousands. The 1x rows stay on the per-leaf path BY\n"
-    sb ++= "CONSTRUCTION: the base corpus's 31-token vocabulary caps any\n"
-    sb ++= "takedown at ~31 touched term buckets, so their wall tracks\n"
-    sb ++= "touched doc/term leaves (the bulk row's growth over the small\n"
-    sb ++= "row is its extra _docidx dbucket rewrites — one bounded job\n"
-    sb ++= "per touched leaf, the same O(touched leaves) I/O bound the\n"
-    sb ++= "spec pins). Both bounds are the claim: small id sets on small\n"
-    sb ++= "vocabularies pay leaf count, large ones converge to one batch\n"
-    sb ++= "rewrite. compact folds the batch tier in one offline pass\n"
+    sb ++= "poisoned-partition spec pins it). The rewrite reads only the\n"
+    sb ++= "touched leaves and runs a bounded number of jobs per touched\n"
+    sb ++= "batch: one partitioned write each for the postings, _termmeta,\n"
+    sb ++= "_blockmeta and _docidx leaves, swapped in leaf by leaf — so the\n"
+    sb ++= "erase wall tracks the touched leaves' bytes, not their count.\n"
+    sb ++= "compact folds the batch tier in one offline pass\n"
     sb ++= "behind the version commit (readers whole-old or whole-new,\n"
     sb ++= "hammer-spec pinned).\n"
     sb ++= "\n| tiered BM25 serve ('dup'+'the', k=10, unsuffixed copies) | df('the') | exact serve | tiered serve | WAND serve (exact) | tiered recall@10 | head bytes ('the' bucket) | tail bytes (tiered never reads) | WAND cand rows (block-max) | WAND cand rows (per-batch bound) |\n|---|---|---|---|---|---|---|---|---|---|\n"
@@ -1935,8 +1928,9 @@ object ScaleBench {
       sb ++= "store: the head summary is layout-bounded at headSize x\n"
       sb ++= "batches x |terms| and grows with BATCH COUNT, so leveling is\n"
       sb ++= "what keeps it far under WandMaxHeadRows — the serve above ran\n"
-      sb ++= "the certificate path (exactFallback asserted false, output\n"
-      sb ++= "asserted exact), not the cap's escape hatch.\n"
+      sb ++= "the certificate path (exactFallback and fullTailFallback\n"
+      sb ++= "asserted false, output asserted exact), not the cap's escape\n"
+      sb ++= "hatch or a whole-tail read.\n"
       sb ++= "\nThe r19 verdict's top item, measured: every serving bound that\n"
       sb ++= "is linear in committed batch count (head read, WAND driver\n"
       sb ++= "summary, _termmeta fan-out, per-batch footers) is capped iff\n"

@@ -125,6 +125,24 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(cdefault == cstaged)
   }
 
+  test("jaccardVerify and containmentVerify refuse a mis-shaped sizes relation") {
+    val dsh = Dedup.shingles(docs).select($"doc_id", $"shingle").distinct()
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    val extra = dsh.groupBy($"doc_id")
+      .agg(count(lit(1)).as("set_size"), max($"shingle").as("top"))
+    val renamed = dsh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    for (bad <- Seq(extra, renamed)) {
+      val e1 = intercept[IllegalArgumentException](Dedup.jaccardVerify(
+        pairs, dsh, preDistincted = true, sizesDf = Some(bad)))
+      assert(e1.getMessage.contains("exactly the columns (doc_id, set_size)"),
+        e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](Dedup.containmentVerify(
+        pairs, dsh, preDistincted = true, sizesDf = Some(bad)))
+      assert(e2.getMessage.contains("exactly the columns (doc_id, set_size)"),
+        e2.getMessage)
+    }
+  }
+
   test("simhash: equal for identical text, 16-bit range, unequal for distinct") {
     val h = Dedup.simhash16(docs).as[(Long, Int)].collect().toMap
     assert(h(1L) == h(2L))

@@ -57,6 +57,59 @@ class CredentialStoreSpec extends AnyFunSuite with SparkTestSession with BeforeA
     assert(t2.after(t1), s"updated_at must advance: $t1 -> $t2")
   }
 
+  test("upserts commit whole snapshots: a reader resolving in a loop " +
+    "never fails and always sees every key committed so far") {
+    val dir = Files.createTempDirectory("graft_creds_hammer_").toString + "/credentials"
+    val names = (0 until 20).map(i => s"t$i")
+    CredentialStore.upsert(spark, dir, cfg("http://t/0", "PRIVATE").copy(name = names.head))
+    val firstEnv = envelopes(cfg("http://t/0", "PRIVATE").copy(name = names.head))
+      .localCheckpoint()
+    val committed = new java.util.concurrent.atomic.AtomicInteger(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var stop = false
+    val reader = new Thread(() => {
+      while (!stop) {
+        val floor = committed.get()
+        try {
+          val urls = CredentialStore.resolve(firstEnv, spark, dir)
+            .select($"resolved_url").as[String].collect().toSet
+          if (urls != Set("http://t/0")) failures.add(s"resolved $urls")
+          val keys = CredentialStore.read(spark, dir)
+            .select($"trigger_name").as[String].collect().toSet
+          val missing = names.take(floor).filterNot(keys)
+          if (missing.nonEmpty) failures.add(s"committed keys missing: $missing")
+        } catch { case e: Throwable => failures.add(e.toString) }
+      }
+    })
+    reader.start()
+    try names.tail.zipWithIndex.foreach { case (n, i) =>
+      CredentialStore.upsert(spark, dir, cfg(s"http://t/${i + 1}", "PRIVATE").copy(name = n))
+      committed.incrementAndGet()
+    } finally { stop = true; reader.join(60000) }
+    assert(failures.isEmpty, failures.toArray.take(5).mkString("\n"))
+    assert(CredentialStore.read(spark, dir).select($"trigger_name").as[String]
+      .collect().toSet == names.toSet)
+  }
+
+  test("an upsert that loses the commit race throws instead of dropping " +
+    "the winner's row") {
+    val dir = Files.createTempDirectory("graft_creds_race_").toString + "/credentials"
+    CredentialStore.upsert(spark, dir, cfg("http://first/hook", "PRIVATE"))
+    val winner = cfg("http://winner/hook", "PRIVATE").copy(name = "winner_t")
+    val loser = cfg("http://loser/hook", "PRIVATE").copy(name = "loser_t")
+    // the winner commits after the loser published its snapshot and
+    // before the loser's tip check
+    intercept[ConcurrentWriterException] {
+      CredentialStore.upsert(spark, dir, loser, {
+        case "published" => CredentialStore.upsert(spark, dir, winner)
+        case _ => ()
+      })
+    }
+    val rows = CredentialStore.read(spark, dir)
+      .select($"trigger_name", $"webhook_url").as[(String, String)].collect().toSet
+    assert(rows == Set(("sec_t", "http://first/hook"), ("winner_t", "http://winner/hook")))
+  }
+
   test("resolve: broadcast lookup attaches stored url/headers to envelopes") {
     val dir = Files.createTempDirectory("graft_creds_").toString + "/credentials"
     val c = cfg(server.url, "PRIVATE")

@@ -672,7 +672,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       Seq("merge", "the", "dup"))) {
       assert(wandRows(bulk, ts, 10) == serveRows(bulk, ts, 10), ts)
     }
-    // k past the head forces the exact fallback — still exact
+    // k past the head forces the whole-tail fallback — still exact
     assert(wandRows(bulk, Seq("the"), 400) == serveRows(bulk, Seq("the"), 400))
   }
 
@@ -1090,7 +1090,8 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     // ("vector"/"merge" exceed the head at this SF): no dispatch, the
     // certificate path engages and still serves the exact rows
     val (got2, diag2) = PostingsStore.bm25TopKWandDiag(spark, bulk, terms, 10)
-    assert(!diag2.dispatchedExact && !diag2.exactFallback, diag2.toString)
+    assert(!diag2.dispatchedExact && !diag2.exactFallback &&
+      !diag2.fullTailFallback, diag2.toString)
     assert(got2.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       == serveRows(bulk, terms, 10))
@@ -1104,6 +1105,18 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(got.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       == serveRows(bulk, Seq("dup", "the"), 10))
+  }
+
+  test("WAND whole-tail fallback: when certificates cannot exclude unseen " +
+    "documents the single face reads the query's tails whole on top of its " +
+    "head rows - identical output") {
+    // k past the head: fewer than k head docs, so no θ exists
+    val (got, diag) = PostingsStore.bm25TopKWandDiag(spark, bulk, Seq("the"), 400)
+    assert(diag.fullTailFallback && !diag.exactFallback && !diag.dispatchedExact &&
+      diag.headRows > 0L && diag.candidateRows == 0L, diag.toString)
+    assert(got.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      == serveRows(bulk, Seq("the"), 400))
   }
 
   test("block-max certificates: an outlier posting in a stop word's tail " +
@@ -1137,7 +1150,8 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(rows(gotBatchBound) == exact && rows(gotBlock) == exact)
-    assert(!diagOff.exactFallback && !diagOn.exactFallback,
+    assert(!diagOff.exactFallback && !diagOn.exactFallback &&
+      !diagOff.fullTailFallback && !diagOn.fullTailFallback,
       s"adversary degenerated to fallback: $diagOff / $diagOn")
     assert(diagOn.blockRefined, diagOn.toString)
     assert(diagOn.candidateRows < diagOff.candidateRows,
@@ -1171,7 +1185,8 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(rows(gotDefault) == exact)
     assert(!diagDefault.blockRefined && !diagDefault.exactFallback &&
-      !diagDefault.dispatchedExact, diagDefault.toString)
+      !diagDefault.fullTailFallback && !diagDefault.dispatchedExact,
+      diagDefault.toString)
     // the coarse fetch carries the per-batch bound's false candidates —
     // nonzero, proving the serve went through the candidate path
     assert(diagDefault.candidateRows >= 20, diagDefault.toString)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkTestSession
-import graft.cdc.Emp
+import graft.cdc.{ChangeCapture, Emp}
 import graft.delivery.CaptureServer
 import graft.model.TriggerConfig
 import graft.queue.{Dispatcher, EventLog}
@@ -45,7 +45,7 @@ class ChangeStreamSpec extends AnyFunSuite with SparkTestSession with BeforeAndA
 
   test("streaming capture emits envelopes for a MemoryStream change feed") {
     val (_, changes) = changeStream()
-    val env = ChangeStream.capture(changes, cfg("SYNC", "http://x/"))
+    val env = ChangeCapture.capture(changes, cfg("SYNC", "http://x/"))
     val q = env.writeStream.format("memory").queryName("cap_out")
       .outputMode("append").start()
     try {
@@ -63,7 +63,7 @@ class ChangeStreamSpec extends AnyFunSuite with SparkTestSession with BeforeAndA
     val dir = Files.createTempDirectory("graft_squeue_").toString + "/event_log"
     val c = cfg("ASYNC", server.url)
     val (_, changes) = changeStream()
-    val q = ChangeStream.deliveryWriter(ChangeStream.capture(changes, c), c, dir)
+    val q = ChangeStream.deliveryWriter(ChangeCapture.capture(changes, c), c, dir)
       .option("checkpointLocation", Files.createTempDirectory("graft_ck_").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -86,7 +86,7 @@ class ChangeStreamSpec extends AnyFunSuite with SparkTestSession with BeforeAndA
       .select($"op", $"oldImage".as("old"), $"newImage".as("new"))
       .write.mode("append").parquet(feedDir)
     val stream = spark.readStream.schema(template.schema).parquet(feedDir)
-    val env = ChangeStream.capture(stream, cfg("SYNC", "http://x/"))
+    val env = ChangeCapture.capture(stream, cfg("SYNC", "http://x/"))
     val q = env.writeStream.format("memory").queryName("file_cap_out")
       .outputMode("append").start()
     try {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestSession
-import graft.cdc.Emp
+import graft.cdc.{ChangeCapture, Emp}
 import graft.delivery.{CaptureServer, HttpPoster, JdkHttpPoster}
 import graft.model.TriggerConfig
 import graft.queue.{Dispatcher, EventLog}
@@ -68,7 +68,7 @@ class EndToEndPipelineSpec extends AnyFunSuite with SparkTestSession with Before
     // ── stage 2+3: streaming capture → envelope → durable ASYNC enqueue
     server.received.clear()
     val capQ = ChangeStream
-      .deliveryWriter(ChangeStream.capture(changes, cfg), cfg, queueDir)
+      .deliveryWriter(ChangeCapture.capture(changes, cfg), cfg, queueDir)
       .option("checkpointLocation", root + "/cap_ckpt").start()
     try capQ.processAllAvailable() finally capQ.stop()
     val enqueued = EventLog.read(spark, queueDir).as[EventLog.QueueRow].collect()
