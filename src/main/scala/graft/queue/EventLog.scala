@@ -1,5 +1,7 @@
 package graft.queue
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import graft.model.TriggerConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,6 +75,24 @@ object EventLog {
         current_timestamp().as("updated_at"))
     PendingStore.spool(rows, queueDir)
   }
+
+  /** Land a dispatcher cycle's terminal rows in the history: every file of
+    * the staged `status=DELIVERED|FAILED` partitions of `staged` moves, by
+    * one rename each, into the same partition under `queueDir`. Files keep
+    * the cycle write's unique names. A crash midway leaves some landed; the
+    * replayed cycle lands its own again, which is the at-least-once history
+    * [[terminalHistory]] collapses. */
+  def landTerminal(staged: Path, queueDir: String): Unit =
+    Seq("DELIVERED", "FAILED").foreach { status =>
+      val from = staged.resolve(s"status=$status")
+      if (Files.isDirectory(from)) {
+        val to = Files.createDirectories(Paths.get(queueDir, s"status=$status"))
+        val s = Files.list(from)
+        try s.forEach(f => Files.move(f, to.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE))
+        finally s.close()
+        Files.delete(from)
+      }
+    }
 
   /** The full queue view: immutable terminal partitions ∪ the live PENDING
     * set (resolved through the manifest — see [[PendingStore]]). */

@@ -3,7 +3,8 @@ package graft.queue
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.queue.EventLog.QueueRow
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** The queue's PENDING set: a [[VersionedDir]] of snapshots plus an enqueue
   * inbox, under `queueDir/.pending/` (dot-prefixed, so the hive reader of
@@ -13,8 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                   and renamed in whole; immutable once visible
   *   v<N>-<hex>/     snapshot N of the pending rows (not-yet-due ∪
   *                   rescheduled), committed through [[VersionedDir]]; its
-  *                   manifest payload lists the inbox dirs it absorbed
+  *                   manifest payload is its [[SnapshotStats]] line, then
+  *                   the inbox dirs it absorbed
   *   _owner          the single-writer [[Lease]]
+  *
+  * Rows in the store are PENDING by definition: a snapshot committed from a
+  * dispatcher cycle's `partitionBy("status")` write carries no `status`
+  * column of its own, and readers supply it.
   *
   * Readers resolve the manifest once, then read snapshot ∪ (inbox ∖
   * consumed). Manifest before inbox means a commit racing a reader yields a
@@ -46,11 +52,69 @@ object PendingStore {
     * takeover (every commit and idle cycle renews). */
   final case class Lease(owner: String, token: String, ttlMs: Long)
 
-  /** A point-in-time view: the live snapshot (its payload is the inbox dirs
-    * it consumed) plus the non-consumed inbox dirs captured by name. One
-    * capture feeds a whole dispatcher cycle — scan, rewrite, and commit all
-    * agree on exactly which files are "the batch". */
+  /** A point-in-time view: the live snapshot (its payload is its stats and
+    * the inbox dirs it consumed) plus the non-consumed inbox dirs captured
+    * by name. One capture feeds a whole dispatcher cycle — scan, rewrite,
+    * and commit all agree on exactly which files are "the batch". */
   final case class Capture(manifest: VersionedDir.Snapshot, inbox: Seq[String])
+
+  /** What a snapshot's writer observed on its one write, kept in the
+    * snapshot's manifest entry so an idle dispatcher cycle and
+    * `Dispatcher.hasPending` answer without a Spark job: the row count and
+    * the minimum `next_attempt` and `created_at` in epoch ms (None when the
+    * snapshot is empty). */
+  final case class SnapshotStats(rows: Long, minNextAttempt: Option[Long],
+                                 minCreatedAt: Option[Long])
+
+  object SnapshotStats {
+    val Empty: SnapshotStats = SnapshotStats(0L, None, None)
+
+    /** Payload line prefix; inbox dir names are uuids, so never collide. */
+    private[queue] val Tag = "#stats"
+
+    def line(s: SnapshotStats): String = {
+      def ms(v: Option[Long]) = v.fold("-")(_.toString)
+      s"$Tag rows=${s.rows} min_next_attempt=${ms(s.minNextAttempt)} " +
+        s"min_created_at=${ms(s.minCreatedAt)}"
+    }
+
+    def parse(line: String): Option[SnapshotStats] =
+      if (!line.startsWith(Tag + " ")) None
+      else {
+        val kv = line.drop(Tag.length).trim.split(' ').flatMap(_.split('=') match {
+          case Array(k, v) => Some(k -> v)
+          case _ => None
+        }).toMap
+        def ms(k: String) = kv.get(k).filter(_ != "-").map(_.toLong)
+        kv.get("rows").map(r => SnapshotStats(r.toLong, ms("min_next_attempt"), ms("min_created_at")))
+      }
+
+    /** Aggregates that observe the stats of the rows selected by `kept`. */
+    def columns(kept: Column): Seq[Column] = Seq(
+      count_if(kept).as("rows"),
+      min(when(kept, col("next_attempt"))).as("min_next_attempt"),
+      min(when(kept, col("created_at"))).as("min_created_at"))
+
+    /** The stats out of an `Observation` of [[columns]]. */
+    def observed(m: Map[String, Any]): SnapshotStats = {
+      def ms(k: String): Option[Long] = m.get(k).flatMap {
+        case t: java.sql.Timestamp => Some(t.getTime)
+        case _ => None // the min over no rows
+      }
+      SnapshotStats(m("rows").asInstanceOf[Long], ms("min_next_attempt"), ms("min_created_at"))
+    }
+  }
+
+  /** The stats of the snapshot `snap` captured: [[SnapshotStats.Empty]] for
+    * a store with no snapshot yet, None for a snapshot committed without
+    * them (callers treat it as possibly due). Excludes the captured inbox. */
+  def stats(snap: Capture): Option[SnapshotStats] =
+    if (snap.manifest.version == 0L) Some(SnapshotStats.Empty)
+    else snap.manifest.payload.collectFirst(Function.unlift(SnapshotStats.parse))
+
+  /** The inbox dirs `m` absorbed: its payload without the stats line. */
+  private def consumed(m: VersionedDir.Snapshot): Seq[String] =
+    m.payload.filterNot(_.startsWith(SnapshotStats.Tag))
 
   private def root(queueDir: String): Path = Paths.get(queueDir, ".pending")
   private def inboxRoot(queueDir: String): Path = root(queueDir).resolve("inbox")
@@ -279,7 +343,8 @@ object PendingStore {
       case _ => () // no lease anywhere: unmanaged single-writer mode
     }
 
-  /** The live snapshot; its payload is the inbox dirs it consumed. */
+  /** The live snapshot; its payload is its stats and the inbox dirs it
+    * consumed. */
   def manifest(queueDir: String): VersionedDir.Snapshot = VersionedDir.resolve(root(queueDir))
 
   def listInbox(queueDir: String): Seq[String] = {
@@ -300,19 +365,22 @@ object PendingStore {
 
   def capture(queueDir: String): Capture = {
     val m = manifest(queueDir)
-    Capture(m, listInbox(queueDir).filterNot(m.payload.toSet))
+    Capture(m, listInbox(queueDir).filterNot(consumed(m).toSet))
   }
 
   /** Atomic enqueue: write the rows to a hidden temp dir, then one rename
     * makes the complete spool visible. Concurrent spools use distinct
     * uuids; nothing contends. A crashed spool's temp is a dead `.tmp` that
-    * [[VersionedDir]]'s retention sweeps. */
+    * [[VersionedDir]]'s retention sweeps. A batch with no rows publishes
+    * nothing, so it never makes the queue look pending. */
   def spool(rows: DataFrame, queueDir: String): Unit = {
     Files.createDirectories(inboxRoot(queueDir))
     val name = java.util.UUID.randomUUID().toString
     val tmp = root(queueDir).resolve(s".spool-$name.tmp")
-    rows.write.mode("overwrite").parquet(tmp.toString)
-    Files.move(tmp, inboxRoot(queueDir).resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    val written = Observation()
+    rows.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").parquet(tmp.toString)
+    if (written.get("rows") == 0L) deleteRec(tmp)
+    else Files.move(tmp, inboxRoot(queueDir).resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The live PENDING set as of a fresh capture. */
@@ -320,12 +388,14 @@ object PendingStore {
     readAt(spark, queueDir, capture(queueDir))
 
   /** The PENDING set a given capture saw: snapshot ∪ captured inbox, schema
-    * supplied explicitly (no footer inference). `ignoreMissingFiles` covers
-    * readers more than one commit stale whose files GC already swept. */
+    * supplied explicitly (no footer inference). A snapshot whose stats say
+    * it is empty is not read. `ignoreMissingFiles` covers readers more than
+    * one commit stale whose files GC already swept. */
   def readAt(spark: SparkSession, queueDir: String, snap: Capture): DataFrame = {
     val schema = org.apache.spark.sql.Encoders.product[QueueRow].schema
+    val snapshotRows = snap.manifest.version > 0L && stats(snap).forall(_.rows > 0L)
     val paths =
-      (if (snap.manifest.version > 0L) Seq(snap.manifest.path) else Nil) ++
+      (if (snapshotRows) Seq(snap.manifest.path) else Nil) ++
         snap.inbox.map(inboxRoot(queueDir).resolve)
     val existing = paths.filter(Files.exists(_)).map(_.toString)
     if (existing.isEmpty)
@@ -334,32 +404,62 @@ object PendingStore {
     else
       spark.read.schema(schema).option("ignoreMissingFiles", "true")
         .parquet(existing: _*)
+        .withColumn("status", lit("PENDING"))
   }
 
+  /** A fresh stage dir for the snapshot after the one `snap` captured. */
+  def stage(snap: Capture): Path = VersionedDir.stage(snap.manifest)
+
   /** Commit `newPending` as the next snapshot and retire the capture's inbox
-    * dirs. The [[VersionedDir.commit]] link is the only reader-visible
-    * instant. Its payload consumes this capture's inbox plus every
+    * dirs: the rows are written as the stage's `status=PENDING` part and
+    * committed by [[commitStaged]], with stats observed on that write.
+    */
+  private[queue] def commit(newPending: DataFrame, queueDir: String, snap: Capture,
+                            onStep: String => Unit = _ => (),
+                            lease: Option[Lease] = None): Unit = {
+    verifyLease(queueDir, lease) // fail fast, before the parquet write
+    val staged = stage(snap)
+    val written = Observation()
+    val stats = SnapshotStats.columns(lit(true))
+    newPending.observe(written, stats.head, stats.tail: _*)
+      .write.parquet(staged.resolve("status=PENDING").toString)
+    commitStaged(staged, SnapshotStats.observed(written.get), queueDir, snap, onStep, lease)
+  }
+
+  /** Commit a stage dir (from [[stage]]) as the next snapshot and retire
+    * the capture's inbox dirs. `staged` holds one `partitionBy("status")`
+    * write whose terminal partitions, if any, have already landed in the
+    * history (`EventLog.landTerminal`); its `status=PENDING` files become
+    * the snapshot's own, and `stats` were observed on that write.
+    *
+    * The [[VersionedDir.commit]] link is the only reader-visible instant.
+    * Its payload is the stats line, then this capture's inbox plus every
     * previously consumed dir that still exists, since a failed GC keeps a
     * name excluded until the dir is actually gone. After the commit, the
     * previous snapshot's consumed dirs are GC'd.
     *
-    * The lease is verified at entry (fail fast before the parquet write)
-    * and again just before the commit (clear errors for the common
-    * second-dispatcher case); the commit's exclusive link is the fence.
-    * `onStep` is the crash-test seam, forwarded to [[VersionedDir.commit]]
-    * and also called after the snapshot write and the inbox GC.
-    */
-  def commit(newPending: DataFrame, queueDir: String, snap: Capture,
-             onStep: String => Unit = _ => (),
-             lease: Option[Lease] = None): Unit = {
-    val prev = snap.manifest
+    * The lease is verified at entry and again just before the commit (clear
+    * errors for the common second-dispatcher case); the commit's exclusive
+    * link is the fence. `onStep` is the crash-test seam, forwarded to
+    * [[VersionedDir.commit]] and also called once the snapshot's files are
+    * in place and after the inbox GC. */
+  def commitStaged(staged: Path, stats: SnapshotStats, queueDir: String, snap: Capture,
+                   onStep: String => Unit = _ => (),
+                   lease: Option[Lease] = None): Unit = {
     verifyLease(queueDir, lease)
-    val stage = VersionedDir.stage(prev)
-    newPending.write.mode("overwrite").parquet(stage.toString)
+    val part = staged.resolve("status=PENDING")
+    if (Files.isDirectory(part)) {
+      val s = Files.list(part)
+      try s.forEach(f => Files.move(f, staged.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE))
+      finally s.close()
+      Files.delete(part)
+    }
     onStep("snapshot-written")
-    val carried = prev.payload.filter(n => Files.exists(inboxRoot(queueDir).resolve(n)))
+    val prev = snap.manifest
+    val carried = consumed(prev).filter(n => Files.exists(inboxRoot(queueDir).resolve(n)))
     verifyLease(queueDir, lease)
-    VersionedDir.commit(prev, stage, (snap.inbox ++ carried).distinct, onStep)
+    VersionedDir.commit(prev, staged,
+      SnapshotStats.line(stats) +: (snap.inbox ++ carried).distinct, onStep)
     lease.foreach(l => writeLeaseFile(queueDir, l.token, l.ttlMs)) // renew
     sweepTombstones(queueDir) // a crashed inbox GC leaves '.<name>.gc' dirs; clear first
     carried.foreach(gcInboxDir(queueDir, _))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import graft.queries.SharedStages.ContainmentMaxDf
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -161,7 +162,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       (30L, "unrelated words that share nothing at all with others here")
     ).toDF("doc_id", "text")
     val dsh = Dedup.shingles(cdocs).distinct()
-    val cand = Dedup.rareShingleCandidates(dsh, maxDf = 8, preDistincted = true)
+    val cand = Dedup.rareShingleCandidates(dsh, maxDf = ContainmentMaxDf, preDistincted = true)
       .as[(Long, Long)].collect().toSet
     assert(cand.contains((10L, 20L)), s"rare-shingle blocking must find the quote pair: $cand")
     assert(!cand.contains((10L, 30L)) && !cand.contains((20L, 30L)))
@@ -185,9 +186,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     // aggregate and the pair self-join must be a pure substitution
     val sh = Dedup.shingles(docs)
     val dsh = sh.select($"doc_id", $"shingle").distinct()
-    val oneShot = Dedup.rareShingleCandidates(dsh, maxDf = 8, preDistincted = true)
+    val oneShot = Dedup.rareShingleCandidates(dsh, maxDf = ContainmentMaxDf, preDistincted = true)
       .as[(Long, Long)].collect().toSet
-    val postings = Dedup.rarePostings(dsh, maxDf = 8, preDistincted = true).persist()
+    val postings = Dedup.rarePostings(dsh, maxDf = ContainmentMaxDf, preDistincted = true).persist()
     try {
       val staged = Dedup.rareCandidatesFromPostings(postings)
         .as[(Long, Long)].collect().toSet

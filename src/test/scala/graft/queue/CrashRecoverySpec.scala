@@ -18,6 +18,19 @@ import org.scalatest.funsuite.AnyFunSuite
 object CrashRecoverySpec {
   /** Static so executor threads in the local JVM share the budget. */
   val crashesLeft = new AtomicInteger(0)
+  /** Event ids [[RefusingPoster]] answers 503, and every id it was sent. */
+  @volatile var refused: Set[String] = Set.empty
+  val posted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** No network: 503 for the ids in `CrashRecoverySpec.refused`, else 200. */
+final class RefusingPoster extends HttpPoster {
+  override def post(url: String, headers: Map[String, String], body: String,
+                    timeoutMs: Long): (Int, String) = {
+    val id = """"id":"([0-9a-f-]+)"""".r.findFirstMatchIn(body).map(_.group(1)).get
+    CrashRecoverySpec.posted.add(id)
+    if (CrashRecoverySpec.refused(id)) (503, "busy") else (200, "ok")
+  }
 }
 
 /** Posts for real, then dies — the worst-ordered crash: the side effect
@@ -115,5 +128,53 @@ class CrashRecoverySpec extends AnyFunSuite with SparkTestSession with BeforeAnd
     // the real commit at v1 has its own name; its retention swept the orphan
     assert(graft.queue.PendingStore.manifest(dir).version >= 1L)
     assert(!java.nio.file.Files.exists(orphanSnap))
+  }
+
+  test("a cycle killed after its staged write, or after its terminal moves, replays cleanly") {
+    val cfg = TriggerConfig(
+      name = "stage_crash_t", tableName = "employees",
+      operations = Seq("INSERT"), webhookUrl = server.url,
+      headers = Map.empty, mode = "ASYNC",
+      retryNumber = 2, retryInterval = 1, retryBackoff = "LINEAR")
+    for (crashAt <- Seq("staged", "terminal-landed")) {
+      val dir = Files.createTempDirectory("graft_stage_crash_").toString + "/event_log"
+      val env = ChangeCapture.capture(
+        SnapshotDiff.diff(Seq.empty[Emp].toDF(),
+          (1 to 4).map(i => Emp(i, s"s$i", i * 100)).toDF(), Seq("id")), cfg)
+      EventLog.enqueue(env, cfg, dir)
+      def pendingIds(): Seq[String] =
+        PendingStore.read(spark, dir).select($"id").as[String].collect().sorted.toSeq
+      val ids = pendingIds()
+      // half the events are refused, so the replay also reschedules
+      CrashRecoverySpec.refused = ids.take(2).toSet
+      CrashRecoverySpec.posted.clear()
+      val t0 = System.currentTimeMillis()
+      val err = intercept[RuntimeException] {
+        Dispatcher.runOnce(spark, dir, new RefusingPoster, now = new java.sql.Timestamp(t0),
+          onStep = s => if (s == crashAt) throw new RuntimeException(s"injected crash at $s"))
+      }
+      assert(err.getMessage.contains(crashAt))
+      assert(CrashRecoverySpec.posted.size == 4, "the killed cycle posted every row")
+      // no PENDING commit happened: every row still PENDING, once each
+      assert(PendingStore.manifest(dir).version == 0L)
+      assert(pendingIds() == ids, crashAt)
+
+      // restart: the replay re-posts all four, reschedules the refused two
+      val replay = Dispatcher.runOnce(spark, dir, new RefusingPoster, now = new java.sql.Timestamp(t0))
+      assert(replay.due == 4 && replay.delivered == 2 && replay.rescheduled == 2)
+      assert(pendingIds() == ids.take(2), s"$crashAt: rescheduled rows once each in PENDING")
+      CrashRecoverySpec.refused = Set.empty
+      val retry = Dispatcher.runOnce(spark, dir, new RefusingPoster,
+        now = new java.sql.Timestamp(t0 + 1000))
+      assert(retry.due == 2 && retry.delivered == 2)
+      assert(!Dispatcher.hasPending(spark, dir) && pendingIds().isEmpty)
+
+      val history = EventLog.terminalHistory(spark, dir).as[EventLog.QueueRow].collect()
+      assert(history.map(_.id).sorted.toSeq == ids, s"$crashAt: one history row per event")
+      assert(history.forall(_.status == "DELIVERED"))
+      // the raw history holds the killed cycle's two landed deliveries again
+      val raw = EventLog.read(spark, dir).filter($"status" === "DELIVERED").count()
+      assert(raw == (if (crashAt == "terminal-landed") 6L else 4L), crashAt)
+    }
   }
 }

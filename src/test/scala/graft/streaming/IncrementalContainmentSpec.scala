@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkTestSession
+import graft.queries.SharedStages.ContainmentMaxDf
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -77,7 +78,7 @@ class IncrementalContainmentSpec extends AnyFunSuite with SparkTestSession {
     // q113's exact algebra (LlmQueries.containmentDedup) over the same docs
     val dsh = Dedup.shingles(corpus).distinct()
     val want = pairs(Dedup.containmentVerify(
-        Dedup.rareShingleCandidates(dsh, maxDf = 8, preDistincted = true),
+        Dedup.rareShingleCandidates(dsh, maxDf = ContainmentMaxDf, preDistincted = true),
         dsh, preDistincted = true)
       .filter(greatest($"cont_a_ppm", $"cont_b_ppm") >= 600000L)
       .select($"doc_a", $"doc_b", $"n_inter", $"size_a", $"size_b",
@@ -114,13 +115,13 @@ class IncrementalContainmentSpec extends AnyFunSuite with SparkTestSession {
 
   test("df cap: a pair whose every shared shingle is corpus-common is not generated") {
     val reg = tmp("graft_cont_df")
-    // 9 carriers push every quote shingle's df past maxDf = 8 …
-    val carriers = (0 until 9).map(i => Doc(100L + i, quote + " " + filler(s"c$i", 20)))
-    IncrementalContainment.processBatch(carriers.toDF(), reg, maxDf = 8)
+    // ContainmentMaxDf + 1 carriers push every quote shingle's df past the cap …
+    val carriers = (0 to ContainmentMaxDf).map(i => Doc(100L + i, quote + " " + filler(s"c$i", 20)))
+    IncrementalContainment.processBatch(carriers.toDF(), reg, maxDf = ContainmentMaxDf)
     // … so a 10th arrival shares only over-cap shingles with history:
     // boilerplate by definition, excluded exactly like the batch operator
     val v = IncrementalContainment.processBatch(
-      Seq(Doc(200L, quote + " " + filler("w", 20))).toDF(), reg, maxDf = 8)
+      Seq(Doc(200L, quote + " " + filler("w", 20))).toDF(), reg, maxDf = ContainmentMaxDf)
     assert(v.collect().isEmpty)
   }
 
