@@ -17,7 +17,10 @@ import org.apache.spark.sql.SparkSession
   * (single maintenance writer; a lakehouse table format — Delta/Iceberg
   * OPTIMIZE — replaces this and closes the remaining not-found window for
   * concurrent readers of THESE datasets; the queue's PENDING set has no
-  * such window — [[PendingStore]] readers resolve a manifest).
+  * such window — [[PendingStore]] readers resolve a manifest). The
+  * registries' erase rewrite (`RegistryIO.eraseDocs`) swaps its leaves
+  * through [[replaceDir]] too; the postings store commits every mutation
+  * through [[VersionedDir]] and uses none of the swaps here.
   */
 object Maintenance {
 
@@ -37,26 +40,6 @@ object Maintenance {
     val aside = target.resolveSibling("." + target.getFileName.toString + ".old")
     if (!Files.exists(target) && Files.exists(aside))
       Files.move(aside, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** The ONE copy of the leaf-erase rewrite idiom (RegistryIO.eraseDocs
-    * and PostingsStore.deleteDocs share it): replace a partition/leaf dir
-    * with `keep`'s rows through the rename-aside swap — one file,
-    * re-sorted when the layout's probe relies on key-sorted row groups —
-    * or remove the leaf outright when nothing survives. */
-  private[graft] def rewriteLeaf(leaf: String, keep: org.apache.spark.sql.DataFrame,
-                                 sortCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.col
-    if (keep.isEmpty) deleteRec(Paths.get(leaf))
-    else {
-      val lp = Paths.get(leaf)
-      val tmp = lp.resolveSibling("." + lp.getFileName.toString + ".swap").toString
-      val out =
-        if (sortCols.isEmpty) keep
-        else keep.repartition(1).sortWithinPartitions(sortCols.map(col): _*)
-      out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-      replaceDir(tmp, leaf)
-    }
   }
 
   /** Rewrite `dir` into `targetFilesPerPartition` files (per partition dir

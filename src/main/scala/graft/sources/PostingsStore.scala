@@ -1,12 +1,15 @@
 package graft.sources
 
 import graft.operators.{Retrieval, TextAnalysis}
-import graft.queue.VersionedDir
+import graft.queue.{Maintenance, VersionedDir}
 import graft.streaming.{IncrementalContainment, RegistryIO}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
 
 /** Persisted inverted index (postings store) — the SPARSE serving twin of
   * [[IvfIndexStore]]: [[graft.operators.Retrieval.bm25TopK]] must
@@ -16,7 +19,7 @@ import scala.jdk.CollectionConverters._
   * no retrieval (its core is CDC/webhook plumbing —
   * `/root/reference/src/cdc_webhook.c:153`).
   *
-  * Layout (the occurrence-registry discipline of
+  * Layout of one snapshot (the occurrence-registry discipline of
   * [[graft.streaming.IncrementalContainment]], carried over terms):
   *
   *   - `ingest_batch=N/tbucket=B/tier=T/` — postings
@@ -61,39 +64,47 @@ import scala.jdk.CollectionConverters._
   *     `_termmeta` is (append, erase, both compactions); a batch with
   *     tails but no block rows (pre-gen-4) falls back to the per-batch
   *     certificate — conservative, never wrong.
-  *   - `_docidx/ingest_batch=N/dbucket=D/` — one `(doc_id, tbuckets)` row
-  *     per ingested document, hive-partitioned by `doc_id mod 256` and
-  *     sorted by `doc_id`, recording which term buckets carry the doc's
-  *     postings. Erasure's locate resolves here in O(touched leaves) —
-  *     dbucket partition filter + pushed `In(doc_id)` — instead of the
-  *     full-store scan the pre-r18 layout paid, and appends consult it as
-  *     the cross-batch duplicate tripwire (contract below).
+  *   - `_docidx/ingest_batch=N/` — ONE file per batch of
+  *     `(doc_id, tbuckets)` rows sorted by `doc_id`, recording which term
+  *     buckets carry each ingested document's postings. Erasure's locate
+  *     resolves here — a pushed `In(doc_id)` pruned by row-group min/max —
+  *     and appends consult it as the cross-batch duplicate tripwire,
+  *     pruned to the new batch's id range (contract below).
   *   - `_stats/ingest_batch=N/` — ONE `(n_docs, total_len)` row per
   *     batch (underscore-prefixed: invisible to postings scans). Serving
   *     sums this KB-scale relation for N and avgdl; a replayed batch
-  *     OVERWRITES its own row, so corpus stats are derived state that
-  *     cannot drift — the
-  *     [[graft.streaming.IncrementalQualityCut]] rollup rule.
+  *     replaces its own row, so corpus stats are derived state that
+  *     cannot drift — the [[graft.streaming.IncrementalQualityCut]]
+  *     rollup rule.
+  *   - `_erased/` — the takedown tombstones (below).
   *   - `_compacted_through` — highest batch id folded by [[compact]];
   *     [[appendBatch]] REFUSES a batch at or below it (loud, not a
-  *     silent double count — see the compaction contract below).
+  *     silent double count).
   *   - `_folded` — the batch ids [[compactLevel]] has folded (a leveled
   *     fold picks the SMALLEST batches, not a prefix, so refusal needs
   *     the explicit set); same replay semantics as the watermark.
-  *   - `_format` — the layout-generation marker: created only on an
-  *     empty root and required before any append to a non-empty one, so
-  *     its presence PROVES every batch carries positions + blockmeta
+  *   - `_format` — the layout-generation marker: created only on a store
+  *     with no batches and required before any append to a non-empty one,
+  *     so its presence PROVES every batch carries positions + blockmeta
   *     ([[phraseTopK]]'s guard is one file-existence check, not a
   *     per-serve null scan).
-  *   - `_log/<N>` + `v<N>-<hex>/` — the [[graft.queue.VersionedDir]]
-  *     layer [[compact]] and [[compactLevel]] commit through: a fold
-  *     builds the ENTIRE next layout into a stage dir and commits it as
-  *     the next snapshot. Every public face resolves ONCE per call and
-  *     stays on that snapshot, so a fold mid-query is whole-old or
-  *     whole-new, never a mix. A root with no manifest is the flat layout
-  *     and resolves to itself. Unlike the IVF store's rebuild snapshots,
-  *     a postings version is a LIVE tree — appends and erasures mutate
-  *     the current version in place; the manifest isolates only the fold.
+  *
+  * Commit model: that layout is ONE [[graft.queue.VersionedDir]] snapshot
+  * `v<N>-<hex>/` under the store root, and every mutation — [[build]],
+  * [[appendBatch]], [[deleteDocs]], [[compact]], [[compactLevel]], one
+  * [[sink]] micro-batch — commits the next snapshot through the same
+  * skeleton ([[commitNext]]): resolve the base, stage the whole next
+  * layout in a private dot-prefixed dir (untouched files carried by HARD
+  * LINK — metadata ops, zero data bytes; new and rewritten leaves written
+  * fresh), commit once. Nothing writes into a committed snapshot, so
+  * every snapshot is immutable: each serving face resolves ONCE per call
+  * and reads only that dir, and a commit racing it is whole-old or
+  * whole-new. Every batch of a snapshot is committed, so no serve needs a
+  * completeness gate, and a crash at any step leaves the old snapshot
+  * plus stage dirs that retention sweeps — there is no repair step.
+  * Retention keeps the live snapshot and its predecessor: a serve still
+  * running two commits later finds its snapshot gone and fails loudly
+  * rather than reading it as empty.
   *
   * EXACT serving ([[bm25TopK]], [[bm25TopKBatch]]) reads both tiers:
   * per-term document frequency is counted from the probed postings
@@ -121,59 +132,32 @@ import scala.jdk.CollectionConverters._
   * fold instead of O(store).
   *
   * Replay/maintenance contract: [[appendBatch]] is idempotent (a
-  * replayed micro-batch overwrites its own `ingest_batch=N` subtree, its
-  * `_termmeta`/`_docidx` partitions, and its `_stats` row). Cross-batch
-  * doc-id uniqueness is an explicit caller contract: a doc_id may appear
-  * in at most ONE batch id (re-emitting an updated document under a new
-  * batch would double-count its postings into df, the corpus stats, and
-  * every bm25 sum). [[appendBatch]] enforces it with a `_docidx`
-  * anti-probe and REFUSES loudly on violation (`checkDupIds = false`
-  * skips the probe for callers with an upstream uniqueness guarantee).
-  * A batch folded by [[compact]] is refused on replay rather than
-  * double-counted — compaction inside a live `foreachBatch` is safe only
-  * AFTER the sink's checkpoint commits, so [[sink]]'s `compactEvery`
-  * documents that the post-crash replay of a just-compacted batch fails
-  * loudly for the operator to resolve (the store itself is intact and
-  * correct). A batch's `_stats` row is its COMMIT RECORD ([[writeBatch]]
-  * writes it last): serving restricts every scan to the committed batch
-  * set, so an in-flight or torn append (postings written, crash before
-  * stats) is INVISIBLE — readers racing a live append serve the
-  * committed prefix consistently, and the stream's replay lands the
-  * batch (healed, never an error mid-append and never a silent
-  * under-count). Only [[compact]] demands set equality: the maintainer
-  * must see a complete store, and refuses a torn one loudly.
+  * replayed batch replaces its own subtrees and `_stats` row).
+  * Cross-batch doc-id uniqueness is an explicit caller contract: a doc_id
+  * may appear in at most ONE batch id (re-emitting an updated document
+  * under a new batch would double-count its postings into df, the corpus
+  * stats, and every bm25 sum). [[appendBatch]] enforces it by probing the
+  * base's `_docidx` with the staged batch's ids before the commit, and
+  * REFUSES loudly on violation (`checkDupIds = false` skips the probe for
+  * callers with an upstream uniqueness guarantee). A batch folded by
+  * [[compact]] or [[compactLevel]] is refused on replay rather than
+  * double-counted. The [[sink]] commits each micro-batch — the append and
+  * whatever fold falls due — as one snapshot stamped with the stream's
+  * batch id, so the replay of a micro-batch whose commit landed before a
+  * crash commits nothing, folded or not.
   *
-  * Crash-window discipline (every window is HEALED or LOUD, never a
-  * silent wrong answer):
-  *
-  *   - the leaf swaps share `replaceDir`'s one non-atomic window; every
-  *     public face heals the root aside on entry (`Maintenance
-  *     .healAside`), and a crashed erase's leaf/stats asides heal in its
-  *     recovery pass; the whole-store fold has NO such window — its
-  *     [[graft.queue.VersionedDir]] commit is one exclusive link;
-  *   - [[deleteDocs]] stages the `_erase_inflight` intent marker (ids +
-  *     touched leaves) BEFORE any mutation, then appends the `_erased/`
-  *     tombstones, then rewrites; serving and compaction REFUSE while the
-  *     marker exists, and the next [[deleteDocs]] call COMPLETES the
-  *     recorded erase first — re-appending the tombstones from the marker
-  *     (duplicates are absorbed by the reader's distinct), healing
-  *     asides, replaying the leaf rewrites, and recomputing the touched
-  *     batches' stats and termmeta rows from their surviving postings
-  *     (exact by construction, so a crash between a batch's leaf rewrites
-  *     and its stats rewrite can never leave drifted corpus stats). With
-  *     the marker written first, every crash window is recoverable from
-  *     the marker alone: there is no instant where tombstones exist
-  *     without a marker or a rewrite ran without tombstones recorded;
-  *   - erased ids land in a `_erased/` TOMBSTONE registry consulted by
-  *     every append: an upstream replay of a pre-erase batch re-registers
-  *     only the survivors, so a checkpoint replay cannot resurrect a
-  *     takedown. This is deliberately stronger than the dedup
-  *     registries' "novel again" erase semantics
-  *     ([[graft.streaming.IncrementalContainment.deleteDocs]]): a
-  *     SERVING store must not let a replay undo a legal takedown, so
-  *     the tombstones filter every future append until the takedown is
-  *     lifted by clearing `_erased/`. The tombstone set is
-  *     takedown-request-sized by contract, broadcast-joined at append.
+  * Takedowns: erased ids land in the `_erased/` TOMBSTONE registry
+  * consulted by every append: an upstream replay of a pre-erase batch
+  * re-registers only the survivors, so a checkpoint replay cannot
+  * resurrect a takedown. This is deliberately stronger than the dedup
+  * registries' "novel again" erase semantics
+  * ([[graft.streaming.IncrementalContainment.deleteDocs]]): a SERVING
+  * store must not let a replay undo a legal takedown, so the tombstones
+  * filter every future append until the takedown is lifted by clearing
+  * `_erased/`. A takedown whose locate finds nothing still commits its
+  * tombstones: the ids may belong to a crashed append whose replay is
+  * still to come. The tombstone set is takedown-request-sized by
+  * contract, broadcast-joined at append.
   */
 object PostingsStore {
 
@@ -211,7 +195,7 @@ object PostingsStore {
       "ingest_batch BIGINT, tbucket INT")
 
   private val docIdxSchema: StructType = StructType.fromDDL(
-    "doc_id BIGINT, tbuckets ARRAY<INT>, ingest_batch BIGINT, dbucket INT")
+    "doc_id BIGINT, tbuckets ARRAY<INT>, ingest_batch BIGINT")
 
   private val blockMetaSchema: StructType = StructType.fromDDL(
     "tok STRING, blk_lo BIGINT, blk_hi BIGINT, blk_max_tf BIGINT, " +
@@ -237,16 +221,9 @@ object PostingsStore {
   /** Driver-side twin of [[bucketCol]] for query terms. */
   private[graft] def bucketOf(term: String): Int = {
     val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(term.getBytes(StandardCharsets.UTF_8))
     d(0) & 0xff
   }
-
-  /** Doc bucket for the `_docidx` sidecar: `doc_id mod 256` — a pure
-    * function of the erase request's ids, so the locate's partition
-    * pruning never drops a row. */
-  private def dbucketCol(docId: Column): Column = pmod(docId, lit(256)).cast("int")
-
-  private[sources] def dbucketOf(id: Long): Int = (((id % 256) + 256) % 256).toInt
 
   /** Static impact of one posting, integer-exact: the BM25 tf-saturation
     * factor at the default (k1 = 1.2, b = 0.75) and a fixed reference
@@ -274,10 +251,10 @@ object PostingsStore {
     * head capacity (`capCol` = the batch's pre-erase tier-0 count, which is
     * min(df, headSize) by construction), so re-tiering at erase needs no
     * headSize parameter and lands EXACTLY the fresh-build cut over the
-    * survivors: min(surviving df, headSize). */
+    * survivors: min(surviving df, headSize). Cut per (batch, term). */
   private def tierColCapped(capCol: Column): Column = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("tok")).orderBy(
+    val w = Window.partitionBy(col("ingest_batch"), col("tok")).orderBy(
       simpactQ.desc, col("tf").desc, col("dl").asc, col("doc_id").asc)
     when(row_number().over(w) <= capCol, lit(0)).otherwise(lit(1))
   }
@@ -301,7 +278,7 @@ object PostingsStore {
       acc => acc.getField("arr"))
   }
 
-  /** One batch's `_termmeta` rows from its TIERED postings: the exact df
+  /** The `_termmeta` rows of TIERED postings, per (batch, term): the exact df
     * plus the tail BOUND CERTIFICATES ([[bm25TopKWand]]'s substrate) —
     * max tf and min dl over the tier-1 postings, null when the term has
     * no tail. The BM25 contribution is monotone UP in tf and DOWN in dl,
@@ -309,12 +286,12 @@ object PostingsStore {
     * (df, N, avgdl) upper-bounds every tail posting's contribution —
     * a valid max-score certificate no matter how appends move avgdl. */
   private def termMetaFor(tiered: DataFrame): DataFrame =
-    tiered.groupBy(col("tok")).agg(
+    tiered.groupBy(col("ingest_batch"), col("tok")).agg(
       count(lit(1)).as("df"),
       max(when(col("tier") === 1, col("tf"))).as("tail_max_tf"),
       min(when(col("tier") === 1, col("dl"))).as("tail_min_dl"))
 
-  /** One batch's `_blockmeta` rows from its tiered postings: per (term,
+  /** The `_blockmeta` rows of tiered postings: per (batch, term,
     * [[TailBlockSize]]-row block of the doc_id-sorted tail), the block's
     * id range and its max-score certificate inputs (max tf, min dl) — the
     * per-block refinement of [[termMetaFor]]'s per-batch tail bound.
@@ -324,12 +301,12 @@ object PostingsStore {
     * of all (zero), and the one the outlier-adversary spec leans on. */
   private def blockMetaFor(tiered: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("tok")).orderBy(col("doc_id"))
+    val w = Window.partitionBy(col("ingest_batch"), col("tok")).orderBy(col("doc_id"))
     tiered.filter(col("tier") === 1)
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
+      .select(col("ingest_batch"), col("tok"), col("doc_id"), col("tf"), col("dl"))
       .withColumn("blk",
         ((row_number().over(w) - 1) / lit(TailBlockSize)).cast("long"))
-      .groupBy(col("tok"), col("blk"))
+      .groupBy(col("ingest_batch"), col("tok"), col("blk"))
       .agg(min(col("doc_id")).as("blk_lo"), max(col("doc_id")).as("blk_hi"),
         max(col("tf")).as("blk_max_tf"), min(col("dl")).as("blk_min_dl"))
       .drop("blk")
@@ -339,8 +316,8 @@ object PostingsStore {
     * positions + `_termmeta` tail certificates + `_blockmeta` block-max
     * sidecar + the `_format` marker itself. The marker is the
     * LAYOUT-TRUST contract: it exists iff EVERY batch in the store was
-    * written by a gen-4 writer ([[writeBatch]] creates it only on a
-    * fresh root and REFUSES to append to a marker-less non-empty store),
+    * written by a gen-4 writer ([[stageBatch]] creates it only on a
+    * store with no batches and REFUSES to append to a marker-less one),
     * so [[phraseTopK]] can trust the positions column without scanning
     * for nulls (the r19 guard paid a full probe pass on every serve) and
     * a pre-positions store is refused loudly instead of serving silently
@@ -349,8 +326,17 @@ object PostingsStore {
   private val FormatMarker = "_format"
 
   private def hasFormatMarker(root: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root.stripSuffix("/"), FormatMarker))
+    Files.exists(Paths.get(root, FormatMarker))
+
+  /** The full-fold watermark: the highest batch id [[compact]] folded. */
+  private val CompactMarker = "_compacted_through"
+
+  private def compactedThrough(root: String): Long = {
+    val m = Paths.get(root, CompactMarker)
+    if (Files.exists(m))
+      new String(Files.readAllBytes(m), StandardCharsets.UTF_8).trim.toLong
+    else -1L
+  }
 
   /** The leveled-compaction fold registry: batch ids folded by
     * [[compactLevel]] (one id per line). Unlike [[compact]]'s single
@@ -359,10 +345,9 @@ object PostingsStore {
   private val FoldedMarker = "_folded"
 
   private def foldedBatches(root: String): Set[Long] = {
-    val m = java.nio.file.Paths.get(root.stripSuffix("/"), FoldedMarker)
-    if (!java.nio.file.Files.exists(m)) Set.empty
-    else new String(java.nio.file.Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val m = Paths.get(root, FoldedMarker)
+    if (!Files.exists(m)) Set.empty
+    else new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
       .split("\n").filter(_.nonEmpty).map(_.toLong).toSet
   }
 
@@ -372,106 +357,106 @@ object PostingsStore {
   def build(docs: DataFrame, dir: String,
             idCol: String = "doc_id", textCol: String = "text",
             headSize: Int = DefaultHeadSize): Unit = {
-    require(VersionedDir.resolve(java.nio.file.Paths.get(dir)).version == 0L &&
-      !RegistryIO.hasData(dir, Some("ingest_batch=")),
+    require(VersionedDir.resolve(Paths.get(dir.stripSuffix("/"))).version == 0L,
       s"postings store at $dir already has data - append or compact instead")
-    writeBatch(docs, dir, -1L, idCol, textCol, headSize)
+    commitNext(dir) { s => stageBatch(docs, s, -1L, idCol, textCol, headSize); true }
   }
 
-  /** One micro-batch append: postings under
-    * `ingest_batch=N/tbucket=B/tier=T` (key-sorted files), the batch's
-    * `_termmeta` and `_docidx` partitions, then its `_stats` row.
-    * Overwrite of the batch's own subtrees makes replay idempotent; the
-    * write ORDER makes a crash window detectable (postings without stats
-    * fails the serve gate loudly; stats are never written first, so an
-    * overcount is impossible). Refuses a batch id at or below the
-    * compaction watermark — a replayed already-folded batch must not
-    * double its documents' postings — and, unless `checkDupIds = false`,
-    * a batch carrying a doc_id already ingested under a DIFFERENT batch
-    * (the cross-batch uniqueness contract in the object scaladoc; the
-    * probe is one doc_id-column scan of the metadata-scale `_docidx`,
-    * never the postings). */
+  /** One micro-batch append, committed as the next snapshot: postings
+    * under `ingest_batch=N/tbucket=B/tier=T` (key-sorted files), the
+    * batch's `_termmeta`, `_blockmeta` and `_docidx` partitions and its
+    * `_stats` row; every other batch is carried by link. A replay
+    * replaces its own batch, so it is idempotent. Refuses a batch id at
+    * or below the compaction watermark or in the leveled-fold registry —
+    * a replayed already-folded batch must not double its documents'
+    * postings — and, unless `checkDupIds = false`, a batch carrying a
+    * doc_id already ingested under a DIFFERENT batch (the cross-batch
+    * uniqueness contract in the object scaladoc). */
   def appendBatch(docs: DataFrame, dir: String, batchId: Long,
                   idCol: String = "doc_id", textCol: String = "text",
                   headSize: Int = DefaultHeadSize,
                   checkDupIds: Boolean = true): Unit = {
     require(batchId >= 0, "appendBatch: batch ids are >= 0 (build uses -1)")
-    val root = VersionedDir.resolveDir(dir)
-    graft.queue.Maintenance.healAside(java.nio.file.Paths.get(root))
-    require(batchId > compactedThrough(root),
+    commitNext(dir)(stageAppend(docs, dir, batchId, idCol, textCol, headSize,
+      checkDupIds))
+  }
+
+  /** [[appendBatch]]'s stage step, which a [[sink]] micro-batch runs too:
+    * the replay gates, the staged batch, then the duplicate tripwire
+    * against the base before anything commits. */
+  private def stageAppend(docs: DataFrame, dir: String, batchId: Long,
+                          idCol: String, textCol: String, headSize: Int,
+                          checkDupIds: Boolean)(s: Stage): Boolean = {
+    require(batchId > compactedThrough(s.src),
       s"postings store at $dir: batch $batchId was already folded by " +
         "compact() - replaying it would double-count its documents; " +
         "resolve the stream checkpoint instead")
-    require(!foldedBatches(root).contains(batchId),
+    require(!foldedBatches(s.src).contains(batchId),
       s"postings store at $dir: batch $batchId was already folded by " +
         "compactLevel() - replaying it would double-count its documents; " +
         "resolve the stream checkpoint instead")
-    if (checkDupIds) {
-      // only COMMITTED registrations can refuse an append: a torn batch's
-      // leftover _docidx rows (postings landed, stats never did) will be
-      // overwritten by that batch's own replay, so they must not block a
-      // different batch from legitimately carrying the doc
-      val clash = readDocIdx(docs.sparkSession, root)
-        .filter(col("ingest_batch").isInCollection(committedBatches(root)) &&
-          col("ingest_batch") =!= batchId)
-        .join(broadcast(docs.select(col(idCol).cast("long").as("doc_id"))
-          .distinct()), Seq("doc_id"))
-        .select(col("doc_id"), col("ingest_batch"))
-        .limit(5).collect()
-      require(clash.isEmpty,
-        s"postings store at $dir: batch $batchId re-ingests doc ids " +
-          s"already registered under other batches (e.g. ${clash.map(r =>
-            s"${r.getLong(0)} in batch ${r.getLong(1)}").mkString(", ")}) - " +
-          "cross-batch doc-id uniqueness is the append contract; erase the " +
-          "old rows first or pass checkDupIds = false if uniqueness is " +
-          "guaranteed upstream. If this batch is the REPLAY of a torn " +
-          "append whose documents were since committed under the listed " +
-          "batches, the store already carries them: drop those documents " +
-          "from the replayed batch, or advance the stream checkpoint past " +
-          s"batch $batchId")
-    }
-    writeBatch(docs, root, batchId, idCol, textCol, headSize)
+    val range = stageBatch(docs, s, batchId, idCol, textCol, headSize)
+    if (checkDupIds) range.foreach(refuseDupIds(docs.sparkSession, s, batchId, _, dir))
+    true
   }
 
-  private val ErasedDir = "/_erased"
+  /** The cross-batch uniqueness tripwire on a STAGED batch: the base's
+    * `_docidx` rows inside the new batch's `[lo, hi]` doc_id range (a
+    * pushed range over the doc_id-sorted files, so row groups outside it
+    * never decompress) joined against the staged batch's ids. A refusal
+    * commits nothing; its stage dir is swept by retention. */
+  private def refuseDupIds(spark: SparkSession, s: Stage, batchId: Long,
+                           range: (Long, Long), dir: String): Unit = {
+    val clash = readDocIdx(spark, s.src)
+      .filter(col("ingest_batch") =!= batchId &&
+        col("doc_id").between(range._1, range._2))
+      .join(broadcast(spark.read.schema("doc_id BIGINT")
+        .parquet(s"${s.dst}/_docidx/ingest_batch=$batchId")), Seq("doc_id"))
+      .select(col("doc_id"), col("ingest_batch"))
+      .limit(5).collect()
+    require(clash.isEmpty,
+      s"postings store at $dir: batch $batchId re-ingests doc ids " +
+        s"already registered under other batches (e.g. ${clash.map(r =>
+          s"${r.getLong(0)} in batch ${r.getLong(1)}").mkString(", ")}) - " +
+        "cross-batch doc-id uniqueness is the append contract; erase the " +
+        "old rows first or pass checkDupIds = false if uniqueness is " +
+        "guaranteed upstream. If this batch is the REPLAY of a crashed " +
+        "append whose documents were since committed under the listed " +
+        "batches, the store already carries them: drop those documents " +
+        "from the replayed batch, or advance the stream checkpoint past " +
+        s"batch $batchId")
+  }
 
-  /** The takedown tombstone registry: one `doc_id` row per erased id
-    * (duplicates from a re-run recovery are harmless — consumers read it
-    * distinct). See the crash-window discipline in the object scaladoc
-    * for why appends consult it. `root` must be resolved. */
-  private[sources] def erasedIds(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root.stripSuffix("/") + ErasedDir,
-      StructType.fromDDL("doc_id BIGINT"), None).distinct()
+  private val ErasedDir = "_erased"
 
-  /** `root` must be resolved. Write order postings → termmeta → docidx →
-    * stats: the serve gate checks set equality, so stats-present implies
-    * the whole batch landed. */
-  private def writeBatch(docs: DataFrame, root: String, batchId: Long,
-                         idCol: String, textCol: String, headSize: Int): Unit = {
+  /** Stage batch `batchId` of `docs` into `s`: every other batch carried
+    * from `s.src`, the tombstoned ids filtered out, then the batch's
+    * postings, sidecars and stats written fresh — plus the `_format`
+    * marker on a store with no batches yet. Returns the batch's doc_id
+    * range, None when it holds no document. */
+  private def stageBatch(docs: DataFrame, s: Stage, batchId: Long,
+                         idCol: String, textCol: String,
+                         headSize: Int): Option[(Long, Long)] = {
     require(headSize >= 1, "postings store: headSize must be positive")
-    // the format-trust contract: the marker is created only on a root with
-    // no committed batches, so its presence proves EVERY batch was written
-    // by a gen-4 (positions + blockmeta) writer — a marker-less store with
-    // data predates the layout and appending would mix formats (phrase
-    // serving over the legacy rows' null positions would be silently
-    // empty; WAND over missing blockmeta degrades). Loud, with the heal
-    // path named.
-    if (!hasFormatMarker(root)) {
-      require(!RegistryIO.hasData(root, Some("ingest_batch=")),
-        s"postings store at $root predates the gen-$FormatGen layout " +
+    s.carry(batchRels(batchId))
+    // the format-trust contract: the marker is created only on a store
+    // with no batches, so its presence proves EVERY batch was written by a
+    // gen-4 (positions + blockmeta) writer — a marker-less store with data
+    // predates the layout and appending would mix formats (phrase serving
+    // over the legacy rows' null positions would be silently empty; WAND
+    // over missing blockmeta degrades). Loud, with the heal path named.
+    if (!hasFormatMarker(s.src)) {
+      require(batchIds(s.src).isEmpty,
+        s"postings store at ${s.src} predates the gen-$FormatGen layout " +
           "(no _format marker beside committed batches) - appending would " +
           "mix on-disk formats; rebuild the store from its corpus on the " +
           "current layout instead")
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(root.stripSuffix("/")))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(root.stripSuffix("/"), FormatMarker),
-        FormatGen.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      writeMarker(s.dst, FormatMarker, FormatGen.toString)
     }
     // the tombstone gate: a replayed pre-erase batch re-registers only
     // the survivors (takedown-request-sized broadcast by contract)
     val live = docs.join(
-      broadcast(erasedIds(docs.sparkSession, root)
+      broadcast(erasedIds(docs.sparkSession, s.src)
         .withColumnRenamed("doc_id", idCol + "__erased")),
       docs(idCol).cast("long") === col(idCol + "__erased"), "left_anti")
     val toks = live.dropDuplicates(idCol)
@@ -487,95 +472,109 @@ object PostingsStore {
       .join(dl, "doc_id")
     val tiered = tf
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-        col("positions"), bucketCol(col("tok")).as("tbucket"),
-        tierCol(headSize).as("tier"))
-      .localCheckpoint(true) // feeds postings, termmeta, docidx, stats once
-    // files sort by (tok, doc_id): tok runs give the In(tok) row-group
-    // pruning, and WITHIN a run doc_id footer stats give the WAND
-    // candidate fetch its In(doc_id) row-group pruning
-    tiered
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tier"), col("tok"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbucket", "tier")
-      .parquet(s"$root/ingest_batch=$batchId")
-    // block-max certificates BEFORE the stats commit record, like every
-    // sidecar: a torn append's blockmeta is invisible with its postings
-    blockMetaFor(tiered)
-      .select(col("tok"), col("blk_lo"), col("blk_hi"), col("blk_max_tf"),
-        col("blk_min_dl"), bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbucket")
-      .parquet(s"$root/_blockmeta/ingest_batch=$batchId")
-    termMetaFor(tiered)
-      .select(col("tok"), col("df"), col("tail_max_tf"), col("tail_min_dl"),
-        bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbucket")
-      .parquet(s"$root/_termmeta/ingest_batch=$batchId")
-    tiered.select(col("doc_id"), col("tbucket"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("tbucket"))).as("tbuckets"))
-      .select(col("doc_id"), col("tbuckets"),
-        dbucketCol(col("doc_id")).as("dbucket"))
-      .repartition(col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col("doc_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("dbucket")
-      .parquet(s"$root/_docidx/ingest_batch=$batchId")
-    tiered.select(col("doc_id"), col("dl")).distinct()
+        col("positions"), lit(batchId).as("ingest_batch"),
+        bucketCol(col("tok")).as("tbucket"), tierCol(headSize).as("tier"))
+      .localCheckpoint(true) // feeds postings, sidecars, docidx, stats once
+    writeTiered(tiered, s.dst)
+    val range = writeDocIdx(tiered.groupBy(col("ingest_batch"), col("doc_id"))
+      .agg(sort_array(collect_set(col("tbucket"))).as("tbuckets")), s.dst)
+    writeStats(tiered.select(col("doc_id"), col("dl")).distinct()
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("total_len"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/_stats/ingest_batch=$batchId")
+      .withColumn("ingest_batch", lit(batchId)), s.dst)
+    range
   }
 
-  /** The postings relation (explicit schema — [[RegistryIO]] rules).
-    * `root` must be resolved. */
+  /** Write tiered postings and their two term-keyed sidecars into the
+    * stage `dst`, beside whatever it carries, each leaf clustered by
+    * (batch, term bucket) and key-sorted: postings by `(tok, doc_id)` —
+    * tok runs give the In(tok) row-group pruning, and WITHIN a run doc_id
+    * footer stats give the WAND candidate fetch its In(doc_id) pruning.
+    * The rows name their `ingest_batch`, so one write serves one batch
+    * (append, fold) or many (an erase's touched batches). */
+  private def writeTiered(tiered: DataFrame, dst: Path): Unit = {
+    def write(rows: DataFrame, sub: String, leaf: Seq[String], sortCols: String*): Unit =
+      rows.repartition(col("ingest_batch"), col("tbucket"))
+        .sortWithinPartitions((Seq("ingest_batch", "tbucket") ++ leaf ++ sortCols).map(col): _*)
+        .write.mode(SaveMode.Append).partitionBy(Seq("ingest_batch", "tbucket") ++ leaf: _*)
+        .parquet(s"$dst$sub")
+    write(tiered, "", Seq("tier"), "tok", "doc_id")
+    write(blockMetaFor(tiered).withColumn("tbucket", bucketCol(col("tok"))),
+      "/_blockmeta", Nil, "tok", "blk_lo")
+    write(termMetaFor(tiered).withColumn("tbucket", bucketCol(col("tok"))),
+      "/_termmeta", Nil, "tok")
+  }
+
+  /** `_docidx` from `(ingest_batch, doc_id, tbuckets)` rows: ONE file per
+    * batch sorted by doc_id, so row-group min/max prune a pushed
+    * `In(doc_id)` or id range. Returns the rows' doc_id range, observed on
+    * the write. */
+  private def writeDocIdx(rows: DataFrame, dst: Path): Option[(Long, Long)] = {
+    val range = Observation()
+    rows.select(col("ingest_batch"), col("doc_id"), col("tbuckets"))
+      .observe(range, min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .repartition(col("ingest_batch"))
+      .sortWithinPartitions(col("ingest_batch"), col("doc_id"))
+      .write.mode(SaveMode.Append).partitionBy("ingest_batch")
+      .parquet(s"$dst/_docidx")
+    val m = range.get
+    Option(m("lo")).map(lo => (lo.asInstanceOf[Long], m("hi").asInstanceOf[Long]))
+  }
+
+  /** `_stats` rows `(ingest_batch, n_docs, total_len)`, one per batch. */
+  private def writeStats(rows: DataFrame, dst: Path): Unit =
+    rows.select(col("ingest_batch"), col("n_docs"), col("total_len"))
+      .coalesce(1).write.mode(SaveMode.Append).partitionBy("ingest_batch")
+      .parquet(s"$dst/_stats")
+  /** One layout dir of the resolved snapshot `root` (`sub` = "" for the
+    * postings) under its declared schema ([[RegistryIO]] rules). A
+    * snapshot that a later commit swept is GONE, and reading it as an
+    * empty store would rank against empty stats without a word — so a
+    * missing `root` throws instead. */
+  private def readLayout(spark: SparkSession, root: String, sub: String,
+                         schema: StructType, prefix: Option[String]): DataFrame = {
+    require(Files.isDirectory(Paths.get(root)),
+      s"postings store snapshot $root is gone (swept by a later commit, " +
+        "or never written) - resolve the store again")
+    RegistryIO.readOrEmpty(spark,
+      if (sub.isEmpty) root else s"${root.stripSuffix("/")}/$sub", schema, prefix)
+  }
+
   private[sources] def readPostings(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root, postingsSchema, Some("ingest_batch="))
+    readLayout(spark, root, "", postingsSchema, Some("ingest_batch="))
 
   private[sources] def readStats(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root.stripSuffix("/") + "/_stats",
-      statsSchema, Some("ingest_batch="))
+    readLayout(spark, root, "_stats", statsSchema, Some("ingest_batch="))
 
   private[sources] def readTermMeta(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root.stripSuffix("/") + "/_termmeta",
-      termMetaSchema, Some("ingest_batch="))
+    readLayout(spark, root, "_termmeta", termMetaSchema, Some("ingest_batch="))
 
   private[sources] def readDocIdx(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root.stripSuffix("/") + "/_docidx",
-      docIdxSchema, Some("ingest_batch="))
+    readLayout(spark, root, "_docidx", docIdxSchema, Some("ingest_batch="))
 
   private[sources] def readBlockMeta(spark: SparkSession, root: String): DataFrame =
-    RegistryIO.readOrEmpty(spark, root.stripSuffix("/") + "/_blockmeta",
-      blockMetaSchema, Some("ingest_batch="))
+    readLayout(spark, root, "_blockmeta", blockMetaSchema, Some("ingest_batch="))
 
-  /** The batches whose `_stats` row landed — the batch COMMIT RECORD
-    * ([[writeBatch]] writes it last): serving restricts every scan to
-    * this set, so an in-flight or torn append is INVISIBLE (the
-    * committed prefix serves consistently; the stream's replay lands the
-    * batch) rather than an error mid-append. `root` must be resolved. */
-  private def committedBatches(root: String): Seq[Long] =
-    batchIds(root.stripSuffix("/") + "/_stats").toSeq.sorted
+  /** The takedown tombstone registry: one `doc_id` row per erased id
+    * (each erase adds one file; readers distinct). Appends consult it —
+    * see the object scaladoc. */
+  private[sources] def erasedIds(spark: SparkSession, root: String): DataFrame =
+    readLayout(spark, root, ErasedDir, StructType.fromDDL("doc_id BIGINT"), None)
+      .distinct()
 
   /** The probe scan, pre-aggregation — package-private so the spec can
-    * pin its PLAN: `ingest_batch` committed-set and `tbucket` literals in
-    * PartitionFilters (≤ |terms| of 256 buckets) and the key set as an
-    * `In(tok, …)` of eq leaves in PushedFilters (row-group tier over the
-    * key-sorted files). Reads BOTH tiers — the exact-serving probe.
-    * `root` must be resolved; `batches` is the serving call's PINNED
-    * committed-batch snapshot (resolved once per call and threaded into
-    * every relation the serve touches — postings, `_termmeta`, `_stats` —
-    * so a batch committing mid-serve is whole-visible or whole-invisible,
-    * never stats-only). */
+    * pin its PLAN: `tbucket` literals in PartitionFilters (≤ |terms| of
+    * 256 buckets) and the key set as an `In(tok, …)` of eq leaves in
+    * PushedFilters (row-group tier over the key-sorted files). Reads BOTH
+    * tiers — the exact-serving probe. `root` is the serve's resolved
+    * snapshot: every relation a serve touches comes from that one
+    * immutable dir, so a commit mid-serve is whole-visible or
+    * whole-invisible. */
   private[sources] def probe(spark: SparkSession, root: String,
-                             terms: Seq[String],
-                             batches: Seq[Long]): DataFrame = {
+                             terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
     readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket").isInCollection(buckets) &&
+      .filter(col("tbucket").isInCollection(buckets) &&
         col("tok").isInCollection(terms))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
   }
@@ -584,14 +583,12 @@ object PostingsStore {
     * `headSize` postings regardless of df. The tier literal lands in
     * PartitionFilters beside the buckets, so a stop-word term's tail is
     * never listed, let alone read (the spec poisons a tail leaf to pin
-    * it). `root` must be resolved, `batches` the pinned committed set. */
+    * it). `root` must be resolved. */
   private[sources] def probeHead(spark: SparkSession, root: String,
-                                 terms: Seq[String],
-                                 batches: Seq[Long]): DataFrame = {
+                                 terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
     readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket").isInCollection(buckets) &&
+      .filter(col("tbucket").isInCollection(buckets) &&
         col("tier") === 0 && col("tok").isInCollection(terms))
       // ingest_batch is a partition column (free to carry): the WAND
       // block-max refinement keys a doc's tail bounds by ITS batch (the
@@ -600,44 +597,26 @@ object PostingsStore {
         col("ingest_batch"))
   }
 
-  /** A serve's pinned snapshot: the resolved root, through the
-    * consistency gate, and its committed-batch set. Every serving face
-    * pins ONCE per call and threads `batches` into every relation it
-    * touches — postings, `_termmeta`, `_blockmeta`, `_stats` — so a batch
-    * committing mid-serve is whole-visible or whole-invisible, never
-    * stats-only (N/avgdl/df inflated against postings the probe
-    * excluded). */
-  private def pin(dir: String): (String, Seq[Long]) = {
-    val root = VersionedDir.resolveDir(dir)
-    checkConsistent(root)
-    (root, committedBatches(root))
-  }
-
-  /** The pinned corpus stats `(n_docs, total_len)`: the KB-scale `_stats`
-    * sum over the serve's committed batches. */
-  private def pinnedStats(spark: SparkSession, root: String,
-                          batches: Seq[Long]): DataFrame =
+  /** The corpus stats `(n_docs, total_len)`: the KB-scale `_stats` sum. */
+  private def pinnedStats(spark: SparkSession, root: String): DataFrame =
     readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_len")).as("total_len"))
 
-  /** The pinned rows of a term-keyed sidecar (`read` = [[readTermMeta]]
-    * or [[readBlockMeta]]) for `terms`: committed batches and the terms'
-    * buckets as partition literals, the terms a pushed `In`. Handed to
-    * `use` inside the In-pushdown scope, so whatever `use` materializes
-    * prunes row groups by term. */
+  /** The rows of a term-keyed sidecar (`read` = [[readTermMeta]] or
+    * [[readBlockMeta]]) for `terms`: the terms' buckets as partition
+    * literals, the terms a pushed `In`. Handed to `use` inside the
+    * In-pushdown scope, so whatever `use` materializes prunes row groups
+    * by term. */
   private def pinnedByTerm[T](read: (SparkSession, String) => DataFrame,
                               spark: SparkSession, root: String,
-                              terms: Seq[String], batches: Seq[Long])
+                              terms: Seq[String])
                              (use: DataFrame => T): T =
     IncrementalContainment.withInPushdown(spark, math.max(terms.size, 10)) {
       use(read(spark, root)
-        .filter(col("ingest_batch").isInCollection(batches) &&
-          col("tbucket").isInCollection(terms.map(bucketOf).distinct) &&
+        .filter(col("tbucket").isInCollection(terms.map(bucketOf).distinct) &&
           col("tok").isInCollection(terms)))
     }
-
   /** Exact per-term df from pinned `_termmeta` rows — never from a
     * truncated or candidate-restricted probe, which would inflate or
     * undercount every idf. */
@@ -668,9 +647,9 @@ object PostingsStore {
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 serve: empty query-term list")
     require(k >= 1, "bm25 serve: k must be positive")
-    val (root, batches) = pin(dir)
+    val root = VersionedDir.resolveDir(dir)
     Retrieval.bm25Rank(
-      servingScored(spark, root, batches, terms, k1, b)
+      servingScored(spark, root, terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -693,9 +672,9 @@ object PostingsStore {
                      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 tiered serve: empty query-term list")
     require(k >= 1, "bm25 tiered serve: k must be positive")
-    val (root, batches) = pin(dir)
+    val root = VersionedDir.resolveDir(dir)
     Retrieval.bm25Rank(
-      prunedScored(spark, root, batches, terms, k1, b)
+      prunedScored(spark, root, terms, k1, b)
         .select(col("doc_id"), col("contrib_q")),
       k)
   }
@@ -712,8 +691,8 @@ object PostingsStore {
     require(k >= 1, "bm25 tiered batch serve: k must be positive")
     val (qt, request) = requestOf(queries, queryIdCol, termCol)
     require(request.nonEmpty, "bm25 tiered batch serve: no query terms")
-    val (root, batches) = pin(dir)
-    rankPerQuery(prunedScored(spark, root, batches, termsOf(request), k1, b),
+    val root = VersionedDir.resolveDir(dir)
+    rankPerQuery(prunedScored(spark, root, termsOf(request), k1, b),
       qt, k, queryIdCol)
   }
 
@@ -821,23 +800,20 @@ object PostingsStore {
     * documents — `tier=1` + the term's bucket in PartitionFilters, the
     * term and `In(doc_id, …)` pushed to the (tok, doc_id)-sorted files so
     * row groups outside the candidates' id range never decompress.
-    * Package-private so the spec can pin the plan. `root` resolved,
-    * `batches` the serve's pinned committed set. */
+    * Package-private so the spec can pin the plan. `root` resolved. */
   private[sources] def probeTail(spark: SparkSession, root: String,
-                                 term: String, docIds: Seq[Long],
-                                 batches: Seq[Long]): DataFrame =
-    probeTailAll(spark, root, term, batches)
+                                 term: String, docIds: Seq[Long]): DataFrame =
+    probeTailAll(spark, root, term)
       .filter(col("doc_id").isInCollection(docIds))
 
   /** One term's WHOLE tail — the WAND fallback for the tail terms of a
     * query whose certificates cannot exclude unseen documents (only that
     * query's terms degrade, never the whole serve). Same partition bounds
     * as [[probeTail]] minus the id restriction. */
-  private def probeTailAll(spark: SparkSession, root: String, term: String,
-                           batches: Seq[Long]): DataFrame =
+  private def probeTailAll(spark: SparkSession, root: String,
+                           term: String): DataFrame =
     readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket") === bucketOf(term) && col("tier") === 1 &&
+      .filter(col("tbucket") === bucketOf(term) && col("tier") === 1 &&
         col("tok") === term)
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
 
@@ -935,12 +911,12 @@ object PostingsStore {
                          maxHeadRows: Long, blockMaxMinRows: Long)
       : (DataFrame, WandDiag) = {
     val terms = termsOf(request)
-    val (root, batches) = pin(dir)
+    val root = VersionedDir.resolveDir(dir)
     // metadata FIRST (KB-scale): the dispatch decision must not cost a
     // head probe when the answer is "no certificates needed at all"
-    val meta = pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+    val meta = pinnedByTerm(readTermMeta, spark, root, terms)(
       _.localCheckpoint(true))
-    val score = Scorer(dfOf(meta), pinnedStats(spark, root, batches), k1, b)
+    val score = Scorer(dfOf(meta), pinnedStats(spark, root), k1, b)
     val tailUB: Map[String, Long] =
       score(meta.filter(col("tail_max_tf").isNotNull)
         .select(col("tok"), col("tail_max_tf").as("tf"),
@@ -948,14 +924,14 @@ object PostingsStore {
         .groupBy(col("tok")).agg(max(col("contrib_q")))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def exactServe(diag: WandDiag): (DataFrame, WandDiag) =
-      (servingScored(spark, root, batches, terms, k1, b), diag)
+      (servingScored(spark, root, terms, k1, b), diag)
     if (tailUB.isEmpty)
       return exactServe(WandDiag(dispatchedExact = true,
         exactFallback = false, headRows = 0L, tailTerms = 0,
         candidateRows = 0L, blockRefined = false))
     val headScored = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
-      score(probeHead(spark, root, terms, batches),
+      score(probeHead(spark, root, terms),
         "tok", "doc_id", "ingest_batch")
         .localCheckpoint(true) // feeds the driver summary AND the rank
     }
@@ -1025,7 +1001,7 @@ object PostingsStore {
       else {
         import spark.implicits._
         val blocks = pinnedByTerm(readBlockMeta, spark, root,
-          tailUB.keys.toSeq.sorted, batches)(_.localCheckpoint(true))
+          tailUB.keys.toSeq.sorted)(_.localCheckpoint(true))
         val present = blocks.select(col("tok"), col("ingest_batch"))
           .distinct().collect()
           .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -1056,12 +1032,12 @@ object PostingsStore {
     // whole-tail fetches carry no In list and ride the same union
     val candTerms = candByTerm.keys.toSeq.sorted
     val fetches =
-      fullTails.toSeq.sorted.map(t => probeTailAll(spark, root, t, batches)) ++
+      fullTails.toSeq.sorted.map(t => probeTailAll(spark, root, t)) ++
         (if (candTerms.isEmpty) Nil
         else Seq(IncrementalContainment.withInPushdown(
           spark, idPushdown(candTerms.map(candByTerm(_).size).max)) {
           candTerms.map { t =>
-            probeTail(spark, root, t, candByTerm(t).toSeq.sorted, batches)
+            probeTail(spark, root, t, candByTerm(t).toSeq.sorted)
           }.reduce(_ unionByName _).localCheckpoint(true)
         }))
     val head = headScored.select(col("tok"), col("doc_id"), col("contrib_q"))
@@ -1079,18 +1055,18 @@ object PostingsStore {
     * share (mirroring [[servingScored]] for the exact pair): the
     * HEAD-TIER probe, exact df from the `_termmeta` sidecar — NEVER from
     * the truncated probe (a head-counted df would inflate idf exactly
-    * when pruning engages) — and the pinned stats. Returns
-    * `(tok, doc_id, contrib_q)` over the [[pin]]ned snapshot. */
+    * when pruning engages) — and the stats. Returns
+    * `(tok, doc_id, contrib_q)` over the resolved snapshot `root`. */
   private def prunedScored(spark: SparkSession, root: String,
-                           batches: Seq[Long], terms: Seq[String],
+                           terms: Seq[String],
                            k1: Double, b: Double): DataFrame = {
     val matched = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
-      probeHead(spark, root, terms, batches).localCheckpoint(true)
+      probeHead(spark, root, terms).localCheckpoint(true)
     }
-    val dfs = pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+    val dfs = pinnedByTerm(readTermMeta, spark, root, terms)(
       m => dfOf(m).localCheckpoint(true))
-    Scorer(dfs, pinnedStats(spark, root, batches), k1, b)(
+    Scorer(dfs, pinnedStats(spark, root), k1, b)(
       matched, "tok", "doc_id")
   }
 
@@ -1100,17 +1076,17 @@ object PostingsStore {
     * feeds the df count and the scorer; parquet's In pushdown must not
     * rewrite the key set to a useless min/max range past the default
     * threshold — the containment-probe rule), per-term df counted from
-    * the matched postings, the pinned stats. Returns
-    * `(tok, doc_id, contrib_q)` over the [[pin]]ned snapshot. */
+    * the matched postings, the stats. Returns
+    * `(tok, doc_id, contrib_q)` over the resolved snapshot `root`. */
   private def servingScored(spark: SparkSession, root: String,
-                            batches: Seq[Long], terms: Seq[String],
+                            terms: Seq[String],
                             k1: Double, b: Double): DataFrame = {
     val matched = IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
-      probe(spark, root, terms, batches).localCheckpoint(true)
+      probe(spark, root, terms).localCheckpoint(true)
     }
     Scorer(matched.groupBy(col("tok")).agg(count(lit(1)).as("df")),
-      pinnedStats(spark, root, batches), k1, b)(matched, "tok", "doc_id")
+      pinnedStats(spark, root), k1, b)(matched, "tok", "doc_id")
   }
 
   /** BATCHED BM25 serving — the [[IvfIndexStore.topKBatch]] shape for the
@@ -1129,8 +1105,8 @@ object PostingsStore {
     require(k >= 1, "bm25 batch serve: k must be positive")
     val (qt, request) = requestOf(queries, queryIdCol, termCol)
     require(request.nonEmpty, "bm25 batch serve: no query terms")
-    val (root, batches) = pin(dir)
-    rankPerQuery(servingScored(spark, root, batches, termsOf(request), k1, b),
+    val root = VersionedDir.resolveDir(dir)
+    rankPerQuery(servingScored(spark, root, termsOf(request), k1, b),
       qt, k, queryIdCol)
   }
 
@@ -1168,9 +1144,9 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase serve: need at least two tokens")
     require(k >= 1, "phrase serve: k must be positive")
     require(slop >= 0, "phrase serve: slop must be >= 0")
-    val (root, batches) = pin(dir)
+    val root = VersionedDir.resolveDir(dir)
     requirePositionalFormat(root, dir)
-    phraseMatches(spark, root, phrase, slop, seedMaxDf, batches)
+    phraseMatches(spark, root, phrase, slop, seedMaxDf)
       .orderBy(col("phrase_tf").desc, col("doc_id"))
       .limit(k)
       .withColumn("rnk", row_number().over(
@@ -1181,8 +1157,8 @@ object PostingsStore {
   /** Layout guard (replaces the r19 per-serve null scan — ADVICE'd as an
     * extra full action over every probe): the `_format` marker exists iff
     * every batch was written by a positional-layout writer
-    * ([[writeBatch]] creates it only on an empty root and refuses to
-    * append to a marker-less store with data), so one file-existence
+    * ([[stageBatch]] creates it only on a store with no batches and
+    * refuses to append to a marker-less store with data), so one file-existence
     * check proves the positions column is real. A pre-positions store
     * would read `positions` as NULL on every row and adjacency over
     * nulls would return silently EMPTY — the one wrong answer worse than
@@ -1197,11 +1173,10 @@ object PostingsStore {
   /** The phrase/proximity MATCH relation `(doc_id, phrase_tf)`,
     * phrase_tf ≥ 1 — [[phraseTopK]]'s body without the rank, factored so
     * [[bm25TopKPhrase]] composes it as a candidate filter. `root`
-    * resolved, format-checked by the caller; `batches` the pinned
-    * committed snapshot. */
+    * resolved, format-checked by the caller. */
   private def phraseMatches(spark: SparkSession, root: String,
-                            phrase: Seq[String], slop: Int, seedMaxDf: Long,
-                            batches: Seq[Long]): DataFrame = {
+                            phrase: Seq[String], slop: Int,
+                            seedMaxDf: Long): DataFrame = {
     val terms = phrase.distinct
     // SEED-TERM candidate pruning (the WAND candidate-fetch trick applied
     // to phrases): every slot must be present in a matching doc, so the
@@ -1215,7 +1190,7 @@ object PostingsStore {
     // (honest and stated; at that seed df the request is no longer
     // driver-bounded).
     val metaDf: Map[String, Long] =
-      pinnedByTerm(readTermMeta, spark, root, terms, batches)(
+      pinnedByTerm(readTermMeta, spark, root, terms)(
         m => dfOf(m).collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     if (terms.exists(t => metaDf.getOrElse(t, 0L) == 0L))
       // a slot term absent from the corpus: no document can match
@@ -1224,7 +1199,7 @@ object PostingsStore {
     val seed = terms.sortBy(t => (metaDf(t), t)).head
     val probed = (if (metaDf(seed) <= seedMaxDf) {
       val seedRows = IncrementalContainment.withInPushdown(spark, 10) {
-        probePositions(spark, root, Seq(seed), batches).localCheckpoint(true)
+        probePositions(spark, root, Seq(seed)).localCheckpoint(true)
       }
       val ids = seedRows.select(col("doc_id")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted // ≤ seed df by contract
@@ -1232,12 +1207,12 @@ object PostingsStore {
       if (others.isEmpty || ids.isEmpty) seedRows
       else IncrementalContainment.withInPushdown(spark, idPushdown(ids.size)) {
         seedRows.unionByName(
-          probePositionsForDocs(spark, root, others, ids, batches))
+          probePositionsForDocs(spark, root, others, ids))
           .localCheckpoint(true)
       }
     } else IncrementalContainment.withInPushdown(
       spark, math.max(terms.size, 10)) {
-      probePositions(spark, root, terms, batches).localCheckpoint(true)
+      probePositions(spark, root, terms).localCheckpoint(true)
     })
     // slot i = the phrase's i-th token's position set per doc; a doc
     // missing any slot term cannot match (inner joins drop it). The
@@ -1288,9 +1263,9 @@ object PostingsStore {
     require(phrase.size >= 2, "phrase-ranked serve: need at least two tokens")
     require(k >= 1, "phrase-ranked serve: k must be positive")
     require(slop >= 0, "phrase-ranked serve: slop must be >= 0")
-    val (root, batches) = pin(dir)
+    val root = VersionedDir.resolveDir(dir)
     requirePositionalFormat(root, dir)
-    val matches = phraseMatches(spark, root, phrase, slop, seedMaxDf, batches)
+    val matches = phraseMatches(spark, root, phrase, slop, seedMaxDf)
       .localCheckpoint(true) // candidates feed the id pull AND the final join
     val scoring = (phrase ++ terms).distinct
     val candIds = matches.select(col("doc_id")).collect()
@@ -1302,13 +1277,13 @@ object PostingsStore {
     // df EXACT from the sidecar — the candidate-restricted probe below
     // must not be the df source (it would undercount every idf)
     val score = Scorer(
-      pinnedByTerm(readTermMeta, spark, root, scoring, batches)(
+      pinnedByTerm(readTermMeta, spark, root, scoring)(
         m => dfOf(m).localCheckpoint(true)),
-      pinnedStats(spark, root, batches), k1, b)
+      pinnedStats(spark, root), k1, b)
     val probed =
       if (candIds.size <= seedMaxDf)
         IncrementalContainment.withInPushdown(spark, idPushdown(candIds.size)) {
-          probe(spark, root, scoring, batches)
+          probe(spark, root, scoring)
             .filter(col("doc_id").isInCollection(candIds))
             .localCheckpoint(true)
         }
@@ -1316,7 +1291,7 @@ object PostingsStore {
         // semi-join (the phrase probe's own fallback rule)
         IncrementalContainment.withInPushdown(
           spark, math.max(scoring.size, 10)) {
-          probe(spark, root, scoring, batches)
+          probe(spark, root, scoring)
             .join(matches.select(col("doc_id")), Seq("doc_id"), "left_semi")
             .localCheckpoint(true)
         }
@@ -1362,680 +1337,361 @@ object PostingsStore {
   private[sources] def probePositionsForDocs(spark: SparkSession,
                                              root: String,
                                              terms: Seq[String],
-                                             docIds: Seq[Long],
-                                             batches: Seq[Long]): DataFrame =
-    probePositions(spark, root, terms, batches)
+                                             docIds: Seq[Long]): DataFrame =
+    probePositions(spark, root, terms)
       .filter(col("doc_id").isInCollection(docIds))
 
   /** The phrase probe: both tiers of the terms' buckets with positions
     * DECODED to absolute offsets — package-private so the spec can pin
     * the plan (bucket partition literals + pushed `In(tok)`). `root`
-    * resolved, `batches` pinned. */
+    * resolved. */
   private[sources] def probePositions(spark: SparkSession, root: String,
-                                      terms: Seq[String],
-                                      batches: Seq[Long]): DataFrame = {
+                                      terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
     readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(batches) &&
-        col("tbucket").isInCollection(buckets) &&
+      .filter(col("tbucket").isInCollection(buckets) &&
         col("tok").isInCollection(terms))
       .select(col("tok"), col("doc_id"),
         decodePositions(col("positions")).as("abs_pos"))
   }
 
-  /** Serve-time consistency gate on a RESOLVED root: heals a crashed
-    * leaf-swap aside first, then refuses (a) a store with an in-flight or
-    * crashed ERASE (the marker names its touched batches — the next
-    * [[deleteDocs]] call recovers), and (b) the impossible inversion — a
-    * batch with a `_stats` commit record but missing postings, termmeta,
-    * or docidx ([[writeBatch]] writes stats LAST, so this can only be
-    * corruption or a manual deletion, never a crash window). A batch the
-    * other way around — postings landed, stats not yet — is an IN-FLIGHT
-    * append: serving restricts itself to [[committedBatches]] and stays
-    * consistent on the committed prefix (healed by the stream's replay,
-    * never an error mid-append and never a silent under-count). */
-  private def checkConsistent(root: String): Unit = {
-    graft.queue.Maintenance.healAside(java.nio.file.Paths.get(root))
-    require(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, EraseMarker)),
-      s"postings store at $root: an erase is in flight or crashed - " +
-        "call deleteDocs to recover before serving")
-    val p = batchIds(root)
-    val tm = batchIds(root.stripSuffix("/") + "/_termmeta")
-    val dx = batchIds(root.stripSuffix("/") + "/_docidx")
-    val s = batchIds(root.stripSuffix("/") + "/_stats")
-    require(s.subsetOf(p) && s.subsetOf(tm) && s.subsetOf(dx),
-      s"postings store at $root: committed batches $s missing postings " +
-        s"($p), termmeta ($tm), or docidx ($dx) subtrees - stats are " +
-        "written last, so this is corruption, not a crash window")
-  }
-
-  /** [[compact]]'s strict gate: the maintainer must see a COMPLETE store
-    * — a torn or in-flight append at fold time violates the
-    * single-maintainer contract and would either lose the batch's tail
-    * (fold misses it, GC deletes it) or double it (replay after the
-    * fold's watermark refuses it). Loud, with the heal path named. */
-  private def checkComplete(root: String): Unit = {
-    checkConsistent(root)
-    val p = batchIds(root)
-    val s = batchIds(root.stripSuffix("/") + "/_stats")
-    require(p == s,
-      s"postings store at $root: torn append - postings batches $p vs " +
-        s"stats batches $s; replay the missing batch (or erase the " +
-        "orphan subtree) before compacting")
-  }
-
-  private def batchIds(dir: String): Set[Long] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(p)) Set.empty
+  /** The batch ids of a layout: one `_stats` row per batch, an empty batch
+    * included. Every batch of a snapshot is committed whole. */
+  private def batchIds(root: String): Set[Long] = {
+    val p = Paths.get(root, "_stats")
+    if (!Files.isDirectory(p)) Set.empty
     else {
-      val s = java.nio.file.Files.list(p)
-      try {
-        var out = Set.empty[Long]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val name = it.next().getFileName.toString
-          if (name.startsWith("ingest_batch="))
-            out += name.stripPrefix("ingest_batch=").toLong
-        }
-        out
-      } finally s.close()
+      val s = Files.list(p)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .collect { case BatchRel(b) => b.toLong }.toSet
+      finally s.close()
     }
   }
 
-  private val CompactMarker = "_compacted_through"
+  /** A batch's subtree in the postings (`ingest_batch=N`) or in a sidecar
+    * (`_stats/ingest_batch=N`), as a path relative to a layout root. */
+  private val BatchRel = """(?:_[a-z]+/)?ingest_batch=(-?\d+)""".r
 
-  private def compactedThrough(root: String): Long = {
-    val m = java.nio.file.Paths.get(root, CompactMarker)
-    if (java.nio.file.Files.exists(m))
-      new String(java.nio.file.Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    else -1L
+  /** Every subtree of batch `b`, relative to a layout root. */
+  private def batchRels(b: Long): Set[String] =
+    (Seq("") ++ Seq("_termmeta", "_blockmeta", "_docidx", "_stats").map(_ + "/"))
+      .map(d => s"${d}ingest_batch=$b").toSet
+
+  /** Write marker `name` into the stage `dst` as a NEW file — never
+    * through a carried link, whose inode a committed snapshot shares. */
+  private def writeMarker(dst: Path, name: String, body: String): Unit =
+    Files.write(dst.resolve(name), body.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE_NEW)
+
+  /** Crash-test seam: called after every step of a commit — `staged`, then
+    * [[VersionedDir.commit]]'s own steps. Scoped to the calling thread. */
+  private[sources] val stepHook = new DynamicVariable[String => Unit](_ => ())
+
+  /** One staging step of a mutation: it reads the layout at `src` (the
+    * base snapshot, or the previous step's stage) and writes the next one
+    * into the private dir `dst`. `linkable` is false only for a store's
+    * first commit, whose version-0 base holds no layout. */
+  private final case class Stage(src: String, dst: Path, linkable: Boolean) {
+    /** Carry `src` into `dst` by hard link, except the subtrees `skip`
+      * names by their path relative to `src`. */
+    def carry(skip: String => Boolean): Unit =
+      if (linkable) linkTree(Paths.get(src), dst, skip)
   }
 
-  /** The flat-layout artifacts that constitute one store version — what
-    * a fold stages into the next version and what GC removes from a root
-    * two generations stale. Never touches the version layer or
-    * caller-owned markers beside the store. */
-  private val StoreArtifacts =
-    Seq("_stats", "_termmeta", "_docidx", "_blockmeta", "_erased",
-      CompactMarker, FormatMarker, FoldedMarker)
+  /** The one mutation skeleton: resolve the base snapshot, run `steps` —
+    * each stages a next layout from the previous step's (the first from
+    * the base) and says whether it staged anything — and commit the last
+    * staged layout ONCE through [[VersionedDir.commit]]. Nothing ever
+    * writes into a committed snapshot. A step that throws leaves only
+    * stage dirs, which retention sweeps. Returns whether a commit ran. */
+  private def commitNext(dir: String, payload: Seq[String] = Nil)
+                        (steps: (Stage => Boolean)*): Boolean = {
+    val base = VersionedDir.resolve(Paths.get(dir.stripSuffix("/")))
+    val staged = steps.foldLeft(Option.empty[Path]) { (prev, step) =>
+      val s = Stage(prev.fold(base.path.toString)(_.toString),
+        VersionedDir.stage(base), prev.isDefined || base.version > 0L)
+      Files.createDirectories(s.dst)
+      if (step(s)) { prev.foreach(Maintenance.deleteRec); Some(s.dst) }
+      else { Maintenance.deleteRec(s.dst); prev }
+    }
+    val onStep = stepHook.value
+    staged.foreach { d =>
+      onStep("staged")
+      VersionedDir.commit(base, d, payload, onStep)
+    }
+    staged.isDefined
+  }
+
+  /** Recreate `src` under `dst` with a HARD LINK per file (a copy where the
+    * filesystem refuses links), skipping the subtrees `skip` names by
+    * their path relative to the top `src`, and every `_SUCCESS` marker —
+    * a writer appending beside carried files writes its own. Zero data
+    * bytes move, and no carried file is ever written: a stage only adds
+    * and removes whole files. */
+  private def linkTree(src: Path, dst: Path, skip: String => Boolean,
+                       rel: String = ""): Unit = {
+    Files.createDirectories(dst)
+    val s = Files.list(src)
+    val kids = try s.iterator().asScala.toList finally s.close()
+    kids.foreach { c =>
+      val name = c.getFileName.toString
+      val r = if (rel.isEmpty) name else s"$rel/$name"
+      if (!skip(r) && name != "_SUCCESS" && name != "._SUCCESS.crc") {
+        if (Files.isDirectory(c)) linkTree(c, dst.resolve(name), skip, r)
+        else try Files.createLink(dst.resolve(name), c)
+        catch {
+          case _: UnsupportedOperationException | _: java.io.IOException =>
+            Files.copy(c, dst.resolve(name))
+        }
+      }
+    }
+  }
 
   /** Fold every batch into one `ingest_batch=-1` layout — re-sorted by
     * key and RE-TIERED globally (the per-batch impact cuts collapse into
     * one corpus-wide cut, so a long-lived store's head tier is the
     * `headSize` best postings per term, not `headSize · batches`) — sum
-    * the stats rows, rebuild `_termmeta`/`_docidx`, and COMMIT the whole
-    * next layout as a [[graft.queue.VersionedDir]] snapshot (readers
-    * resolve once per call and see whole-old or whole-new). The
-    * watermark file rides the staged
-    * root so a later replay of a folded batch is refused loudly by
-    * [[appendBatch]] instead of double-counting. Cost: one store scan —
-    * the offline maintenance pass that bounds serving's per-batch footer
-    * tier. Single-maintainer like every mutating face; a concurrent
-    * compact loses with [[graft.queue.ConcurrentWriterException]]. */
+    * the stats rows, rebuild `_termmeta`/`_blockmeta`/`_docidx`, and
+    * commit the next snapshot. Tombstones and the format marker are
+    * carried; the watermark file records the highest folded id, so a
+    * later replay of a folded batch is refused loudly by [[appendBatch]]
+    * instead of double-counting. Cost: one store scan — the offline
+    * maintenance pass that bounds serving's per-batch footer tier. */
   def compact(spark: SparkSession, dir: String,
-              headSize: Int = DefaultHeadSize): Unit = {
-    val base = dir.stripSuffix("/")
-    val prev = VersionedDir.resolve(java.nio.file.Paths.get(base))
-    val root = prev.path.toString
-    checkComplete(root)
-    val batches = batchIds(root)
+              headSize: Int = DefaultHeadSize): Unit =
+    commitNext(dir)(stageCompact(spark, _, headSize, dir))
+
+  private def stageCompact(spark: SparkSession, s: Stage, headSize: Int,
+                           dir: String): Boolean = {
+    val batches = batchIds(s.src)
     require(batches.nonEmpty, s"postings store at $dir: nothing to compact")
-    val watermark = math.max(batches.max, compactedThrough(root))
-    val tmp = VersionedDir.stage(prev)
-    // the global re-tier changes the tail set, so `_termmeta`'s tail
-    // certificates must recompute from the FOLDED postings (never a sum of
-    // the per-batch sidecars); one materialization feeds both writes
-    val folded = readPostings(spark, root)
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-        col("positions"), col("tbucket"), tierCol(headSize).as("tier"))
-      .localCheckpoint(true)
-    folded
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tier"), col("tok"), col("doc_id"))
-      .write.partitionBy("tbucket", "tier")
-      .parquet(s"$tmp/ingest_batch=-1")
-    termMetaFor(folded)
-      .select(col("tok"), col("df"), col("tail_max_tf"), col("tail_min_dl"),
-        bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"))
-      .write.partitionBy("tbucket")
-      .parquet(s"$tmp/_termmeta/ingest_batch=-1")
-    blockMetaFor(folded)
-      .select(col("tok"), col("blk_lo"), col("blk_hi"), col("blk_max_tf"),
-        col("blk_min_dl"), bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo"))
-      .write.partitionBy("tbucket")
-      .parquet(s"$tmp/_blockmeta/ingest_batch=-1")
-    readDocIdx(spark, root)
-      .select(col("doc_id"), col("tbuckets"), col("dbucket"))
-      .repartition(col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col("doc_id"))
-      .write.partitionBy("dbucket")
-      .parquet(s"$tmp/_docidx/ingest_batch=-1")
-    readStats(spark, root)
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
-      .coalesce(1).write.parquet(s"$tmp/_stats/ingest_batch=-1")
-    // tombstones ride the fold: a takedown must survive compaction, or
-    // the first post-fold append replay could resurrect it
-    val erased = erasedIds(spark, root)
-    if (!erased.isEmpty)
-      erased.coalesce(1).write.parquet(s"$tmp$ErasedDir")
-    java.nio.file.Files.write(tmp.resolve(CompactMarker),
-      watermark.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the format marker rides the fold UNCHANGED: a gen-4 source stays
-    // gen-4 (compact preserves positions + blockmeta); a legacy source
-    // stays marker-less (the fold cannot invent positions it never had)
-    val fm = java.nio.file.Paths.get(root, FormatMarker)
-    if (java.nio.file.Files.exists(fm))
-      java.nio.file.Files.copy(fm, tmp.resolve(FormatMarker))
     // a FULL fold subsumes the leveled-fold registry: every id at or
     // below the watermark is refused by it already
-    commitVersion(prev, tmp)
+    s.carry(rel => BatchRel.matches(rel) || rel == CompactMarker || rel == FoldedMarker)
+    foldInto(spark, s, batches.toSeq.sorted, -1L, headSize)
+    writeMarker(s.dst, CompactMarker,
+      math.max(batches.max, compactedThrough(s.src)).toString)
+    true
   }
-
-  /** The commit [[compact]] and [[compactLevel]] share: publish the staged
-    * layout through [[VersionedDir.commit]], then drop the flat layout
-    * (version 0) once it is two generations stale. */
-  private def commitVersion(prev: VersionedDir.Snapshot,
-                            tmp: java.nio.file.Path): Unit =
-    if (VersionedDir.commit(prev, tmp).version >= 2L) {
-      StoreArtifacts.foreach(a => graft.queue.Maintenance.deleteRec(prev.root.resolve(a)))
-      val s = java.nio.file.Files.list(prev.root)
-      val batches = try s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("ingest_batch=")).toList
-        finally s.close()
-      batches.foreach(graft.queue.Maintenance.deleteRec)
-    }
 
   /** LEVELED (incremental) compaction — the batch-count bound under
     * streaming ingest: every serving cost that is linear in committed
     * batch count (the head read's headSize · batches, the WAND driver
     * summary, the `_termmeta`/`_stats` fan-out, the per-batch footer
-    * tier) degrades as micro-batches accumulate, and the only remedy
-    * before this was [[compact]]'s full O(store) fold. `compactLevel`
-    * instead folds only the SMALLEST committed batches — enough to bring
-    * the count back to `maxBatches` — into one new batch, re-tiered
-    * WITHIN the fold, with its `_stats`/`_termmeta`/`_blockmeta`/
-    * `_docidx` recomputed from the folded postings; every untouched
-    * batch's subtrees enter the next version as HARD LINKS (metadata
-    * ops, zero data bytes — on a distributed store this step is a
-    * manifest of unchanged files, the standard LSM discipline), so the
-    * fold's write cost is proportional to the FOLDED bytes, never the
-    * store. Folding smallest-first is the leveled invariant: batch sizes
-    * grow geometrically across folds, so total write amplification over
-    * an n-batch ingest is O(log n) rewrites per posting while the live
+    * tier) degrades as micro-batches accumulate, and [[compact]]'s full
+    * fold is O(store). `compactLevel` instead folds only the SMALLEST
+    * batches — enough to bring the count back to `maxBatches` — into one
+    * new batch, re-tiered WITHIN the fold, with its sidecars and stats
+    * recomputed from the folded postings; every untouched batch enters
+    * the next snapshot by link like any commit's, so the fold's write
+    * cost is proportional to the FOLDED bytes, never the store. Folding
+    * smallest-first is the leveled invariant: batch sizes grow
+    * geometrically across folds, so total write amplification over an
+    * n-batch ingest is O(log n) rewrites per posting while the live
     * batch count stays ≤ maxBatches.
     *
-    * Commit is [[compact]]'s version commit verbatim (whole-old or
-    * whole-new to every reader; links make it cheap). The folded batch
-    * lands under a fresh NEGATIVE id (below build's -1 — stream ids are
-    * ≥ 0, so no collision ever), and the folded ORIGINAL ids enter the
-    * `_folded` registry: a post-crash replay of a just-folded batch is
+    * The folded batch lands under a fresh NEGATIVE id (below build's -1 —
+    * stream ids are ≥ 0, so no collision ever), and the folded ORIGINAL
+    * ids enter the `_folded` registry: a replay of a folded batch is
     * refused loudly by [[appendBatch]] (the [[compact]] watermark
     * semantics, as a set — a leveled fold picks smallest, not a prefix).
-    * Safe against in-place mutation sharing: appends and erasures only
-    * ever swap whole files/dirs (parquet never modifies in place), so a
-    * linked file can never be changed under a retained older version.
-    *
-    * Returns true iff a fold ran (count > maxBatches); a no-op call is
-    * free. Single-maintainer like every mutating face. */
+    * Returns true iff a fold ran (count > maxBatches); a no-op call
+    * commits nothing. */
   def compactLevel(spark: SparkSession, dir: String, maxBatches: Int = 8,
                    headSize: Int = DefaultHeadSize): Boolean = {
     require(maxBatches >= 2, "compactLevel: maxBatches must be >= 2")
-    val base = dir.stripSuffix("/")
-    val prev = VersionedDir.resolve(java.nio.file.Paths.get(base))
-    val root = prev.path.toString
-    checkComplete(root)
-    val committed = committedBatches(root)
+    commitNext(dir)(stageLevel(spark, _, maxBatches, headSize))
+  }
+
+  private def stageLevel(spark: SparkSession, s: Stage, maxBatches: Int,
+                         headSize: Int): Boolean = {
+    val committed = batchIds(s.src).toSeq.sorted
     if (committed.size <= maxBatches) return false
-    def bytesOf(b: Long): Long =
-      treeBytes(java.nio.file.Paths.get(s"$root/ingest_batch=$b"))
-    val fold = committed.sortBy(b => (bytesOf(b), b))
+    val fold = committed
+      .sortBy(b => (treeBytes(Paths.get(s"${s.src}/ingest_batch=$b")), b))
       .take(committed.size - maxBatches + 1)
-    val keep = committed.filterNot(fold.contains)
-    val foldId = (committed :+ -1L).min - 1L
-    val tmp = VersionedDir.stage(prev)
-    java.nio.file.Files.createDirectories(tmp)
-    // untouched batches: linked, never copied — the O(folded bytes) bound
-    keep.foreach { b =>
-      linkTree(java.nio.file.Paths.get(s"$root/ingest_batch=$b"),
-        tmp.resolve(s"ingest_batch=$b"))
-      Seq("_termmeta", "_docidx", "_blockmeta", "_stats").foreach { a =>
-        val src = java.nio.file.Paths.get(s"$root/$a/ingest_batch=$b")
-        if (java.nio.file.Files.exists(src))
-          linkTree(src, tmp.resolve(a).resolve(s"ingest_batch=$b"))
-      }
+    s.carry {
+      case BatchRel(b) => fold.contains(b.toLong)
+      case rel => rel == FoldedMarker
     }
-    // the fold: re-tier within it (the folded batches' per-batch impact
-    // cuts collapse into one per-fold cut — min(fold df, headSize) head
-    // per term), sidecars recomputed from the folded postings
-    val folded = readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(fold))
-      .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-        col("positions"), col("tbucket"), tierCol(headSize).as("tier"))
-      .localCheckpoint(true)
-    folded
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tier"), col("tok"), col("doc_id"))
-      .write.partitionBy("tbucket", "tier")
-      .parquet(s"$tmp/ingest_batch=$foldId")
-    termMetaFor(folded)
-      .select(col("tok"), col("df"), col("tail_max_tf"), col("tail_min_dl"),
-        bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"))
-      .write.partitionBy("tbucket")
-      .parquet(s"$tmp/_termmeta/ingest_batch=$foldId")
-    blockMetaFor(folded)
-      .select(col("tok"), col("blk_lo"), col("blk_hi"), col("blk_max_tf"),
-        col("blk_min_dl"), bucketCol(col("tok")).as("tbucket"))
-      .repartition(col("tbucket"))
-      .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo"))
-      .write.partitionBy("tbucket")
-      .parquet(s"$tmp/_blockmeta/ingest_batch=$foldId")
-    readDocIdx(spark, root)
-      .filter(col("ingest_batch").isInCollection(fold))
-      .select(col("doc_id"), col("tbuckets"), col("dbucket"))
-      .repartition(col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col("doc_id"))
-      .write.partitionBy("dbucket")
-      .parquet(s"$tmp/_docidx/ingest_batch=$foldId")
-    readStats(spark, root)
-      .filter(col("ingest_batch").isInCollection(fold))
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
-      .coalesce(1).write.parquet(s"$tmp/_stats/ingest_batch=$foldId")
-    // carried artifacts: tombstones, watermark, format, and the fold
-    // registry grown by this fold's victims
-    val erased = erasedIds(spark, root)
-    if (!erased.isEmpty)
-      erased.coalesce(1).write.parquet(s"$tmp$ErasedDir")
-    val ct = compactedThrough(root)
-    if (ct >= 0)
-      java.nio.file.Files.write(tmp.resolve(CompactMarker),
-        ct.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val fm = java.nio.file.Paths.get(root, FormatMarker)
-    if (java.nio.file.Files.exists(fm))
-      java.nio.file.Files.copy(fm, tmp.resolve(FormatMarker))
-    val allFolded = (foldedBatches(root) ++ fold).toSeq.sorted
-    java.nio.file.Files.write(tmp.resolve(FoldedMarker),
-      allFolded.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    commitVersion(prev, tmp)
+    foldInto(spark, s, fold, (committed :+ -1L).min - 1L, headSize)
+    writeMarker(s.dst, FoldedMarker,
+      (foldedBatches(s.src) ++ fold).toSeq.sorted.mkString("\n"))
     true
   }
 
-  /** Recreate `src` under `dst` with HARD LINKS per file (falls back to a
-    * copy where the filesystem refuses links): [[compactLevel]]'s
-    * zero-byte carry of untouched batches into the next version. Safe
-    * because store files are immutable once written — every mutation
-    * swaps whole directories. */
-  private def linkTree(src: java.nio.file.Path,
-                       dst: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(src)) {
-      java.nio.file.Files.createDirectories(dst)
-      val s = java.nio.file.Files.list(src)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          linkTree(c, dst.resolve(c.getFileName.toString))
-        }
-      } finally s.close()
-    } else {
-      java.nio.file.Files.createDirectories(dst.getParent)
-      try java.nio.file.Files.createLink(dst, src)
-      catch {
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-          java.nio.file.Files.copy(src, dst)
-      }
-    }
+  /** Fold batches `fold` of `s.src` into batch `into` of `s.dst`: the
+    * postings re-tiered within the fold (the folded batches' impact cuts
+    * collapse into one cut — min(fold df, headSize) head per term), the
+    * term-keyed sidecars recomputed from the folded postings (the new
+    * tail set moves the certificates — never a sum of the per-batch
+    * sidecars), the docidx rows carried and the stats rows summed. */
+  private def foldInto(spark: SparkSession, s: Stage, fold: Seq[Long],
+                       into: Long, headSize: Int): Unit = {
+    val folded = readPostings(spark, s.src)
+      .filter(col("ingest_batch").isInCollection(fold))
+      .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
+        col("positions"), lit(into).as("ingest_batch"), col("tbucket"),
+        tierCol(headSize).as("tier"))
+      .localCheckpoint(true)
+    writeTiered(folded, s.dst)
+    writeDocIdx(readDocIdx(spark, s.src)
+      .filter(col("ingest_batch").isInCollection(fold))
+      .withColumn("ingest_batch", lit(into)), s.dst)
+    writeStats(readStats(spark, s.src)
+      .filter(col("ingest_batch").isInCollection(fold))
+      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+        coalesce(sum(col("total_len")), lit(0L)).as("total_len"))
+      .withColumn("ingest_batch", lit(into)), s.dst)
   }
 
-  private def treeBytes(p: java.nio.file.Path): Long =
-    if (!java.nio.file.Files.exists(p)) 0L
-    else if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try {
-        var sum = 0L
-        val it = s.iterator()
-        while (it.hasNext) sum += treeBytes(it.next())
-        sum
-      } finally s.close()
-    } else java.nio.file.Files.size(p)
-
-  private val EraseMarker = "_erase_inflight"
+  private def treeBytes(p: Path): Long =
+    if (!Files.exists(p)) 0L
+    else if (Files.isDirectory(p)) {
+      val s = Files.list(p)
+      try s.iterator().asScala.map(treeBytes).sum finally s.close()
+    } else Files.size(p)
 
   /** Takedown/GDPR erasure ([[IvfIndexStore.delete]]'s discipline over
-    * the two-level layout): the erased documents' postings stop existing
-    * — df shrinks (postings AND `_termmeta`), their dl leaves the corpus
-    * stats — so serving after erasure is EXACTLY BM25 over the surviving
-    * corpus (q127's gate). The locate resolves through the `_docidx`
-    * sidecar — dbucket partition filter + pushed `In(doc_id)` over
-    * doc_id-sorted files, O(touched leaves), never a store scan (the
-    * poisoned-partition spec pins it). The erase then stages the
-    * `_erase_inflight` intent marker (ids + touched leaves) BEFORE any
-    * mutation, tombstones the ids in `_erased/` (future appends filter
-    * them — see the object scaladoc), rewrites each touched leaf through
-    * the rename-aside swap keeping the key sort (emptied leaves and
-    * batches removed outright). Tier refill: the rewrite RE-TIERS the
-    * survivors — each term's head refills to its original capacity (its
-    * pre-erase tier-0 count), which is EXACTLY the fresh-build cut over
-    * the survivors, so a head-hitting takedown cannot silently dent
-    * tiered recall (the spec pins the equivalence; q134 hash-gates tiered
-    * serving over an erased, uncompacted store). The refill is free: a
-    * term's per-batch postings all live in one tbucket, so the cut is
-    * leaf-local over rows the rewrite reads anyway. It then RECOMPUTES
-    * each touched batch's `_termmeta`/`_blockmeta` partitions
-    * and stats row from its surviving postings (exact by construction —
-    * no delta bookkeeping to drift), scrubs the ids from `_docidx`, and
-    * drops the marker last. A crash anywhere after the marker leaves it:
-    * serving refuses loudly and the next call here COMPLETES the
-    * recorded erase from the marker — tombstones included — before
-    * starting its own; a crash before the marker mutated nothing (the
-    * call did not return; the caller retries). Ids the committed-batch
-    * locate does NOT find are still TOMBSTONED before the early return:
-    * they may live in a torn append whose stats never committed, and its
-    * replay must not resurrect the takedown. Idempotent: erased ids
-    * match no rows. Returns postings rows removed. */
+    * the two-level layout), committed as the next snapshot: the erased
+    * documents' postings stop existing — df shrinks (postings AND
+    * `_termmeta`), their dl leaves the corpus stats — so serving after
+    * erasure is EXACTLY BM25 over the surviving corpus (q127's gate). The
+    * locate resolves through the `_docidx` sidecar ([[locate]]: a pushed
+    * `In(doc_id)` over doc_id-sorted files, O(touched batches' docidx
+    * row groups), never a store scan). Each touched batch rewrites only
+    * its touched leaves, keeping the key sort, and carries the rest by
+    * link. Tier refill: the rewrite RE-TIERS the survivors — each term's
+    * head refills to its original capacity (its pre-erase tier-0 count),
+    * which is EXACTLY the fresh-build cut over the survivors, so a
+    * head-hitting takedown cannot silently dent tiered recall (the spec
+    * pins the equivalence; q134 hash-gates tiered serving over an erased,
+    * uncompacted store). The refill is free: a term's per-batch postings
+    * all live in one tbucket, so the cut is leaf-local over rows the
+    * rewrite reads anyway. The batch's `_termmeta`/`_blockmeta` leaves
+    * recompute from the survivors, its `_docidx` drops the ids and its
+    * stats row drops their count and length; a batch left with no
+    * document goes whole. The ids join the `_erased/` tombstones — also
+    * when the locate finds nothing, so a takedown filed before its
+    * batch's (crashed, replayed) append commits still sticks. Idempotent:
+    * erased ids match no rows. Returns postings rows removed. */
   def deleteDocs(spark: SparkSession, dir: String, docIds: Seq[Long]): Long = {
     require(docIds.nonEmpty, "postings erase: empty id list")
-    val root = VersionedDir.resolveDir(dir)
-    graft.queue.Maintenance.healAside(java.nio.file.Paths.get(root))
-    recoverCrashedErase(spark, root)
-    checkConsistent(root)
-    // locate through the doc-keyed sidecar: O(touched leaves), not a scan
-    val dbuckets = docIds.map(dbucketOf).distinct
-    // the pushed-In cap applies here too: a takedown batch of thousands
-    // must not stack-overflow the parquet Or chain — the range rewrite
-    // still prunes over the doc_id-sorted docidx files
-    val located = IncrementalContainment.withInPushdown(
-      spark, idPushdown(docIds.size)) {
-      readDocIdx(spark, root)
-        .filter(col("ingest_batch").isInCollection(committedBatches(root)) &&
-          col("dbucket").isInCollection(dbuckets) &&
-          col("doc_id").isInCollection(docIds))
-        .select(col("ingest_batch"), explode(col("tbuckets")).as("tbucket"))
-        .distinct()
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    }
-    if (located.isEmpty) {
-      // tombstone even when the locate (restricted to COMMITTED batches)
-      // finds nothing: the ids may live in a torn append whose stats never
-      // committed — its replay must re-register only the survivors, so a
-      // takedown filed during the crash window still sticks. Duplicates
-      // are absorbed by the reader's distinct; nothing else to mutate.
-      appendTombstones(spark, root, docIds)
-      return 0L
-    }
-    val touchedBatches = located.map(_._1).distinct
-    // removed count from the touched partitions only (partition-pruned)
-    val removed = readPostings(spark, root)
-      .filter(col("ingest_batch").isInCollection(touchedBatches) &&
-        col("doc_id").isInCollection(docIds))
-      .count()
-    // intent marker FIRST: every mutation below is replayable from it,
-    // including the tombstone append — so no crash window can leave a
-    // mutation without a recovery record (r17 ADVICE: the old
-    // tombstones-then-marker order had one)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, EraseMarker),
-      (s"ids=${docIds.mkString(",")}\n" +
-        s"leaves=${located.map(l => s"${l._1}:${l._2}").mkString(",")}\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    appendTombstones(spark, root, docIds)
-    applyErase(spark, root, docIds, located)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root, EraseMarker))
+    var removed = 0L
+    commitNext(dir) { s => removed = stageErase(spark, s, docIds); true }
     removed
   }
 
-  /** Tombstone append, shared by the erase and its crash recovery:
-    * re-run duplicates are absorbed by the reader's distinct. */
-  private def appendTombstones(spark: SparkSession, root: String,
-                               docIds: Seq[Long]): Unit = {
+  /** The erase locate's `_docidx` scan — package-private so the spec can
+    * pin `doc_id` in its PushedFilters. `root` must be resolved. */
+  private[sources] def locate(spark: SparkSession, root: String,
+                              docIds: Seq[Long]): DataFrame =
+    readDocIdx(spark, root).filter(col("doc_id").isInCollection(docIds))
+
+  private def stageErase(spark: SparkSession, s: Stage, docIds: Seq[Long]): Long = {
     import spark.implicits._
+    // the pushed-In cap applies here too: a takedown batch of thousands
+    // must not stack-overflow the parquet Or chain — the range rewrite
+    // still prunes over the doc_id-sorted docidx files
+    val touched = IncrementalContainment.withInPushdown(
+      spark, idPushdown(docIds.size)) {
+      locate(spark, s.src, docIds)
+        .select(col("ingest_batch"), explode(col("tbuckets")).as("tbucket"))
+        .distinct().collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    }
+    val leafRels = touched.map { case (b, tb) => b -> s"ingest_batch=$b/tbucket=$tb" }
+    // every touched batch at once: ONE read of the touched leaves, then
+    // per batch the removed rows, documents and length beside its stats
+    lazy val leaves = spark.read.schema(postingsSchema).option("basePath", s.src)
+      .parquet(leafRels.map(r => s"${s.src}/${r._2}"): _*)
+    val left = if (touched.isEmpty) Map.empty[Long, (Long, Long, Long)]
+    else readStats(spark, s.src)
+      .join(leaves.filter(col("doc_id").isInCollection(docIds))
+        .groupBy(col("ingest_batch"), col("doc_id"))
+        .agg(count(lit(1)).as("rows"), first(col("dl")).as("dl"))
+        .groupBy(col("ingest_batch"))
+        .agg(sum(col("rows")).as("rows"), count(lit(1)).as("docs"),
+          sum(col("dl")).as("len")), "ingest_batch")
+      .select(col("ingest_batch"), col("rows"), col("n_docs") - col("docs"),
+        col("total_len") - col("len"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+    val live = left.collect { case (b, (_, n, _)) if n > 0L => b }.toSeq
+    // an emptied batch goes whole; a live one replaces its touched leaves,
+    // its docidx and its stats row, the rest carried by link
+    s.carry(left.keys.filterNot(live.contains).flatMap(batchRels).toSet ++
+      live.flatMap(b => Seq(s"_docidx/ingest_batch=$b", s"_stats/ingest_batch=$b")) ++
+      leafRels.filter(r => live.contains(r._1))
+        .flatMap(r => Seq(r._2, s"_termmeta/${r._2}", s"_blockmeta/${r._2}")))
+    if (live.nonEmpty) {
+      val kept = leaves.filter(col("ingest_batch").isInCollection(live))
+      // each term's head refills to its original capacity (pre-erase
+      // tier-0 count = min(df, headSize)): EXACTLY the fresh-build cut
+      // over the survivors
+      val headCap = kept.filter(col("tier") === 0)
+        .groupBy(col("ingest_batch"), col("tok")).agg(count(lit(1)).as("head_cap"))
+      writeTiered(kept.filter(!col("doc_id").isInCollection(docIds))
+        .join(headCap, Seq("ingest_batch", "tok"), "left")
+        .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
+          col("positions"), col("ingest_batch"), col("tbucket"),
+          tierColCapped(coalesce(col("head_cap"), lit(0L))).as("tier"))
+        .localCheckpoint(true), // feeds the postings AND both sidecars
+        s.dst)
+      writeDocIdx(readDocIdx(spark, s.src)
+        .filter(col("ingest_batch").isInCollection(live) &&
+          !col("doc_id").isInCollection(docIds)), s.dst)
+      writeStats(live.map(b => (b, left(b)._2, left(b)._3))
+        .toDF("ingest_batch", "n_docs", "total_len"), s.dst)
+    }
     docIds.toDF("doc_id").coalesce(1)
-      .write.mode(SaveMode.Append)
-      .parquet(root.stripSuffix("/") + ErasedDir)
+      .write.mode(SaveMode.Append).parquet(s"${s.dst}/$ErasedDir")
+    left.values.map(_._1).sum
   }
-
-  /** The erase's mutation step, replayable from the intent marker: per
-    * touched batch, ONE read of its touched leaves, one re-tier of the
-    * survivors (a term's every posting in a batch lives in ONE tbucket —
-    * the bucket is a function of the term — so the refill cut is
-    * leaf-local), and one partitioned write each for the postings,
-    * `_termmeta`, `_blockmeta` and `_docidx` leaves, each swapped in
-    * leaf by leaf; then that batch's stats recompute. O(touched leaves)
-    * I/O in a bounded number of Spark jobs per batch, however many leaves
-    * a takedown touches (a document with hundreds of distinct terms
-    * touches most of the 256 buckets, and each Spark job costs ~0.2 s of
-    * scheduling).
-    * Every swap is a rename-aside the recovery pass heals, and a replay
-    * over partly swapped leaves converges: an already-erased leaf
-    * re-tiers to itself. `root` must be resolved. */
-  private def applyErase(spark: SparkSession, root: String, docIds: Seq[Long],
-                         leaves: Seq[(Long, Int)]): Unit = {
-    val base = root.stripSuffix("/")
-    val dbuckets = docIds.map(dbucketOf).distinct.sorted
-    leaves.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (b, ls) =>
-      val batchDir = s"$base/ingest_batch=$b"
-      val tbuckets = ls.map(_._2).distinct.sorted
-      val live = tbuckets.filter(tb =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$batchDir/tbucket=$tb")))
-      if (live.nonEmpty) {
-        val all = spark.read.option("basePath", batchDir)
-          .parquet(live.map(tb => s"$batchDir/tbucket=$tb"): _*)
-          .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-            col("positions"), col("tbucket").cast("int").as("tbucket"),
-            col("tier").cast("int").as("tier"))
-        // each term's head refills to its original capacity (pre-erase
-        // tier-0 count = min(df, headSize)): EXACTLY the fresh-build cut
-        // over the survivors, so a head-hitting takedown cannot silently
-        // under-fill tiered recall
-        val headCap = all.filter(col("tier") === 0)
-          .groupBy(col("tok")).agg(count(lit(1)).as("head_cap"))
-        val survivors = all
-          .filter(!col("doc_id").isInCollection(docIds))
-          .join(headCap, Seq("tok"), "left")
-          .select(col("tok"), col("doc_id"), col("tf"), col("dl"),
-            col("positions"), col("tbucket"),
-            tierColCapped(coalesce(col("head_cap"), lit(0L))).as("tier"))
-          .localCheckpoint(true) // feeds the postings AND both sidecars
-        swapLeaves(batchDir, "tbucket", live,
-          survivors.repartition(col("tbucket"))
-            .sortWithinPartitions(col("tbucket"), col("tier"), col("tok"),
-              col("doc_id")),
-          "tier")
-        // exact df + tail certificates, and the block certificates,
-        // recomputed from the re-tiered survivors (recompute, never delta)
-        swapLeaves(s"$base/_termmeta/ingest_batch=$b", "tbucket", tbuckets,
-          termMetaFor(survivors)
-            .select(col("tok"), col("df"), col("tail_max_tf"),
-              col("tail_min_dl"), bucketCol(col("tok")).as("tbucket"))
-            .repartition(col("tbucket"))
-            .sortWithinPartitions(col("tbucket"), col("tok")))
-        swapLeaves(s"$base/_blockmeta/ingest_batch=$b", "tbucket", tbuckets,
-          blockMetaFor(survivors)
-            .select(col("tok"), col("blk_lo"), col("blk_hi"),
-              col("blk_max_tf"), col("blk_min_dl"),
-              bucketCol(col("tok")).as("tbucket"))
-            .repartition(col("tbucket"))
-            .sortWithinPartitions(col("tbucket"), col("tok"), col("blk_lo")))
-      } else {
-        // replay after every touched postings leaf went: drop their
-        // sidecar leaves too
-        for (s <- Seq("_termmeta", "_blockmeta"); tb <- tbuckets)
-          graft.queue.Maintenance.deleteRec(
-            java.nio.file.Paths.get(s"$base/$s/ingest_batch=$b/tbucket=$tb"))
-      }
-      val dxDir = s"$base/_docidx/ingest_batch=$b"
-      val dxLive = dbuckets.filter(d =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dxDir/dbucket=$d")))
-      if (dxLive.nonEmpty)
-        swapLeaves(dxDir, "dbucket", dxLive,
-          spark.read.option("basePath", dxDir)
-            .parquet(dxLive.map(d => s"$dxDir/dbucket=$d"): _*)
-            .withColumn("dbucket", col("dbucket").cast("int"))
-            .filter(!col("doc_id").isInCollection(docIds))
-            .repartition(col("dbucket"))
-            .sortWithinPartitions(col("dbucket"), col("doc_id")))
-      recomputeBatchStats(spark, root, b)
-    }
-  }
-
-  /** Replace the `key=<k>` leaves under `parent` named by `keys` with
-    * `rows` (partitioned by `key`, then `subKeys`; already clustered and
-    * sorted so each leaf lands as one file per sub-partition): one write
-    * to a hidden sibling, then one rename-aside swap per leaf that
-    * exists. A leaf `rows` leaves empty is removed outright, so partition
-    * discovery never trips on a hollow dir; a missing leaf stays missing. */
-  private def swapLeaves(parent: String, key: String, keys: Seq[Int],
-                         rows: DataFrame, subKeys: String*): Unit = {
-    val p = java.nio.file.Paths.get(parent)
-    val targets = keys.map(k => p.resolve(s"$key=$k"))
-      .filter(java.nio.file.Files.exists(_))
-    if (targets.isEmpty) return
-    val tmp = p.resolveSibling("." + p.getFileName.toString + ".swap")
-    graft.queue.Maintenance.deleteRec(tmp)
-    rows.write.partitionBy(key +: subKeys: _*).parquet(tmp.toString)
-    targets.foreach { t =>
-      val staged = tmp.resolve(t.getFileName)
-      if (java.nio.file.Files.exists(staged))
-        graft.queue.Maintenance.replaceDir(staged.toString, t.toString)
-      else graft.queue.Maintenance.deleteRec(t)
-    }
-    graft.queue.Maintenance.deleteRec(tmp)
-  }
-
-  private def hasChildWithPrefix(p: java.nio.file.Path, prefix: String): Boolean = {
-    if (!java.nio.file.Files.exists(p)) return false
-    val s = java.nio.file.Files.list(p)
-    try {
-      var found = false
-      val it = s.iterator()
-      while (!found && it.hasNext)
-        found = it.next().getFileName.toString.startsWith(prefix)
-      found
-    } finally s.close()
-  }
-
-  /** Rebuild one batch's `_stats` row from its SURVIVING postings — the
-    * erase path's exactness rule (recompute, never delta: replaying it
-    * after a crash converges, and the corpus stats cannot drift). Every
-    * ingested document has at least one posting (the tokenizer emits at
-    * least one token per document), so distinct `(doc_id, dl)` rebuilds
-    * the row exactly. Removes an emptied batch and its stats, termmeta,
-    * and docidx subtrees. */
-  private def recomputeBatchStats(spark: SparkSession, root: String,
-                                  b: Long): Unit = {
-    val base = root.stripSuffix("/")
-    val batchDir = java.nio.file.Paths.get(s"$base/ingest_batch=$b")
-    val statsDir = s"$base/_stats/ingest_batch=$b"
-    // emptied = no tbucket leaves left (the writer's _SUCCESS marker
-    // does not keep a batch alive)
-    if (!hasChildWithPrefix(batchDir, "tbucket=")) {
-      graft.queue.Maintenance.deleteRec(batchDir)
-      graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(statsDir))
-      graft.queue.Maintenance.deleteRec(
-        java.nio.file.Paths.get(s"$base/_termmeta/ingest_batch=$b"))
-      graft.queue.Maintenance.deleteRec(
-        java.nio.file.Paths.get(s"$base/_docidx/ingest_batch=$b"))
-      graft.queue.Maintenance.deleteRec(
-        java.nio.file.Paths.get(s"$base/_blockmeta/ingest_batch=$b"))
-    } else {
-      graft.queue.Maintenance.rewriteLeaf(statsDir,
-        spark.read.parquet(batchDir.toString)
-          .select(col("doc_id"), col("dl")).distinct()
-          .agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).as("total_len"))
-          .coalesce(1),
-        Nil)
-    }
-  }
-
-  /** Complete a crashed [[deleteDocs]] from its intent marker: heal the
-    * touched leaves' and stats rows' swap asides, re-append the recorded
-    * tombstones (idempotent — the reader distincts), replay the recorded
-    * erase (a leaf already scrubbed rewrites to itself), recompute the
-    * touched batches' stats, drop the marker. `root` must be resolved. */
-  private def recoverCrashedErase(spark: SparkSession, root: String): Unit = {
-    val marker = java.nio.file.Paths.get(root, EraseMarker)
-    if (!java.nio.file.Files.exists(marker)) return
-    val lines = new String(java.nio.file.Files.readAllBytes(marker),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n")
-    def field(name: String): String = lines
-      .find(_.startsWith(name + "=")).map(_.drop(name.length + 1)).getOrElse("")
-    val ids = field("ids").split(",").filter(_.nonEmpty).map(_.toLong).toSeq
-    val leaves = field("leaves").split(",").filter(_.nonEmpty).map { s =>
-      val Array(b, tb) = s.split(":"); (b.toLong, tb.toInt)
-    }.toSeq
-    val base = root.stripSuffix("/")
-    leaves.map(_._1).distinct.foreach { b =>
-      // the erase swaps leaves only: their asides sit directly under
-      // the batch dirs
-      healAsidesUnder(java.nio.file.Paths.get(s"$base/ingest_batch=$b"))
-      healAsidesUnder(java.nio.file.Paths.get(s"$base/_termmeta/ingest_batch=$b"))
-      healAsidesUnder(java.nio.file.Paths.get(s"$base/_docidx/ingest_batch=$b"))
-      healAsidesUnder(java.nio.file.Paths.get(s"$base/_blockmeta/ingest_batch=$b"))
-      graft.queue.Maintenance.healAside(
-        java.nio.file.Paths.get(s"$base/_stats/ingest_batch=$b"))
-    }
-    if (ids.nonEmpty) appendTombstones(spark, root, ids)
-    if (ids.nonEmpty && leaves.nonEmpty) applyErase(spark, root, ids, leaves)
-    java.nio.file.Files.delete(marker)
-  }
-
-  /** Heal every `.name.old` swap aside directly under `p`. */
-  private def healAsidesUnder(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    val s = java.nio.file.Files.list(p)
-    try {
-      val names = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = s.iterator()
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith(".") && name.endsWith(".old"))
-          names += name.stripPrefix(".").stripSuffix(".old")
-      }
-      names.foreach(n => graft.queue.Maintenance.healAside(p.resolve(n)))
-    } finally s.close()
-  }
-
-  /** Streaming face: maintain the index from a document stream.
-    * `compactEvery` folds ALL batches on cadence INSIDE the batch step —
-    * see the compaction contract in the object scaladoc for the
-    * post-crash replay semantics (refused loudly, never double-counted).
-    * `levelMaxBatches` is the INCREMENTAL alternative: after each append,
-    * [[compactLevel]] folds just enough smallest batches to hold the
-    * committed count at the cap — O(folded bytes) per fold instead of
+  /** Streaming face: maintain the index from a document stream, one
+    * commit per micro-batch ([[sinkBatch]]). `compactEvery` folds ALL
+    * batches on cadence; `levelMaxBatches` is the INCREMENTAL alternative
+    * — [[compactLevel]] folds just enough smallest batches to hold the
+    * batch count at the cap, O(folded bytes) per fold instead of
     * O(store), which is what keeps every batch-count-linear serving bound
-    * flat under an unbounded stream. Same replay semantics (a replayed
-    * folded batch is refused loudly via the `_folded` registry). */
+    * flat under an unbounded stream. */
   def sink(docStream: DataFrame, dir: String,
            idCol: String = "doc_id", textCol: String = "text",
            compactEvery: Int = 0, levelMaxBatches: Int = 0,
            headSize: Int = DefaultHeadSize): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docStream.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, dir, batchId, idCol, textCol, headSize)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compact(batch.sparkSession, dir, headSize)
-        if (levelMaxBatches > 0)
-          compactLevel(batch.sparkSession, dir, levelMaxBatches, headSize)
-        ()
+        sinkBatch(batch, dir, batchId, idCol, textCol, compactEvery,
+          levelMaxBatches, headSize)
     }
 
+  /** One [[sink]] micro-batch: the append and whatever fold falls due
+    * stage as ONE snapshot — the fold reads the append's stage — stamped
+    * `sink_batch=<id>` in its manifest entry. The replay of a micro-batch
+    * whose commit landed before a crash finds its stamp on the live
+    * snapshot and commits nothing: its documents are in, folded or not. */
+  private[sources] def sinkBatch(batch: DataFrame, dir: String, batchId: Long,
+                                 idCol: String, textCol: String,
+                                 compactEvery: Int, levelMaxBatches: Int,
+                                 headSize: Int): Unit = {
+    val stamp = s"sink_batch=$batchId"
+    val spark = batch.sparkSession
+    if (!VersionedDir.resolve(Paths.get(dir.stripSuffix("/"))).payload.contains(stamp))
+      commitNext(dir, Seq(stamp))(
+        stageAppend(batch, dir, batchId, idCol, textCol, headSize,
+          checkDupIds = true),
+        s =>
+          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+            stageCompact(spark, s, headSize, dir)
+          else levelMaxBatches > 0 &&
+            stageLevel(spark, s, levelMaxBatches, headSize))
+  }
   // Battery-entry layouts (the IvfIndexStore.layoutFor discipline:
   // built once per (session, sfDir) per /tmp lifetime, marker-gated so a
   // warm /tmp re-run replays the ingest instead of duplicating it).
-  // Path carries the layout-format generation ("postings4" = the r20
-  // layout: positions + _blockmeta block-max certificates + _format
-  // marker) so a warm /tmp from an earlier round can never serve a stale
-  // format to a newer reader.
+  // Path carries the layout-format generation ("postings5" = positions +
+  // _blockmeta block-max certificates + _format marker, every mutation a
+  // snapshot commit, one _docidx file per batch) so a warm /tmp written
+  // by an older layout can never serve a stale format to a newer reader.
 
   private val layoutMemo =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
@@ -2046,21 +1702,21 @@ object PostingsStore {
     // at a different head must rebuild, not serve
     val keyStr = s"$sfDir|$variant|h$DefaultHeadSize"
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(keyStr.getBytes(StandardCharsets.UTF_8))
       .take(4).map("%02x".format(_)).mkString
-    val dir = "/tmp/graft-postings4/" + digest + "_" + variant + "_" +
+    val dir = "/tmp/graft-postings5/" + digest + "_" + variant + "_" +
       sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
     val key = (spark, keyStr)
     if (!layoutMemo.contains(key)) {
-      val marker = java.nio.file.Paths.get(dir, "_built")
-      if (!java.nio.file.Files.exists(marker)) {
+      val marker = Paths.get(dir, "_built")
+      if (!Files.exists(marker)) {
         // a dir without its marker is a seed that died mid-way — the
         // erased variant's compact watermark would refuse a re-seed's
         // appends, so start over instead of resuming into a poisoned
         // layout
-        graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(dir))
+        Maintenance.deleteRec(Paths.get(dir))
         seed(dir)
-        java.nio.file.Files.createFile(marker)
+        Files.createFile(marker)
       }
       layoutMemo.add(key)
     }

@@ -101,8 +101,18 @@ private[graft] object RegistryIO {
       val leaf = s"${dir.stripSuffix("/")}/$partitionCol=$p"
       val rows = spark.read.parquet(leaf)
       removed += rows.filter(col(idCol).isInCollection(docIds)).count()
-      graft.queue.Maintenance.rewriteLeaf(leaf,
-        rows.filter(!col(idCol).isInCollection(docIds)), sortCols)
+      val keep = rows.filter(!col(idCol).isInCollection(docIds))
+      if (keep.isEmpty) graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(leaf))
+      else {
+        // one file, re-sorted when the probe relies on key-sorted row
+        // groups, written to a dot-prefixed sibling and swapped in
+        val lp = java.nio.file.Paths.get(leaf)
+        val tmp = lp.resolveSibling("." + lp.getFileName.toString + ".swap").toString
+        (if (sortCols.isEmpty) keep
+        else keep.repartition(1).sortWithinPartitions(sortCols.map(col): _*))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+        graft.queue.Maintenance.replaceDir(tmp, leaf)
+      }
     }
     removed
   }

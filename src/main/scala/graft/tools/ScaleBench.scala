@@ -822,7 +822,7 @@ object ScaleBench {
           val kids = f.listFiles
           if (kids == null) 0 else kids.map(countFiles).sum
         } else if (f.getName.endsWith(".parquet")) 1 else 0
-      val batchDirs = new java.io.File(dir).listFiles
+      val batchDirs = new java.io.File(graft.queue.VersionedDir.resolveDir(dir)).listFiles
         .filter(_.getName.startsWith("ingest_batch="))
       val totalFiles = batchDirs.map(countFiles).sum
       val probedBuckets =
@@ -1833,16 +1833,17 @@ object ScaleBench {
     sb ++= "fixed while the store grows 10x — the serve column is the\n"
     sb ++= "flat-probe claim, the from-corpus column the contrast that\n"
     sb ++= "re-tokenizes the corpus per query. Erasure's locate resolves\n"
-    sb ++= "through the _docidx sidecar (dbucket partition filter + pushed\n"
-    sb ++= "In(doc_id) over doc_id-sorted files — O(touched leaves), the\n"
-    sb ++= "poisoned-partition spec pins it). The rewrite reads only the\n"
-    sb ++= "touched leaves and runs a bounded number of jobs per touched\n"
-    sb ++= "batch: one partitioned write each for the postings, _termmeta,\n"
-    sb ++= "_blockmeta and _docidx leaves, swapped in leaf by leaf — so the\n"
-    sb ++= "erase wall tracks the touched leaves' bytes, not their count.\n"
-    sb ++= "compact folds the batch tier in one offline pass\n"
-    sb ++= "behind the version commit (readers whole-old or whole-new,\n"
-    sb ++= "hammer-spec pinned).\n"
+    sb ++= "through the _docidx sidecar (one doc_id-sorted file per batch;\n"
+    sb ++= "the pushed In(doc_id) prunes row groups by their min/max, and\n"
+    sb ++= "PostingsStoreSpec pins it in the scan's PushedFilters). The\n"
+    sb ++= "rewrite reads only the touched leaves and runs a bounded number\n"
+    sb ++= "of jobs per touched batch: one partitioned write each for the\n"
+    sb ++= "postings, _termmeta and _blockmeta leaves, one _docidx file, one\n"
+    sb ++= "stats row — staged beside hard links to every untouched file and\n"
+    sb ++= "committed as one snapshot, so the erase wall tracks the touched\n"
+    sb ++= "leaves' bytes, not their count. compact folds the batch tier in\n"
+    sb ++= "one offline pass; every mutation is a version commit (readers\n"
+    sb ++= "whole-old or whole-new, hammer-spec pinned).\n"
     sb ++= "\n| tiered BM25 serve ('dup'+'the', k=10, unsuffixed copies) | df('the') | exact serve | tiered serve | WAND serve (exact) | tiered recall@10 | head bytes ('the' bucket) | tail bytes (tiered never reads) | WAND cand rows (block-max) | WAND cand rows (per-batch bound) |\n|---|---|---|---|---|---|---|---|---|---|\n"
     tieredRows.foreach { case (k, dfThe, es, ps, ws, rec, hb, tb, cb, cp) =>
       sb ++= f"| ${k}x documents | $dfThe | $es%.2f s | $ps%.2f s | $ws%.2f s | ${rec * 100}%.0f%% | ${hb / 1024} KiB | ${tb / 1024} KiB | $cb | $cp |\n"

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot see: that serving actually PRUNES (term-bucket partition
   * filter + pushed In(tok) over key-sorted files), that multi-batch
   * append, replay, erasure, and compaction all preserve exact equality
-  * with the from-corpus scorer, and that a torn append fails loudly
-  * instead of serving an under-counted corpus. */
+  * with the from-corpus scorer, and that a mutation that crashes at any
+  * step of its commit leaves the whole old or the whole new store. */
 class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
@@ -35,10 +35,43 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     Retrieval.bm25TopK(d, ts, k)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
 
+  /** The bulk-built store's resolved snapshot: serving faces resolve it
+    * to itself, and the package-private readers and probes take it as is
+    * (nothing mutates it). */
   private lazy val bulk = {
     val d = tmp("graft_postings_bulk")
     PostingsStore.build(docs, d)
-    d
+    VersionedDir.resolveDir(d)
+  }
+
+  private final class Crash(step: String) extends RuntimeException(s"crash after $step")
+
+  /** Run `op` with a simulated crash right after step number `at` (0-based)
+    * of its commit — `staged`, then VersionedDir's steps — or with no
+    * crash when `at` is None. Returns the steps the commit reported. */
+  private def stepsOf(at: Option[Int])(op: => Any): Seq[String] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val hook: String => Unit = { st =>
+      seen += st
+      if (at.contains(seen.size - 1)) throw new Crash(st)
+    }
+    try PostingsStore.stepHook.withValue(hook)(op)
+    catch { case _: Crash => () }
+    seen.toSeq
+  }
+
+  /** Copy a store (every snapshot, its log) to a fresh path. */
+  private def copyStore(from: String): String = {
+    val to = tmp("graft_postings_copy")
+    val src = java.nio.file.Paths.get(from)
+    java.nio.file.Files.walk(src).iterator()
+      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
+      .forEachRemaining { p =>
+        val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(p, dst)
+      }
+    to
   }
 
   test("driver-side term bucket equals the layout's md5 bucket column") {
@@ -69,32 +102,29 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(serveRows(d) == before)
   }
 
-  test("a torn append (postings without stats) is invisible to serving, " +
-    "refused loudly by compact, and healed by the replay") {
+  test("an append that crashes after publishing its snapshot, before the " +
+    "commit point, is invisible to serving; compact folds the committed " +
+    "store; the replay lands the batch") {
     val d = tmp("graft_postings_torn")
     val base = docs.filter($"doc_id" < 30)
     PostingsStore.build(base, d)
     val committed = serveRows(d)
-    // simulate the crash window: batch 5's postings land, stats never do
+    // batch 5's whole snapshot sits in the store root, its log entry never
+    // linked
     val tail = docs.filter($"doc_id" >= 30 && $"doc_id" < 40)
-    PostingsStore.appendBatch(tail, d, 5L)
-    graft.queue.Maintenance.deleteRec(
-      java.nio.file.Paths.get(d, "_stats", "ingest_batch=5"))
-    // the stats row is the batch's COMMIT RECORD: the uncommitted batch is
-    // invisible — serving stays exactly the committed prefix, never an
-    // error and never a half-counted corpus
+    val steps = stepsOf(Some(1))(PostingsStore.appendBatch(tail, d, 5L))
+    assert(steps == Seq("staged", "published"), steps)
     assert(serveRows(d) == committed)
-    // the maintainer's gate stays strict: a fold must not lose the tail
-    val e = intercept[IllegalArgumentException](PostingsStore.compact(spark, d))
-    assert(e.getMessage.contains("torn append"), e.getMessage)
-    // the stream's replay of batch 5 heals: now it serves
+    PostingsStore.compact(spark, d)
+    assert(serveRows(d) == committed)
+    // the stream's replay of batch 5 lands it beside the fold
     PostingsStore.appendBatch(tail, d, 5L)
     assert(serveRows(d) == corpusRows(docs.filter($"doc_id" < 40)))
   }
 
   test("the probe prunes: tbucket partition literals + pushed In(tok) eq leaves") {
     graft.streaming.IncrementalContainment.withInPushdown(spark, 2048) {
-      val plan = PostingsStore.probe(spark, bulk, terms, Seq(-1L))
+      val plan = PostingsStore.probe(spark, bulk, terms)
         .queryExecution.executedPlan.toString
       val pfStart = plan.indexOf("PartitionFilters: [")
       assert(pfStart >= 0, plan)
@@ -145,9 +175,10 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.appendBatch(docs.filter($"doc_id" >= 5 && $"doc_id" < 10), d, 1L)
     PostingsStore.deleteDocs(spark, d,
       docs.filter($"doc_id" < 5).select($"doc_id".cast("long")).as[Long].collect().toSeq)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d, "ingest_batch=0")))
+    val root = VersionedDir.resolveDir(d)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "ingest_batch=0")))
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(d, "_stats", "ingest_batch=0")))
+      java.nio.file.Paths.get(root, "_stats", "ingest_batch=0")))
     assert(serveRows(d) == corpusRows(docs.filter($"doc_id" >= 5 && $"doc_id" < 10)))
   }
 
@@ -156,13 +187,14 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     (0 to 2).foreach(b =>
       PostingsStore.appendBatch(docs.filter($"doc_id" % 3 === b), d, b.toLong))
     val before = serveRows(d)
+    val v = version(d)
     PostingsStore.compact(spark, d)
     assert(serveRows(d) == before)
-    // the fold committed through the version manifest: readers resolve to
-    // v1, which holds exactly one folded batch dir (plus the sidecars and
-    // watermark); the flat pre-fold tree is retained one generation for
-    // in-flight readers
-    assert(version(d) == 1L)
+    // the fold is ONE commit: readers resolve to the next snapshot, which
+    // holds exactly one folded batch dir (plus the sidecars and watermark);
+    // the pre-fold snapshot is retained one generation for in-flight
+    // readers
+    assert(version(d) == v + 1)
     val batchDirs = java.nio.file.Files.list(
         java.nio.file.Paths.get(VersionedDir.resolveDir(d)))
       .filter(p => p.getFileName.toString.startsWith("ingest_batch="))
@@ -269,42 +301,6 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(serveRows(d) == corpusRows(docs))
   }
 
-  test("a crashed root swap (aside present, root missing) heals on the next call") {
-    val d = tmp("graft_postings_heal")
-    PostingsStore.build(docs.limit(40), d)
-    val before = serveRows(d)
-    // simulate replaceDir's between-renames window
-    val root = java.nio.file.Paths.get(d)
-    val aside = root.resolveSibling("." + root.getFileName.toString + ".old")
-    java.nio.file.Files.move(root, aside)
-    assert(serveRows(d) == before)
-  }
-
-  test("an in-flight erase marker blocks serving loudly; deleteDocs completes it") {
-    val d = tmp("graft_postings_recover")
-    PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
-    PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L)
-    // simulate a crash right after the marker write: ids recorded, no
-    // leaf rewritten yet
-    val leaves = spark.read.parquet(d)
-      .filter($"doc_id" === 3L)
-      .select($"ingest_batch".cast("long"), $"tbucket".cast("int"))
-      .distinct().collect().map(r => s"${r.getLong(0)}:${r.getInt(1)}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(d, "_erase_inflight"),
-      s"ids=3\nleaves=${leaves.mkString(",")}\n".getBytes("UTF-8"))
-    val e = intercept[IllegalArgumentException](serveRows(d))
-    assert(e.getMessage.contains("erase is in flight"), e.getMessage)
-    // the next deleteDocs call completes the recorded erase, then its own
-    PostingsStore.deleteDocs(spark, d, Seq(15L))
-    assert(serveRows(d) == corpusRows(
-      docs.filter($"doc_id" < 20 && $"doc_id" =!= 3L && $"doc_id" =!= 15L)))
-    // recovery re-derived the TOMBSTONES from the marker (the r18
-    // marker-first ordering): a pre-erase replay cannot resurrect id 3
-    // even though the simulated crash died before the tombstone append
-    PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
-    assert(!serveRows(d).map(_._2).contains(3L))
-  }
-
   test("a replayed pre-erase batch cannot resurrect a takedown") {
     val d = tmp("graft_postings_tombstone")
     PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
@@ -386,7 +382,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("tiered serve plan: tier=0 partition literal beside the term buckets") {
     graft.streaming.IncrementalContainment.withInPushdown(spark, 2048) {
-      val plan = PostingsStore.probeHead(spark, bulk, Seq("dup", "the"), Seq(-1L))
+      val plan = PostingsStore.probeHead(spark, bulk, Seq("dup", "the"))
         .queryExecution.executedPlan.toString
       val pfStart = plan.indexOf("PartitionFilters: [")
       assert(pfStart >= 0, plan)
@@ -470,11 +466,11 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     val d = tmp("graft_postings_locate")
     PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
     PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L)
-    // poison every postings file of batch 1 AND its docidx partitions
-    // outside the erased ids' dbuckets: the pre-r18 locate (one full store
-    // scan) would die here; the doc-keyed locate must not open any of it
+    // poison every postings file of batch 1: the pre-r18 locate (one full
+    // store scan) would die here; the doc-keyed locate must not open any
+    // of it, and the erase carries the batch by link without reading it
     val poisonedFiles = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(d, "ingest_batch=1"))
+        java.nio.file.Paths.get(VersionedDir.resolveDir(d), "ingest_batch=1"))
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
     var n = 0
@@ -483,40 +479,70 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(n > 0)
     val removed = PostingsStore.deleteDocs(spark, d, Seq(3L))
     assert(removed > 0)
-    // and the docidx partition pruning: poison a dbucket the ids don't touch
-    java.nio.file.Files.walk(java.nio.file.Paths.get(d, "_docidx", "ingest_batch=0"))
-      .filter(p => p.toString.contains("dbucket=7") &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-      .forEachRemaining(f => java.nio.file.Files.write(f, Array.fill[Byte](8)(0x22)))
+    // one doc_id-sorted docidx file per batch: the locate prunes row groups
+    // by their min/max only if the id filter is pushed into the scan
+    val plan = PostingsStore.locate(spark, VersionedDir.resolveDir(d), Seq(4L, 5L))
+      .queryExecution.executedPlan.toString
+    val pushed = plan.substring(plan.indexOf("PushedFilters: ["))
+    assert(pushed.substring(0, pushed.indexOf("]")).contains("doc_id"), plan)
     assert(PostingsStore.deleteDocs(spark, d, Seq(4L)) > 0)
+  }
+
+  /** Serve `d` in a loop on a second thread while `mutations` commit one
+    * by one; every serve must equal one of `states`. After each commit the
+    * writer waits for a serve that STARTED after it to finish, so no serve
+    * outlives two commits (retention keeps a snapshot one commit only)
+    * while every commit still races a live serve. Returns the failures. */
+  private def hammer(d: String, states: Set[Seq[(Int, Long, Long, Long)]],
+                     mutations: Seq[() => Any]): Seq[String] = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val commits = new java.util.concurrent.atomic.AtomicLong(0L)
+    val served = new java.util.concurrent.atomic.AtomicLong(-1L)
+    @volatile var stop = false
+    val reader = new Thread(() => {
+      while (!stop) {
+        val startedAfter = commits.get()
+        try {
+          val got = serveRows(d)
+          if (!states.contains(got)) failures.add(s"torn read: $got")
+        } catch { case e: Throwable => failures.add(e.toString) }
+        served.set(startedAfter)
+      }
+    })
+    reader.start()
+    try mutations.foreach { m =>
+      m()
+      val c = commits.incrementAndGet()
+      while (served.get() < c && failures.isEmpty) Thread.sleep(20)
+    } finally { stop = true; reader.join(60000) }
+    failures.toArray.map(_.toString).toSeq
   }
 
   test("reader hammer across a LIVE compact: every serve is whole-old or " +
     "whole-new, never torn") {
+    // the live mutations are appends, an erase, compactLevel and compact:
+    // every serve must return one committed state's rows
     val d = tmp("graft_postings_hammer")
     (0 to 2).foreach(b =>
-      PostingsStore.appendBatch(docs.filter($"doc_id" % 3 === b), d, b.toLong))
-    val expected = serveRows(d)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    @volatile var stop = false
-    val reader = new Thread(() => {
-      while (!stop) {
-        try {
-          val got = serveRows(d)
-          if (got != expected) failures.add(s"torn read: $got")
-        } catch { case e: Throwable => failures.add(e.toString) }
-      }
-    })
-    reader.start()
-    try {
-      PostingsStore.compact(spark, d)   // flat -> v1
-      PostingsStore.appendBatch(docs.limit(0), d, 3L) // lands in v1
-      PostingsStore.compact(spark, d)   // v1 -> v2 (GCs the flat tree)
-    } finally { stop = true; reader.join(30000) }
-    assert(failures.isEmpty, failures.toArray.mkString("\n"))
-    assert(serveRows(d) == expected)
-    assert(version(d) == 2L)
+      PostingsStore.appendBatch(docs.filter($"doc_id" % 6 === b), d, b.toLong))
+    val v = version(d)
+    val erased = docs.filter($"doc_id" % 97 === 3)
+      .select($"doc_id".cast("long")).as[Long].collect().toSeq
+    val states = Seq(
+      docs.filter($"doc_id" % 6 < 3), docs.filter($"doc_id" % 6 < 4),
+      docs.filter($"doc_id" % 6 < 5),
+      docs.filter($"doc_id" % 6 < 5 && $"doc_id" % 97 =!= 3))
+      .map(corpusRows(_)).toSet
+    val failures = hammer(d, states, Seq(
+      () => PostingsStore.appendBatch(docs.filter($"doc_id" % 6 === 3), d, 3L),
+      () => PostingsStore.appendBatch(docs.filter($"doc_id" % 6 === 4), d, 4L),
+      () => PostingsStore.deleteDocs(spark, d, erased),
+      () => PostingsStore.compactLevel(spark, d, maxBatches = 2),
+      () => PostingsStore.compact(spark, d)))
+    assert(failures.isEmpty, failures.mkString("\n"))
+    assert(serveRows(d) ==
+      corpusRows(docs.filter($"doc_id" % 6 < 5 && $"doc_id" % 97 =!= 3)))
+    assert(version(d) == v + 5)
   }
 
   // ---- r19: snapshot pinning, orphan-version heal, torn-batch semantics ----
@@ -552,18 +578,18 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
   test("compact heals an orphan v<next> left by a crash between the " +
     "snapshot move and its manifest entry") {
     val d = tmp("graft_postings_orphanv")
-    PostingsStore.build(docs.limit(60), d)
-    PostingsStore.compact(spark, d) // -> v1
+    PostingsStore.build(docs.limit(60), d) // -> v1
+    PostingsStore.compact(spark, d) // -> v2
     val before = serveRows(d)
-    // simulate the crash window: v2 published, its manifest entry never
-    // linked — readers still resolve v1, and the next compact must neither
+    // simulate the crash window: v3 published, its manifest entry never
+    // linked — readers still resolve v2, and the next compact must neither
     // trip over the orphan nor serve it
-    val orphan = java.nio.file.Paths.get(d, "v2-0badf00d")
+    val orphan = java.nio.file.Paths.get(d, "v3-0badf00d")
     java.nio.file.Files.createDirectories(orphan.resolve("ingest_batch=-1"))
     java.nio.file.Files.write(orphan.resolve("junk"), Array[Byte](1, 2, 3))
-    assert(version(d) == 1L)
-    PostingsStore.compact(spark, d) // commits v2 under its own name
     assert(version(d) == 2L)
+    PostingsStore.compact(spark, d) // commits v3 under its own name
+    assert(version(d) == 3L)
     assert(serveRows(d) == before)
     assert(!java.nio.file.Files.exists(orphan), "retention sweeps the orphan")
   }
@@ -572,10 +598,9 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     "of the same doc under a different batch") {
     val d = tmp("graft_postings_torndup")
     PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
-    // batch 1 lands postings + docidx, crashes before its stats commit
-    PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L)
-    graft.queue.Maintenance.deleteRec(
-      java.nio.file.Paths.get(d, "_stats", "ingest_batch=1"))
+    // batch 1's snapshot, docidx included, is published and never linked
+    stepsOf(Some(1))(PostingsStore.appendBatch(
+      docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L))
     // a different batch legitimately carries doc 15: only COMMITTED
     // registrations may refuse — this must append, not throw
     PostingsStore.appendBatch(docs.filter($"doc_id" === 15L), d, 2L)
@@ -594,7 +619,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       .toMap
     val d = tmp("graft_postings_positions")
     PostingsStore.build(docs.limit(50), d)
-    val got = PostingsStore.readPostings(spark, d)
+    val got = PostingsStore.readPostings(spark, VersionedDir.resolveDir(d))
       .select($"doc_id", $"tok",
         PostingsStore.decodePositions($"positions").as("abs_pos"),
         $"positions", $"tf")
@@ -621,21 +646,21 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.build(docs, d)
     // take down docs that hold HEAD postings of the common term — pre-r19
     // the head stayed under-filled until compact
-    val headIds = PostingsStore.readPostings(spark, d)
+    val headIds = PostingsStore.readPostings(spark, VersionedDir.resolveDir(d))
       .filter($"tok" === "the" && $"tier" === 0)
       .select($"doc_id").as[Long].collect().sorted.take(12).toSeq
     assert(headIds.size == 12)
     assert(PostingsStore.deleteDocs(spark, d, headIds) > 0)
     val fresh = tmp("graft_postings_retier_fresh")
     PostingsStore.build(docs.filter(!$"doc_id".isin(headIds: _*)), fresh)
-    def tiers(dir: String) = PostingsStore.readPostings(spark, dir)
+    def tiers(dir: String) = PostingsStore.readPostings(spark, VersionedDir.resolveDir(dir))
       .select($"tok", $"doc_id", $"tf", $"dl", $"tier")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4))).toSet
     assert(tiers(d) == tiers(fresh), "erase refill drifted from the fresh cut")
     // the refill PROMOTED tail postings: 'the' head is full again
-    val counts = PostingsStore.readPostings(spark, d)
+    val counts = PostingsStore.readPostings(spark, VersionedDir.resolveDir(d))
       .filter($"tok" === "the")
       .agg(sum(when($"tier" === 0, 1).otherwise(0)).as("head"),
         count(lit(1)).as("df"))
@@ -704,7 +729,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     "literals, pushed term eq + In(doc_id)") {
     graft.streaming.IncrementalContainment.withInPushdown(spark, 2048) {
       val plan = PostingsStore
-        .probeTail(spark, bulk, "the", Seq(3L, 7L, 11L), Seq(-1L))
+        .probeTail(spark, bulk, "the", Seq(3L, 7L, 11L))
         .queryExecution.executedPlan.toString
       val pfStart = plan.indexOf("PartitionFilters: [")
       assert(pfStart >= 0, plan)
@@ -859,7 +884,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     }
     graft.streaming.IncrementalContainment.withInPushdown(spark, 2048) {
       val plan = PostingsStore
-        .probePositionsForDocs(spark, bulk, Seq("the"), Seq(3L, 7L), Seq(-1L))
+        .probePositionsForDocs(spark, bulk, Seq("the"), Seq(3L, 7L))
         .queryExecution.executedPlan.toString
       assert(plan.contains("In(doc_id"), s"pushed In(doc_id) missing:\n$plan")
       val pfStart = plan.indexOf("PartitionFilters: [")
@@ -891,14 +916,15 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.build(docs.limit(60), d)
     // strip the positions column AND the _format marker — the pre-gen-4
     // on-disk shape (a true legacy store never had either)
-    val batchDir = java.nio.file.Paths.get(d, "ingest_batch=-1")
+    val root = VersionedDir.resolveDir(d)
+    val batchDir = java.nio.file.Paths.get(root, "ingest_batch=-1")
     val legacy = spark.read.parquet(batchDir.toString)
       .drop("positions")
       .select($"tok", $"doc_id", $"tf", $"dl",
         $"tbucket".cast("int").as("tbucket"), $"tier".cast("int").as("tier"))
       .localCheckpoint(true)
     graft.queue.Maintenance.deleteRec(batchDir)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(d, "_format"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_format"))
     legacy.repartition(1)
       .sortWithinPartitions($"tbucket", $"tier", $"tok", $"doc_id")
       .write.partitionBy("tbucket", "tier").parquet(batchDir.toString)
@@ -922,7 +948,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     "literals + pushed In(tok); BM25 probes never read positions") {
     graft.streaming.IncrementalContainment.withInPushdown(spark, 2048) {
       val plan = PostingsStore
-        .probePositions(spark, bulk, Seq("the", "fast"), Seq(-1L))
+        .probePositions(spark, bulk, Seq("the", "fast"))
         .queryExecution.executedPlan.toString
       val pfStart = plan.indexOf("PartitionFilters: [")
       assert(pfStart >= 0, plan)
@@ -933,7 +959,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       assert(plan.contains("positions"), "phrase probe must read positions")
       // and the scoring probe's ReadSchema PRUNES the positions column —
       // the weight of the phrase substrate never taxes BM25
-      val bm25Plan = PostingsStore.probe(spark, bulk, terms, Seq(-1L))
+      val bm25Plan = PostingsStore.probe(spark, bulk, terms)
         .queryExecution.executedPlan.toString
       assert(!bm25Plan.contains("positions"),
         s"BM25 probe reads positions:\n$bm25Plan")
@@ -944,10 +970,9 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     "locate tombstones, so the batch's replay re-registers only survivors") {
     val d = tmp("graft_postings_torntakedown")
     PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
-    PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 5L)
-    graft.queue.Maintenance.deleteRec(
-      java.nio.file.Paths.get(d, "_stats", "ingest_batch=5"))
-    // doc 12 lives only in the torn (uncommitted) batch: the locate finds
+    stepsOf(Some(1))(PostingsStore.appendBatch(
+      docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 5L))
+    // doc 12 lives only in the crashed (uncommitted) batch: the locate finds
     // nothing — pre-fix this returned 0 WITHOUT a tombstone and the replay
     // silently resurrected the doc
     assert(PostingsStore.deleteDocs(spark, d, Seq(12L)) == 0L)
@@ -981,10 +1006,12 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     (0 to 4).foreach(b =>
       PostingsStore.appendBatch(docs.filter($"doc_id" % 5 === b), d, b.toLong))
     val before = serveRows(d)
+    val v = version(d)
     assert(!PostingsStore.compactLevel(spark, d, maxBatches = 8),
       "below the cap must be a no-op")
+    assert(version(d) == v, "a no-op fold must not commit")
     assert(PostingsStore.compactLevel(spark, d, maxBatches = 3))
-    assert(version(d) == 1L)
+    assert(version(d) == v + 1)
     assert(committedCount(d) == 3)
     assert(serveRows(d) == before && before == corpusRows(docs))
     // tiered + WAND + phrase all serve the leveled store
@@ -994,7 +1021,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       == serveRows(d, terms, 10))
     assert(PostingsStore.phraseTopK(spark, d, Seq("the", "fast"), 5).count() > 0)
-    // kept (largest) batches entered v1 as HARD LINKS — zero data bytes
+    // kept (largest) batches entered the fold's snapshot as HARD LINKS — zero data bytes
     // moved for them; the fold's write cost is the folded bytes only
     val keptLeafFile = java.nio.file.Files
       .walk(java.nio.file.Paths.get(VersionedDir.resolveDir(d)))
@@ -1016,8 +1043,9 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     // a second fold stacks: append two more, level again, still exact
     PostingsStore.appendBatch(docs.limit(0), d, 100L)
     assert(committedCount(d) == 4)
+    val v2 = version(d)
     assert(PostingsStore.compactLevel(spark, d, maxBatches = 3))
-    assert(version(d) == 2L)
+    assert(version(d) == v2 + 1)
     assert(serveRows(d) == before)
   }
 
@@ -1044,25 +1072,14 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     (0 to 4).foreach(b =>
       PostingsStore.appendBatch(docs.filter($"doc_id" % 5 === b), d, b.toLong))
     val expected = serveRows(d)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    @volatile var stop = false
-    val reader = new Thread(() => {
-      while (!stop) {
-        try {
-          val got = serveRows(d)
-          if (got != expected) failures.add(s"torn read: $got")
-        } catch { case e: Throwable => failures.add(e.toString) }
-      }
-    })
-    reader.start()
-    try {
-      PostingsStore.compactLevel(spark, d, maxBatches = 3) // flat -> v1
-      PostingsStore.appendBatch(docs.limit(0), d, 10L)     // lands in v1
-      PostingsStore.compactLevel(spark, d, maxBatches = 2) // v1 -> v2
-    } finally { stop = true; reader.join(30000) }
-    assert(failures.isEmpty, failures.toArray.mkString("\n"))
+    val v = version(d)
+    val failures = hammer(d, Set(expected), Seq(
+      () => PostingsStore.compactLevel(spark, d, maxBatches = 3),
+      () => PostingsStore.appendBatch(docs.limit(0), d, 10L),
+      () => PostingsStore.compactLevel(spark, d, maxBatches = 2)))
+    assert(failures.isEmpty, failures.mkString("\n"))
     assert(serveRows(d) == expected)
-    assert(version(d) == 2L)
+    assert(version(d) == v + 3)
   }
 
   test("WAND dispatch: a query whose every term fits the head serves " +
@@ -1267,5 +1284,98 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     val d = base.toString + "/store"
     PostingsStore.build(docs.limit(80), d)
     assert(serveRows(d, terms, 10) == corpusRows(docs.limit(80), terms, 10))
+  }
+
+  // ---- every mutation is one snapshot commit ----
+
+  private type Rows = Seq[(Int, Long, Long, Long)]
+
+  /** The steps of one commit over a store with two earlier commits:
+    * `staged`, then [[VersionedDir.commit]]'s, whose retention sweeps the
+    * oldest snapshot. */
+  private val commitSteps = Seq("staged", "published", "entry-written",
+    "linked", "entry-temp-deleted", "log-synced", "snapshot-swept")
+
+  /** Crash `op` after every step of its commit, each on a fresh copy of
+    * the store `seeded` (which serves `before`): the store must serve the
+    * whole old state before the commit point (`linked`) and the whole new
+    * state `after` from it on, and running `op` again — the replay or
+    * retry — must converge to `after`. The crash points run on threads of
+    * their own at once (the step hook is thread-scoped). */
+  private def crashEveryStep(seeded: String, before: Rows, op: String => Any,
+                             after: Rows): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(commitSteps.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try commitSteps.indices.map { i =>
+      Future {
+        val d = copyStore(seeded)
+        assert(stepsOf(Some(i))(op(d)) == commitSteps.take(i + 1))
+        val committed = i >= commitSteps.indexOf("linked")
+        assert(serveRows(d) == (if (committed) after else before),
+          s"crash after ${commitSteps(i)}: not the whole " +
+            (if (committed) "new" else "old") + " state")
+        op(d)
+        assert(serveRows(d) == after,
+          s"replay after a crash at ${commitSteps(i)} diverged")
+      }
+    }.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    finally pool.shutdown()
+  }
+
+  test("a crash after every commit step of appendBatch, deleteDocs and a " +
+    "leveled sink micro-batch leaves the whole old or the whole new state, " +
+    "and the replay converges") {
+    // 24 short documents over an 8-word vocabulary, each carrying one of
+    // the served terms: few term buckets per batch, so few files per commit
+    val vocab = Seq("dup", "vector", "merge", "scan", "table", "hash", "the", "fast")
+    val small = (0 until 24).map { i =>
+      (i.toLong, ((0 to i % 5).map(j => vocab((3 * i + 5 * j) % vocab.size)) :+
+        vocab(i % 3)).mkString(" "))
+    }.toDF("doc_id", "text")
+    def part(lo: Long, hi: Long) = small.filter($"doc_id" >= lo && $"doc_id" < hi)
+    def sinkBatch(batch: org.apache.spark.sql.DataFrame, d: String, b: Long) =
+      PostingsStore.sinkBatch(batch, d, b, "doc_id", "text", compactEvery = 0,
+        levelMaxBatches = 2, PostingsStore.DefaultHeadSize)
+    // two commits before the one under test, so its retention sweeps one
+    val seeded = tmp("graft_postings_crash_seed")
+    sinkBatch(part(0L, 8L), seeded, 0L)
+    sinkBatch(part(8L, 16L), seeded, 1L)
+    val before = serveRows(seeded)
+    assert(before == corpusRows(part(0L, 16L)))
+    // appendBatch of a fresh batch
+    crashEveryStep(seeded, before, PostingsStore.appendBatch(part(16L, 24L), _, 2L),
+      corpusRows(small))
+    // deleteDocs: the retry of an erase that committed finds nothing and
+    // commits its tombstones again
+    crashEveryStep(seeded, before, PostingsStore.deleteDocs(spark, _, Seq(2L, 7L, 13L)),
+      corpusRows(part(0L, 16L).filter(!$"doc_id".isin(2L, 7L, 13L))))
+    // a leveled sink micro-batch: the append and the fold it triggers (a
+    // third batch over the cap of 2) commit as ONE snapshot; the stream's
+    // replay of a micro-batch whose commit landed is a no-op
+    crashEveryStep(seeded, before, sinkBatch(part(16L, 24L), _, 2L),
+      corpusRows(small))
+    val d = copyStore(seeded)
+    assert(stepsOf(None)(sinkBatch(part(16L, 24L), d, 2L)) == commitSteps)
+    assert(committedCount(d) == 2 && serveRows(d) == corpusRows(small))
+  }
+
+  test("a read of a snapshot that later commits swept throws instead of " +
+    "reading as an empty store") {
+    val d = tmp("graft_postings_stale")
+    PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
+    PostingsStore.deleteDocs(spark, d, Seq(3L))
+    val stale = VersionedDir.resolveDir(d)
+    PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L)
+    PostingsStore.appendBatch(docs.filter($"doc_id" >= 20 && $"doc_id" < 30), d, 2L)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(stale)))
+    Seq[String => Any](PostingsStore.readPostings(spark, _),
+      PostingsStore.readStats(spark, _), PostingsStore.readTermMeta(spark, _),
+      PostingsStore.readDocIdx(spark, _), PostingsStore.readBlockMeta(spark, _),
+      PostingsStore.erasedIds(spark, _)).foreach { read =>
+      val e = intercept[IllegalArgumentException](read(stale))
+      assert(e.getMessage.contains("is gone"), e.getMessage)
+    }
+    assert(serveRows(d) == corpusRows(docs.filter($"doc_id" < 30 && $"doc_id" =!= 3L)))
   }
 }
