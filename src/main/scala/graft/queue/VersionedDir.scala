@@ -36,9 +36,12 @@ final class ConcurrentWriterException(msg: String) extends IllegalStateException
   *   3. writes entry N+1 to a temp, fsyncs it, and publishes it with one
   *      exclusive `createLink`, then fsyncs `_log`;
   *   4. retention: keeps the new snapshot and its predecessor (the
-  *      one-commit grace for in-flight readers) and the newest [[LogKeep]]
-  *      entries; sweeps unreferenced snapshots at or below N+1 and temps
-  *      with no mtime progress for [[StaleTempMs]].
+  *      one-commit grace for in-flight readers), every snapshot superseded
+  *      less than the caller's `graceMs` ago (a snapshot is superseded when
+  *      its successor's entry is written, so that entry's mtime dates it),
+  *      and the newest [[LogKeep]] entries plus those the grace needs;
+  *      sweeps every other snapshot at or below N+1 and temps with no
+  *      mtime progress for [[StaleTempMs]].
   *
   * Readers resolve once and read the resolved dir, so a commit racing them
   * is whole-old or whole-new. A crash at any step leaves the old or the new
@@ -57,8 +60,9 @@ object VersionedDir {
 
   val LogDir = "_log"
 
-  /** Log entries retention keeps. A writer more than one commit stale is
-    * refused by the tip check, so older entries serve only inspection. */
+  /** Log entries retention keeps beyond a grace's. A writer more than one
+    * commit stale is refused by the tip check, so older entries serve only
+    * inspection. */
   private val LogKeep = 8
 
   /** A temp whose tree saw no mtime progress this long has a dead writer. */
@@ -101,10 +105,12 @@ object VersionedDir {
   /** Publish `stagePath` (from [[stage]]`(base)`, written completely) as
     * snapshot `base.version + 1` with manifest `payload`, then run
     * retention. Throws [[ConcurrentWriterException]] if another writer
-    * committed since `base`. `onStep` is the crash-test seam: it is called
-    * after every filesystem step, outside any error handling. */
+    * committed since `base`. A store whose readers may outlive more than
+    * one commit passes `graceMs`: a superseded snapshot survives retention
+    * that long. `onStep` is the crash-test seam: it is called after every
+    * filesystem step, outside any error handling. */
   def commit(base: Snapshot, stagePath: Path, payload: Seq[String] = Nil,
-             onStep: String => Unit = _ => ()): Snapshot = {
+             onStep: String => Unit = _ => (), graceMs: Long = 0L): Snapshot = {
     val root = base.root
     val version = base.version + 1
     val name = stagePath.getFileName.toString.stripPrefix(".").stripSuffix(".tmp")
@@ -138,22 +144,30 @@ object VersionedDir {
     quietly { val d = FileChannel.open(log, READ); try d.force(true) finally d.close() }
     onStep("log-synced")
     val live = Snapshot(root, version, name, payload)
-    retain(live, base.name, onStep)
+    retain(live, base.name, graceMs, onStep)
     live
   }
 
-  private def retain(live: Snapshot, prevName: String, onStep: String => Unit): Unit = {
+  private def retain(live: Snapshot, prevName: String, graceMs: Long,
+                     onStep: String => Unit): Unit = {
     val log = live.root.resolve(LogDir)
-    logVersions(live.root).sorted.dropRight(LogKeep).foreach { v =>
+    val now = System.currentTimeMillis()
+    val versions = logVersions(live.root).sorted
+    // entry v+1 written inside the grace: snapshot v is still read
+    def inGrace(v: Long): Boolean =
+      graceMs > 0L && mtime(log.resolve((v + 1).toString)) >= now - graceMs
+    val graced = versions.filter(inGrace).flatMap(v => entryName(log, v)).toSet
+    versions.dropRight(LogKeep).filterNot(v => inGrace(v) || inGrace(v - 1)).foreach { v =>
       quietly(Files.deleteIfExists(log.resolve(v.toString)))
       onStep("log-swept")
     }
-    val cutoff = System.currentTimeMillis() - StaleTempMs
+    val cutoff = now - StaleTempMs
     list(live.root).foreach { p =>
       p.getFileName.toString match {
         // a snapshot above the live version may be a racer's, between its
         // publish and its (doomed or winning) link: never swept here
-        case n @ SnapshotName(v) if v.toLong <= live.version && n != live.name && n != prevName =>
+        case n @ SnapshotName(v) if v.toLong <= live.version && n != live.name &&
+            n != prevName && !graced(n) =>
           quietly(Maintenance.deleteRec(p))
           onStep("snapshot-swept")
         case n if n.startsWith(".") && n.endsWith(".tmp") && newestMtime(p) < cutoff =>
@@ -163,6 +177,15 @@ object VersionedDir {
       }
     }
   }
+
+  /** The snapshot dir that log entry `v` names, if the entry is there. */
+  private def entryName(log: Path, v: Long): Option[String] =
+    try Files.readAllLines(log.resolve(v.toString)).asScala.headOption.map(_.trim)
+    catch { case _: java.io.IOException => None }
+
+  private def mtime(p: Path): Long =
+    try Files.getLastModifiedTime(p).toMillis
+    catch { case _: java.io.IOException => Long.MinValue }
 
   private def logVersions(root: Path): Seq[Long] =
     list(root.resolve(LogDir)).map(_.getFileName.toString)

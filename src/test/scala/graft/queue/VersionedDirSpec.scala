@@ -19,9 +19,10 @@ class VersionedDirSpec extends AnyFunSuite {
 
   /** Commit a snapshot holding one `data` file with `content`. */
   private def commit(root: Path, content: String,
-                     onStep: String => Unit = _ => ()): VersionedDir.Snapshot = {
+                     onStep: String => Unit = _ => (),
+                     graceMs: Long = 0L): VersionedDir.Snapshot = {
     val base = VersionedDir.resolve(root)
-    VersionedDir.commit(base, staged(base, content), Seq(s"p-$content"), onStep)
+    VersionedDir.commit(base, staged(base, content), Seq(s"p-$content"), onStep, graceMs)
   }
 
   private def staged(base: VersionedDir.Snapshot, content: String): Path = {
@@ -169,5 +170,28 @@ class VersionedDirSpec extends AnyFunSuite {
     Files.createDirectories(live)
     commit(root, "s13")
     assert(Files.exists(racer) && Files.exists(live))
+  }
+
+  test("a reader grace keeps every snapshot superseded inside it and sweeps it after; " +
+    "an orphan no entry names goes at once") {
+    val root = newRoot()
+    val hour = 3600 * 1000L
+    (1 to 12).foreach(i => commit(root, s"s$i", graceMs = hour))
+    val log = root.resolve(VersionedDir.LogDir)
+    assert(names(log).map(_.toLong).sorted == (1L to 12L))
+    assert(snapshotDirs(root).map(_.takeWhile(_ != '-')).sorted == (1 to 12).map(i => s"v$i").sorted)
+    val v3 = root.resolve(snapshotDirs(root).find(_.startsWith("v3-")).get)
+    assert(new String(Files.readAllBytes(v3.resolve("data"))) == "s3")
+    // published, never linked: no entry names it, so no reader can hold it
+    val orphan = root.resolve("v13-0badf00d")
+    Files.createDirectories(orphan)
+    // snapshots 1-9 were superseded (entries 2-10 written) an hour ago
+    val old = FileTime.fromMillis(System.currentTimeMillis() - 2 * hour)
+    (1 to 10).foreach(v => Files.setLastModifiedTime(log.resolve(v.toString), old))
+    commit(root, "s13", graceMs = hour)
+    assert(!Files.exists(orphan))
+    assert(snapshotDirs(root).map(_.takeWhile(_ != '-')).sorted == Seq("v10", "v11", "v12", "v13"))
+    assert(names(log).map(_.toLong).sorted == (6L to 13L))
+    assert(read(root) == ((13L, "s13", Seq("p-s13"))))
   }
 }

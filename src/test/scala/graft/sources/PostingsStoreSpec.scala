@@ -60,7 +60,18 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     seen.toSeq
   }
 
-  /** Copy a store (every snapshot, its log) to a fresh path. */
+  /** Date every commit of `d` a day back, past the reader grace, so the
+    * next commit's retention sweeps every snapshot but the live pair. */
+  private def pastGrace(d: String): Unit = {
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 24 * 3600 * 1000L)
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(d, VersionedDir.LogDir))
+    try s.iterator().forEachRemaining(java.nio.file.Files.setLastModifiedTime(_, old))
+    finally s.close()
+  }
+
+  /** Copy a store (every snapshot, its log) to a fresh path, its commits
+    * dated [[pastGrace]]. */
   private def copyStore(from: String): String = {
     val to = tmp("graft_postings_copy")
     val src = java.nio.file.Paths.get(from)
@@ -71,6 +82,7 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
         if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
         else java.nio.file.Files.copy(p, dst)
       }
+    pastGrace(to)
     to
   }
 
@@ -488,33 +500,24 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(PostingsStore.deleteDocs(spark, d, Seq(4L)) > 0)
   }
 
-  /** Serve `d` in a loop on a second thread while `mutations` commit one
-    * by one; every serve must equal one of `states`. After each commit the
-    * writer waits for a serve that STARTED after it to finish, so no serve
-    * outlives two commits (retention keeps a snapshot one commit only)
-    * while every commit still races a live serve. Returns the failures. */
+  /** Serve `d` in a loop on a second thread while `mutations` commit back
+    * to back; every serve must equal one of `states`. Returns the
+    * failures. */
   private def hammer(d: String, states: Set[Seq[(Int, Long, Long, Long)]],
                      mutations: Seq[() => Any]): Seq[String] = {
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val commits = new java.util.concurrent.atomic.AtomicLong(0L)
-    val served = new java.util.concurrent.atomic.AtomicLong(-1L)
     @volatile var stop = false
     val reader = new Thread(() => {
       while (!stop) {
-        val startedAfter = commits.get()
         try {
           val got = serveRows(d)
           if (!states.contains(got)) failures.add(s"torn read: $got")
         } catch { case e: Throwable => failures.add(e.toString) }
-        served.set(startedAfter)
       }
     })
     reader.start()
-    try mutations.foreach { m =>
-      m()
-      val c = commits.incrementAndGet()
-      while (served.get() < c && failures.isEmpty) Thread.sleep(20)
-    } finally { stop = true; reader.join(60000) }
+    try mutations.foreach(_())
+    finally { stop = true; reader.join(60000) }
     failures.toArray.map(_.toString).toSeq
   }
 
@@ -1366,8 +1369,19 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     PostingsStore.appendBatch(docs.filter($"doc_id" < 10), d, 0L)
     PostingsStore.deleteDocs(spark, d, Seq(3L))
     val stale = VersionedDir.resolveDir(d)
+    val served = PostingsStore.bm25TopK(spark, d, terms, k = 20)
     PostingsStore.appendBatch(docs.filter($"doc_id" >= 10 && $"doc_id" < 20), d, 1L)
     PostingsStore.appendBatch(docs.filter($"doc_id" >= 20 && $"doc_id" < 30), d, 2L)
+    // two commits on, the reader grace still keeps the old snapshot whole:
+    // a serve built before them collects the state it resolved
+    assert(served.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq ==
+      corpusRows(docs.filter($"doc_id" < 10 && $"doc_id" =!= 3L)))
+    assert(PostingsStore.readStats(spark, stale).count() == 1L)
+    assert(PostingsStore.erasedIds(spark, stale).as[Long].collect().toSeq == Seq(3L))
+    // past the grace, the next commit sweeps it
+    pastGrace(d)
+    PostingsStore.appendBatch(docs.filter($"doc_id" >= 30 && $"doc_id" < 40), d, 3L)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(stale)))
     Seq[String => Any](PostingsStore.readPostings(spark, _),
       PostingsStore.readStats(spark, _), PostingsStore.readTermMeta(spark, _),
@@ -1376,6 +1390,32 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
       val e = intercept[IllegalArgumentException](read(stale))
       assert(e.getMessage.contains("is gone"), e.getMessage)
     }
-    assert(serveRows(d) == corpusRows(docs.filter($"doc_id" < 30 && $"doc_id" =!= 3L)))
+    assert(serveRows(d) == corpusRows(docs.filter($"doc_id" < 40 && $"doc_id" =!= 3L)))
+  }
+
+  test("every mutation refuses a flat layout from before snapshot commits, " +
+    "leaving its data in place") {
+    // a flat store: a layout's data in the root itself, with no _log
+    val d = tmp("graft_postings_flat")
+    val src = java.nio.file.Paths.get(bulk)
+    java.nio.file.Files.walk(src).iterator()
+      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
+      .forEachRemaining { p =>
+        val dst = java.nio.file.Paths.get(d).resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(p, dst)
+      }
+    Seq[() => Any](
+      () => PostingsStore.build(docs.limit(10), d),
+      () => PostingsStore.appendBatch(docs.filter($"doc_id" === 1L), d, 0L,
+        checkDupIds = false),
+      () => PostingsStore.deleteDocs(spark, d, Seq(3L)),
+      () => PostingsStore.compact(spark, d),
+      () => PostingsStore.compactLevel(spark, d, maxBatches = 2)).foreach { m =>
+      val e = intercept[IllegalArgumentException](m())
+      assert(e.getMessage.contains("flat layout"), e.getMessage)
+    }
+    assert(version(d) == 0L)
+    assert(serveRows(d) == serveRows(bulk))
   }
 }
