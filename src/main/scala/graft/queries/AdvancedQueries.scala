@@ -143,15 +143,12 @@ object AdvancedQueries extends graft.QueryModule {
       where = Some(col("label") === 3))
   }
 
-  private val deletedStoreMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
   /** q122: DELETION from the persisted store — the takedown/GDPR
     * maintenance face ([[graft.sources.IvfIndexStore.delete]]): a store
     * built exactly like q112's has every `vec_id % 5 = 3` vector deleted
     * (deterministic, so DuckDB replays it as a serving-side exclusion),
     * then serves q112's query. Only the affected list leaves were
-    * rewritten (rename-aside swap; spec-pinned); the frozen codebook
+    * rewritten (one snapshot commit; spec-pinned); the frozen codebook
     * keeps its centroids — deletion removes servable vectors, not
     * layout. The oracle is q112's replay minus the deleted ids: a
     * tombstone leak, a leaf the rewrite missed, or a deleted id
@@ -160,19 +157,12 @@ object AdvancedQueries extends graft.QueryModule {
   def ivfDeletedTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val keyStr = s"$dir|deleted"
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map("%02x".format(_)).mkString
-    val storeDir = "/tmp/graft-ivf-store/" + digest + "_" +
-      ("deleted_" + dir).replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = (s, keyStr)
-    if (!deletedStoreMemo.contains(key)) {
-      graft.sources.IvfIndexStore.build(emb, storeDir, nlist = 16)
+    val storeDir = graft.sources.IvfIndexStore.batteryLayout(s, s"$dir|deleted",
+        "deleted_" + dir) { d =>
+      graft.sources.IvfIndexStore.build(emb, d, nlist = 16)
       val ids = emb.filter($"vec_id" % 5 === 3)
         .select($"vec_id").as[Long].collect().toSeq.sorted
-      graft.sources.IvfIndexStore.delete(s, storeDir, ids)
-      deletedStoreMemo.add(key)
+      graft.sources.IvfIndexStore.delete(s, d, ids)
     }
     val qvec = emb.filter($"vec_id" === 0L)
       .select($"embedding").as[Seq[Float]].head()
@@ -197,9 +187,6 @@ object AdvancedQueries extends graft.QueryModule {
       where = col("label") === 3 && col("vec_id") < 40, nprobe = 2)
   }
 
-  private val mergedStoreMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
   /** q139: LEAF-MERGED serving — the IVF store's batch-count discipline
     * ([[graft.sources.IvfIndexStore.mergeLeaves]]): a store seeded with
     * the first 100 vectors (codebook = first 16, q112's) ingests the
@@ -207,38 +194,25 @@ object AdvancedQueries extends graft.QueryModule {
     * list), then the smallest batches fold until four remain — no
     * re-cluster, no reassignment, every row byte-identical. Serving
     * q112's query must therefore reproduce q112's oracle VERBATIM: a row
-    * lost or doubled by the merge, a leaf the swap missed, or a replayed
+    * lost or doubled by the merge, a leaf the commit missed, or a replayed
     * folded batch slipping past the `_folded` tripwire hash-fails here.
     * Later battery passes re-serve from the memoized merged store (the
     * q112 discipline). */
   def ivfMergedTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val keyStr = s"$dir|merged"
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map("%02x".format(_)).mkString
-    val storeDir = "/tmp/graft-ivf-store/" + digest + "_" +
-      ("merged_" + dir).replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = (s, keyStr)
-    if (!mergedStoreMemo.contains(key)) {
-      graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(storeDir))
-      graft.sources.IvfIndexStore.build(
-        emb.filter($"vec_id" < 100), storeDir, nlist = 16)
+    val storeDir = graft.sources.IvfIndexStore.batteryLayout(s, s"$dir|merged",
+        "merged_" + dir) { d =>
+      graft.sources.IvfIndexStore.build(emb.filter($"vec_id" < 100), d, nlist = 16)
       (0 to 9).foreach(b => graft.sources.IvfIndexStore.appendBatch(
-        emb.filter($"vec_id" >= 100 && $"vec_id" % 10 === b),
-        storeDir, batchId = b.toLong))
-      require(graft.sources.IvfIndexStore.mergeLeaves(s, storeDir,
-        maxBatches = 4), "q139 fixture: the leaf merge was a no-op")
-      mergedStoreMemo.add(key)
+        emb.filter($"vec_id" >= 100 && $"vec_id" % 10 === b), d, batchId = b.toLong))
+      require(graft.sources.IvfIndexStore.mergeLeaves(s, d, maxBatches = 4),
+        "q139 fixture: the leaf merge was a no-op")
     }
     val qvec = emb.filter($"vec_id" === 0L)
       .select($"embedding").as[Seq[Float]].head()
     graft.sources.IvfIndexStore.topK(s, storeDir, qvec, k = 10, nprobe = 2)
   }
-
-  private val pqDriftMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
 
   /** q120: the REBUILD SIGNAL of the frozen-codebook maintenance contract
     * ([[graft.sources.IvfIndexStore.qualityReport]]): a PQ store built on
@@ -253,25 +227,18 @@ object AdvancedQueries extends graft.QueryModule {
   def pqDriftReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val keyStr = s"$dir|pqdrift"
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map("%02x".format(_)).mkString
-    val storeDir = "/tmp/graft-ivf-store/" + digest + "_" +
-      ("pqdrift_" + dir).replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = (s, keyStr)
-    if (!pqDriftMemo.contains(key)) {
+    val storeDir = graft.sources.IvfIndexStore.batteryLayout(s, s"$dir|pqdrift",
+        "pqdrift_" + dir) { d =>
       val base = emb.filter($"vec_id" < 300)
       val cb = graft.operators.ProductQuantizer.train(base, m = 8, ksub = 16, iters = 0)
-      graft.sources.IvfIndexStore.build(base, storeDir, nlist = 16, pq = Some(cb))
+      graft.sources.IvfIndexStore.build(base, d, nlist = 16, pq = Some(cb))
       graft.sources.IvfIndexStore.appendBatch(
-        emb.filter($"vec_id" >= 300), storeDir, batchId = 0)
+        emb.filter($"vec_id" >= 300), d, batchId = 0)
       val drifted = emb.filter($"vec_id" < 100)
         .select(($"vec_id" + 1000000L).as("vec_id"),
           transform($"embedding", x => (x * lit(2.0f)).cast("float")).as("embedding"),
           $"label")
-      graft.sources.IvfIndexStore.appendBatch(drifted, storeDir, batchId = 1)
-      pqDriftMemo.add(key)
+      graft.sources.IvfIndexStore.appendBatch(drifted, d, batchId = 1)
     }
     graft.sources.IvfIndexStore.qualityReport(s, storeDir, factor = 2.0)
   }

@@ -17,10 +17,19 @@ import org.apache.spark.sql.SparkSession
   * (single maintenance writer; a lakehouse table format — Delta/Iceberg
   * OPTIMIZE — replaces this and closes the remaining not-found window for
   * concurrent readers of THESE datasets; the queue's PENDING set has no
-  * such window — [[PendingStore]] readers resolve a manifest). The
-  * registries' erase rewrite (`RegistryIO.eraseDocs`) swaps its leaves
-  * through [[replaceDir]] too; the postings store commits every mutation
-  * through [[VersionedDir]] and uses none of the swaps here.
+  * such window — [[PendingStore]] readers resolve a manifest).
+  *
+  * Callers are the streaming registries only: [[compactParquet]] from
+  * `StreamingDispatcher` and the ingest registries (`DomainQuota`,
+  * `IncrementalDedup`, `IncrementalSpanDedup`, `IncrementalContainment`,
+  * `IncrementalVecDedup`, `IncrementalQualityCut`, `CorpusStats`,
+  * `IngestCuration`); [[replaceDir]] from `RegistryIO.eraseDocs`,
+  * `IncrementalDedup`'s erase, and the `CorpusStats` and
+  * `IncrementalQualityCut` rollup and verdict rewrites. Their verdict
+  * dirs have consumers that read them directly with
+  * `spark.read.parquet`, so they are not snapshot stores. The IVF and
+  * postings stores commit every mutation through
+  * [[VersionedDir.commitNext]] and use none of the swaps here.
   */
 object Maintenance {
 

@@ -5,6 +5,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Pa
 import java.nio.file.StandardOpenOption.{CREATE_NEW, READ, WRITE}
 
 import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
 
 /** Thrown to every writer that loses a race for a store: a commit whose base
   * is no longer the tip, a lost exclusive manifest link, or a lost
@@ -27,8 +28,9 @@ final class ConcurrentWriterException(msg: String) extends IllegalStateException
   *   .<name>.tmp     in-flight stage dirs and entry temps
   * }}}
   *
-  * A root with no `_log` entry resolves to itself as version 0 (the flat
-  * layout a store's bulk build writes). [[commit]]:
+  * A root with no `_log` entry resolves to itself as version 0, which
+  * holds no layout: every store's first commit stages from nothing.
+  * [[commit]]:
   *
   *   1. moves the caller's stage dir ([[stage]]) to `v<N+1>-<hex>` with one
   *      ATOMIC_MOVE;
@@ -49,6 +51,10 @@ final class ConcurrentWriterException(msg: String) extends IllegalStateException
   * step. The entry is fsynced before its link and `_log` after it, so the
   * commit point survives power loss; the snapshot's data files are as
   * durable as their writer and the filesystem make them.
+  *
+  * The IVF and postings stores mutate through [[commitNext]]: each
+  * mutation stages its whole next layout, carrying untouched files from
+  * the base by hard link ([[linkTree]]), and commits once.
   */
 object VersionedDir {
 
@@ -174,6 +180,84 @@ object VersionedDir {
           quietly(Maintenance.deleteRec(p))
           onStep("temp-swept")
         case _ => ()
+      }
+    }
+  }
+
+  /** How long a snapshot superseded through [[commitNext]] stays readable:
+    * a serve that resolved it before the commit, or a serve DataFrame
+    * collected later, reads it whole for this long, across any number of
+    * commits. */
+  private[graft] val ReaderGraceMs = 15 * 60 * 1000L
+
+  /** Crash-test seam: called after every step of a [[commitNext]] commit —
+    * `staged`, then [[commit]]'s own steps. Scoped to the calling thread. */
+  private[graft] val stepHook = new DynamicVariable[String => Unit](_ => ())
+
+  /** One staging step of a [[commitNext]] mutation: it reads the layout at
+    * `src` (the base snapshot, or the previous step's stage) and writes the
+    * next one into the private dir `dst`. `linkable` is false only for a
+    * store's first commit, whose version-0 base holds no layout. */
+  private[graft] final case class Stage(src: String, dst: Path, linkable: Boolean) {
+    /** Carry `src` into `dst` by hard link, except the subtrees `skip`
+      * names by their path relative to `src`. */
+    def carry(skip: String => Boolean): Unit =
+      if (linkable) linkTree(Paths.get(src), dst, skip)
+  }
+
+  /** The one mutation skeleton of the snapshot stores: resolve the base
+    * snapshot of `dir`, run `steps` — each stages a next layout from the
+    * previous step's (the first from the base) and says whether it staged
+    * anything — and [[commit]] the last staged layout ONCE, with
+    * [[ReaderGraceMs]]. Nothing ever writes into a committed snapshot. A
+    * step that throws leaves only stage dirs, which retention sweeps.
+    * Returns the committed snapshot, None when no step staged anything. */
+  private[graft] def commitNext(dir: String, payload: Seq[String] = Nil)
+                               (steps: (Stage => Boolean)*): Option[Snapshot] = {
+    val base = resolve(Paths.get(dir.stripSuffix("/")))
+    // a version-0 base stages from nothing: anything visible in the root
+    // but the log and crashed writers' snapshots is a flat layout no commit
+    // would carry, so refuse rather than hide it
+    require(base.version > 0L || list(base.root).forall { p =>
+        val n = p.getFileName.toString
+        n.startsWith(".") || n == LogDir || SnapshotName.matches(n)
+      },
+      s"store at $dir holds a flat layout from before snapshot commits " +
+        "(data in its root, no _log) - rebuild the store from its corpus " +
+        "on the current layout")
+    val staged = steps.foldLeft(Option.empty[Path]) { (prev, step) =>
+      val s = Stage(prev.fold(base.path.toString)(_.toString),
+        stage(base), prev.isDefined || base.version > 0L)
+      Files.createDirectories(s.dst)
+      if (step(s)) { prev.foreach(Maintenance.deleteRec); Some(s.dst) }
+      else { Maintenance.deleteRec(s.dst); prev }
+    }
+    val onStep = stepHook.value
+    staged.map { d =>
+      onStep("staged")
+      commit(base, d, payload, onStep, ReaderGraceMs)
+    }
+  }
+
+  /** Recreate `src` under `dst` with a HARD LINK per file (a copy where the
+    * filesystem refuses links), skipping the subtrees `skip` names by
+    * their path relative to the top `src`, and every `_SUCCESS` marker —
+    * a writer appending beside carried files writes its own. Zero data
+    * bytes move, and no carried file is ever written: a stage only adds
+    * and removes whole files. */
+  private[graft] def linkTree(src: Path, dst: Path, skip: String => Boolean,
+                              rel: String = ""): Unit = {
+    Files.createDirectories(dst)
+    list(src).foreach { c =>
+      val name = c.getFileName.toString
+      val r = if (rel.isEmpty) name else s"$rel/$name"
+      if (!skip(r) && name != "_SUCCESS" && name != "._SUCCESS.crc") {
+        if (Files.isDirectory(c)) linkTree(c, dst.resolve(name), skip, r)
+        else try Files.createLink(dst.resolve(name), c)
+        catch {
+          case _: UnsupportedOperationException | _: java.io.IOException =>
+            Files.copy(c, dst.resolve(name))
+        }
       }
     }
   }

@@ -3,7 +3,10 @@ package graft.sources
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
 import graft.queue.VersionedDir
-import scala.jdk.CollectionConverters._
+import graft.queue.VersionedDir.commitNext
+import graft.streaming.RegistryIO
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +25,8 @@ import org.apache.spark.sql.functions._
   * per list, `repartition(nlist, centroid_id)` bounding each to one task's
   * files), plus the KB-scale codebook under `_codebook/` — an
   * underscore-prefixed path, so partition discovery of the lists never
-  * sees it.
+  * sees it. The whole layout is one [[VersionedDir]] snapshot under the
+  * store root, and every mutation commits the next one ([[rebuild]]).
   *
   * Why this is THE 100 TB shape: [[Similarity.ivfTopK]] must re-assign the
   * corpus on every query (fine inside one job where the assignment plan is
@@ -43,8 +47,9 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndexStore {
 
-  /** Build (or rebuild) the index at `dir`: one assignment pass over the
-    * corpus ([[Similarity.ivfAssignWith]] — broadcast codebook, map-side
+  /** Build the index at `dir` as its next snapshot ([[rebuild]], whose
+    * version it drops): one assignment pass over the corpus
+    * ([[Similarity.ivfAssignWith]] — broadcast codebook, map-side
     * scoring, partial+final argmax), then one clustered write. `codebook`
     * defaults to the deterministic first-`nlist`-vectors sample (q53's);
     * pass [[Similarity.ivfTrain]]'s output for a trained index. */
@@ -52,20 +57,22 @@ object IvfIndexStore {
             codebook: Option[DataFrame] = None,
             idCol: String = "vec_id", vecCol: String = "embedding",
             pq: Option[graft.operators.ProductQuantizer.Codebooks] = None): Unit = {
-    require(VersionedDir.resolve(java.nio.file.Paths.get(dir)).version == 0L,
-      s"store at $dir is version-managed - build() would write a flat " +
-        "layout readers ignore; use rebuild()")
+    rebuild(emb, dir, nlist, codebook, idCol, vecCol, pq)
+    ()
+  }
+
+  private val PqDir = "/_pq_codebook"
+
+  /** Write the whole store — lists, `_codebook`, `_pq_codebook` — into
+    * the empty stage `dst`. The bulk build is batch -1 of the
+    * ingest_batch partition level that [[sink]] appends into (streaming
+    * batch ids start at 0, so no append can collide with it). */
+  private def stageStore(emb: DataFrame, dst: Path, nlist: Int,
+                         codebook: Option[DataFrame], idCol: String, vecCol: String,
+                         pq: Option[graft.operators.ProductQuantizer.Codebooks]): Unit = {
     val cents = codebook.getOrElse(
       emb.filter(col(idCol) < nlist)
         .select(col(idCol).cast("long").as("centroid_id"), col(vecCol).as("cvec")))
-    // lists FIRST: their Overwrite clears the whole store dir (including
-    // any previous _codebook / _pq_codebook), then the matching codebooks
-    // land beside them. A crash between the writes leaves a store that
-    // fails loudly at serve time (no _codebook; [[adcTopK]] additionally
-    // requires _pq_codebook) rather than answering from a codebook that
-    // doesn't match its lists. The bulk build is batch -1
-    // of the ingest_batch partition level that [[sink]] appends into
-    // (streaming batch ids start at 0, so no append can collide with it).
     require(!emb.columns.contains("codes") && !emb.columns.contains(BatchCol),
       s"ivf store: input must not carry 'codes'/'$BatchCol' (layout-reserved)")
     // EVERY input column lands in the lists beside the vector (only the
@@ -78,127 +85,105 @@ object IvfIndexStore {
     // argmin against literal codebooks — no second corpus pass, no join),
     // so every list file carries (id, vector, codes) and the ADC serving
     // scan can column-prune down to (id, codes)
-    pq.map(cb => assigned.withColumn("codes",
+    writeLeaves(pq.map(cb => assigned.withColumn("codes",
         graft.operators.ProductQuantizer.codesCol(emb.sparkSession, cb, vecCol)))
       .getOrElse(assigned)
       .withColumn(BatchCol, lit(-1L))
-      .repartition(nlist, col("centroid_id"))
-      .write.mode(SaveMode.Overwrite)
-      // STATIC overwrite, pinned: a rebuild must clear the WHOLE store
-      // (including appended ingest_batch>=0 leaves). Under a session that
-      // set partitionOverwriteMode=dynamic globally, the default would
-      // only replace the batch -1 partitions and leave stale appends
-      // serving duplicate vectors beside the fresh build.
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("centroid_id", BatchCol).parquet(dir)
+      .repartition(nlist, col("centroid_id")), dst)
     // the same null-code gate [[appendBatch]] enforces, for bulk builds: a
     // null or wrong-dim vector encodes to null codes, which ADC serving
     // would silently drop (null approx_q sorts last) and qualityReport's
-    // sum would skip. Checked from the WRITTEN lists' codes column (one
-    // narrow columnar scan — no second encode pass over the corpus),
-    // BEFORE the codebooks land, so a failed build is loudly unservable
-    // (missing _codebook/_pq_codebook) rather than silently lossy.
+    // sum would skip. Checked from the STAGED lists' codes column (one
+    // narrow columnar scan — no second encode pass over the corpus), so a
+    // lossy build never commits.
     if (pq.isDefined) {
-      val badCodes = emb.sparkSession.read
-        .option("basePath", dir).parquet(dir + "/centroid_id=*")
+      val badCodes = readLists(emb.sparkSession, dst.toString)
         .filter(exists(col("codes"), _.isNull) || col("codes").isNull).count()
       require(badCodes == 0,
         s"ivf build: $badCodes vector(s) encode to null PQ codes (null or " +
-          "wrong-dim input vs the pq codebook) — refusing to publish the " +
-          "codebooks; fix the input and rebuild")
+          "wrong-dim input vs the pq codebook) — refusing to commit the " +
+          "store; fix the input and rebuild")
     }
     // nlist rows — one file keeps the serving read a single footer fetch
-    cents.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir + "/_codebook")
-    // m·ksub rows (KBs), same single-file discipline; last in the write
-    // order, so a crash anywhere leaves [[adcTopK]] failing loudly on a
-    // missing codebook, never serving codes against the wrong one
+    cents.coalesce(1).write.parquet(s"$dst/_codebook")
+    // m·ksub rows (KBs), same single-file discipline
     pq.foreach(cb => graft.operators.ProductQuantizer
       .codebooksToDF(emb.sparkSession, cb)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir + PqDir))
+      .coalesce(1).write.parquet(dst.toString + PqDir))
   }
 
-  private val PqDir = "/_pq_codebook"
+  /** Write list rows, which carry their `centroid_id` and `ingest_batch`,
+    * as leaves into the stage `dst`, beside whatever it carries. */
+  private def writeLeaves(rows: DataFrame, dst: Path): Unit =
+    rows.write.mode(SaveMode.Append)
+      .partitionBy("centroid_id", BatchCol).parquet(dst.toString)
 
-  /** The list scan of a resolved snapshot, GLOB-SCOPED to the list
-    * partitions: partition discovery must never walk sibling artifacts —
-    * in particular a snapshot materializing beside a flat layout
-    * mid-[[rebuild]] (a bare read of the root would see two conflicting
-    * directory structures and fail the reader the rebuild is specifically
-    * designed not to disturb). */
+  /** The list scan of a resolved snapshot, SCOPED to the list partitions
+    * ([[graft.streaming.RegistryIO.partitionPaths]]): partition discovery
+    * never walks the codebooks or the `_folded` registry beside them. */
   private def readLists(spark: SparkSession, root: String): DataFrame =
-    spark.read.option("basePath", root).parquet(root + "/centroid_id=*")
+    spark.read.option("basePath", root)
+      .parquet(RegistryIO.partitionPaths(root, "centroid_id="): _*)
 
-  /** Blue/green rebuild. [[build]] overwrites in place, so a reader
-    * mid-overwrite sees a torn store: fine for first builds and offline
-    * pipelines, fatal for a serving store that q120's drift report just
-    * told to re-center. `rebuild` instead builds the whole store (lists +
-    * `_codebook` + `_pq_codebook`) into a [[VersionedDir]] stage and
-    * commits it as the next snapshot; see [[VersionedDir]] for the commit,
-    * crash and retention rules. Every read path resolves ONCE per serving
-    * call ([[VersionedDir.resolveDir]]) and stays on that snapshot, so a
-    * flip mid-query is whole-store-before or whole-store-after. A crashed
-    * rebuild's snapshot is never served, and a concurrent rebuild loses
-    * with [[graft.queue.ConcurrentWriterException]]. From version 2 on,
-    * the flat layout is two generations stale and is dropped. Appends
-    * racing a rebuild land in the version current when they resolved —
-    * the standard rebuild contract: quiesce the sink across the flip, or
-    * re-ingest the window after (same contract as re-centering itself,
-    * which the rebuild's fresh assignment pass subsumes). Returns the
-    * committed version. */
+  /** Build the whole store (lists + `_codebook` + `_pq_codebook`) from an
+    * empty base into a [[VersionedDir]] stage and commit it as the next
+    * snapshot — the one commit skeleton every mutation of this store runs
+    * ([[VersionedDir.commitNext]]; see [[VersionedDir]] for the commit,
+    * crash and retention rules). Every read path resolves ONCE per
+    * serving call ([[VersionedDir.resolveDir]]) and stays on that
+    * snapshot, so a flip mid-query is whole-store-before or
+    * whole-store-after, and a superseded snapshot stays readable for
+    * [[VersionedDir.ReaderGraceMs]]. A crashed rebuild's snapshot is never
+    * served, and a writer that loses the race — a concurrent rebuild, or
+    * an append or delete that resolved the old snapshot — gets
+    * [[graft.queue.ConcurrentWriterException]] rather than landing in a
+    * superseded snapshot; the loser re-runs against the new one. Returns
+    * the committed version. */
   def rebuild(emb: DataFrame, dir: String, nlist: Int = 16,
               codebook: Option[DataFrame] = None,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              pq: Option[graft.operators.ProductQuantizer.Codebooks] = None): Long = {
-    val base = VersionedDir.resolve(java.nio.file.Paths.get(dir))
-    val stage = VersionedDir.stage(base)
-    build(emb, stage.toString, nlist, codebook, idCol, vecCol, pq)
-    val live = VersionedDir.commit(base, stage)
-    if (live.version >= 2L) {
-      val s = java.nio.file.Files.list(base.root)
-      val flat = try s.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("centroid_id=") || n == "_codebook" || n == "_pq_codebook"
-        }.toList finally s.close()
-      flat.foreach(graft.queue.Maintenance.deleteRec)
-    }
-    live.version
-  }
+              pq: Option[graft.operators.ProductQuantizer.Codebooks] = None): Long =
+    commitNext(dir) { s =>
+      stageStore(emb, s.dst, nlist, codebook, idCol, vecCol, pq); true
+    }.get.version
 
   /** True iff the store at `dir` was built with PQ codes ([[build]] with
-    * `pq`) — i.e. `_pq_codebook/` exists WITH committed data files (a torn
-    * write that created the dir but no files must read as "no PQ", so
-    * [[pqCodebook]] raises its rebuild-with-pq message instead of an
-    * obscure empty-read failure). Hadoop-FS-general, like every other
-    * store-layout check. */
+    * `pq`), i.e. its snapshot has a `_pq_codebook/`. Hadoop-FS-general,
+    * like every other store-layout check. */
   def hasPq(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(VersionedDir.resolveDir(dir) + PqDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   private val pqCodebookMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.ProductQuantizer.Codebooks]()
 
   /** The persisted PQ codebooks — fails loudly when the store was built
-    * without PQ (or a crash tore the build before the codebook landed).
-    * Memoized per (session, resolved root) like [[codebookRows]] and for
-    * the same reason: the ADC faces re-read this KB-scale relation per
-    * serve, and no in-place maintenance path mutates `_pq_codebook`. */
+    * without PQ. Memoized per (session, [[writtenAs]]) like
+    * [[codebookRows]] and for the same reason: the ADC faces and every
+    * append re-read this KB-scale relation. */
   def pqCodebook(spark: SparkSession, dir: String)
       : graft.operators.ProductQuantizer.Codebooks = {
     val root = VersionedDir.resolveDir(dir)
-    def read() = {
-      require(hasPq(spark, root),
-        s"ivf store at $dir has no _pq_codebook — built without PQ, or the " +
-          "build crashed before the codebook write; rebuild with pq=Some(...)")
-      graft.operators.ProductQuantizer.codebooksFromDF(
-        spark.read.parquet(root + PqDir))
-    }
+    require(hasPq(spark, root),
+      s"ivf store at $dir has no _pq_codebook — built without PQ; " +
+        "rebuild with pq=Some(...)")
+    def read() = graft.operators.ProductQuantizer.codebooksFromDF(
+      spark.read.parquet(root + PqDir))
     if (sys.env.contains("SPARK_GRAFT_NOCACHE")) read()
-    else pqCodebookMemo.computeIfAbsent((spark, root), _ => read())
+    else pqCodebookMemo.computeIfAbsent((spark, writtenAs(spark, root + PqDir)), _ => read())
+  }
+
+  /** The name of the first data file under `relDir`, the key of the
+    * codebook memos: every write names its files afresh (a job UUID), and
+    * a commit carries an untouched codebook by hard link under the same
+    * name, so the key holds across appends, deletes and merges and
+    * changes with every build. Hadoop-FS-general, one driver listing. */
+  private def writtenAs(spark: SparkSession, relDir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(relDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+      .min
   }
 
   /** The persisted codebook: (centroid_id, cvec), nlist rows. */
@@ -206,15 +191,14 @@ object IvfIndexStore {
     spark.read.parquet(VersionedDir.resolveDir(dir) + "/_codebook")
 
   /** Driver-resident copy of the KB-scale coarse codebook, memoized per
-    * (session, RESOLVED root). Probe selection runs per serve; reading
+    * (session, [[writtenAs]]). Probe selection runs per serve; reading
     * nlist rows through a distributed scan job every time was pure serve
     * latency (r21: one job per probeLists call, two per batch serve).
-    * The resolved root is version-specific ([[rebuild]] flips to a new
-    * root = a new memo key) and no in-place maintenance path touches
-    * `_codebook` (deletes rewrite leaves, appends encode against the
-    * frozen codebook, merges fold leaves), so the memo can never serve a
-    * stale codebook. In-memory, per-JVM, first consumer pays the read —
-    * the SharedStages discipline, with the same A/B knob. */
+    * The key names the codebook's written file, which only a build
+    * replaces, so the memo can never serve a stale codebook, and a commit
+    * that carries the codebook (an append, delete or merge) keeps it warm.
+    * In-memory, per-JVM, first consumer pays the read — the SharedStages
+    * discipline, with the same A/B knob. */
   private val codebookMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[(Long, Array[Float])]]()
 
@@ -224,7 +208,8 @@ object IvfIndexStore {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     if (sys.env.contains("SPARK_GRAFT_NOCACHE")) read()
-    else codebookMemo.computeIfAbsent((spark, root), _ => read())
+    else codebookMemo.computeIfAbsent(
+      (spark, writtenAs(spark, root + "/_codebook")), _ => read())
   }
 
   /** Driver-side mirror of [[graft.functions.FloatVectorDot]] + the
@@ -629,45 +614,43 @@ object IvfIndexStore {
     * Rewrite, not tombstones, and ONLY the affected leaves: the scan that
     * finds the deleted ids' `(centroid_id, ingest_batch)` leaves pushes
     * `In(idCol, ids)` to parquet (row-group stats skip everything else),
-    * then each affected leaf — at most |ids| of them — rewrites through
-    * the established rename-aside swap ([[graft.queue.Maintenance
-    * .replaceDir]]); a leaf left empty is removed outright. Tombstones
-    * were rejected deliberately: every serving path ([[topK]], [[adcTopK]],
-    * both batch forms, [[qualityReport]]) is a pure scan, and a tombstone
-    * design would tax each of them with an anti-join forever to spare the
-    * rare delete a bounded rewrite.
+    * then the next snapshot carries every untouched leaf by link and
+    * rewrites the survivors of all affected leaves — at most |ids| of
+    * them — in ONE partitioned write, whatever their number; a leaf left
+    * empty is simply not written. Tombstones were rejected deliberately:
+    * every serving path ([[topK]], [[adcTopK]], both batch forms,
+    * [[qualityReport]]) is a pure scan, and a tombstone design would tax
+    * each of them with an anti-join forever to spare the rare delete a
+    * bounded rewrite.
     *
-    * Swap atomicity is PER LEAF: a reader racing the delete can observe
-    * some leaves rewritten and others not yet — deletes apply id-by-id,
-    * never a torn file (whole-store atomicity is [[rebuild]]'s versioned
-    * flip). Idempotent: re-deleting the same ids finds no affected
-    * leaves. `ids` is a driver-side request payload by contract (the
-    * [[topKBatch]] discipline — takedowns arrive as bounded lists, not
-    * relations). Returns the number of vector rows removed. */
+    * One commit: a reader sees the store before or after the whole delete.
+    * Idempotent: re-deleting the same ids finds no affected leaves and
+    * commits nothing. `ids` is a driver-side request payload by contract
+    * (the [[topKBatch]] discipline — takedowns arrive as bounded lists,
+    * not relations). Returns the number of vector rows removed. */
   def delete(spark: SparkSession, dir: String, ids: Seq[Long],
              idCol: String = "vec_id"): Long = {
     require(ids.nonEmpty, "ivf delete: empty id list")
-    val root = VersionedDir.resolveDir(dir) // deletions land in the CURRENT version
-    val affected = readLists(spark, root)
-      .filter(col(idCol).isin(ids: _*))
-      .select(col("centroid_id").cast("long"), col(BatchCol).cast("long"))
-      .groupBy(col("centroid_id"), col(BatchCol))
-      .agg(count(lit(1)).as("n"))
-      // bounded driver pull: ≤ |ids| leaves
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    def leafKey(c: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      concat(lit("centroid_id="), c.cast("string"), lit(s"/$BatchCol="), b.cast("string"))
     var deleted = 0L
-    affected.foreach { case (cid, b, n) =>
-      val leaf = s"$root/centroid_id=$cid/$BatchCol=$b"
-      val keep = spark.read.parquet(leaf).filter(!col(idCol).isin(ids: _*))
-      if (keep.isEmpty) {
-        graft.queue.Maintenance.deleteRec(java.nio.file.Paths.get(leaf))
-      } else {
-        val lp = java.nio.file.Paths.get(leaf)
-        val tmp = lp.resolveSibling("." + lp.getFileName.toString + ".swap").toString
-        keep.write.mode(SaveMode.Overwrite).parquet(tmp)
-        graft.queue.Maintenance.replaceDir(tmp, leaf)
+    commitNext(dir) { s =>
+      val affected = readLists(spark, s.src)
+        .filter(col(idCol).isin(ids: _*))
+        .groupBy(leafKey(col("centroid_id"), col(BatchCol)).as("leaf"))
+        .agg(count(lit(1)).as("n"))
+        // bounded driver pull: ≤ |ids| leaves
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      deleted = affected.values.sum
+      affected.nonEmpty && {
+        s.carry(affected.contains)
+        // a filter on the partition columns only: the scan lists just
+        // the affected leaves
+        writeLeaves(readLists(spark, s.src)
+          .filter(leafKey(col("centroid_id"), col(BatchCol)).isin(affected.keys.toSeq: _*))
+          .filter(!col(idCol).isin(ids: _*)), s.dst)
+        true
       }
-      deleted += n
     }
     deleted
   }
@@ -766,19 +749,28 @@ object IvfIndexStore {
   private[sources] val BatchCol = "ingest_batch"
 
   /** The leaf-merge fold registry: batch ids folded by [[mergeLeaves]]
-    * (one per line at the resolved root). A replayed folded batch must be
-    * refused — its rows already live in a merged leaf, and the dynamic
-    * partition overwrite would file a SECOND copy under the original
-    * batch id beside them. */
+    * (one per line at the snapshot root). A replayed folded batch must be
+    * refused — its rows already live in a merged leaf, and the replay's
+    * own leaves would file a SECOND copy under the original batch id
+    * beside them. */
   private val FoldedMarker = "_folded"
 
   private def foldedBatches(root: String): Set[Long] = {
-    val m = java.nio.file.Paths.get(root, FoldedMarker)
-    if (!java.nio.file.Files.exists(m)) Set.empty
-    else new String(java.nio.file.Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val m = Paths.get(root, FoldedMarker)
+    if (!Files.exists(m)) Set.empty
+    else new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
       .split("\n").filter(_.nonEmpty).map(_.toLong).toSet
   }
+
+  /** A leaf of the layout (`centroid_id=C/ingest_batch=N`) as a path
+    * relative to the snapshot root; the group is its batch id. */
+  private val LeafRel = s"""centroid_id=[^/]+/$BatchCol=(-?\\d+)""".r
+
+  /** Every leaf of the layout at `root`, by its path relative to it. */
+  private def leafRels(root: String): Seq[String] =
+    RegistryIO.childNames(root, "centroid_id=").flatMap { c =>
+      RegistryIO.childNames(s"$root/$c", s"$BatchCol=").map(l => s"$c/$l")
+    }
 
   /** LEVELED LEAF MERGE — the postings store's batch-count discipline
     * ([[graft.sources.PostingsStore.compactLevel]]) applied to this
@@ -791,216 +783,122 @@ object IvfIndexStore {
     * count back to `maxBatches` — into ONE new batch per touched list
     * (a fresh negative id below build's -1, so no stream id ever
     * collides), leaving every other leaf byte-identical. No re-cluster,
-    * no codebook change, no row is re-assigned: the merge is
-    * CONTENT-NEUTRAL, which is why per-list swap atomicity suffices —
-    * a reader racing the merge sees each list whole-old or whole-new
-    * through the rename-aside swap, and either layout serves identical
-    * results ([[delete]]'s documented granularity). Folded original ids
-    * enter the `_folded` registry BEFORE any swap, so a post-crash
-    * replay of a folded batch is refused loudly by [[appendBatch]]
-    * instead of double-filing; a crash mid-merge leaves some lists
-    * merged and others not — still content-identical — and the next
-    * call converges. [[qualityReport]] sees a merged batch as one row
-    * (its per-original-batch drift attribution folds with it — the
-    * documented trade; run the report before merging if per-append
-    * attribution matters). Returns true iff a fold ran. */
+    * no codebook change, no row is re-assigned, so either layout serves
+    * identical results. The next snapshot carries the kept leaves by
+    * link, writes the folded batch in one job, and records the folded
+    * ids in a fresh `_folded` registry — all one commit, so a replay of
+    * a folded batch is refused loudly by [[appendBatch]] exactly when
+    * the merged leaf is live. [[qualityReport]] sees a merged batch as
+    * one row (its per-original-batch drift attribution folds with it —
+    * the documented trade; run the report before merging if per-append
+    * attribution matters). Returns true iff a fold ran; a no-op call
+    * commits nothing. */
   def mergeLeaves(spark: SparkSession, dir: String,
                   maxBatches: Int = 8): Boolean = {
     require(maxBatches >= 2, "ivf mergeLeaves: maxBatches must be >= 2")
-    val root = VersionedDir.resolveDir(dir)
-    val rp = java.nio.file.Paths.get(root)
-    // heal any centroid-level aside a crashed merge left mid-swap
-    if (java.nio.file.Files.exists(rp)) {
-      val s = java.nio.file.Files.list(rp)
-      try {
-        val names = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.startsWith(".centroid_id=") && n.endsWith(".old"))
-            names += n.stripPrefix(".").stripSuffix(".old")
+    commitNext(dir) { s =>
+      // batch census from the layout (metadata-scale directory walk)
+      val sizeByBatch = leafRels(s.src).groupBy { case LeafRel(b) => b.toLong }
+        .map { case (b, ls) => b -> ls.map(l => PostingsStore.treeBytes(Paths.get(s.src, l))).sum }
+      sizeByBatch.size > maxBatches && {
+        val fold = sizeByBatch.toSeq.sortBy { case (b, sz) => (sz, b) }
+          .take(sizeByBatch.size - maxBatches + 1).map(_._1)
+        val newId = (sizeByBatch.keySet + -1L).min - 1L
+        s.carry {
+          case LeafRel(b) => fold.contains(b.toLong)
+          case rel => rel == FoldedMarker
         }
-        names.foreach(n => graft.queue.Maintenance.healAside(rp.resolve(n)))
-      } finally s.close()
-    }
-    // batch census from the layout (metadata-scale directory walk)
-    def centroidDirs: Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(rp)
-      try {
-        val b = Seq.newBuilder[java.nio.file.Path]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          if (c.getFileName.toString.startsWith("centroid_id=")) b += c
-        }
-        b.result()
-      } finally s.close()
-    }
-    def leavesOf(c: java.nio.file.Path): Seq[(Long, java.nio.file.Path)] = {
-      val s = java.nio.file.Files.list(c)
-      try {
-        val b = Seq.newBuilder[(Long, java.nio.file.Path)]
-        val it = s.iterator()
-        while (it.hasNext) {
-          val l = it.next(); val n = l.getFileName.toString
-          if (n.startsWith(s"$BatchCol="))
-            b += ((n.stripPrefix(s"$BatchCol=").toLong, l))
-        }
-        b.result()
-      } finally s.close()
-    }
-    def bytesOf(p: java.nio.file.Path): Long =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try {
-          var sum = 0L; val it = s.iterator()
-          while (it.hasNext) sum += bytesOf(it.next())
-          sum
-        } finally s.close()
-      } else java.nio.file.Files.size(p)
-    val cents = centroidDirs
-    val sizeByBatch = cents.flatMap(leavesOf)
-      .groupBy(_._1).map { case (b, ls) => b -> ls.map(l => bytesOf(l._2)).sum }
-    if (sizeByBatch.size <= maxBatches) return false
-    val fold = sizeByBatch.toSeq.sortBy { case (b, sz) => (sz, b) }
-      .take(sizeByBatch.size - maxBatches + 1).map(_._1)
-    val newId = (sizeByBatch.keySet + -1L).min - 1L
-    // the replay tripwire lands BEFORE any swap: from here on, a replay
-    // of a folded batch is refused rather than double-filed
-    java.nio.file.Files.write(rp.resolve(FoldedMarker),
-      (foldedBatches(root) ++ fold).toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // ONE job folds every touched list's victim rows, clustered by list
-    val stage = rp.resolve(".merge_stage")
-    graft.queue.Maintenance.deleteRec(stage)
-    readLists(spark, root)
-      .filter(col(BatchCol).isin(fold: _*))
-      .drop(BatchCol)
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").parquet(stage.toString)
-    // per touched list: new dir = merged leaf + links of kept leaves,
-    // swapped in whole (readers see the list old or new, never mixed)
-    cents.foreach { c =>
-      val ls = leavesOf(c)
-      if (ls.exists(l => fold.contains(l._1))) {
-        val tmp = c.resolveSibling("." + c.getFileName.toString + ".swap")
-        graft.queue.Maintenance.deleteRec(tmp)
-        java.nio.file.Files.createDirectories(tmp)
-        ls.filterNot(l => fold.contains(l._1)).foreach { case (b, l) =>
-          linkTree(l, tmp.resolve(s"$BatchCol=$b"))
-        }
-        val staged = stage.resolve(c.getFileName.toString)
-        if (java.nio.file.Files.exists(staged))
-          linkTree(staged, tmp.resolve(s"$BatchCol=$newId"))
-        graft.queue.Maintenance.replaceDir(tmp.toString, c.toString)
+        // ONE job folds every touched list's victim rows, clustered by list
+        writeLeaves(readLists(spark, s.src)
+          .filter(col(BatchCol).isin(fold: _*))
+          .withColumn(BatchCol, lit(newId))
+          .repartition(col("centroid_id")), s.dst)
+        Files.write(s.dst.resolve(FoldedMarker),
+          (foldedBatches(s.src) ++ fold).toSeq.sorted.mkString("\n")
+            .getBytes(StandardCharsets.UTF_8), StandardOpenOption.CREATE_NEW)
+        true
       }
-    }
-    graft.queue.Maintenance.deleteRec(stage)
-    true
-  }
-
-  /** Hard-link `src` under `dst` per file (copy where links are refused)
-    * — [[mergeLeaves]]' zero-byte carry of kept leaves. Safe: list files
-    * are immutable once written (every mutation swaps whole dirs). */
-  private def linkTree(src: java.nio.file.Path,
-                       dst: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(src)) {
-      java.nio.file.Files.createDirectories(dst)
-      val s = java.nio.file.Files.list(src)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          linkTree(c, dst.resolve(c.getFileName.toString))
-        }
-      } finally s.close()
-    } else {
-      java.nio.file.Files.createDirectories(dst.getParent)
-      try java.nio.file.Files.createLink(dst, src)
-      catch {
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-          java.nio.file.Files.copy(src, dst)
-      }
-    }
+    }.isDefined
   }
 
   /** One append step, keyed by `batchId` — [[sink]]'s per-micro-batch body,
     * public because batch pipelines (a scheduled backfill, a q120-style
     * fixture) append with exactly the same replay contract: same batchId →
-    * same deterministic assignment → rewrite, never a second copy. */
+    * same deterministic assignment → rewrite, never a second copy. The
+    * next snapshot carries every leaf but this batch's own by link and
+    * writes the batch's leaves fresh. */
   def appendBatch(batch: DataFrame, dir: String,
                                    batchId: Long, idCol: String = "vec_id",
                                    vecCol: String = "embedding"): Unit = {
     require(batch.columns.contains(idCol) && batch.columns.contains(vecCol),
       s"ivf sink: batch lacks '$idCol'/'$vecCol' (schema drift upstream?) " +
         s"— columns: ${batch.columns.mkString(", ")}")
-    // ONE manifest resolution for the whole append: codebook, drift gate,
-    // and the write all land in the same version snapshot (appends racing
-    // a rebuild follow the quiesce contract in [[rebuild]]'s scaladoc)
-    val root = VersionedDir.resolveDir(dir)
-    require(!foldedBatches(root).contains(batchId),
-      s"ivf store at $dir: batch $batchId was already folded by " +
-        "mergeLeaves() - replaying it would file a second copy of its " +
-        "vectors beside the merged leaf; resolve the stream checkpoint " +
-        "instead")
-    // the codebook is FROZEN at build time (standard IVF maintenance:
-    // appends assign against the existing centroids; re-centering is an
-    // offline rebuild) — a missing store fails loudly here
-    val cents = codebook(batch.sparkSession, root)
-    // checkpoint the assignment so the rows VALIDATED below are the same
-    // materialization as the rows WRITTEN — a foreachBatch source that
-    // re-read differently between the two actions could otherwise pass
-    // validation on one snapshot and file a different one
-    val assigned = Similarity.ivfAssignWith(batch, cents, idCol, vecCol)
-      .localCheckpoint()
-    // a vector whose length differs from the codebook's dims (or a null
-    // vector) dots to NULL against EVERY centroid — the argmax carries
-    // that through as a null cdot_q. Fail loudly instead of filing
-    // garbage under an arbitrary list.
-    val bad = assigned.filter(col("cdot_q").isNull).count()
-    require(bad == 0,
-      s"ivf sink: $bad vector(s) in batch $batchId have null/mismatched " +
-        "dims vs the store's codebook; appending would corrupt the lists")
-    // a PQ-built store's appends must carry codes too (the ADC serving
-    // scan reads every batch of a probed list — a codeless append would
-    // surface as null approx scores); encoding uses the store's FROZEN
-    // PQ codebook, the same maintenance contract as the coarse centroids
-    val withCodes =
-      if (hasPq(batch.sparkSession, root)) {
-        val cb = pqCodebook(batch.sparkSession, root)
-        val coded = assigned.withColumn("codes",
-          graft.operators.ProductQuantizer.codesCol(batch.sparkSession, cb, vecCol))
-        // dims vs the COARSE codebook already gated above; a PQ codebook
-        // whose m·subDim disagrees with the store's vectors would null
-        // every code — fail loudly rather than file unscannable rows
-        val badCodes = coded
-          .filter(exists(col("codes"), _.isNull) || col("codes").isNull).count()
-        require(badCodes == 0,
-          s"ivf sink: $badCodes vector(s) in batch $batchId encode to null " +
-            "PQ codes (pq codebook dims disagree with the store's vectors)")
-        coded.drop("cdot_q")
-      } else assigned.drop("cdot_q")
-    // layout drift gate (the VariantEventStore discipline): appended rows
-    // must carry exactly the store's columns — a batch missing a metadata
-    // column the build carried (or inventing a new one) would file
-    // mixed-schema leaves no reader can trust, silently. Derived from ONE
-    // data file's footer — a full spark.read.parquet(dir) here would pay
-    // a store-wide file listing + schema merge on every micro-batch tick,
-    // a cost that grows with the store as batches accumulate.
-    val storeCols = storeColumns(batch.sparkSession, root)
-    val outCols = withCodes.columns.toSet + BatchCol
-    require(outCols == storeCols,
-      s"ivf sink: batch $batchId columns ${outCols.mkString(", ")} drift " +
-        s"from the store layout ${storeCols.mkString(", ")}")
-    // dynamic partition overwrite on (list, batch): an at-least-once
-    // replay re-derives the SAME deterministic assignment and REWRITES
-    // its own (centroid_id, ingest_batch=N) partitions instead of
-    // appending a second copy
-    withCodes
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("centroid_id", BatchCol).parquet(root)
+    // codebook, drift gate and the carried leaves all come from the one
+    // base snapshot; a commit racing the append makes it lose with
+    // ConcurrentWriterException instead of filing into a superseded one
+    commitNext(dir) { s =>
+      val root = s.src
+      require(!foldedBatches(root).contains(batchId),
+        s"ivf store at $dir: batch $batchId was already folded by " +
+          "mergeLeaves() - replaying it would file a second copy of its " +
+          "vectors beside the merged leaf; resolve the stream checkpoint " +
+          "instead")
+      // the codebook is FROZEN at build time (standard IVF maintenance:
+      // appends assign against the existing centroids; re-centering is an
+      // offline rebuild) — a missing store fails loudly here
+      val cents = codebook(batch.sparkSession, root)
+      // checkpoint the assignment so the rows VALIDATED below are the same
+      // materialization as the rows WRITTEN — a foreachBatch source that
+      // re-read differently between the two actions could otherwise pass
+      // validation on one snapshot and file a different one
+      val assigned = Similarity.ivfAssignWith(batch, cents, idCol, vecCol)
+        .localCheckpoint()
+      // a vector whose length differs from the codebook's dims (or a null
+      // vector) dots to NULL against EVERY centroid — the argmax carries
+      // that through as a null cdot_q. Fail loudly instead of filing
+      // garbage under an arbitrary list.
+      val bad = assigned.filter(col("cdot_q").isNull).count()
+      require(bad == 0,
+        s"ivf sink: $bad vector(s) in batch $batchId have null/mismatched " +
+          "dims vs the store's codebook; appending would corrupt the lists")
+      // a PQ-built store's appends must carry codes too (the ADC serving
+      // scan reads every batch of a probed list — a codeless append would
+      // surface as null approx scores); encoding uses the store's FROZEN
+      // PQ codebook, the same maintenance contract as the coarse centroids
+      val withCodes =
+        if (hasPq(batch.sparkSession, root)) {
+          val cb = pqCodebook(batch.sparkSession, root)
+          val coded = assigned.withColumn("codes",
+            graft.operators.ProductQuantizer.codesCol(batch.sparkSession, cb, vecCol))
+          // dims vs the COARSE codebook already gated above; a PQ codebook
+          // whose m·subDim disagrees with the store's vectors would null
+          // every code — fail loudly rather than file unscannable rows
+          val badCodes = coded
+            .filter(exists(col("codes"), _.isNull) || col("codes").isNull).count()
+          require(badCodes == 0,
+            s"ivf sink: $badCodes vector(s) in batch $batchId encode to null " +
+              "PQ codes (pq codebook dims disagree with the store's vectors)")
+          coded.drop("cdot_q")
+        } else assigned.drop("cdot_q")
+      // layout drift gate (the VariantEventStore discipline): appended rows
+      // must carry exactly the store's columns — a batch missing a metadata
+      // column the build carried (or inventing a new one) would file
+      // mixed-schema leaves no reader can trust, silently. Derived from ONE
+      // data file's footer — a full spark.read.parquet(dir) here would pay
+      // a store-wide file listing + schema merge on every micro-batch tick,
+      // a cost that grows with the store as batches accumulate.
+      val storeCols = storeColumns(batch.sparkSession, root)
+      val outCols = withCodes.columns.toSet + BatchCol
+      require(outCols == storeCols,
+        s"ivf sink: batch $batchId columns ${outCols.mkString(", ")} drift " +
+          s"from the store layout ${storeCols.mkString(", ")}")
+      // an at-least-once replay re-derives the SAME deterministic
+      // assignment and REPLACES its own (centroid_id, ingest_batch=N)
+      // leaves instead of filing a second copy
+      s.carry { case LeafRel(b) => b.toLong == batchId; case _ => false }
+      writeLeaves(withCodes.withColumn(BatchCol, lit(batchId)), s.dst)
+      true
+    }
   }
 
   /** Streaming face of [[build]]: assign each micro-batch of new vectors
@@ -1010,9 +908,9 @@ object IvfIndexStore {
     * per tick.
     *
     *   - REPLAY-SAFE: each batch lands in its own
-    *     `centroid_id=&lt;list&gt;/ingest_batch=N` leaves via dynamic partition
-    *     overwrite — a foreachBatch replay after a crash-before-checkpoint
-    *     rewrites its own partitions (assignment is deterministic), never
+    *     `centroid_id=&lt;list&gt;/ingest_batch=N` leaves, committed as one
+    *     snapshot — a foreachBatch replay after a crash-before-checkpoint
+    *     replaces its own leaves (assignment is deterministic), never
     *     double-counts;
     *   - DRIFT-SAFE, fail-loud: a batch missing the id/vector columns, or
     *     carrying vectors whose dims don't match the codebook, aborts the
@@ -1020,7 +918,13 @@ object IvfIndexStore {
     *   - the codebook is frozen (appends never move existing vectors);
     *     recall drift under a shifting distribution is the documented
     *     trade — SCALE.md's recall curve is the instrument, rebuild the
-    *     remedy.
+    *     remedy;
+    *   - COST grows with the store: every micro-batch hard-links every
+    *     file of the base snapshot into its stage, so a tick's link step
+    *     is linear in the store's leaf count and an unmerged stream's
+    *     total link work quadratic in its batch count. Run
+    *     [[mergeLeaves]] every few batches on a long stream: it holds the
+    *     batch count, and with it the files linked per tick, at its cap.
     *
     * Caller starts the query and picks trigger/checkpoint options. */
   def sink(vecStream: DataFrame, dir: String, idCol: String = "vec_id",
@@ -1031,17 +935,13 @@ object IvfIndexStore {
         appendBatch(batch, dir, batchId, idCol, vecCol)
     }
 
-  private val layoutMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
   /** Battery-entry helper ([[ShardWriter.layoutFor]]'s pattern): build the
     * index for (`sfDir`, `nlist`) once per session and return its path —
-    * q112 runs three bench passes over one build. The memo records a
-    * write only AFTER it succeeds; single-threaded callers only
-    * (Verify/Bench run the battery sequentially). */
+    * q112 runs three bench passes over one build. */
   def layoutFor(spark: SparkSession, sfDir: String, emb: DataFrame,
                 nlist: Int): String =
-    layoutImpl(spark, sfDir, emb, nlist, withPq = false)
+    batteryLayout(spark, s"$sfDir|nlist$nlist", s"nlist${nlist}_$sfDir")(
+      build(emb, _, nlist))
 
   /** [[layoutFor]]'s PQ twin — one PQ-coded build per (`sfDir`, `nlist`)
     * per session, shared by q118's bench passes. The PQ codebooks are the
@@ -1049,23 +949,29 @@ object IvfIndexStore {
     * so the DuckDB oracle replays every code. */
   def layoutForPq(spark: SparkSession, sfDir: String, emb: DataFrame,
                   nlist: Int): String =
-    layoutImpl(spark, sfDir, emb, nlist, withPq = true)
+    batteryLayout(spark, s"$sfDir|nlist$nlist|pq", s"pq_nlist${nlist}_$sfDir")(
+      build(emb, _, nlist, pq = Some(graft.operators.ProductQuantizer
+        .train(emb, m = 8, ksub = 16, iters = 0))))
 
-  private def layoutImpl(spark: SparkSession, sfDir: String, emb: DataFrame,
-                         nlist: Int, withPq: Boolean): String = {
-    val keyStr = s"$sfDir|nlist$nlist" + (if (withPq) "|pq" else "")
+  private val layoutMemo =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+
+  /** The battery's store for `key` under `/tmp/graft-ivf-store2/` (the
+    * digest of `key`, then `label`), seeded by `seed` once per session:
+    * the seed commits its build as the store's next snapshot, so a warm
+    * /tmp store is rebuilt, never appended to twice. The memo records a
+    * seed only AFTER it succeeds; single-threaded callers only
+    * (Verify/Bench run the battery sequentially). */
+  private[graft] def batteryLayout(spark: SparkSession, key: String, label: String)
+                                  (seed: String => Unit): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(keyStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(key.getBytes(StandardCharsets.UTF_8))
       .take(4).map("%02x".format(_)).mkString
-    val dir = "/tmp/graft-ivf-store/" + digest + "_" +
-      ((if (withPq) "pq_" else "") + s"nlist${nlist}_" + sfDir)
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = (spark, keyStr)
-    if (!layoutMemo.contains(key)) {
-      val pq = if (withPq) Some(graft.operators.ProductQuantizer
-        .train(emb, m = 8, ksub = 16, iters = 0)) else None
-      build(emb, dir, nlist, pq = pq)
-      layoutMemo.add(key)
+    val dir = s"/tmp/graft-ivf-store2/${digest}_" +
+      label.replaceAll("[^A-Za-z0-9._-]", "_")
+    if (!layoutMemo.contains((spark, key))) {
+      seed(dir)
+      layoutMemo.add((spark, key))
     }
     dir
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.operators.{Retrieval, TextAnalysis}
 import graft.queue.{Maintenance, VersionedDir}
+import graft.queue.VersionedDir.{Stage, commitNext}
 import graft.streaming.{IncrementalContainment, RegistryIO}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
@@ -9,7 +10,6 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSess
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
-import scala.util.DynamicVariable
 
 /** Persisted inverted index (postings store) — the SPARSE serving twin of
   * [[IvfIndexStore]]: [[graft.operators.Retrieval.bm25TopK]] must
@@ -93,19 +93,19 @@ import scala.util.DynamicVariable
   * `v<N>-<hex>/` under the store root, and every mutation — [[build]],
   * [[appendBatch]], [[deleteDocs]], [[compact]], [[compactLevel]], one
   * [[sink]] micro-batch — commits the next snapshot through the same
-  * skeleton ([[commitNext]]): resolve the base, stage the whole next
-  * layout in a private dot-prefixed dir (untouched files carried by HARD
-  * LINK — metadata ops, zero data bytes; new and rewritten leaves written
-  * fresh), commit once. Nothing writes into a committed snapshot, so
-  * every snapshot is immutable: each serving face resolves ONCE per call
-  * and reads only that dir, and a commit racing it is whole-old or
-  * whole-new. Every batch of a snapshot is committed, so no serve needs a
-  * completeness gate, and a crash at any step leaves the old snapshot
-  * plus stage dirs that retention sweeps — there is no repair step.
-  * Retention keeps every snapshot for [[ReaderGraceMs]] after a commit
-  * supersedes it, however many commits follow: a serve, or a serve
-  * DataFrame collected later, reads its snapshot for that long. Past the
-  * grace the snapshot is swept, and a read of it fails loudly rather
+  * skeleton ([[graft.queue.VersionedDir.commitNext]]): resolve the base,
+  * stage the whole next layout in a private dot-prefixed dir (untouched
+  * files carried by HARD LINK — metadata ops, zero data bytes; new and
+  * rewritten leaves written fresh), commit once. Nothing writes into a
+  * committed snapshot, so every snapshot is immutable: each serving face
+  * resolves ONCE per call and reads only that dir, and a commit racing it
+  * is whole-old or whole-new. Every batch of a snapshot is committed, so no
+  * serve needs a completeness gate, and a crash at any step leaves the old
+  * snapshot plus stage dirs that retention sweeps — there is no repair
+  * step. Retention keeps every snapshot for [[VersionedDir.ReaderGraceMs]]
+  * after a commit supersedes it, however many commits follow: a serve, or a
+  * serve DataFrame collected later, reads its snapshot for that long. Past
+  * the grace the snapshot is swept, and a read of it fails loudly rather
   * than reading it as empty. A root holding a flat layout (data beside no
   * `_log`, from a writer older than snapshot commits) is refused by every
   * mutation: rebuild it.
@@ -1387,83 +1387,6 @@ object PostingsStore {
     Files.write(dst.resolve(name), body.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE_NEW)
 
-  /** Crash-test seam: called after every step of a commit — `staged`, then
-    * [[VersionedDir.commit]]'s own steps. Scoped to the calling thread. */
-  private[sources] val stepHook = new DynamicVariable[String => Unit](_ => ())
-
-  /** One staging step of a mutation: it reads the layout at `src` (the
-    * base snapshot, or the previous step's stage) and writes the next one
-    * into the private dir `dst`. `linkable` is false only for a store's
-    * first commit, whose version-0 base holds no layout. */
-  private final case class Stage(src: String, dst: Path, linkable: Boolean) {
-    /** Carry `src` into `dst` by hard link, except the subtrees `skip`
-      * names by their path relative to `src`. */
-    def carry(skip: String => Boolean): Unit =
-      if (linkable) linkTree(Paths.get(src), dst, skip)
-  }
-
-  /** How long a superseded snapshot stays readable: a serve that resolved
-    * it before the commit, or a serve DataFrame collected later, reads it
-    * whole for this long, across any number of commits. */
-  private val ReaderGraceMs = 15 * 60 * 1000L
-
-  /** The one mutation skeleton: resolve the base snapshot, run `steps` —
-    * each stages a next layout from the previous step's (the first from
-    * the base) and says whether it staged anything — and commit the last
-    * staged layout ONCE through [[VersionedDir.commit]]. Nothing ever
-    * writes into a committed snapshot. A step that throws leaves only
-    * stage dirs, which retention sweeps. Returns whether a commit ran. */
-  private def commitNext(dir: String, payload: Seq[String] = Nil)
-                        (steps: (Stage => Boolean)*): Boolean = {
-    val base = VersionedDir.resolve(Paths.get(dir.stripSuffix("/")))
-    // a version-0 base stages from nothing: data already in the root is a
-    // flat layout no commit would carry, so refuse rather than hide it
-    require(base.version > 0L ||
-      !RegistryIO.hasData(base.root.toString, Some("ingest_batch=")) &&
-        !Files.exists(base.root.resolve("_stats")),
-      s"postings store at $dir holds a flat layout from before snapshot " +
-        "commits (data in its root, no _log) - rebuild the store from its " +
-        "corpus on the current layout")
-    val staged = steps.foldLeft(Option.empty[Path]) { (prev, step) =>
-      val s = Stage(prev.fold(base.path.toString)(_.toString),
-        VersionedDir.stage(base), prev.isDefined || base.version > 0L)
-      Files.createDirectories(s.dst)
-      if (step(s)) { prev.foreach(Maintenance.deleteRec); Some(s.dst) }
-      else { Maintenance.deleteRec(s.dst); prev }
-    }
-    val onStep = stepHook.value
-    staged.foreach { d =>
-      onStep("staged")
-      VersionedDir.commit(base, d, payload, onStep, ReaderGraceMs)
-    }
-    staged.isDefined
-  }
-
-  /** Recreate `src` under `dst` with a HARD LINK per file (a copy where the
-    * filesystem refuses links), skipping the subtrees `skip` names by
-    * their path relative to the top `src`, and every `_SUCCESS` marker —
-    * a writer appending beside carried files writes its own. Zero data
-    * bytes move, and no carried file is ever written: a stage only adds
-    * and removes whole files. */
-  private def linkTree(src: Path, dst: Path, skip: String => Boolean,
-                       rel: String = ""): Unit = {
-    Files.createDirectories(dst)
-    val s = Files.list(src)
-    val kids = try s.iterator().asScala.toList finally s.close()
-    kids.foreach { c =>
-      val name = c.getFileName.toString
-      val r = if (rel.isEmpty) name else s"$rel/$name"
-      if (!skip(r) && name != "_SUCCESS" && name != "._SUCCESS.crc") {
-        if (Files.isDirectory(c)) linkTree(c, dst.resolve(name), skip, r)
-        else try Files.createLink(dst.resolve(name), c)
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            Files.copy(c, dst.resolve(name))
-        }
-      }
-    }
-  }
-
   /** Fold every batch into one `ingest_batch=-1` layout — re-sorted by
     * key and RE-TIERED globally (the per-batch impact cuts collapse into
     * one corpus-wide cut, so a long-lived store's head tier is the
@@ -1517,7 +1440,7 @@ object PostingsStore {
   def compactLevel(spark: SparkSession, dir: String, maxBatches: Int = 8,
                    headSize: Int = DefaultHeadSize): Boolean = {
     require(maxBatches >= 2, "compactLevel: maxBatches must be >= 2")
-    commitNext(dir)(stageLevel(spark, _, maxBatches, headSize))
+    commitNext(dir)(stageLevel(spark, _, maxBatches, headSize)).isDefined
   }
 
   private def stageLevel(spark: SparkSession, s: Stage, maxBatches: Int,
@@ -1562,7 +1485,8 @@ object PostingsStore {
       .withColumn("ingest_batch", lit(into)), s.dst)
   }
 
-  private def treeBytes(p: Path): Long =
+  /** Bytes of the files under `p`; 0 when `p` does not exist. */
+  private[sources] def treeBytes(p: Path): Long =
     if (!Files.exists(p)) 0L
     else if (Files.isDirectory(p)) {
       val s = Files.list(p)

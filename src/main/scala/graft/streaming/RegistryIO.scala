@@ -15,20 +15,23 @@ private[graft] object RegistryIO {
     * Some("sbucket=")` probes for hive partition dirs; `None` probes for
     * flat `part-*` data files (streaming file sinks, whose
     * `_spark_metadata` dir alone does not make the dir readable). */
-  def hasData(dir: String, partitionPrefix: Option[String]): Boolean = {
+  def hasData(dir: String, partitionPrefix: Option[String]): Boolean =
+    childNames(dir, partitionPrefix.getOrElse("part-")).nonEmpty
+
+  /** The names of `dir`'s entries that start with `prefix`, sorted; none
+    * when `dir` does not exist. */
+  private[graft] def childNames(dir: String, prefix: String): Seq[String] = {
     val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.exists(p) && {
+    if (!java.nio.file.Files.isDirectory(p)) Nil
+    else {
       val s = java.nio.file.Files.list(p)
       try {
-        val it = s.iterator(); var found = false
-        while (!found && it.hasNext) {
-          val name = it.next().getFileName.toString
-          found = partitionPrefix match {
-            case Some(pre) => name.startsWith(pre)
-            case None => name.startsWith("part-")
-          }
+        val names = scala.collection.mutable.ArrayBuffer.empty[String]
+        s.forEach { c =>
+          val n = c.getFileName.toString
+          if (n.startsWith(prefix)) names += n
         }
-        found
+        names.sorted.toSeq
       } finally s.close()
     }
   }
@@ -36,15 +39,12 @@ private[graft] object RegistryIO {
   /** Read `dir` under the declared schema, or an empty relation of that
     * schema when [[hasData]] finds nothing committed yet.
     *
-    * Prefixed reads are GLOB-SCOPED to `<dir>/<prefix>*` with `dir` as
-    * the basePath (the IvfIndexStore list-scan discipline): partition
-    * discovery walks only the layout's own partition dirs, so an
-    * unrelated sibling appearing mid-read — the postings store's `v<N>`
-    * snapshot landing between a reader's resolve and its file listing
-    * (the one formerly-unscoped window; the compact hammer spec caught
-    * it as CONFLICTING_DIRECTORY_STRUCTURES), a dot-staging dir made
-    * visible by a misbehaving filesystem, a caller-owned marker — can
-    * never break or pollute the scan. */
+    * Prefixed reads are SCOPED to the `<dir>/<prefix>*` partition dirs
+    * with `dir` as the basePath: partition discovery walks only the
+    * layout's own partition dirs, so an unrelated sibling appearing
+    * mid-read — a dot-staging dir made visible by a misbehaving
+    * filesystem, a caller-owned marker — can never break or pollute the
+    * scan. */
   def readOrEmpty(spark: SparkSession, dir: String, schema: StructType,
                   partitionPrefix: Option[String]): DataFrame = {
     if (!hasData(dir, partitionPrefix))
@@ -52,20 +52,24 @@ private[graft] object RegistryIO {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else partitionPrefix match {
       case Some(pre) =>
-        // the dir itself must read as a LITERAL path inside the glob: a
-        // store rooted at a path carrying glob metacharacters ([x], {a},
-        // *) would otherwise be interpreted by the globber — failing
-        // path-not-found after hasData passed, or scanning a sibling
         spark.read.schema(schema)
           .option("basePath", dir.stripSuffix("/"))
-          .parquet(escapeGlob(dir.stripSuffix("/")) + "/" + pre + "*")
+          .parquet(partitionPaths(dir, pre): _*)
       case None => spark.read.schema(schema).parquet(dir)
     }
   }
 
+  /** The `<dir>/<prefix>*` partition dirs, sorted, as paths a reader
+    * passes one by one. Listed here rather than passed as one glob: Spark
+    * probes a single read path for a streaming sink's metadata dir, and
+    * on a glob that probe fails and logs a WARN with a stack trace per
+    * read. Each path is glob-escaped, so a store rooted at a path carrying
+    * glob metacharacters ([x], {a}, *) reads literally. */
+  private[graft] def partitionPaths(dir: String, prefix: String): Seq[String] =
+    childNames(dir, prefix).map(n => escapeGlob(s"${dir.stripSuffix("/")}/$n"))
+
   /** Backslash-escape Hadoop glob metacharacters so a directory PATH is
-    * matched literally when embedded in a glob pattern (only the appended
-    * `<prefix>*` should glob). */
+    * matched literally. */
   private def escapeGlob(p: String): String =
     p.replaceAll("([\\\\\\[\\]{}*?])", "\\\\$1")
 

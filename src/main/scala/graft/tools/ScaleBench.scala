@@ -745,11 +745,12 @@ object ScaleBench {
       def listFiles(f: java.io.File): Int =
         if (f.isDirectory) f.listFiles.map(listFiles).sum
         else if (f.getName.endsWith(".parquet")) 1 else 0
-      val totalFiles = new java.io.File(dir).listFiles
+      val snap = graft.queue.VersionedDir.resolveDir(dir)
+      val totalFiles = new java.io.File(snap).listFiles
         .filter(_.getName.startsWith("centroid_id=")).map(listFiles).sum
       val probedFiles = qvecs.map { case (_, v) =>
         graft.sources.IvfIndexStore.probeLists(spark, dir, v, nprobe = 2)
-          .map(p => listFiles(new java.io.File(dir, s"centroid_id=$p"))).sum
+          .map(p => listFiles(new java.io.File(snap, s"centroid_id=$p"))).sum
       }.sum / qvecs.size
       val t1 = System.nanoTime()
       qvecs.foreach { case (_, v) =>
@@ -783,7 +784,7 @@ object ScaleBench {
       // 5 fixed ids, none below nlist (the default codebook seeds stay)
       val ids = embDisk.filter(col("vec_id") % 400 === 203)
         .select(col("vec_id")).as[Long].collect().toSeq.sorted.take(5)
-      val leaves = spark.read.parquet(dir)
+      val leaves = spark.read.parquet(graft.queue.VersionedDir.resolveDir(dir))
         .filter(col("vec_id").isin(ids: _*))
         .select(col("centroid_id")).distinct().count()
       val t0 = System.nanoTime()
@@ -910,7 +911,7 @@ object ScaleBench {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
           else if (f.getName.endsWith(".parquet")) Seq(f) else Seq.empty
-        walk(new java.io.File(dir, s"centroid_id=$p"))
+        walk(new java.io.File(graft.queue.VersionedDir.resolveDir(dir), s"centroid_id=$p"))
       }
       val perQuery = qvecs.map { v =>
         val files = graft.sources.IvfIndexStore
@@ -1165,7 +1166,7 @@ object ScaleBench {
       var maxBatches = 0
       var maxLeaves = 0
       def census(): (Int, Int) = {
-        val r = new java.io.File(dir)
+        val r = new java.io.File(graft.queue.VersionedDir.resolveDir(dir))
         val lists = Option(r.listFiles).getOrElse(Array.empty)
           .filter(_.getName.startsWith("centroid_id="))
         val perList = lists.map(l =>

@@ -52,4 +52,32 @@ trait SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs `body` started, and its result. Only jobs submitted from
+    * this thread count (tagged by a local property). The listener bus is
+    * asynchronous, so a marker job run after `body` is the barrier: once
+    * its start is seen, every earlier start has been delivered. */
+  def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobs"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach(starts.put)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      val out = try body finally sc.setLocalProperty(tag, "barrier")
+      try spark.range(1).count() finally sc.setLocalProperty(tag, null)
+      var n = 0
+      var seen = false
+      while (!seen) {
+        val s = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(s != null, "listener never saw the barrier job")
+        if (s == "barrier") seen = true else n += 1
+      }
+      (n, out)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -2,7 +2,7 @@ package graft.queue
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.CompletableFuture
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -11,7 +11,6 @@ import graft.cdc.{ChangeCapture, Emp, SnapshotDiff}
 import graft.delivery.{CaptureServer, HttpPoster}
 import graft.model.TriggerConfig
 import graft.queue.EventLog.QueueRow
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -95,34 +94,6 @@ class DispatcherSpec extends AnyFunSuite with SparkTestSession with BeforeAndAft
 
   private def rows(dir: String): Seq[QueueRow] =
     EventLog.read(spark, dir).as[QueueRow].collect().toSeq
-
-  /** Spark jobs `body` started, and its result. Only jobs submitted from
-    * this thread count (tagged by a local property). The listener bus is
-    * asynchronous, so a marker job run after `body` is the barrier: once
-    * its start is seen, every earlier start has been delivered. */
-  private def jobsOf[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val tag = "graft.test.jobs"
-    val starts = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(tag))).foreach(starts.put)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      val out = try body finally sc.setLocalProperty(tag, "barrier")
-      try spark.range(1).count() finally sc.setLocalProperty(tag, null)
-      var n = 0
-      var seen = false
-      while (!seen) {
-        val s = starts.poll(60, TimeUnit.SECONDS)
-        assert(s != null, "listener never saw the barrier job")
-        if (s == "barrier") seen = true else n += 1
-      }
-      (n, out)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("enqueue: durable PENDING rows carry config + payload + empty history") {
     val dir = freshQueue(asyncCfg(server.url))

@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.operators.Similarity
+import graft.queue.VersionedDir
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,7 +49,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     val pf = plan.substring(pfStart, plan.indexOf("]", pfStart) max (pfStart + 1))
     probes.foreach(p => assert(pf.contains(p.toString), s"probe $p not in $pf"))
     // and the probed read returns rows from exactly those lists
-    val listed = spark.read.parquet(store)
+    val listed = spark.read.parquet(VersionedDir.resolveDir(store))
       .filter(col("centroid_id").isin(probes: _*))
       .select(col("centroid_id")).distinct()
       .collect().map(_.getAs[Number]("centroid_id").longValue()).toSet
@@ -99,14 +101,14 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("codebook: 16 rows, hidden from list discovery, lists cover the corpus") {
     assert(IvfIndexStore.codebook(spark, store).count() == 16)
-    val lists = spark.read.parquet(store)
+    val lists = spark.read.parquet(VersionedDir.resolveDir(store))
     // _codebook must not surface as data or break partition discovery;
     // every input column (label, the filtered-ANN metadata) rides the lists
     assert(lists.columns.toSet ==
       Set("vec_id", "embedding", "label", "centroid_id", "ingest_batch"))
     assert(lists.count() == emb.count())
     // one directory per non-empty list, each bounded to one task's files
-    val listDirs = new java.io.File(store).listFiles
+    val listDirs = new java.io.File(VersionedDir.resolveDir(store)).listFiles
       .filter(_.getName.startsWith("centroid_id=")).toSeq
     assert(listDirs.nonEmpty && listDirs.size <= 16)
     listDirs.foreach { d =>
@@ -122,7 +124,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     IvfIndexStore.appendBatch(
       emb.filter($"vec_id" >= 300 && $"vec_id" < 400), d, batchId = 0)
     IvfIndexStore.appendBatch(emb.filter($"vec_id" >= 400), d, batchId = 1)
-    assert(spark.read.parquet(d).count() == emb.count())
+    assert(spark.read.parquet(VersionedDir.resolveDir(d)).count() == emb.count())
     val grown = IvfIndexStore.topK(spark, d, qvec, k = 10, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // one-shot build over everything, same codebook (vec_id < 16 ⊂ base)
@@ -140,9 +142,9 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     IvfIndexStore.build(emb.filter($"vec_id" < 300), d, nlist = 16)
     val batch = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
     IvfIndexStore.appendBatch(batch, d, batchId = 7)
-    val n1 = spark.read.parquet(d).count()
+    val n1 = spark.read.parquet(VersionedDir.resolveDir(d)).count()
     IvfIndexStore.appendBatch(batch, d, batchId = 7) // crash-replay
-    assert(spark.read.parquet(d).count() == n1)
+    assert(spark.read.parquet(VersionedDir.resolveDir(d)).count() == n1)
   }
 
   test("sink: dim-drifted vectors abort instead of corrupting a list") {
@@ -155,7 +157,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     }
     assert(e.getMessage.contains("mismatched"))
     // nothing was appended
-    assert(!spark.read.parquet(d).filter($"vec_id" === 9001L).collect().nonEmpty)
+    assert(!spark.read.parquet(VersionedDir.resolveDir(d)).filter($"vec_id" === 9001L).collect().nonEmpty)
   }
 
   test("filtered serving: predicate pushes to the probed scan; full probe = filtered brute force") {
@@ -204,7 +206,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
       IvfIndexStore.appendBatch(stripped, d, batchId = 0)
     }
     assert(e.getMessage.contains("drift"))
-    assert(spark.read.parquet(d).filter(col("ingest_batch") >= 0L).count() == 0)
+    assert(spark.read.parquet(VersionedDir.resolveDir(d)).filter(col("ingest_batch") >= 0L).count() == 0)
   }
 
   test("delete: ids vanish from single and batched serving; untouched leaves keep their files; idempotent") {
@@ -216,7 +218,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
       emb.filter($"vec_id" < 50).select(($"vec_id" + 5000L).as("vec_id"),
         $"embedding", $"label"), d, batchId = 0)
     def leafFiles(): Map[String, Set[String]] = {
-      val root = java.nio.file.Paths.get(d)
+      val root = java.nio.file.Paths.get(VersionedDir.resolveDir(d))
       val out = scala.collection.mutable.Map.empty[String, Set[String]]
       java.nio.file.Files.walk(root).forEach { p =>
         if (p.getFileName.toString.endsWith(".parquet") &&
@@ -230,7 +232,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     val before = leafFiles()
     // ids spanning the bulk build (batch -1) and the append (batch 0)
     val ids = Seq(3L, 8L, 13L, 5003L, 5008L)
-    val affectedLeaves = spark.read.parquet(d)
+    val affectedLeaves = spark.read.parquet(VersionedDir.resolveDir(d))
       .filter($"vec_id".isin(ids: _*))
       .select($"centroid_id".cast("long"), $"ingest_batch".cast("long"))
       .distinct().collect()
@@ -245,7 +247,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
       else assert(before.get(leaf) == after.get(leaf), s"untouched leaf $leaf changed")
     }
     // full-probe serving ≡ brute force over the REMAINING corpus
-    val remaining = spark.read.parquet(d)
+    val remaining = spark.read.parquet(VersionedDir.resolveDir(d))
       .select($"vec_id".cast("long").as("vec_id"), $"embedding")
     val served = IvfIndexStore.topK(spark, d, qvec, k = 20, nprobe = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -274,13 +276,13 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     // empty one whole list (centroid partition) of the bulk build
     val probes = IvfIndexStore.probeLists(spark, d, qvec, nprobe = 1)
     val listId = probes.head
-    val listIds = spark.read.parquet(d)
+    val listIds = spark.read.parquet(VersionedDir.resolveDir(d))
       .filter($"centroid_id" === listId)
       .select($"vec_id".cast("long")).as[Long].collect().toSeq
     assert(listIds.nonEmpty)
     assert(IvfIndexStore.delete(spark, d, listIds) == listIds.length.toLong)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(d, s"centroid_id=$listId", "ingest_batch=-1")))
+      java.nio.file.Paths.get(VersionedDir.resolveDir(d), s"centroid_id=$listId", "ingest_batch=-1")))
     // the probed serve of that list returns nothing, and wider serving
     // still answers from the surviving lists
     assert(IvfIndexStore.topK(spark, d, qvec, k = 10, nprobe = 1).count() == 0)
@@ -319,9 +321,9 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("layoutFor keys on (sfDir, nlist) and skips the rewrite on reuse") {
     val base = IvfIndexStore.layoutFor(spark, dir, emb, nlist = 16)
-    val mtime0 = new java.io.File(base, "_SUCCESS").lastModified
+    val snap0 = VersionedDir.resolveDir(base)
     assert(IvfIndexStore.layoutFor(spark, dir, emb, nlist = 16) == base)
-    assert(new java.io.File(base, "_SUCCESS").lastModified == mtime0)
+    assert(VersionedDir.resolveDir(base) == snap0)
     assert(IvfIndexStore.layoutFor(spark, dir, emb, nlist = 8) != base)
   }
 
@@ -342,7 +344,7 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
         b.result()
       } finally s.close()
     }
-    val cents = kids(java.nio.file.Paths.get(d), "centroid_id=")
+    val cents = kids(java.nio.file.Paths.get(VersionedDir.resolveDir(d)), "centroid_id=")
     val perList = cents.map(c => kids(c, "ingest_batch="))
     (perList.flatten.map(_.getFileName.toString).distinct.size,
       if (perList.isEmpty) 0 else perList.map(_.size).max)
@@ -417,5 +419,53 @@ class IvfIndexStoreSpec extends AnyFunSuite with SparkTestSession {
     val after = IvfIndexStore.adcTopK(spark, d, qvec, k = 10, nprobe = 2,
       refine = 4).collect().map(_.toString).toSeq
     assert(after == before && before.nonEmpty)
+  }
+
+  test("delete runs as many Spark jobs for 8 touched leaves as for 2") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_ivfdeljobs").toString
+    IvfIndexStore.build(emb, d, nlist = 16)
+    // one id from each of 10 lists: every leaf of a bulk build is one list
+    val byList = spark.read.parquet(VersionedDir.resolveDir(d))
+      .groupBy($"centroid_id").agg(org.apache.spark.sql.functions.min($"vec_id"))
+      .as[(Int, Long)].collect().sortBy(_._1).map(_._2).toSeq
+    assert(byList.size >= 10, s"fixture: ${byList.size} lists")
+    val (twoJobs, two) = jobsOf(IvfIndexStore.delete(spark, d, byList.take(2)))
+    val (eightJobs, eight) = jobsOf(IvfIndexStore.delete(spark, d, byList.slice(2, 10)))
+    assert(two == 2L && eight == 8L)
+    assert(twoJobs == eightJobs,
+      s"$twoJobs jobs for 2 touched leaves, $eightJobs for 8")
+  }
+
+  test("prefixed reads pass their partition dirs: Spark logs no glob-probe WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // Spark is up, with its logging configured, before the capture starts
+    val root = VersionedDir.resolveDir(store)
+    val schema = spark.read.parquet(root).schema
+    // the logger context Spark's own classes log through
+    val logger = LogManager.getContext(classOf[SparkSession].getClassLoader, false)
+      .asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("glob-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      assert(graft.streaming.RegistryIO.readOrEmpty(spark, root, schema,
+        Some("centroid_id=")).count() == emb.count())
+      assert(IvfIndexStore.topK(spark, store, qvec, k = 10, nprobe = 2).collect().nonEmpty)
+    } finally {
+      logger.setLevel(level)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(warns.isEmpty, warns.toArray.mkString("\n"))
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.operators.{ProductQuantizer, Similarity}
+import graft.queue.VersionedDir
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,7 +42,7 @@ class IvfPqStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("persisted codes equal a fresh encode bit for bit") {
     import spark.implicits._
-    val stored = spark.read.parquet(store)
+    val stored = spark.read.parquet(VersionedDir.resolveDir(store))
       .select($"vec_id".cast("long"), $"codes")
       .as[(Long, Seq[Int])].collect().toMap
     val fresh = ProductQuantizer.encode(emb, cb)
@@ -109,7 +110,7 @@ class IvfPqStoreSpec extends AnyFunSuite with SparkTestSession {
     val batch = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
     IvfIndexStore.appendBatch(batch, d, batchId = 3)
     // appended rows carry codes equal to a fresh encode of the batch
-    val stored = spark.read.parquet(d)
+    val stored = spark.read.parquet(VersionedDir.resolveDir(d))
       .filter(col("ingest_batch") === 3L)
       .select($"vec_id".cast("long"), $"codes")
       .as[(Long, Seq[Int])].collect().toMap
@@ -117,9 +118,9 @@ class IvfPqStoreSpec extends AnyFunSuite with SparkTestSession {
       .as[(Long, Seq[Int])].collect().toMap
     assert(stored == fresh)
     // crash-replay rewrites, never doubles — and serving still works
-    val n1 = spark.read.parquet(d).count()
+    val n1 = spark.read.parquet(VersionedDir.resolveDir(d)).count()
     IvfIndexStore.appendBatch(batch, d, batchId = 3)
-    assert(spark.read.parquet(d).count() == n1)
+    assert(spark.read.parquet(VersionedDir.resolveDir(d)).count() == n1)
     // a grown PQ store serves exactly what a one-shot build would
     IvfIndexStore.appendBatch(emb.filter($"vec_id" >= 400), d, batchId = 4)
     val grown = IvfIndexStore.adcTopK(spark, d, qvec, k = 10, nprobe = 2, refine = 4)
@@ -237,7 +238,7 @@ class IvfPqStoreSpec extends AnyFunSuite with SparkTestSession {
     q.stop()
     // every appended row carries codes equal to a fresh encode
     import org.apache.spark.sql.functions.col
-    val streamed = spark.read.parquet(d).filter(col("ingest_batch") >= 0L)
+    val streamed = spark.read.parquet(VersionedDir.resolveDir(d)).filter(col("ingest_batch") >= 0L)
     assert(streamed.count() == tail.size)
     assert(streamed.filter(col("codes").isNull).count() == 0)
     // and the grown store ADC-serves exactly what the one-shot build does

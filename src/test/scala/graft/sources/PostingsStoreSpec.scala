@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * append, replay, erasure, and compaction all preserve exact equality
   * with the from-corpus scorer, and that a mutation that crashes at any
   * step of its commit leaves the whole old or the whole new store. */
-class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
+class PostingsStoreSpec extends AnyFunSuite with SparkTestSession
+    with SnapshotCommitFixtures {
 
   import spark.implicits._
 
@@ -42,48 +43,6 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     val d = tmp("graft_postings_bulk")
     PostingsStore.build(docs, d)
     VersionedDir.resolveDir(d)
-  }
-
-  private final class Crash(step: String) extends RuntimeException(s"crash after $step")
-
-  /** Run `op` with a simulated crash right after step number `at` (0-based)
-    * of its commit — `staged`, then VersionedDir's steps — or with no
-    * crash when `at` is None. Returns the steps the commit reported. */
-  private def stepsOf(at: Option[Int])(op: => Any): Seq[String] = {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hook: String => Unit = { st =>
-      seen += st
-      if (at.contains(seen.size - 1)) throw new Crash(st)
-    }
-    try PostingsStore.stepHook.withValue(hook)(op)
-    catch { case _: Crash => () }
-    seen.toSeq
-  }
-
-  /** Date every commit of `d` a day back, past the reader grace, so the
-    * next commit's retention sweeps every snapshot but the live pair. */
-  private def pastGrace(d: String): Unit = {
-    val old = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 24 * 3600 * 1000L)
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(d, VersionedDir.LogDir))
-    try s.iterator().forEachRemaining(java.nio.file.Files.setLastModifiedTime(_, old))
-    finally s.close()
-  }
-
-  /** Copy a store (every snapshot, its log) to a fresh path, its commits
-    * dated [[pastGrace]]. */
-  private def copyStore(from: String): String = {
-    val to = tmp("graft_postings_copy")
-    val src = java.nio.file.Paths.get(from)
-    java.nio.file.Files.walk(src).iterator()
-      .asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-      .forEachRemaining { p =>
-        val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-        else java.nio.file.Files.copy(p, dst)
-      }
-    pastGrace(to)
-    to
   }
 
   test("driver-side term bucket equals the layout's md5 bucket column") {
@@ -1291,41 +1250,6 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
 
   // ---- every mutation is one snapshot commit ----
 
-  private type Rows = Seq[(Int, Long, Long, Long)]
-
-  /** The steps of one commit over a store with two earlier commits:
-    * `staged`, then [[VersionedDir.commit]]'s, whose retention sweeps the
-    * oldest snapshot. */
-  private val commitSteps = Seq("staged", "published", "entry-written",
-    "linked", "entry-temp-deleted", "log-synced", "snapshot-swept")
-
-  /** Crash `op` after every step of its commit, each on a fresh copy of
-    * the store `seeded` (which serves `before`): the store must serve the
-    * whole old state before the commit point (`linked`) and the whole new
-    * state `after` from it on, and running `op` again — the replay or
-    * retry — must converge to `after`. The crash points run on threads of
-    * their own at once (the step hook is thread-scoped). */
-  private def crashEveryStep(seeded: String, before: Rows, op: String => Any,
-                             after: Rows): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(commitSteps.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try commitSteps.indices.map { i =>
-      Future {
-        val d = copyStore(seeded)
-        assert(stepsOf(Some(i))(op(d)) == commitSteps.take(i + 1))
-        val committed = i >= commitSteps.indexOf("linked")
-        assert(serveRows(d) == (if (committed) after else before),
-          s"crash after ${commitSteps(i)}: not the whole " +
-            (if (committed) "new" else "old") + " state")
-        op(d)
-        assert(serveRows(d) == after,
-          s"replay after a crash at ${commitSteps(i)} diverged")
-      }
-    }.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    finally pool.shutdown()
-  }
-
   test("a crash after every commit step of appendBatch, deleteDocs and a " +
     "leveled sink micro-batch leaves the whole old or the whole new state, " +
     "and the replay converges") {
@@ -1347,17 +1271,18 @@ class PostingsStoreSpec extends AnyFunSuite with SparkTestSession {
     val before = serveRows(seeded)
     assert(before == corpusRows(part(0L, 16L)))
     // appendBatch of a fresh batch
-    crashEveryStep(seeded, before, PostingsStore.appendBatch(part(16L, 24L), _, 2L),
-      corpusRows(small))
+    crashEveryStep(serveRows(_))(seeded, before,
+      PostingsStore.appendBatch(part(16L, 24L), _, 2L), corpusRows(small))
     // deleteDocs: the retry of an erase that committed finds nothing and
     // commits its tombstones again
-    crashEveryStep(seeded, before, PostingsStore.deleteDocs(spark, _, Seq(2L, 7L, 13L)),
+    crashEveryStep(serveRows(_))(seeded, before,
+      PostingsStore.deleteDocs(spark, _, Seq(2L, 7L, 13L)),
       corpusRows(part(0L, 16L).filter(!$"doc_id".isin(2L, 7L, 13L))))
     // a leveled sink micro-batch: the append and the fold it triggers (a
     // third batch over the cap of 2) commit as ONE snapshot; the stream's
     // replay of a micro-batch whose commit landed is a no-op
-    crashEveryStep(seeded, before, sinkBatch(part(16L, 24L), _, 2L),
-      corpusRows(small))
+    crashEveryStep(serveRows(_))(seeded, before,
+      sinkBatch(part(16L, 24L), _, 2L), corpusRows(small))
     val d = copyStore(seeded)
     assert(stepsOf(None)(sinkBatch(part(16L, 24L), d, 2L)) == commitSteps)
     assert(committedCount(d) == 2 && serveRows(d) == corpusRows(small))
